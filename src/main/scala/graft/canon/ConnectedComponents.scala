@@ -142,16 +142,6 @@ object ConnectedComponents {
     spark.createDataset(out).toDF("id", "component")
   }
 
-  /** Canonical member per component — the most plausible CLEAN surface form:
-    * highest mention count first, then fewest digits (OCR confusions 0↔O,
-    * S↔5 inject digits into words — model_evaluation.py:259-264), then the
-    * longest form (truncated reads drop trailing tokens), then id for full
-    * determinism. Matches the expected-triple convention (FIXTURES.md §3).
-    *
-    * @param counts (id, n) weight per node (mention frequency)
-    * @return (id, canonical) for EVERY id in `counts` (singletons map to
-    *         themselves)
-    */
   /** Incremental label maintenance — fold a batch of NEW edges into an
     * existing (id, component) labeling WITHOUT re-reading the old edge
     * set: contract every new edge to its endpoints' current labels (new
@@ -217,6 +207,16 @@ object ConnectedComponents {
         coalesce(col("__new"), col("component")).as("component"))
   }
 
+  /** Canonical member per component — the most plausible CLEAN surface form:
+    * highest mention count first, then fewest digits (OCR confusions 0↔O,
+    * S↔5 inject digits into words — model_evaluation.py:259-264), then the
+    * longest form (truncated reads drop trailing tokens), then id for full
+    * determinism. Matches the expected-triple convention (FIXTURES.md §3).
+    *
+    * @param counts (id, n) weight per node (mention frequency)
+    * @return (id, canonical) for EVERY id in `counts` (singletons map to
+    *         themselves)
+    */
   def canonicalMap(components: DataFrame, counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val labeled = counts

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
 object EntityLinker {
 
   /** Distinct entities with blocking attributes from the mention table
-    * produced by Extract.vendorMentions. One shuffle (groupBy entity_key). */
+    * produced by FastExtract.vendorMentions. One shuffle (groupBy entity_key). */
   def entities(mentions: DataFrame): DataFrame =
     mentions
       .groupBy("entity_key")
@@ -44,20 +44,8 @@ object EntityLinker {
       // consume it, so don't pay a job until the first action.
       .transform(d => graft.Materialize(d, eager = false))
 
-  /** Candidate sameAs edges (src < dst, entity_key level). */
-  def candidateEdges(
-      mentions: DataFrame,
-      numHashes: Int = 8,
-      jaccardMin: Double = 0.6,
-      editSimMin: Double = 0.85,
-      useIce: Boolean = true,
-      maxBucket: Int = 1000,
-      smallThreshold: Long = 50000L): DataFrame =
-    candidateEdgesFromEntities(entities(mentions), numHashes, jaccardMin,
-      editSimMin, useIce, maxBucket, smallThreshold)
-
-  /** Same as candidateEdges but over a pre-built (persisted) entity table —
-    * callers that also need the entities avoid computing them twice.
+  /** Candidate sameAs edges (src < dst, entity_key level) over a
+    * pre-built (persisted) entity table.
     *
     * HYBRID (same pattern as ConnectedComponents.run): below
     * `smallThreshold` entities the whole LSH→verify chain runs driver-side
@@ -75,25 +63,9 @@ object EntityLinker {
       editSimMin: Double = 0.85,
       useIce: Boolean = true,
       maxBucket: Int = 1000,
-      smallThreshold: Long = 50000L): DataFrame = {
-
-    if (smallThreshold > 0) {
-      // single action sizes AND collects (no separate count pass)
-      val head = ents.select("entity_key", "surface", "tokens", "ice")
-        .take(math.min(smallThreshold, Int.MaxValue - 1).toInt + 1)
-      if (head.length <= smallThreshold) {
-        val spark = ents.sparkSession
-        import spark.implicits._
-        val rows = head.map(r => LocalEnt(r.getString(0), r.getString(1),
-          r.getSeq[String](2), if (r.isNullAt(3)) null else r.getString(3)))
-        return spark.createDataset(
-          edgesLocal(rows, numHashes, jaccardMin, editSimMin, useIce, maxBucket))
-          .toDF("src", "dst")
-      }
-    }
-    distributedEdges(ents, None, numHashes, jaccardMin, editSimMin, useIce,
-      maxBucket)
-  }
+      smallThreshold: Long = 50000L): DataFrame =
+    edges(ents, None, numHashes, jaccardMin, editSimMin, useIce, maxBucket,
+      smallThreshold)
 
   /** Incremental-maintenance variant: the subset of
     * `candidateEdgesFromEntities(ents)` edges with at least one endpoint in
@@ -123,9 +95,25 @@ object EntityLinker {
       editSimMin: Double = 0.85,
       useIce: Boolean = true,
       maxBucket: Int = 1000,
-      smallThreshold: Long = 50000L): DataFrame = {
+      smallThreshold: Long = 50000L): DataFrame =
+    edges(ents, Some(touched), numHashes, jaccardMin, editSimMin, useIce,
+      maxBucket, smallThreshold)
 
+  /** The size gate shared by both public entry points: the driver-local
+    * chain below `smallThreshold` entities, otherwise [[distributedEdges]];
+    * `touched` restricts either to touched-incident pairs (None = the full
+    * edge set). */
+  private def edges(
+      ents: DataFrame,
+      touched: Option[DataFrame],
+      numHashes: Int,
+      jaccardMin: Double,
+      editSimMin: Double,
+      useIce: Boolean,
+      maxBucket: Int,
+      smallThreshold: Long): DataFrame = {
     if (smallThreshold > 0) {
+      // single action sizes AND collects (no separate count pass)
       val head = ents.select("entity_key", "surface", "tokens", "ice")
         .take(math.min(smallThreshold, Int.MaxValue - 1).toInt + 1)
       if (head.length <= smallThreshold) {
@@ -133,18 +121,19 @@ object EntityLinker {
         import spark.implicits._
         val rows = head.map(r => LocalEnt(r.getString(0), r.getString(1),
           r.getSeq[String](2), if (r.isNullAt(3)) null else r.getString(3)))
-        val tset = touched.select(col("entity_key").cast("string"))
-          .collect().map(_.getString(0)).toSet
+        val all = edgesLocal(rows, numHashes, jaccardMin, editSimMin, useIce, maxBucket)
         // exact parity with the distributed restriction: the full local
         // edge set filtered to touched-incident pairs
-        return spark.createDataset(
-          edgesLocal(rows, numHashes, jaccardMin, editSimMin, useIce, maxBucket)
-            .filter(e => tset(e._1) || tset(e._2)))
-          .toDF("src", "dst")
+        val kept = touched.fold(all) { t =>
+          val tset = t.select(col("entity_key").cast("string"))
+            .collect().map(_.getString(0)).toSet
+          all.filter(e => tset(e._1) || tset(e._2))
+        }
+        return spark.createDataset(kept).toDF("src", "dst")
       }
     }
-    distributedEdges(ents, Some(touched), numHashes, jaccardMin, editSimMin,
-      useIce, maxBucket)
+    distributedEdges(ents, touched, numHashes, jaccardMin, editSimMin, useIce,
+      maxBucket)
   }
 
   /** The distributed LSH→verify chain, optionally restricted to pairs with
@@ -382,8 +371,9 @@ object EntityLinker {
   }
 
   /** Bucket-size audit for the LSH blocking — "no silent caps": rows with
-    * `capped = true` are the buckets candidateEdges drops at `maxBucket`.
-    * Run this alongside linking to quantify (and log) what the cap costs. */
+    * `capped = true` are the buckets candidateEdgesFromEntities drops at
+    * `maxBucket`. Run this alongside linking to quantify (and log) what
+    * the cap costs. */
   def blockStats(mentions: DataFrame, numHashes: Int = 8,
       maxBucket: Int = 1000): DataFrame = {
     val ents = entities(mentions)

@@ -126,8 +126,9 @@ object Itemsets {
     // so the three Apriori prune joins cost more than they save at this
     // scale. Beyond the gate the pruned pipeline is unchanged — at
     // corpus scale pruning is what bounds the candidate space.
+    // bigint before the multiply: the INT product wraps once |fa| >= 1291
     val triBound = kb.agg(coalesce(sum(expr(
-      "(size(fa) * (size(fa) - 1) * (size(fa) - 2)) div 6")), lit(0L)))
+      "(cast(size(fa) as bigint) * (size(fa) - 1) * (size(fa) - 2)) div 6")), lit(0L)))
       .head().getLong(0)
     val directMax = df.sparkSession.conf
       .get("spark.graft.itemsets.directTriplesMax", "20000000").toLong

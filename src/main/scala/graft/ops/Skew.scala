@@ -44,8 +44,8 @@ object Skew {
       .agg(finals.head, finals.tail: _*)
       .withColumnRenamed("__key", "key")
 
-  /** Salted count per key — the exact shape the canonical-map weighting
-    * needs (mention counts per entity key, mega-vendor dominant).
+  /** Salted count per key — e.g. mention counts per entity key, where the
+    * mega-vendor dominates.
     * `saltFrom` must be deterministic per row (see saltedAgg). */
   def saltedCount(df: DataFrame, keyCol: String, saltFrom: Column,
       salts: Int = 16, outCol: String = "n"): DataFrame =

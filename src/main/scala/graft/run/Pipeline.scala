@@ -3,13 +3,13 @@ package graft.run
 import graft.canon.ConnectedComponents
 import graft.graph.TripleStore
 import graft.link.EntityLinker
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline:
   *
-  *   docs ──(narrow)──► mention-detect + per-doc triples   [Extract]
-  *        └─(narrow)──► vendor mentions ──► LSH blocking ──► candidate edges
+  *   docs ──(narrow)──► mention-detect + per-doc triples   [FastExtract]
+  *        └─(narrow)──► vendor mentions ──► entities ──► candidate edges
   *                                                [EntityLinker]
   *                      edges ──► connected components ──► canonical map
   *                                                [ConnectedComponents]
@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * Shuffle inventory (the whole point at 100 TB):
   *   0 shuffles to raw triples (all per-doc array HOFs);
-  *   1 groupBy(entity_key) over the SMALL mention projection;
+  *   1 groupBy(entity_key) over the SMALL mention projection — it yields
+  *     the entity table AND the per-entity mention counts (n_mentions)
+  *     that weight canonical-representative selection;
   *   LSH block join + CC iterations over the MUCH smaller entity set;
   *   1 broadcast-able join to rewrite vendor/client objects;
   *   1 final repartition at write.
@@ -29,10 +31,6 @@ object Pipeline {
       jaccardMin: Double = 0.6,
       editSimMin: Double = 0.85,
       useIce: Boolean = true,
-      /** typed mapPartitions extraction (FastExtract) vs declarative Column
-        * HOFs (Extract) — semantically identical (ExtractParitySpec),
-        * ~10× faster per core; requires the widened OcrDoc schema */
-      fast: Boolean = true,
       /** canonical-map rewrite strategy: the map is broadcast when its row
         * count is ≤ this limit, otherwise the rewrite falls back to a
         * shuffled join (identical output — PipelineSpec forces the fallback
@@ -57,14 +55,52 @@ object Pipeline {
   private[run] val InternalPreds: Seq[String] =
     Seq("canonicalOf", "_reg_surface", "_reg_n", "_reg_ice")
 
-  /** Broadcast the canonical map only while it fits the broadcast budget;
-    * log the choice either way (the 0-vs-2-full-corpus-shuffle decision is
-    * worth a line in any run log). `mapRows` must be the map's exact row
-    * count — callers have it for free because the map is materialized
+  private def vendorNode(key: Column): Column = concat(lit("vendor:"), key)
+
+  /** The (surf_node, canon_node) projection of an (id, canonical) map,
+    * broadcast only while it fits the broadcast budget; the choice is
+    * logged either way (the 0-vs-2-full-corpus-shuffle decision is worth a
+    * line in any run log). `mapRows` must bound the map's row count —
+    * callers have it for free because the map is materialized
     * (localCheckpoint) before use. */
-  private def maybeBroadcast(m: DataFrame, mapRows: Long, limit: Long): DataFrame =
+  private def mapNodes(map: DataFrame, mapRows: Long, limit: Long): DataFrame = {
+    val m = map.select(vendorNode(col("id")).as("surf_node"),
+      vendorNode(col("canonical")).as("canon_node"))
     if (mapRows <= limit) { log.info(s"canonical map: broadcast ($mapRows rows <= $limit)"); broadcast(m) }
     else { log.warn(s"canonical map: shuffled-join fallback ($mapRows rows > $limit)"); m }
+  }
+
+  /** Objects of hasVendor/hasClient are vendor nodes: point them at their
+    * canonical node through `m` (a [[mapNodes]] projection). */
+  private def rewriteObjects(triples: DataFrame, m: DataFrame): DataFrame =
+    triples
+      .join(m, triples("obj") === m("surf_node"), "left")
+      .withColumn("obj",
+        when(col("pred").isin("hasVendor", "hasClient"), coalesce(col("canon_node"), col("obj")))
+          .otherwise(col("obj")))
+      .drop("surf_node", "canon_node")
+
+  /** The doc-scoped stream of `docs` with objects rewritten through `m`:
+    * a single pass, one broadcast join, no dedup needed (doc-scoped
+    * subjects embed the doc_id). hasICE is vendor-scoped — see
+    * [[vendorTriples]]. */
+  private def docTriples(docs: DataFrame, m: DataFrame): DataFrame =
+    rewriteObjects(rawTriples(docs).where(col("pred") =!= "hasICE"), m)
+      .select("subj", "pred", "obj")
+
+  /** Vendor-scoped triples regenerated from the ENTITY table (not the doc
+    * stream): hasICE per canonical vendor + sameAs per linked surface form. */
+  private def vendorTriples(ents: DataFrame, canonMap: DataFrame): DataFrame = {
+    val iceTriples = ents.where(col("ice").isNotNull)
+      .join(canonMap, ents("entity_key") === canonMap("id"))
+      .select(vendorNode(col("canonical")).as("subj"),
+        lit("hasICE").as("pred"), col("ice").as("obj"))
+      .distinct()
+    val sameAs = canonMap.where(col("id") =!= col("canonical"))
+      .select(vendorNode(col("id")).as("subj"), lit("sameAs").as("pred"),
+        vendorNode(col("canonical")).as("obj"))
+    iceTriples.unionByName(sameAs)
+  }
 
   private def asOcrDocs(docs: DataFrame) = {
     val spark = docs.sparkSession
@@ -72,61 +108,60 @@ object Pipeline {
     docs.selectExpr("doc_id", "page_w", "page_h", "spans").as[graft.model.OcrDoc]
   }
 
-  /** Canonical entity map from a (persisted) vendor-mention table. */
-  def canonicalEntityMapFromMentions(vm: DataFrame, cfg: Config = Config()): DataFrame = {
-    val edges = EntityLinker.candidateEdges(
-      vm, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
-      smallThreshold = cfg.elSmallThreshold)
-    val comps = ConnectedComponents.run(edges)
-    // salted two-phase count: the mention distribution is Zipf-shaped
-    // (mega-vendor holds ~30% of rows) — north_star's salted aggregation.
-    // Salt = hash(doc_id, role): deterministic per mention row (retry-safe).
-    val counts = graft.ops.Skew.saltedCount(vm, "entity_key",
-        saltFrom = xxhash64(col("doc_id"), col("role")), salts = 16)
-      .select(col("entity_key").as("id"), col("n"))
-    ConnectedComponents.canonicalMap(comps, counts)
-  }
+  private def vendorMentions(docs: DataFrame): DataFrame =
+    FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
 
-  /** Canonical entity map (entity_key → canonical key) from the docs.
-    * The doc-scale mention table is persisted (columnar cache — it's
-    * rescanned by the entity build AND the salted count) only within this
-    * call: the result is materialized (localCheckpoint) and the mention
-    * cache released before returning, so nothing doc-scale outlives the
-    * call (the r1 leak, ADVICE). */
-  def canonicalEntityMap(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val vm = (
-      if (cfg.fast) FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
-      else Extract.vendorMentions(docs)).persist()
-    try graft.Materialize(canonicalEntityMapFromMentions(vm, cfg))
-    finally vm.unpersist()
-  }
+  private def rawTriples(docs: DataFrame): DataFrame =
+    FastExtract.triples(asOcrDocs(docs)).toDF()
 
-  /** Canonical map plus the (materialized) entity table it was built from —
-    * the registry that `runIncremental` needs to extend the map later
-    * without re-extracting the corpus. Both results are entity-scale and
-    * forced (one job) before the doc-scale mention cache is released. */
-  def canonicalEntityMapAndEnts(docs: DataFrame,
-      cfg: Config = Config()): (DataFrame, DataFrame, Long) = {
-    val vm = (
-      if (cfg.fast) FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
-      else Extract.vendorMentions(docs)).persist()
+  /** The entity stage of every full build (run, runResumable,
+    * runBootstrap): vendor mentions → entities → candidate edges →
+    * connected components → canonical map. Returns the entity table (the
+    * registry `runIncremental` extends later without re-extracting the
+    * corpus), the canonical map (entity_key → canonical key) and the map's
+    * row count. The mention counts that weight canonical-representative
+    * selection are the entity table's `n_mentions` — the same groupBy, not
+    * a second pass over the mentions.
+    *
+    * Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
+    * table is persist()ed — under `spark.graft.materialize=none` each
+    * linking branch re-reads `ents`, and so the mentions, from it — but
+    * only for the duration of this call: everything returned is
+    * ENTITY-scale and materialized via self-cleaning localCheckpoint before
+    * `finally` releases the cache. Nothing doc-scale outlives the call. */
+  private def entityStage(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, Long) = {
+    val vm = vendorMentions(docs).persist()
     try {
-      val ents = EntityLinker.entities(vm)
+      val ents = EntityLinker.entities(vm) // entity-scale, materialized inside
       val edges = EntityLinker.candidateEdgesFromEntities(
         ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
         smallThreshold = cfg.elSmallThreshold)
       val comps = ConnectedComponents.run(edges)
-      val counts = graft.ops.Skew.saltedCount(vm, "entity_key",
-          saltFrom = xxhash64(col("doc_id"), col("role")), salts = 16)
-        .select(col("entity_key").as("id"), col("n"))
+      val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
+      // LAZY materialize + count in ONE job (the count is the action that
+      // computes and stores the map — no separate eager-checkpoint job);
+      // the count must run inside the try, while the mention cache that the
+      // map's lineage (and ents') reads is still live. It is returned so
+      // callers don't re-count the map for the broadcast decision.
       val cm = graft.Materialize(
         ConnectedComponents.canonicalMap(comps, counts), eager = false)
-      // the count materializes cm AND ents' lazy checkpoint in one job —
-      // and is returned so callers don't re-count the map for the
-      // broadcast decision
-      (cm, ents, cm.count())
+      (ents, cm, cm.count())
     } finally vm.unpersist()
   }
+
+  /** The store-side state of a canonical map and its entity table: one
+    * canonicalOf triple per map row plus the registry triples. */
+  private def stateTriples(canonMap: DataFrame, ents: DataFrame): DataFrame =
+    canonMap.select(vendorNode(col("id")).as("subj"), lit("canonicalOf").as("pred"),
+        vendorNode(col("canonical")).as("obj"))
+      .unionByName(registryTriples(ents))
+
+  /** The canonical map (id, canonical) read back from a store. */
+  private def storedMap(store: DataFrame): DataFrame =
+    store.where(col("pred") === "canonicalOf")
+      .select(
+        regexp_replace(col("subj"), "^vendor:", "").as("id"),
+        regexp_replace(col("obj"), "^vendor:", "").as("canonical"))
 
   /** Encode the entity table (entity_key, surface, n_mentions, ice) as
     * registry triples so it rides the store's snapshot protocol. All three
@@ -134,8 +169,7 @@ object Pipeline {
     * makes `runIncremental` EXACT: merged registry == the entity table of
     * a full extract over old ∪ new. */
   private def registryTriples(ents: DataFrame): DataFrame = {
-    val base = ents.select(
-      concat(lit("vendor:"), col("entity_key")).as("s"),
+    val base = ents.select(vendorNode(col("entity_key")).as("s"),
       col("surface"), col("n_mentions"), col("ice"))
     base.select(col("s").as("subj"), lit("_reg_surface").as("pred"),
         col("surface").as("obj"))
@@ -156,35 +190,24 @@ object Pipeline {
         min(when(col("pred") === "_reg_n", col("obj"))).cast("long").as("n_mentions"),
         min(when(col("pred") === "_reg_ice", col("obj"))).as("ice"))
 
-  /** Rewrite surface vendor nodes to canonical ones and add sameAs edges.
+  /** Rewrite surface vendor nodes to canonical ones and add sameAs edges,
+    * with the map's row count supplied by the caller — when the map comes
+    * from a store read, the count is already in the snapshot's lineage
+    * counters (`canonicalOf`), so counting it again per call is an extra
+    * entity-scale job (r3 verdict #6: runResumable paid it once PER BATCH
+    * in its loop).
+    *
     * The canonical map is tiny relative to the triples (entities, not docs)
     * but its size estimate is opaque to Catalyst (it comes through a window
     * over joins), so without the explicit hint the rewrite degrades to a
     * sort-merge join that shuffles ALL triples twice — broadcast() is the
     * difference between 0 and 2 full-corpus shuffles here. */
-  def canonicalize(rawTriples: DataFrame, canonMap: DataFrame,
-      broadcastEntityLimit: Long = 10000000L): DataFrame =
-    canonicalize(rawTriples, canonMap, canonMap.count(), broadcastEntityLimit)
-
-  /** As above with the map's row count supplied by the caller — when the
-    * map comes from a store read, the count is already in the snapshot's
-    * lineage counters (`canonicalOf`), so counting it again per call is an
-    * extra entity-scale job (r3 verdict #6: runResumable paid it once PER
-    * BATCH in its loop). */
   def canonicalize(rawTriples: DataFrame, canonMap: DataFrame, mapRows: Long,
       broadcastEntityLimit: Long): DataFrame = {
-    val mapped = canonMap.select(
-      concat(lit("vendor:"), col("id")).as("surf_node"),
-      concat(lit("vendor:"), col("canonical")).as("canon_node"))
-    val m = maybeBroadcast(mapped, mapRows, broadcastEntityLimit)
+    val m = mapNodes(canonMap, mapRows, broadcastEntityLimit)
 
     // objects of hasVendor/hasClient and subjects of hasICE are vendor nodes
-    val objRewritten = rawTriples
-      .join(m, rawTriples("obj") === m("surf_node"), "left")
-      .withColumn("obj",
-        when(col("pred").isin("hasVendor", "hasClient"), coalesce(col("canon_node"), col("obj")))
-          .otherwise(col("obj")))
-      .drop("surf_node", "canon_node")
+    val objRewritten = rewriteObjects(rawTriples, m)
     val rewritten = objRewritten
       .join(m, objRewritten("subj") === m("surf_node"), "left")
       .withColumn("subj",
@@ -201,10 +224,6 @@ object Pipeline {
     rewritten.unionByName(sameAs.select(rewritten.columns.toIndexedSeq.map(col): _*))
   }
 
-  private def rawTriples(docs: DataFrame, cfg: Config): DataFrame =
-    if (cfg.fast) FastExtract.triples(asOcrDocs(docs)).toDF()
-    else Extract.triples(docs)
-
   /** Full run: docs → canonical triple graph (deduplicated).
     *
     * Plan shape (the 100 TB view):
@@ -219,64 +238,9 @@ object Pipeline {
     *    the number of entities, not the number of documents.
     */
   def run(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    // Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
-    // table is persist()ed — the columnar cache matters, it's rescanned by
-    // the entity build and the salted count — but only for the duration of
-    // this call: everything derived from it is ENTITY-scale and
-    // materialized via self-cleaning localCheckpoint before `finally`
-    // releases the cache. Nothing doc-scale outlives run().
-    val vm = (
-      if (cfg.fast) FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
-      else Extract.vendorMentions(docs)).persist()
-    val (ents, canonMap, mapRows) = try {
-      val ents = EntityLinker.entities(vm) // entity-scale, materialized inside
-      val edges = EntityLinker.candidateEdgesFromEntities(
-        ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
-        smallThreshold = cfg.elSmallThreshold)
-      val comps = ConnectedComponents.run(edges)
-      // salted two-phase count: the mention distribution is Zipf-shaped
-      // (mega-vendor holds ~30% of rows) — north_star's salted aggregation.
-      // Salt = hash(doc_id, role): deterministic per mention row (retry-safe).
-      val counts = graft.ops.Skew.saltedCount(vm, "entity_key",
-          saltFrom = xxhash64(col("doc_id"), col("role")), salts = 16)
-        .select(col("entity_key").as("id"), col("n"))
-      // LAZY materialize + count in ONE job (the count is the action that
-      // computes and stores the map — no separate eager-checkpoint job);
-      // the count must run inside the try, while the mention cache that the
-      // map's lineage (and ents') reads is still live.
-      val cm = graft.Materialize(
-        ConnectedComponents.canonicalMap(comps, counts), eager = false)
-      (ents, cm, cm.count())
-    } finally vm.unpersist()
-
-    val m = maybeBroadcast(
-      canonMap.select(
-        concat(lit("vendor:"), col("id")).as("surf_node"),
-        concat(lit("vendor:"), col("canonical")).as("canon_node")),
-      mapRows, cfg.broadcastEntityLimit)
-
-    // doc-scoped stream: single pass, one broadcast join, no dedup needed
-    val raw = rawTriples(docs, cfg)
-    val docTriples = raw.where(col("pred") =!= "hasICE")
-      .join(m, col("obj") === m("surf_node"), "left")
-      .withColumn("obj",
-        when(col("pred").isin("hasVendor", "hasClient"), coalesce(col("canon_node"), col("obj")))
-          .otherwise(col("obj")))
-      .select("subj", "pred", "obj")
-
-    // vendor-scoped triples from the ENTITY table (not the doc stream):
-    // hasICE per canonical vendor + sameAs per linked surface form
-    val iceTriples = ents.where(col("ice").isNotNull)
-      .join(canonMap, ents("entity_key") === canonMap("id"))
-      .select(concat(lit("vendor:"), col("canonical")).as("subj"),
-        lit("hasICE").as("pred"), col("ice").as("obj"))
-      .distinct()
-    val sameAs = canonMap.where(col("id") =!= col("canonical"))
-      .select(concat(lit("vendor:"), col("id")).as("subj"),
-        lit("sameAs").as("pred"),
-        concat(lit("vendor:"), col("canonical")).as("obj"))
-
-    docTriples.unionByName(iceTriples).unionByName(sameAs)
+    val (ents, canonMap, mapRows) = entityStage(docs, cfg)
+    docTriples(docs, mapNodes(canonMap, mapRows, cfg.broadcastEntityLimit))
+      .unionByName(vendorTriples(ents, canonMap))
   }
 
   /** Resumable run: documents are split into `nBatches` deterministic
@@ -300,24 +264,14 @@ object Pipeline {
     // the registry is what lets runIncremental extend the map later without
     // re-extracting this corpus)
     if (!committed.contains(CanonBatch)) {
-      val (cm, ents, _) = canonicalEntityMapAndEnts(docs, cfg)
-      val canonTriples = cm
-        .select(
-          concat(lit("vendor:"), col("id")).as("subj"),
-          lit("canonicalOf").as("pred"),
-          concat(lit("vendor:"), col("canonical")).as("obj"))
-        .unionByName(registryTriples(ents))
+      val (ents, cm, _) = entityStage(docs, cfg)
       // n_batches is part of the store's addressing scheme (batch b covers
       // pmod(xxhash64(doc_id), nBatches) == b), so it is recorded with the
       // canon snapshot and WINS on resume — see effBatches below
-      TripleStore.commitBatch(canonTriples, storeRoot, CanonBatch,
+      TripleStore.commitBatch(stateTriples(cm, ents), storeRoot, CanonBatch,
         Map("n_batches" -> nBatches.toLong))
     }
-    val canonMap = TripleStore.read(spark, storeRoot)
-      .where(col("pred") === "canonicalOf")
-      .select(
-        regexp_replace(col("subj"), "^vendor:", "").as("id"),
-        regexp_replace(col("obj"), "^vendor:", "").as("canonical"))
+    val canonMap = storedMap(TripleStore.read(spark, storeRoot))
     // map row count from the canon snapshot's lineage counters (driver-side
     // manifest read) — NOT a per-batch count() job over the store-backed map
     // (r3 verdict #6); the counter is written by every canon-stage commit,
@@ -342,8 +296,7 @@ object Pipeline {
       if (!TripleStore.committedBatches(storeRoot).contains(b)) {
         if (done >= failAfterBatches) throw new RuntimeException(s"injected failure before batch $b")
         val batchDocs = docs.where(pmod(xxhash64(col("doc_id")), lit(effBatches)) === b)
-        val raw = rawTriples(batchDocs, cfg)
-        val triples = canonicalize(raw, canonMap, canonRows, cfg.broadcastEntityLimit)
+        val triples = canonicalize(rawTriples(batchDocs), canonMap, canonRows, cfg.broadcastEntityLimit)
           .select("subj", "pred", "obj").distinct()
         val nDocs = batchDocs.count()
         TripleStore.commitBatch(triples, storeRoot, b,
@@ -372,18 +325,11 @@ object Pipeline {
       cfg: Config = Config(), extraCounters: Map[String, Long] = Map.empty): Int = {
     require(TripleStore.committedBatches(storeRoot).isEmpty,
       "runBootstrap: store already has snapshots — use runIncremental")
-    val (cm, ents, mapRows) = canonicalEntityMapAndEnts(docs, cfg)
-    val canonTriples = cm
-      .select(
-        concat(lit("vendor:"), col("id")).as("subj"),
-        lit("canonicalOf").as("pred"),
-        concat(lit("vendor:"), col("canonical")).as("obj"))
-      .unionByName(registryTriples(ents))
-    val raw = rawTriples(docs, cfg)
-    val triples = canonicalize(raw, cm, mapRows, cfg.broadcastEntityLimit)
+    val (ents, cm, mapRows) = entityStage(docs, cfg)
+    val triples = canonicalize(rawTriples(docs), cm, mapRows, cfg.broadcastEntityLimit)
       .select("subj", "pred", "obj").distinct()
     val nDocs = docs.count()
-    TripleStore.commitBatch(triples.unionByName(canonTriples), storeRoot, 0,
+    TripleStore.commitBatch(triples.unionByName(stateTriples(cm, ents)), storeRoot, 0,
       Map("docs" -> nDocs) ++ extraCounters)
     0
   }
@@ -495,9 +441,7 @@ object Pipeline {
     require(visible.nonEmpty, "runIncremental: empty store — runResumable first")
     val store = TripleStore.read(spark, storeRoot)
     val priorEnts = decodeRegistry(store)
-    val priorMap = store.where(col("pred") === "canonicalOf").select(
-      regexp_replace(col("subj"), "^vendor:", "").as("id"),
-      regexp_replace(col("obj"), "^vendor:", "").as("canonical"))
+    val priorMap = storedMap(store)
     val hasMap = priorMap.take(1).nonEmpty
     require(hasMap ||
       store.where(!col("pred").isin(InternalPreds: _*)).take(1).isEmpty,
@@ -511,9 +455,7 @@ object Pipeline {
         "(pre-registry format) — rebuild the canon snapshot with the " +
         "current runResumable first")
 
-    val vm = (
-      if (cfg.fast) FastExtract.vendorMentions(asOcrDocs(newDocs)).toDF()
-      else Extract.vendorMentions(newDocs)).persist()
+    val vm = vendorMentions(newDocs).persist()
     val (merged, newMap, mapRows, incEdges) = try {
       val newEnts = EntityLinker.entities(vm)
         .select("entity_key", "surface", "n_mentions", "ice")
@@ -554,65 +496,28 @@ object Pipeline {
     } finally vm.unpersist()
 
     // entity-scale delta: old canonical → its new canonical (where changed)
-    val delta = priorMap.select(col("canonical").as("old_c")).distinct()
-      .join(newMap.withColumnRenamed("canonical", "new_c"),
-        col("old_c") === col("id"), "left")
-      .select(col("old_c"), coalesce(col("new_c"), col("old_c")).as("new_c"))
-      .where(col("old_c") =!= col("new_c"))
+    val delta = priorMap.select(col("canonical").as("id")).distinct()
+      .join(newMap.withColumnRenamed("canonical", "new_c"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("new_c"), col("id")).as("canonical"))
+      .where(col("id") =!= col("canonical"))
     // delta rows ≤ distinct old canonicals ≤ merged-map rows, so the
     // already-known mapRows bounds it — same broadcast gate as the new map
     // below (an unconditional broadcast would OOM at 10^8-entity stores)
-    val d = maybeBroadcast(delta.select(
-      concat(lit("vendor:"), col("old_c")).as("surf_node"),
-      concat(lit("vendor:"), col("new_c")).as("canon_node")),
-      mapRows, cfg.broadcastEntityLimit)
+    val d = mapNodes(delta, mapRows, cfg.broadcastEntityLimit)
 
     // old doc-scoped triples re-pointed through the delta (sameAs/hasICE
     // are regenerated from the merged table below — cheaper than rewriting)
-    val oldDocTriples = store
-      .where(!col("pred").isin(InternalPreds: _*) &&
-        !col("pred").isin("sameAs", "hasICE"))
-      .join(d, col("obj") === d("surf_node"), "left")
-      .withColumn("obj",
-        when(col("pred").isin("hasVendor", "hasClient"),
-          coalesce(col("canon_node"), col("obj"))).otherwise(col("obj")))
+    val oldDocTriples = rewriteObjects(
+      store.where(!col("pred").isin(InternalPreds: _*) &&
+        !col("pred").isin("sameAs", "hasICE")), d)
       .select("subj", "pred", "obj")
 
-    // new docs' doc-scoped triples through the NEW map (run()'s shape)
-    val m = maybeBroadcast(
-      newMap.select(
-        concat(lit("vendor:"), col("id")).as("surf_node"),
-        concat(lit("vendor:"), col("canonical")).as("canon_node")),
-      mapRows, cfg.broadcastEntityLimit)
-    val newDocTriples = rawTriples(newDocs, cfg)
-      .where(col("pred") =!= "hasICE")
-      .join(m, col("obj") === m("surf_node"), "left")
-      .withColumn("obj",
-        when(col("pred").isin("hasVendor", "hasClient"),
-          coalesce(col("canon_node"), col("obj"))).otherwise(col("obj")))
-      .select("subj", "pred", "obj")
-
+    // new docs' doc-scoped triples through the NEW map (run()'s shape);
     // vendor-scoped triples regenerated from the merged entity table
-    val iceTriples = merged.where(col("ice").isNotNull)
-      .join(newMap, merged("entity_key") === newMap("id"))
-      .select(concat(lit("vendor:"), col("canonical")).as("subj"),
-        lit("hasICE").as("pred"), col("ice").as("obj"))
-      .distinct()
-    val sameAs = newMap.where(col("id") =!= col("canonical"))
-      .select(concat(lit("vendor:"), col("id")).as("subj"),
-        lit("sameAs").as("pred"),
-        concat(lit("vendor:"), col("canonical")).as("obj"))
-    val canonTriples = newMap.select(
-      concat(lit("vendor:"), col("id")).as("subj"),
-      lit("canonicalOf").as("pred"),
-      concat(lit("vendor:"), col("canonical")).as("obj"))
-
     val combined = oldDocTriples
-      .unionByName(newDocTriples)
-      .unionByName(iceTriples)
-      .unionByName(sameAs)
-      .unionByName(canonTriples)
-      .unionByName(registryTriples(merged))
+      .unionByName(docTriples(newDocs, mapNodes(newMap, mapRows, cfg.broadcastEntityLimit)))
+      .unionByName(vendorTriples(merged, newMap))
+      .unionByName(stateTriples(newMap, merged))
     val newId = TripleStore.committedBatches(storeRoot).max + 1
     val nDocs = newDocs.select("doc_id").distinct().count()
     TripleStore.commitBatch(combined, storeRoot, newId,

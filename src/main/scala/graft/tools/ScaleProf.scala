@@ -66,16 +66,9 @@ object ScaleProf {
     phases("edges") = time(edges.count())
     var comps: org.apache.spark.sql.DataFrame = null
     phases("cc") = time { comps = graft.canon.ConnectedComponents.run(edges) }
-    var counts: org.apache.spark.sql.DataFrame = null
-    phases("salted_count") = time {
-      counts = graft.ops.Skew.saltedCount(vm, "entity_key",
-        saltFrom = xxhash64(col("doc_id"), col("role")), salts = 16)
-        .select(col("entity_key").as("id"), col("n"))
-      counts = graft.Materialize(counts, eager = false)
-      counts.count(); ()
-    }
     var canon: org.apache.spark.sql.DataFrame = null
     phases("canon_map") = time {
+      val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
       canon = graft.Materialize(
         graft.canon.ConnectedComponents.canonicalMap(comps, counts), eager = false)
       canon.count(); ()

@@ -72,9 +72,7 @@ object SkewProfile {
       nComps = comps.count()
     }
     val tCanon = time {
-      val counts = graft.ops.Skew.saltedCount(vm, "entity_key",
-          saltFrom = xxhash64(col("doc_id"), col("role")), salts = 16)
-        .select(col("entity_key").as("id"), col("n"))
+      val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
       nMap = ConnectedComponents.canonicalMap(comps, counts).count()
     }
     vm.unpersist(); edges.unpersist()

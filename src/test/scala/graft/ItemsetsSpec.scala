@@ -130,6 +130,30 @@ class ItemsetsSpec extends SparkSuite {
     assert(got === exp)
   }
 
+  test("dense basket (1302 frequent items) takes the pruned path: no INT wrap in the triple bound") {
+    // one dense basket holds every item; items come in groups of three
+    // that also share a small basket, so only in-group pairs/triples reach
+    // support 2. Σ C(|fa|, 3) ≈ 3.7e8 is far past directTriplesMax, but an
+    // INT product size·(size-1)·(size-2) wraps negative at |fa| >= 1291 and
+    // would send the basket into the direct C(n,3) enumeration.
+    val groups = 434
+    def it(i: Int) = f"x$i%04d"
+    val dense = (0 until 3 * groups).map(i => "dense" -> it(i))
+    val small = (0 until 3 * groups).map(i => s"g${i / 3}" -> it(i))
+    val df = (dense ++ small).toDF("bk", "it")
+    val res = Itemsets.frequentItemsets(df, col("bk"), col("it"), 2L)
+    assert(res.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
+      "dense basket must take the Apriori-pruned triple path")
+    val got = res.as[(String, Int, Long)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val exp = (0 until groups).flatMap { g =>
+      val Seq(a, b, c) = (0 until 3).map(k => it(3 * g + k))
+      Seq((a, 1), (b, 1), (c, 1), (s"$a|$b", 2), (s"$a|$c", 2), (s"$b|$c", 2),
+        (s"$a|$b|$c", 3)).map(_ -> 2L)
+    }.toMap
+    assert(got === exp)
+  }
+
   test("gate-forced parity: direct triple enumeration == Apriori-pruned path") {
     import spark.implicits._
     val rows = (1 to 200).flatMap { b =>

@@ -25,11 +25,6 @@ class PipelineSpec extends SparkSuite {
     assert(pr.f1 == 1.0, s"expected exact match on fixture corpus, got $pr")
   }
 
-  test("declarative path produces the same graph") {
-    val pr = Evaluation.triplePR(Pipeline.run(docs, Pipeline.Config(fast = false)), expected)
-    assert(pr.f1 == 1.0, pr)
-  }
-
   test("canonical-map shuffled-join fallback (broadcastEntityLimit=0) == broadcast path") {
     // at 10^8+ entities the canonical map exceeds any broadcast budget;
     // forcing the limit to 0 drives every rewrite through the shuffled-join
@@ -43,6 +38,17 @@ class PipelineSpec extends SparkSuite {
     val plan = Pipeline.run(docs, Pipeline.Config(broadcastEntityLimit = 0L))
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("ResolvedHint"), "no broadcast hint expected in fallback plan")
+  }
+
+  test("distributed entity linking (elSmallThreshold=0) == driver-local path") {
+    // elSmallThreshold = 0 forces the distributed LSH→verify chain (the
+    // gate that splits the driver-local and entity-scale builds), which
+    // must produce the identical graph
+    val localGraph = Pipeline.run(docs).select("subj", "pred", "obj")
+    val distributedGraph = Pipeline.run(docs, Pipeline.Config(elSmallThreshold = 0L))
+      .select("subj", "pred", "obj")
+    assert(localGraph.exceptAll(distributedGraph).count() == 0)
+    assert(distributedGraph.exceptAll(localGraph).count() == 0)
   }
 
   test("LSH-only entity linking (useIce=false) still links noisy variants") {
