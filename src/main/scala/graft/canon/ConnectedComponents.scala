@@ -2,6 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components over a candidate-match edge list, as an iterative
   * large-star / small-star computation on DataFrames (no RDDs, no GraphX) —
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions._
   * friendly; a mega-vendor star stays a groupBy-min, never a collect).
   *
   * Node ids are strings (entity keys); the component label is the minimum id
-  * under lexicographic order — only a total order is required.
+  * under Spark's string order (UTF-8 bytes) — only a total order is
+  * required, but the driver twins must use the same one.
   *
   * Each iteration `localCheckpoint`s to truncate lineage (SURVEY.md §4:
   * "CC iterations checkpoint every iteration pair to cut lineage").
@@ -120,11 +122,16 @@ object ConnectedComponents {
     nodes.union(roots).distinct()
   }
 
-  /** Driver-side union-find with path compression — exact same contract as
-    * the distributed path, for edge sets that fit on the driver. */
-  private def unionFindLocal(spark: org.apache.spark.sql.SparkSession,
-      es: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
+  /** Spark's string order: UTF-8 bytes, unsigned — what `min`, `<` and
+    * `orderBy` compare. Java's `String` order compares UTF-16 units and
+    * disagrees once ids mix non-BMP chars with U+E000–U+FFFF. */
+  private def lt(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+
+  /** Driver-side union-find with path compression: node → min id of its
+    * component (Spark's order), for every node of `es`. The one driver
+    * union-find behind [[unionFindLocal]] and [[canonicalMapLocal]]. */
+  private def componentsLocal(es: Iterable[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -136,10 +143,16 @@ object ConnectedComponents {
     es.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb } // min-root
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb } // min-root
     }
-    val out = parent.keys.toSeq.map(k => (k, find(k)))
-    spark.createDataset(out).toDF("id", "component")
+    parent.keys.iterator.map(k => k -> find(k)).toMap
+  }
+
+  /** [[run]]'s contract on the driver, for edge sets that fit there. */
+  private def unionFindLocal(spark: org.apache.spark.sql.SparkSession,
+      es: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(componentsLocal(es).toSeq).toDF("id", "component")
   }
 
   /** Incremental label maintenance — fold a batch of NEW edges into an
@@ -234,5 +247,35 @@ object ConnectedComponents {
       .where(col("rk") === 1)
       .select(col("component"), col("id").as("canonical"))
     labeled.join(canon, "component").select(col("id"), col("canonical"))
+  }
+
+  /** [[canonicalMap]] over [[run]]'s components, on the driver: union-find
+    * over `edges`, then per component the member of `counts` that ranks
+    * first under canonicalMap's window order (n desc, ASCII digit count
+    * asc, code-point length desc, UTF-8 bytes asc). Returns (id, canonical)
+    * for every id in `counts`; ids not in `edges` map to themselves. Null
+    * endpoints and self loops are dropped as in [[run]]; null ids get no
+    * row, as in canonicalMap's inner join on the component. */
+  private[graft] def canonicalMapLocal(edges: Seq[(String, String)],
+      counts: Seq[(String, Long)]): Seq[(String, String)] = {
+    val comp = componentsLocal(
+      edges.filter { case (a, b) => a != null && b != null && a != b })
+    def digits(s: String): Int = s.count(c => c >= '0' && c <= '9')
+    // (n, digits, length) decide first; ties fall to the id's byte order
+    def before(a: (String, Long), b: (String, Long)): Boolean =
+      if (a._2 != b._2) a._2 > b._2
+      else {
+        val (da, db) = (digits(a._1), digits(b._1))
+        if (da != db) da < db
+        else {
+          val (la, lb) = (UTF8String.fromString(a._1).numChars,
+            UTF8String.fromString(b._1).numChars)
+          if (la != lb) la > lb else lt(a._1, b._1)
+        }
+      }
+    val labeled = counts.filter(_._1 != null).map(c => (c, comp.getOrElse(c._1, c._1)))
+    val best = scala.collection.mutable.HashMap.empty[String, (String, Long)]
+    labeled.foreach { case (c, k) => if (best.get(k).forall(before(c, _))) best(k) = c }
+    labeled.map { case (c, k) => (c._1, best(k)._1) }
   }
 }

@@ -59,14 +59,33 @@ object Mis {
     // gate-forces parity incl. round numbers and the isolated backfill.
     val localMaxE = spark.conf
       .get("spark.graft.mis.localMaxEdges", "8000000").toLong
-    if (live.count() <= localMaxE) {
+    val local = if (live.count() > localMaxE) None else {
+      val liveEdges0 = live.as[(String, String)].collect()
+      val allIds = liveEdges0.map(_._1).distinct
+      val prioRows = spark.createDataset(allIds.toSeq).toDF("id")
+        .select(col("id"), prioOf(col("id")).as("p")).collect()
+      // cmpVal below orders exactly these field types; a null field or any
+      // other type (Float, Decimal, Boolean, Timestamp, nested struct…)
+      // takes the distributed rounds, whose struct ordering covers them all
+      def comparable(v: Any): Boolean = v match {
+        case _: Long | _: Int | _: String | _: Double | _: Short | _: Byte => true
+        case _ => false
+      }
+      if (prioRows.forall(_.getStruct(1).toSeq.forall(comparable)))
+        Some((liveEdges0, allIds, prioRows))
+      else None
+    }
+    if (local.isDefined) {
+      val (liveEdges0, allIds, prioRows) = local.get
+      import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
       import org.apache.spark.unsafe.types.UTF8String
       def cmpVal(x: Any, y: Any): Int = (x, y) match {
         case (a: Long, b: Long) => java.lang.Long.compare(a, b)
         case (a: Int, b: Int) => Integer.compare(a, b)
         case (a: String, b: String) =>
           UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-        case (a: Double, b: Double) => java.lang.Double.compare(a, b)
+        // Spark's double order: -0.0 == 0.0, NaN == NaN and above all
+        case (a: Double, b: Double) => SQLOrderingUtil.compareDoubles(a, b)
         case (a: Short, b: Short) => java.lang.Short.compare(a, b)
         case (a: Byte, b: Byte) => java.lang.Byte.compare(a, b)
         case _ => throw new IllegalArgumentException(
@@ -81,10 +100,6 @@ object Mis {
         }
         0
       }
-      val liveEdges0 = live.as[(String, String)].collect()
-      val allIds = liveEdges0.map(_._1).distinct
-      val prioRows = spark.createDataset(allIds.toSeq).toDF("id")
-        .select(col("id"), prioOf(col("id")).as("p")).collect()
       val prioM = new java.util.HashMap[String, org.apache.spark.sql.Row]
       prioRows.foreach(r => prioM.put(r.getString(0), r.getStruct(1)))
       var liveE = liveEdges0

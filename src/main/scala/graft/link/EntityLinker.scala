@@ -1,8 +1,9 @@
 package graft.link
 
 import graft.tag.Taggers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Entity linking of vendor/client surface forms.
   *
@@ -55,7 +56,10 @@ object EntityLinker {
     * 5+ stage barriers (blocks, bucket sizes, kept, self-join, distinct) —
     * pure fixed latency when the entity table fits on the driver, which a
     * 10^12-doc corpus with 10^5–10^7 DISTINCT vendors often still does.
-    * `smallThreshold = 0` forces the distributed path. */
+    * `smallThreshold = 0` forces the distributed path. `Pipeline`'s full
+    * builds gate the whole entity stage themselves (one collect feeding
+    * [[edgesLocal]] directly), so in `Pipeline` this gate serves only the
+    * incremental path ([[candidateEdgesTouched]]). */
   def candidateEdgesFromEntities(
       ents: DataFrame,
       numHashes: Int = 8,
@@ -119,9 +123,8 @@ object EntityLinker {
       if (head.length <= smallThreshold) {
         val spark = ents.sparkSession
         import spark.implicits._
-        val rows = head.map(r => LocalEnt(r.getString(0), r.getString(1),
-          r.getSeq[String](2), if (r.isNullAt(3)) null else r.getString(3)))
-        val all = edgesLocal(rows, numHashes, jaccardMin, editSimMin, useIce, maxBucket)
+        val all = edgesLocal(head.map(LocalEnt.of), numHashes, jaccardMin,
+          editSimMin, useIce, maxBucket)
         // exact parity with the distributed restriction: the full local
         // edge set filtered to touched-incident pairs
         val kept = touched.fold(all) { t =>
@@ -268,19 +271,30 @@ object EntityLinker {
     }
   }
 
-  private final case class LocalEnt(key: String, surface: String,
+  /** One collected row of the entity table, as [[edgesLocal]] reads it. */
+  private[graft] final case class LocalEnt(key: String, surface: String,
       tokens: Seq[String], ice: String)
+
+  private[graft] object LocalEnt {
+    /** From a row carrying [[entities]]' columns (by name, any order). */
+    def of(r: Row): LocalEnt = LocalEnt(r.getAs[String]("entity_key"),
+      r.getAs[String]("surface"), r.getSeq[String](r.fieldIndex("tokens")), r.getAs[String]("ice"))
+  }
 
   /** Driver-side twin of the distributed LSH→verify chain. Parity by
     * construction: band hashes via XxHash64Function (what `xxhash64(t,
     * lit(i))` compiles to), edit distance via UTF8String.levenshteinDistance
-    * (what `levenshtein` compiles to), same bucket cap, same ICE veto. */
-  private def edgesLocal(ents: Array[LocalEnt], numHashes: Int,
+    * (what `levenshtein` compiles to), keys ordered by their UTF-8 bytes
+    * (what `<` and `min` compare), same bucket cap, same ICE veto. */
+  private[graft] def edgesLocal(ents: Array[LocalEnt], numHashes: Int,
       jaccardMin: Double, editSimMin: Double, useIce: Boolean,
       maxBucket: Int): Seq[(String, String)] = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
+
+    // Spark's string order; Java's String order compares UTF-16 units
+    val keyOrder: Ordering[String] = (a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
     // minhash signature per entity: sig_i = min over tokens of
     // xxhash64(token, i) — the expression folds args left-to-right from
@@ -344,7 +358,7 @@ object EntityLinker {
         var j = i + 1
         while (j < m.length) {
           val (a, b) = (ents(m(i)), ents(m(j)))
-          val (src, dst) = if (a.key < b.key) (a, b) else (b, a)
+          val (src, dst) = if (keyOrder.lt(a.key, b.key)) (a, b) else (b, a)
           if (src.key != dst.key && !out.contains((src.key, dst.key))) {
             val iceConflict = src.ice != null && dst.ice != null && src.ice != dst.ice
             if (!iceConflict &&
@@ -362,7 +376,7 @@ object EntityLinker {
       // (LocalElParitySpec pins the edge sets equal)
       val byIce = ents.filter(_.ice != null).groupBy(_.ice)
       byIce.valuesIterator.foreach { es =>
-        val keys = es.map(_.key).distinct.sorted
+        val keys = es.map(_.key).distinct.sorted(keyOrder)
         val hub = keys.head
         keys.iterator.drop(1).foreach(k => out += ((hub, k)))
       }

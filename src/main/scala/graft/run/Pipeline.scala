@@ -20,7 +20,11 @@ import org.apache.spark.sql.functions._
   *   1 groupBy(entity_key) over the SMALL mention projection — it yields
   *     the entity table AND the per-entity mention counts (n_mentions)
   *     that weight canonical-representative selection;
-  *   LSH block join + CC iterations over the MUCH smaller entity set;
+  *   below `Config.elSmallThreshold` entities, the rest of the entity
+  *     stage is that groupBy plus ONE collect of the entity table: linking,
+  *     union-find and canonical choice then run on the driver with no
+  *     further job; above it, LSH block join + CC iterations + the
+  *     canonical-map window over the MUCH smaller entity set;
   *   1 broadcast-able join to rewrite vendor/client objects;
   *   1 final repartition at write.
   */
@@ -38,10 +42,13 @@ object Pipeline {
         * executor memory budget; the fallback trades 2 triple-stream
         * shuffles for that safety. */
       broadcastEntityLimit: Long = 10000000L,
-      /** entity count below which the LSH→verify linking chain runs
-        * driver-side (EntityLinker hybrid, LocalElParitySpec-identical);
-        * 0 forces the distributed chain — what ScalingBench measures, since
-        * the driver shortcut deliberately does NOT scale with executors. */
+      /** entity count up to which the whole entity stage — LSH→verify
+        * linking, connected components and canonical choice — runs as one
+        * driver pass over one collect of the entity table (identical
+        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec);
+        * `runIncremental` uses it to gate its linking chain alone. 0 forces
+        * the distributed chain — what ScalingBench measures, since the
+        * driver shortcut deliberately does NOT scale with executors. */
       elSmallThreshold: Long = 50000L)
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.run.Pipeline")
@@ -123,30 +130,64 @@ object Pipeline {
     * selection are the entity table's `n_mentions` — the same groupBy, not
     * a second pass over the mentions.
     *
+    * Below `cfg.elSmallThreshold` entities the stage after that groupBy is
+    * ONE driver pass over ONE collect (see [[localEntityStage]]); above it
+    * (or with the threshold at 0) the distributed chain runs.
+    *
     * Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
     * table is persist()ed — under `spark.graft.materialize=none` each
     * linking branch re-reads `ents`, and so the mentions, from it — but
     * only for the duration of this call: everything returned is
-    * ENTITY-scale and materialized via self-cleaning localCheckpoint before
-    * `finally` releases the cache. Nothing doc-scale outlives the call. */
+    * ENTITY-scale and materialized via self-cleaning localCheckpoint (or a
+    * driver-local relation) before `finally` releases the cache. Nothing
+    * doc-scale outlives the call. */
   private def entityStage(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, Long) = {
     val vm = vendorMentions(docs).persist()
     try {
       val ents = EntityLinker.entities(vm) // entity-scale, materialized inside
-      val edges = EntityLinker.candidateEdgesFromEntities(
-        ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
-        smallThreshold = cfg.elSmallThreshold)
-      val comps = ConnectedComponents.run(edges)
-      val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
-      // LAZY materialize + count in ONE job (the count is the action that
-      // computes and stores the map — no separate eager-checkpoint job);
-      // the count must run inside the try, while the mention cache that the
-      // map's lineage (and ents') reads is still live. It is returned so
-      // callers don't re-count the map for the broadcast decision.
-      val cm = graft.Materialize(
-        ConnectedComponents.canonicalMap(comps, counts), eager = false)
-      (ents, cm, cm.count())
+      localEntityStage(ents, cfg).getOrElse {
+        // the gate above already measured the table: the linker's own gate
+        // (same threshold) could only fail again, so it is skipped
+        val edges = EntityLinker.candidateEdgesFromEntities(
+          ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
+          smallThreshold = 0L)
+        val comps = ConnectedComponents.run(edges)
+        val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
+        // LAZY materialize + count in ONE job (the count is the action that
+        // computes and stores the map — no separate eager-checkpoint job);
+        // the count must run inside the try, while the mention cache that
+        // the map's lineage (and ents') reads is still live. It is returned
+        // so callers don't re-count the map for the broadcast decision.
+        val cm = graft.Materialize(
+          ConnectedComponents.canonicalMap(comps, counts), eager = false)
+        (ents, cm, cm.count())
+      }
     } finally vm.unpersist()
+  }
+
+  /** The entity stage on the driver when the entity table has at most
+    * `cfg.elSmallThreshold` rows (None otherwise, or when the threshold is
+    * 0): one `take` both sizes and collects the table, then linking
+    * ([[EntityLinker.edgesLocal]]), union-find and representative choice
+    * ([[ConnectedComponents.canonicalMapLocal]]) run with no further Spark
+    * job. Same results as the distributed chain (PipelineSpec,
+    * LocalElParitySpec, ConnectedComponentsSpec); both results come back as
+    * local relations, so the map's row count is free. */
+  private def localEntityStage(ents: DataFrame,
+      cfg: Config): Option[(DataFrame, DataFrame, Long)] = {
+    if (cfg.elSmallThreshold <= 0) return None
+    val limit = math.min(cfg.elSmallThreshold, Int.MaxValue - 1L).toInt
+    val table = ents.select("entity_key", "surface", "n_mentions", "ice", "tokens")
+    val head = table.take(limit + 1)
+    if (head.length > limit) return None
+    val spark = ents.sparkSession
+    import spark.implicits._
+    val edges = EntityLinker.edgesLocal(head.map(EntityLinker.LocalEnt.of),
+      cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, maxBucket = 1000)
+    val map = ConnectedComponents.canonicalMapLocal(edges,
+      head.toSeq.map(r => (r.getString(0), r.getLong(2))))
+    val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), table.schema)
+    Some((localEnts, map.toDF("id", "canonical"), map.size.toLong))
   }
 
   /** The store-side state of a canonical map and its entity table: one

@@ -1,6 +1,8 @@
 package graft
 
 import graft.canon.ConnectedComponents
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class ConnectedComponentsSpec extends SparkSuite {
   import spark.implicits._
@@ -20,7 +22,10 @@ class ConnectedComponentsSpec extends SparkSuite {
       Seq(("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"), ("a", "b")), // chain
       Seq(("a", "b"), ("b", "c"), ("c", "a")), // cycle
       (1 to 30).map(i => (f"n$i%03d", "hub")), // star
-      Seq(("a", "a"), ("a", "b"))) // self loop
+      Seq(("a", "a"), ("a", "b")), // self loop
+      // U+FF21 sorts first in UTF-8 bytes (Spark's order), U+1F600 in
+      // UTF-16 units (Java's): the driver path must pick Spark's min
+      Seq(("\uFF21", "\uD83D\uDE00")))
     shapes.foreach { es =>
       assert(cc(es: _*) == ccDist(es: _*), s"paths disagree on $es")
     }
@@ -86,5 +91,28 @@ class ConnectedComponentsSpec extends SparkSuite {
     val m = ConnectedComponents.canonicalMap(comps, counts)
       .as[(String, String)].collect().toMap
     assert(m("solo") == "solo")
+  }
+
+  test("property: canonicalMapLocal == canonicalMap over the distributed components") {
+    // few short ids over digits, U+E000–U+FFFF and non-BMP chars, counts
+    // 1–3: ties on count, digit count and length are the common case, and
+    // most ids are singletons absent from the edges (self loops included)
+    val ch = Gen.oneOf("a", "b", "7", "9", "\uE000", "\uFFFD", "\uFF21",
+      "\uD83D\uDE00", "\uD83D\uDE01")
+    val id = Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, ch).map(_.mkString))
+    val gen = for {
+      ids <- Gen.listOfN(40, id).map(_.distinct)
+      ns <- Gen.listOfN(ids.size, Gen.choose(1L, 3L))
+      es <- Gen.listOfN(25, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+    } yield (ids.zip(ns), es)
+    Seq(3L, 17L, 29L).foreach { seed =>
+      val (counts, es) = gen.apply(Gen.Parameters.default, Seed(seed)).get
+      val want = ConnectedComponents.canonicalMap(
+          ConnectedComponents.run(es.toDF("src", "dst"), smallThreshold = -1L),
+          counts.toDF("id", "n"))
+        .as[(String, String)].collect().toSeq.sorted
+      val got = ConnectedComponents.canonicalMapLocal(es, counts).sorted
+      assert(got == want, s"seed=$seed edges=$es counts=$counts")
+    }
   }
 }

@@ -29,6 +29,26 @@ class LocalElParitySpec extends SparkSuite {
     } finally vm.unpersist()
   }
 
+  test("local path == distributed path on non-BMP keys (Spark's UTF-8 order)") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (Spark's `<` and `min`)
+    // but after it in UTF-16 units (Java's): the LSH pair's orientation
+    // and the ICE star's hub must both follow Spark
+    val vm = Seq(
+      ("acme_trading_group_co_\uFF21", "ACME TRADING GROUP CO \uFF21", ""),
+      ("acme_trading_group_co_\uD83D\uDE00", "ACME TRADING GROUP CO \uD83D\uDE00", ""),
+      ("\uFF21", "\uFF21", "123456789"),
+      ("\uD83D\uDE00", "\uD83D\uDE00", "123456789"),
+      ("\uE000_depot", "\uE000 DEPOT", "123456789"))
+      .toDF("entity_key", "surface", "ice")
+    for (useIce <- Seq(true, false)) {
+      val local = edges(vm, useIce, threshold = Long.MaxValue)
+      val dist = edges(vm, useIce, threshold = 0L)
+      assert(local.nonEmpty)
+      assert(local == dist,
+        s"useIce=$useIce localOnly=${local -- dist} distOnly=${dist -- local}")
+    }
+  }
+
   test("local path == distributed path under heavy noise and a tight bucket cap") {
     val vm = FastExtract.vendorMentions(InvoiceCorpus.docs(spark, 150, 7L, 0.9)).toDF().cache()
     try {

@@ -100,13 +100,23 @@ class MisSpec extends SparkSuite {
     import spark.implicits._
     val e = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
       ("e", "f"), ("g", "h"), ("h", "i")).toDF("src", "dst")
-    def go(df: org.apache.spark.sql.DataFrame) =
-      graft.graph.Mis.maximalIndependentSet(df).as[(String, Int)].collect().toSet
-    val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.mis.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.mis.localMaxEdges")
-    assert(local == dist)
+    // the default priority, one with a null field, one with a Float field,
+    // and a Double field where -0.0 and 0.0 tie (Spark's double order)
+    val prios: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = Seq(
+      c => struct(xxhash64(c).as("h"), c.as("i")),
+      c => struct(lit(null).cast("long").as("z"), xxhash64(c).as("h"), c.as("i")),
+      c => struct(xxhash64(c).cast("float").as("f"), c.as("i")),
+      c => struct(when(c === "d", lit(-0.0)).otherwise(lit(0.0)).as("d"), c.as("i")))
+    prios.foreach { p =>
+      def go(df: org.apache.spark.sql.DataFrame) =
+        graft.graph.Mis.maximalIndependentSet(df, prioOf = p)
+          .as[(String, Int)].collect().toSet
+      val local = go(e)
+      val dist = try {
+        spark.conf.set("spark.graft.mis.localMaxEdges", "0")
+        go(e)
+      } finally spark.conf.unset("spark.graft.mis.localMaxEdges")
+      assert(local == dist, p(col("id")).toString)
+    }
   }
 }

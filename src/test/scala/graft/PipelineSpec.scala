@@ -1,6 +1,7 @@
 package graft
 
 import graft.fixtures.InvoiceCorpus
+import graft.link.EntityLinker
 import graft.metrics.Evaluation
 import graft.run.{Extract, FastExtract, Pipeline}
 import org.apache.spark.sql.functions._
@@ -41,14 +42,22 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("distributed entity linking (elSmallThreshold=0) == driver-local path") {
-    // elSmallThreshold = 0 forces the distributed LSH→verify chain (the
-    // gate that splits the driver-local and entity-scale builds), which
-    // must produce the identical graph
+    // elSmallThreshold gates the whole entity stage: at 0 the distributed
+    // chain runs, at the fixture's entity count n the driver-local pass,
+    // at n - 1 the distributed chain again — all the identical graph
+    val n = EntityLinker.entities(FastExtract.vendorMentions(
+      docs.selectExpr("doc_id", "page_w", "page_h", "spans").as[graft.model.OcrDoc]).toDF())
+      .count()
     val localGraph = Pipeline.run(docs).select("subj", "pred", "obj")
-    val distributedGraph = Pipeline.run(docs, Pipeline.Config(elSmallThreshold = 0L))
-      .select("subj", "pred", "obj")
-    assert(localGraph.exceptAll(distributedGraph).count() == 0)
-    assert(distributedGraph.exceptAll(localGraph).count() == 0)
+    for (threshold <- Seq(0L, n, n - 1)) {
+      val graph = Pipeline.run(docs, Pipeline.Config(elSmallThreshold = threshold))
+      // the driver-local stage returns local relations; the chain does not
+      assert(graph.queryExecution.optimizedPlan.toString.contains("LocalRelation") ==
+        (threshold == n), s"threshold=$threshold of n=$n took the wrong path")
+      val g = graph.select("subj", "pred", "obj")
+      assert(localGraph.exceptAll(g).count() == 0, s"threshold=$threshold")
+      assert(g.exceptAll(localGraph).count() == 0, s"threshold=$threshold")
+    }
   }
 
   test("LSH-only entity linking (useIce=false) still links noisy variants") {
