@@ -30,7 +30,7 @@ PYEOF
   exit 0
 fi
 
-GATES_OFF="spark.graft.materialize=none;spark.graft.kcore.localMaxEdges=0;spark.graft.coloring.localMaxEdges=0;spark.graft.stablematch.localMaxRows=0;spark.graft.coverage.localMaxRows=0;spark.graft.distances.localMaxEdges=0;spark.graft.topo.localMaxEdges=0;spark.graft.reachable.localMaxEdges=0;spark.graft.suffixarray.localMaxChars=0;spark.graft.pagerank.localMaxEdges=0;spark.graft.lpa.localMaxEdges=0;spark.graft.hits.localMaxEdges=0;spark.graft.triangles.localMaxEdges=0;spark.graft.walks.localMaxEdges=0"
+GATES_OFF="spark.graft.materialize=none;spark.graft.local.maxEntries=0"
 
 # pass 1: default conf — the executed plan
 sbt -batch "runMain graft.tools.PlanDump $QUERIES_PLAIN $QUERIES_LOOP" \

@@ -1,0 +1,149 @@
+package graft
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The driver-local gate and the pieces every driver-local replay shares.
+  *
+  * Many iterative operators have a driver-local twin: when the input fits
+  * on the driver, one collect plus a linear pass replaces O(rounds)
+  * serial Spark jobs, with identical results (each twin is locked by a
+  * gate-forced parity spec). Beyond the gate the distributed loop runs
+  * unchanged.
+  *
+  *  - One budget: `spark.graft.local.maxEntries` (default 8,000,000)
+  *    bounds the entries a twin holds on the driver. Each call site
+  *    measures what it collects and, where one row costs more than one
+  *    entry, weights the measure (and says why). `0` forces every
+  *    distributed path.
+  *  - [[fits]] decides from a measure the caller already has; [[take]]
+  *    sizes and collects in one action. Both log the operator, the
+  *    measure, the limit and the path taken.
+  *  - [[order]]: Spark's string order, the one the distributed twins'
+  *    `min`, `<` and `orderBy` apply.
+  *  - [[components]]: the driver union-find (min root under [[order]]).
+  *  - [[dense]] / [[denseOf]] and [[undirected]]: dense ids and an
+  *    int-array CSR adjacency over them. */
+object Local {
+  val MaxEntriesKey = "spark.graft.local.maxEntries"
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Local")
+
+  def maxEntries(spark: SparkSession): Long =
+    spark.conf.get(MaxEntriesKey, "8000000").toLong
+
+  private def record(op: String, entries: Long, limit: Long, local: Boolean): Boolean = {
+    log.info(s"gate $op: entries=$entries limit=$limit path=" +
+      (if (local) "local" else "distributed"))
+    local
+  }
+
+  /** Whether `entries` driver-held entries fit the budget. */
+  def fits(spark: SparkSession, op: String, entries: Long): Boolean = {
+    val limit = maxEntries(spark)
+    record(op, entries, limit, entries <= limit)
+  }
+
+  /** One action both sizes and collects: the rows of `ds` when there are
+    * at most `limit` of them (clamped below `Int.MaxValue`, which `take`
+    * cannot exceed), else None. A negative limit is None without a job. */
+  def take[T](ds: Dataset[T], op: String, limit: Long): Option[Array[T]] =
+    if (limit < 0) None
+    else {
+      val lim = math.min(limit, Int.MaxValue - 1L).toInt
+      val head = ds.take(lim + 1)
+      if (record(op, head.length.toLong, lim.toLong, head.length <= lim)) Some(head)
+      else None
+    }
+
+  /** Spark's string order: UTF-8 bytes, unsigned. Java's `String` order
+    * compares UTF-16 units and disagrees once strings mix non-BMP chars
+    * with U+E000–U+FFFF. */
+  val order: Ordering[String] = (a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  def lt(a: String, b: String): Boolean = order.lt(a, b)
+
+  /** Union-find with path compression: node → min id of its component
+    * under [[order]], for every node of `es`. */
+  def components(es: Iterable[(String, String)]): Map[String, String] = {
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.iterator.map(k => k -> find(k)).toMap
+  }
+
+  /** An edge list over dense ids: `ids(i)` is the original id of dense id
+    * `i`; edge `j` runs `src(j)` → `dst(j)`. */
+  final class Dense[K](val ids: Array[K], val src: Array[Int], val dst: Array[Int]) {
+    def n: Int = ids.length
+  }
+
+  /** Long ids: a sorted distinct id array, endpoints found by binary
+    * search. */
+  def dense(src: Array[Long], dst: Array[Long]): Dense[Long] = {
+    val all = java.util.Arrays.copyOf(src, src.length + dst.length)
+    System.arraycopy(dst, 0, all, src.length, dst.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var i = 0
+    while (i < all.length) {
+      if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    def ix(a: Array[Long]): Array[Int] = a.map(java.util.Arrays.binarySearch(ids, _))
+    new Dense(ids, ix(src), ix(dst))
+  }
+
+  /** Any other id type: dense ids in first-seen order. */
+  def denseOf[K: ClassTag](src: Array[K], dst: Array[K]): Dense[K] = {
+    val ix = new java.util.HashMap[K, Integer]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[K]
+    def id(x: K): Int = {
+      val got = ix.get(x)
+      if (got != null) got.intValue
+      else { ix.put(x, ids.length); ids += x; ids.length - 1 }
+    }
+    val (s, d) = (src.map(id), dst.map(id))
+    new Dense(ids.toArray, s, d)
+  }
+
+  /** Undirected CSR: slots `off(v) until off(v + 1)` hold v's neighbours
+    * in `nbr` and the index of the edge that put them there in `edge`;
+    * every edge fills one slot at each endpoint. */
+  final class Csr(val off: Array[Int], val nbr: Array[Int], val edge: Array[Int]) {
+    def deg(v: Int): Int = off(v + 1) - off(v)
+  }
+
+  def undirected(g: Dense[_]): Csr = {
+    val (n, m) = (g.n, g.src.length)
+    val off = new Array[Int](n + 1)
+    var i = 0
+    while (i < m) { off(g.src(i) + 1) += 1; off(g.dst(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < n) { off(i + 1) += off(i); i += 1 }
+    val nbr = new Array[Int](2 * m); val edge = new Array[Int](2 * m)
+    val fill = java.util.Arrays.copyOf(off, n)
+    i = 0
+    while (i < m) {
+      val (s, d) = (g.src(i), g.dst(i))
+      nbr(fill(s)) = d; edge(fill(s)) = i; fill(s) += 1
+      nbr(fill(d)) = s; edge(fill(d)) = i; fill(d) += 1
+      i += 1
+    }
+    new Csr(off, nbr, edge)
+  }
+}

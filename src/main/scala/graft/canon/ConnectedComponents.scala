@@ -76,18 +76,15 @@ object ConnectedComponents {
     val cleaned = edges.select(col("src").cast("string"), col("dst").cast("string"))
       .where(col("src") =!= col("dst"))
       .distinct()
-    // single action: take(threshold+1) both sizes the edge set AND collects
-    // it when small — no separate count() pass over the linking chain
-    if (smallThreshold >= 0) {
-      // clamp before toInt: a >2^31 threshold must not wrap negative
-      val thr = math.min(smallThreshold, Int.MaxValue - 1L).toInt
-      val head = cleaned.take(thr + 1)
-      if (head.length <= thr) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return unionFindLocal(spark,
-          head.map(r => (r.getString(0), r.getString(1))))
-      }
+    // single action: Local.take both sizes the edge set AND collects it
+    // when small — no separate count() pass over the linking chain (a
+    // negative threshold skips the probe)
+    val small = graft.Local.take(cleaned, "cc", smallThreshold)
+    if (small.isDefined) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return spark.createDataset(graft.Local.components(
+        small.get.map(r => (r.getString(0), r.getString(1)))).toSeq).toDF("id", "component")
     }
 
     // LAZY materialization + signature = ONE job per round: the signature
@@ -120,39 +117,6 @@ object ConnectedComponents {
     val nodes = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id"), col("dst").as("component")).distinct()
     nodes.union(roots).distinct()
-  }
-
-  /** Spark's string order: UTF-8 bytes, unsigned — what `min`, `<` and
-    * `orderBy` compare. Java's `String` order compares UTF-16 units and
-    * disagrees once ids mix non-BMP chars with U+E000–U+FFFF. */
-  private def lt(a: String, b: String): Boolean =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-
-  /** Driver-side union-find with path compression: node → min id of its
-    * component (Spark's order), for every node of `es`. The one driver
-    * union-find behind [[unionFindLocal]] and [[canonicalMapLocal]]. */
-  private def componentsLocal(es: Iterable[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb } // min-root
-    }
-    parent.keys.iterator.map(k => k -> find(k)).toMap
-  }
-
-  /** [[run]]'s contract on the driver, for edge sets that fit there. */
-  private def unionFindLocal(spark: org.apache.spark.sql.SparkSession,
-      es: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(componentsLocal(es).toSeq).toDF("id", "component")
   }
 
   /** Incremental label maintenance — fold a batch of NEW edges into an
@@ -258,7 +222,7 @@ object ConnectedComponents {
     * row, as in canonicalMap's inner join on the component. */
   private[graft] def canonicalMapLocal(edges: Seq[(String, String)],
       counts: Seq[(String, Long)]): Seq[(String, String)] = {
-    val comp = componentsLocal(
+    val comp = graft.Local.components(
       edges.filter { case (a, b) => a != null && b != null && a != b })
     def digits(s: String): Int = s.count(c => c >= '0' && c <= '9')
     // (n, digits, length) decide first; ties fall to the id's byte order
@@ -270,7 +234,7 @@ object ConnectedComponents {
         else {
           val (la, lb) = (UTF8String.fromString(a._1).numChars,
             UTF8String.fromString(b._1).numChars)
-          if (la != lb) la > lb else lt(a._1, b._1)
+          if (la != lb) la > lb else graft.Local.lt(a._1, b._1)
         }
       }
     val labeled = counts.filter(_._1 != null).map(c => (c, comp.getOrElse(c._1, c._1)))

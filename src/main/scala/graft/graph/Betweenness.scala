@@ -54,12 +54,11 @@ object Betweenness {
     // both). The settled (source, node) state can outgrow the driver
     // under the edge gate, so the local run aborts to the distributed
     // loop past the pair budget — the bounded-probe discipline.
+    // A settled (source, node) pair weighs 2 budget entries, its two ids
+    // (this keeps the 4M-pair switch point).
     val sess = edges.sparkSession
-    val localMaxE = sess.conf
-      .get("spark.graft.betweenness.localMaxEdges", "8000000").toLong
-    val localMaxPairs = sess.conf
-      .get("spark.graft.betweenness.localMaxPairs", "4000000").toLong
-    if (e.count() <= localMaxE) {
+    val budget = graft.Local.maxEntries(sess)
+    if (graft.Local.fits(sess, "betweenness", e.count())) {
       import sess.implicits._
       val es = e.as[(String, String)].collect()
       val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
@@ -95,7 +94,7 @@ object Betweenness {
           if (frontier.nonEmpty) byLevel += frontier
         }
         totalPairs += dist.size
-        if (totalPairs > localMaxPairs) over = true
+        if (2L * totalPairs > budget) over = true
         else {
           // backward: strictly descending levels, δ_v final before its
           // predecessors; only δ > 0 rows exist (the distributed filter)
@@ -122,7 +121,7 @@ object Betweenness {
         }
         si += 1
       }
-      if (!over) {
+      if (graft.Local.fits(sess, "betweenness.pairs", 2L * totalPairs)) {
         return bcFp.toSeq.map { case (id, fp) => (id, fp, bcN(id)) }
           .toDF("id", "bc_fp", "n_sources")
       } // else fall through to the distributed loop

@@ -81,7 +81,7 @@ object Bridges {
   }
 
   /** Local cut structure (bridges + articulation points) of a NORMALIZED
-    * simple edge list, when it fits `spark.graft.bridges.localMaxEdges` —
+    * simple edge list, when it fits the driver-local budget —
     * one iterative Tarjan low-link DFS; both sets are unique properties
     * of the graph (any algorithm returns exactly them). */
   private[graph] case class Cut(edges: Array[(String, String)],
@@ -89,35 +89,11 @@ object Bridges {
       articulation: scala.collection.mutable.LinkedHashSet[String])
 
   private[graph] def localCut(und: DataFrame): Option[Cut] = {
-    val gate = und.sparkSession.conf
-      .get("spark.graft.bridges.localMaxEdges", "8000000").toLong
-    if (und.count() > gate) return None
-    val rows = und.collect()
-    val es = rows.map(r => (r.getString(0), r.getString(1)))
-    val ix = new java.util.HashMap[String, Integer]
-    val names = new scala.collection.mutable.ArrayBuffer[String]
-    def dense(x: String): Int = {
-      val got = ix.get(x)
-      if (got != null) got.intValue
-      else { val i = names.length; ix.put(x, i); names += x; i }
-    }
-    val m = es.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) { ea(i) = dense(es(i)._1); eb(i) = dense(es(i)._2); i += 1 }
-    val n = names.length
-    val degc = new Array[Int](n)
-    i = 0; while (i < m) { degc(ea(i)) += 1; degc(eb(i)) += 1; i += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < n) { off(i + 1) = off(i) + degc(i); i += 1 }
-    val adjN = new Array[Int](2 * m); val adjE = new Array[Int](2 * m)
-    val fill = off.clone()
-    i = 0
-    while (i < m) {
-      adjN(fill(ea(i))) = eb(i); adjE(fill(ea(i))) = i; fill(ea(i)) += 1
-      adjN(fill(eb(i))) = ea(i); adjE(fill(eb(i))) = i; fill(eb(i)) += 1
-      i += 1
-    }
+    if (!graft.Local.fits(und.sparkSession, "bridges", und.count())) return None
+    val es = und.collect().map(r => (r.getString(0), r.getString(1)))
+    val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+    val adj = graft.Local.undirected(g)
+    val (n, names, off, adjN, adjE) = (g.n, g.ids, adj.off, adj.nbr, adj.edge)
     val disc = Array.fill(n)(-1); val low = new Array[Int](n)
     val pEdge = Array.fill(n)(-1)
     val stack = new Array[Int](n); val ptr = new Array[Int](n)

@@ -93,16 +93,12 @@ object Centrality {
     // pure function of the score multiset, so a local loop is
     // bit-identical to the 4·iters shuffle jobs (CentralitySpec
     // gate-forces both paths). Beyond the gate the loop is unchanged.
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.hits.localMaxEdges", "8000000").toLong
-    if (e.count() <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "hits", e.count())) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(String, String)].collect()
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val ix = ids.zipWithIndex.toMap
-      val srcI = es.map(p => ix(p._1)); val dstI = es.map(p => ix(p._2))
-      val n = ids.length
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val (ids, n, srcI, dstI) = (g.ids, g.n, g.src, g.dst)
       var hub = Array.fill(n)(scale); var auth = Array.fill(n)(scale)
       def rescaleL(a: Array[Long]): Array[Long] = {
         val q = math.max(1L, a.max / scale)

@@ -60,9 +60,7 @@ object Coloring {
     // of O(waves) rounds of 3 joins + 2 checkpoints + a count each
     // (gate-forced parity asserted in ColoringSpec; beyond the gate the
     // wave loop below is unchanged).
-    val localMaxE = session.conf
-      .get("spark.graft.coloring.localMaxEdges", "8000000").toLong
-    if (adj.count() <= localMaxE)
+    if (graft.Local.fits(session, "coloring", adj.count()))
       return jonesPlassmannLocal(adj, un)
     var colored = Seq.empty[(String, Int, Int)].toDF("id", "color", "round")
     var round = 0
@@ -120,9 +118,10 @@ object Coloring {
     val spark = un.sparkSession
     import spark.implicits._
     val prios = un.as[(String, Long)].collect()
+    // decreasing (p, id): -p ascending, id DESCENDING on ties (Spark's
+    // string order, as the wave loop's `nb > id` compares)
     val order = prios.sortBy { case (id, p) => (-p, id) }(
-      Ordering.Tuple2(Ordering.Long, Ordering.String.reverse))
-    // decreasing (p, id): -p ascending, id DESCENDING on ties
+      Ordering.Tuple2(Ordering.Long, graft.Local.order.reverse))
     val edgesArr = adj.as[(String, String)].collect()
     val nbrs = new java.util.HashMap[String, java.util.ArrayList[String]]()
     edgesArr.foreach { case (id, nb) =>

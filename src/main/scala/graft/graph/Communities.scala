@@ -53,28 +53,21 @@ object Communities {
     // Gate and collect on the a<b HALF (the corenessLocal discipline) —
     // the doubled table, its checkpoint and the node-set distinct only
     // exist on the beyond-gate path.
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.lpa.localMaxEdges", "8000000").toLong
     val mHalf = undM.count()
-    if (2 * mHalf <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "lpa", 2 * mHalf)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val half = undM.as[(Long, Long)].collect()
-      val ids = (half.map(_._1) ++ half.map(_._2)).distinct.sorted
-      val ix = new java.util.HashMap[Long, Int](ids.length * 2)
-      ids.indices.foreach(i => ix.put(ids(i), i))
-      val nn = ids.length
-      val adjO = Array.fill(nn)(new scala.collection.mutable.ArrayBuffer[Int])
-      half.foreach { case (s, d) =>
-        adjO(ix.get(s)) += ix.get(d); adjO(ix.get(d)) += ix.get(s)
-      }
-      val adj = adjO.map(_.toArray)
+      val g = graft.Local.dense(half.map(_._1), half.map(_._2))
+      val adj = graft.Local.undirected(g)
+      val (ids, nn) = (g.ids, g.n)
       var lab = ids.clone()
       for (_ <- 0 until iters) {
         val next = new Array[Long](nn)
         var v = 0
         while (v < nn) {
-          val votes = adj(v).map(lab).sorted // run-scan == the sorted fold
+          // run-scan == the sorted fold
+          val votes = adj.nbr.slice(adj.off(v), adj.off(v + 1)).map(lab).sorted
           var best = votes(0); var bn = 0L; var cur = votes(0); var cn = 0L
           var i = 0
           while (i < votes.length) {

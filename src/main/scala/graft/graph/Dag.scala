@@ -42,9 +42,7 @@ object Dag {
     // SAME synchronous rounds — including the maxRounds cycle rejection —
     // so it provably agrees with the join form (DagSpec gate-forces
     // both). Beyond the gate the join rounds are unchanged.
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.dag.localMaxEdges", "8000000").toLong
-    if (e.count() <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "dag", e.count())) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(String, String, Long)].collect()

@@ -63,12 +63,11 @@ object Distances {
     // reachability), so the local run aborts back to the distributed
     // loop the moment it crosses the pair budget — a bounded probe, the
     // StableMatch/EntityLinker discipline.
+    // A settled pair weighs 2 budget entries, its two ids (this keeps the
+    // 4M-pair switch point).
     val sess = edges.sparkSession
-    val localMaxE = sess.conf
-      .get("spark.graft.distances.localMaxEdges", "8000000").toLong
-    val localMaxPairs = sess.conf
-      .get("spark.graft.distances.localMaxPairs", "4000000").toLong
-    if (nE <= localMaxE) {
+    val budget = graft.Local.maxEntries(sess)
+    if (graft.Local.fits(sess, "distances", nE)) {
       val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
       e.collect().foreach { r =>
         adj.getOrElseUpdate(r.getString(0), new scala.collection.mutable.ArrayBuffer[String]) += r.getString(1)
@@ -94,10 +93,10 @@ object Distances {
           frontier = next.toList
         }
         dist.foreach { case (id, dd) => out += ((id, lm, dd)) }
-        if (out.length > localMaxPairs) over = true
+        if (2L * out.length > budget) over = true
         li += 1
       }
-      if (!over) {
+      if (graft.Local.fits(sess, "distances.pairs", 2L * out.length)) {
         import sess.implicits._
         return sess.createDataset(out.toSeq).toDF("id", "landmark", "dist")
       } // else: fall through to the distributed loop (budget exceeded)

@@ -360,12 +360,11 @@ object GraphQuery {
     // (GraphQuerySpec gate-forces both). The closure can be quadratic
     // even under the edge gate, so the local run aborts back to the
     // distributed loop past the pair budget — a bounded probe.
+    // A closure pair weighs 2 budget entries, its two ids (this keeps the
+    // 4M-pair switch point).
     val sess = edges.sparkSession
-    val localMaxE = sess.conf
-      .get("spark.graft.reachable.localMaxEdges", "8000000").toLong
-    val localMaxPairs = sess.conf
-      .get("spark.graft.reachable.localMaxPairs", "4000000").toLong
-    if (nE <= localMaxE) {
+    val budget = graft.Local.maxEntries(sess)
+    if (graft.Local.fits(sess, "reachable", nE)) {
       val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
       e.collect().foreach { r =>
         adj.getOrElseUpdate(r.getString(0), new scala.collection.mutable.ArrayBuffer[String]) += r.getString(1)
@@ -390,13 +389,13 @@ object GraphQuery {
               if (expanded.add(v)) next += v
             })
           }
-          if (out.length > localMaxPairs) over = true
+          if (2L * out.length > budget) over = true
           frontier = next.toList
         }
         // hops in the distributed loop count JOIN rounds (paths of length
         // maxHops are included); BFS depth matches exactly
       }
-      if (!over) {
+      if (graft.Local.fits(sess, "reachable.pairs", 2L * out.length)) {
         import sess.implicits._
         return sess.createDataset(out.toSeq).toDF("src", "dst")
       } // else fall through to the distributed loop

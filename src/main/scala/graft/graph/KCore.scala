@@ -59,9 +59,7 @@ object KCore {
     // peel — collecting m/2 canonical pairs and mirroring them in memory
     // instead of materializing + collecting the doubled directed table.
     val mHalf = und.count()
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.kcore.localMaxEdges", "8000000").toLong
-    if (2 * mHalf <= localMaxE) return corenessLocal(und)
+    if (graft.Local.fits(edges.sparkSession, "kcore", 2 * mHalf)) return corenessLocal(und)
     val e = graft.Materialize(
       und.select(col("a").as("src"), col("b").as("dst"))
         .union(und.select(col("b").as("src"), col("a").as("dst"))))
@@ -116,9 +114,8 @@ object KCore {
   }
 
   /** Gate-small fast path (r6): when the DEDUPED directed edge table fits
-    * the `spark.graft.kcore.localMaxEdges` gate (default 8M rows — tens of
-    * MB of (long, long) tuples, the EntityLinker-local-path budget), run
-    * the Batagelj–Žaveršnik O(m) bucket peel on the driver instead of
+    * the driver-local budget ([[graft.Local]]), run the Batagelj–Žaveršnik
+    * O(m) bucket peel on the driver instead of
     * O(rounds) synchronous h-index jobs. Coreness is a uniquely defined
     * function of the graph — peeling and the h-index fixpoint provably
     * agree (KCoreSpec asserts both path parity and the peel oracle) — so
@@ -133,32 +130,17 @@ object KCore {
     val spark = und.sparkSession
     import spark.implicits._
     // und: deduped canonical {a < b} pairs, no self-loops, longs —
-    // mirrored in memory (half the collect of the directed table)
+    // mirrored in the CSR (half the collect of the directed table)
     val half = und.select(col("a"), col("b")).as[(Long, Long)].collect()
-    val ids = java.util.Arrays.stream(
-      half.map(_._1) ++ half.map(_._2)).distinct().sorted().toArray
-    val n = ids.length
-    val ix = new java.util.HashMap[Long, Int](n * 2)
-    var i = 0
-    while (i < n) { ix.put(ids(i), i); i += 1 }
-    // CSR adjacency over dense indices, both directions per pair
-    val deg = new Array[Int](n)
-    half.foreach { case (s, d) => deg(ix.get(s)) += 1; deg(ix.get(d)) += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val nbr = new Array[Int](half.length * 2)
-    val fill = java.util.Arrays.copyOf(off, n)
-    half.foreach { case (s, d) =>
-      val si = ix.get(s); val di = ix.get(d)
-      nbr(fill(si)) = di; fill(si) += 1
-      nbr(fill(di)) = si; fill(di) += 1
-    }
+    val g = graft.Local.dense(half.map(_._1), half.map(_._2))
+    val adj = graft.Local.undirected(g)
+    val (n, off, nbr) = (g.n, adj.off, adj.nbr)
+    val deg = Array.tabulate(n)(adj.deg)
     // bucket peel: process nodes in nondecreasing current-degree order
     val maxDeg = if (n == 0) 0 else deg.max
     val bin = new Array[Int](maxDeg + 2)
     deg.foreach(d => bin(d + 1) += 1)
-    i = 1
+    var i = 1
     while (i <= maxDeg + 1) { bin(i) += bin(i - 1); i += 1 }
     val vert = new Array[Int](n) // nodes sorted by degree
     val pos = new Array[Int](n)
@@ -186,7 +168,7 @@ object KCore {
       i += 1
     }
     // cur now holds coreness (the degree at removal time)
-    spark.createDataset((0 until n).map(k => (ids(k), cur(k))))
+    spark.createDataset((0 until n).map(k => (g.ids(k), cur(k))))
       .toDF("id", "coreness")
       .select(col("id"), col("coreness").cast("int").as("coreness"))
   }

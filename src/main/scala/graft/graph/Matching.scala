@@ -40,17 +40,10 @@ object Matching {
     // (evaluated by the same Column expression in one distributed
     // projection), so the local both-endpoint-min rounds are identical
     // to the aggregate rounds (MatchingSpec gate-forces both paths).
-    val localMaxE = spark.conf
-      .get("spark.graft.matching.localMaxEdges", "8000000").toLong
     val liveM = graft.Materialize(live, eager = false)
-    if (liveM.count() <= localMaxE) {
-      import org.apache.spark.unsafe.types.UTF8String
-      def less(x: (Long, String, String), y: (Long, String, String)): Boolean =
-        x._1 < y._1 || (x._1 == y._1 && {
-          val c = UTF8String.fromString(x._2).compareTo(UTF8String.fromString(y._2))
-          c < 0 || (c == 0 &&
-            UTF8String.fromString(x._3).compareTo(UTF8String.fromString(y._3)) < 0)
-        })
+    if (graft.Local.fits(spark, "matching", liveM.count())) {
+      // min(struct(p, a, b)): p, then a and b in Spark's string order
+      val order = Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order)
       var es = liveM.as[(String, String, Long)].collect()
         .map { case (a, b, p) => (p, a, b) }
       val out = new scala.collection.mutable.ArrayBuffer[(String, String, Long)]
@@ -60,9 +53,9 @@ object Matching {
         val nodeMin = new java.util.HashMap[String, (Long, String, String)]
         es.foreach { e =>
           val cur1 = nodeMin.get(e._2)
-          if (cur1 == null || less(e, cur1)) nodeMin.put(e._2, e)
+          if (cur1 == null || order.lt(e, cur1)) nodeMin.put(e._2, e)
           val cur2 = nodeMin.get(e._3)
-          if (cur2 == null || less(e, cur2)) nodeMin.put(e._3, e)
+          if (cur2 == null || order.lt(e, cur2)) nodeMin.put(e._3, e)
         }
         // (p, a, b) is unique per edge, so value equality identifies the
         // winner at each endpoint exactly

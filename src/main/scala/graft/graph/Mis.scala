@@ -55,11 +55,9 @@ object Mis {
     // (the lexicographically-first MIS), and the local loop replays the
     // SAME waves — priorities are evaluated by the caller's own Column
     // expression in one projection, then compared field-by-field with
-    // the engine's orderings (UTF8String for strings). MisSpec
+    // the engine's orderings (graft.Local.order for strings). MisSpec
     // gate-forces parity incl. round numbers and the isolated backfill.
-    val localMaxE = spark.conf
-      .get("spark.graft.mis.localMaxEdges", "8000000").toLong
-    val local = if (live.count() > localMaxE) None else {
+    val local = if (!graft.Local.fits(spark, "mis", live.count())) None else {
       val liveEdges0 = live.as[(String, String)].collect()
       val allIds = liveEdges0.map(_._1).distinct
       val prioRows = spark.createDataset(allIds.toSeq).toDF("id")
@@ -78,12 +76,10 @@ object Mis {
     if (local.isDefined) {
       val (liveEdges0, allIds, prioRows) = local.get
       import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-      import org.apache.spark.unsafe.types.UTF8String
       def cmpVal(x: Any, y: Any): Int = (x, y) match {
         case (a: Long, b: Long) => java.lang.Long.compare(a, b)
         case (a: Int, b: Int) => Integer.compare(a, b)
-        case (a: String, b: String) =>
-          UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+        case (a: String, b: String) => graft.Local.order.compare(a, b)
         // Spark's double order: -0.0 == 0.0, NaN == NaN and above all
         case (a: Double, b: Double) => SQLOrderingUtil.compareDoubles(a, b)
         case (a: Short, b: Short) => java.lang.Short.compare(a, b)

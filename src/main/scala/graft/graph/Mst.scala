@@ -52,16 +52,12 @@ object Mst {
     // r6: size-gated driver-local Borůvka replay (the k-core local-peel
     // pattern): the forest is unique under the (w, ua, va) total order
     // AND the round column is reproduced by replaying the same per-round
-    // component-min selection (string comparisons via UTF8String, the
-    // engine's binary order; MstSpec gate-forces both paths). Beyond the
+    // component-min selection (string comparisons in Spark's order,
+    // graft.Local.order; MstSpec gate-forces both paths). Beyond the
     // gate the join rounds are unchanged.
-    val localMaxE = spark.conf
-      .get("spark.graft.mst.localMaxEdges", "8000000").toLong
-    if (e.count() <= localMaxE) {
-      import org.apache.spark.unsafe.types.UTF8String
+    if (graft.Local.fits(spark, "mst", e.count())) {
+      import graft.Local.lt
       import spark.implicits._
-      def lt(a: String, b: String): Boolean =
-        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
       val es = e.as[(String, String, Long)].collect()
       val compM = new java.util.HashMap[String, String]
       es.foreach { case (u, v, _) =>
@@ -90,29 +86,13 @@ object Mst {
         }
         if (best.isEmpty) done0 = true
         else {
-          val selected = new java.util.HashSet[(Long, String, String, String, String)]
-          best.values().forEach(c => { selected.add(c); () })
-          selected.forEach { case (w, u, v, _, _) =>
-            forestRows += ((u, v, w, round0)); ()
-          }
+          import scala.jdk.CollectionConverters._
+          val selected = best.values().asScala.toSet
+          selected.foreach { case (w, u, v, _, _) => forestRows += ((u, v, w, round0)) }
           // contract: union-find over the selected (cu, cv) links; every
           // touched label maps to the MIN member of its merged group
-          val parent = new java.util.HashMap[String, String]
-          def find(x: String): String = {
-            var r = x
-            while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-            r
-          }
-          selected.forEach { case (_, _, _, cu, cv) =>
-            val ru = find(cu); val rv = find(cv)
-            if (ru != rv) {
-              if (lt(ru, rv)) parent.put(rv, ru) else parent.put(ru, rv)
-            }
-            ()
-          }
-          val relabel = new java.util.HashMap[String, String]
-          parent.keySet().forEach(k => { relabel.put(k, find(k)); () })
-          compM.replaceAll((_, c) => relabel.getOrDefault(c, c))
+          val relabel = graft.Local.components(selected.map(c => (c._4, c._5)))
+          compM.replaceAll((_, c) => relabel.getOrElse(c, c))
         }
       }
       if (!done0)

@@ -68,17 +68,12 @@ object PageRank {
     // contrib, dangling share, damped recombine — so a local loop is
     // bit-identical to the per-iteration shuffle jobs (PageRankSpec
     // gate-forces both paths). Beyond the gate the loop is unchanged.
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.pagerank.localMaxEdges", "8000000").toLong
-    if (e.count() <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "pagerank", e.count())) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct
-      val ix = new java.util.HashMap[Long, Int](ids.length * 2)
-      ids.indices.foreach(i => ix.put(ids(i), i))
-      val nn = ids.length
-      val srcI = es.map(p => ix.get(p._1)); val dstI = es.map(p => ix.get(p._2))
+      val g = graft.Local.dense(es.map(_._1), es.map(_._2))
+      val (ids, nn, srcI, dstI) = (g.ids, g.n, g.src, g.dst)
       val deg = new Array[Long](nn)
       srcI.foreach(i => deg(i) += 1L)
       val init = Scale / n

@@ -44,18 +44,25 @@ object RandomWalks {
 
   private def pmodL(a: Long, m: Long): Long = { val r = a % m; if (r < 0) r + m else r }
 
-  /** Collected adjacency for the size-gated local replays: None when the
-    * total neighbor-entry count exceeds the gate. */
-  private def localAdj(adj0: DataFrame): Option[java.util.HashMap[Long, Array[Long]]] = {
+  /** Collected adjacency and distinct start ids for the size-gated local
+    * replays: None when the driver would hold more than the budget — the
+    * neighbour entries plus `length + 1` path entries per walk, both
+    * measured in one job. */
+  private def localAdj(adj0: DataFrame, starts: DataFrame, startCol: String,
+      length: Int): Option[(java.util.HashMap[Long, Array[Long]], Array[Long])] = {
     val sess = adj0.sparkSession
-    val gate = sess.conf.get("spark.graft.walks.localMaxEdges", "8000000").toLong
-    val tot = adj0.agg(coalesce(sum(size(col("nbrs"))), lit(0L))).head().getLong(0)
-    if (tot > gate) return None
+    val ws = starts.select(col(startCol).cast("long").as("w"))
+      .where(col("w").isNotNull).distinct()
+    val sz = adj0.agg(coalesce(sum(size(col("nbrs"))), lit(0L)))
+      .crossJoin(ws.agg(count(lit(1)))).head()
+    if (!graft.Local.fits(sess, "walks", sz.getLong(0) + sz.getLong(1) * (length + 1L)))
+      return None
     val m = new java.util.HashMap[Long, Array[Long]]
     adj0.collect().foreach { r =>
       m.put(r.getLong(0), r.getSeq[Long](1).toArray)
     }
-    Some(m)
+    import sess.implicits._
+    Some((m, ws.as[Long].collect()))
   }
 
   /** edges: directed (srcCol, dstCol) castable to long (undirected graphs
@@ -77,11 +84,9 @@ object RandomWalks {
     // (RandomWalksSpec gate-forces both paths). At gate scale the
     // distributed form is `length` serial checkpoint jobs over a tiny
     // walk-state table; beyond the gate it is unchanged.
-    localAdj(adj0).foreach { am =>
+    localAdj(adj0, starts, startCol, length).foreach { case (am, startIds) =>
       val sess = edges.sparkSession
       import sess.implicits._
-      val startIds = starts.select(col(startCol).cast("long").as("w"))
-        .where(col("w").isNotNull).distinct().as[Long].collect()
       val out = startIds.map { w =>
         val path = new scala.collection.mutable.ArrayBuffer[Long]
         path += w
@@ -179,12 +184,10 @@ object RandomWalks {
     // computation with no accumulation order, so the local loop is
     // bit-identical to the per-step joins (RandomWalksSpec gate-forces
     // parity, p/q biases included).
-    localAdj(adj0).foreach { am =>
+    localAdj(adj0, starts, startCol, length).foreach { case (am, startIds) =>
       val sess = edges.sparkSession
       import sess.implicits._
       val mm = 1L << 52
-      val startIds = starts.select(col(startCol).cast("long").as("w"))
-        .where(col("w").isNotNull).distinct().as[Long].collect()
       val out = startIds.map { w =>
         val path = new scala.collection.mutable.ArrayBuffer[Long]
         path += w

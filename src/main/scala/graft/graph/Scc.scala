@@ -73,14 +73,9 @@ object Scc {
       .distinct()
 
     // hybrid gate: one take() both sizes and collects (the CC discipline)
-    val labeled: DataFrame = {
-      // clamp before toInt: a >2^31 threshold must not wrap negative
-      val thr = math.min(smallThreshold, Int.MaxValue - 1L).toInt
-      val head = if (smallThreshold >= 0) cleaned.take(thr + 1)
-                 else Array.empty[org.apache.spark.sql.Row]
-      if (smallThreshold >= 0 && head.length <= thr)
-        tarjanLocal(spark, head.map(r => (r.getString(0), r.getString(1))))
-      else distributed(cleaned, maxRounds, maxPropRounds)
+    val labeled = graft.Local.take(cleaned, "scc", smallThreshold) match {
+      case Some(head) => tarjanLocal(spark, head.map(r => (r.getString(0), r.getString(1))))
+      case None => distributed(cleaned, maxRounds, maxPropRounds)
     }
 
     // relabel root -> min member id (group-scale, not graph-scale)

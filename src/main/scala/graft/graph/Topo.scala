@@ -64,9 +64,7 @@ object Topo {
     // loop is pure serial round latency (one join batch per DAG level).
     // Beyond the gate the anti-join rounds are unchanged.
     val sess = dagEdges.sparkSession
-    val localMaxE = sess.conf
-      .get("spark.graft.topo.localMaxEdges", "8000000").toLong
-    if (remEdges.count() <= localMaxE) {
+    if (graft.Local.fits(sess, "topo", remEdges.count())) {
       val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
       val indeg = new scala.collection.mutable.HashMap[String, Int]
       remEdges.collect().foreach { r =>

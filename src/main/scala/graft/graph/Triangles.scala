@@ -71,25 +71,15 @@ object Triangles {
     // graph — ANY orientation finds the same triangles — so the local
     // degree-ordered two-pointer count provably agrees with both
     // distributed paths (TrianglesSpec gate-forces all three).
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.triangles.localMaxEdges", "8000000").toLong
-    if (und.count() <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "triangles", und.count())) {
       val spark = edges.sparkSession
       import spark.implicits._
       val rows = und.collect()
-      val ix = new java.util.HashMap[Any, Integer]
-      val names = new scala.collection.mutable.ArrayBuffer[Any]
-      def dense(x: Any): Int = {
-        val got = ix.get(x)
-        if (got != null) got.intValue
-        else { val i = names.length; ix.put(x, i); names += x; i }
-      }
-      val ea = new Array[Int](rows.length); val eb = new Array[Int](rows.length)
-      var i = 0
-      while (i < rows.length) { ea(i) = dense(rows(i).get(0)); eb(i) = dense(rows(i).get(1)); i += 1 }
-      val n = names.length
+      val g = graft.Local.denseOf(rows.map(_.get(0)), rows.map(_.get(1)))
+      val (names, n, ea, eb) = (g.ids, g.n, g.src, g.dst)
       val deg0 = new Array[Int](n)
-      i = 0; while (i < rows.length) { deg0(ea(i)) += 1; deg0(eb(i)) += 1; i += 1 }
+      var i = 0
+      while (i < rows.length) { deg0(ea(i)) += 1; deg0(eb(i)) += 1; i += 1 }
       // orient low-key → high-key by (deg, dense id); build sorted CSR
       @inline def fwd(u: Int, v: Int): Boolean =
         deg0(u) < deg0(v) || (deg0(u) == deg0(v) && u < v)

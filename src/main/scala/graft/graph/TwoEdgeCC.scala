@@ -31,32 +31,17 @@ object TwoEdgeCC {
       ccSmallThreshold: Long = 100000L): DataFrame = {
     val und = Bridges.normalize(edges)
     // r6: size-gated local path (see Bridges.localCut): components =
-    // union-find over the non-bridge edges with min-member labels (the
-    // ConnectedComponents convention, UTF8String binary order), vertices
+    // the driver union-find over the non-bridge edges (min-member labels
+    // in Spark's order, the ConnectedComponents convention); vertices
     // whose every edge is a bridge stay singletons — exactly the
     // distributed pipeline below (TwoEdgeCCSpec gate-forces both).
     Bridges.localCut(und) match {
       case Some(cut) =>
         val spark = edges.sparkSession
         import spark.implicits._
-        import org.apache.spark.unsafe.types.UTF8String
-        def lt(a: String, b: String): Boolean =
-          UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-        val parent = new java.util.HashMap[String, String]
-        def find(x: String): String = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          r
-        }
-        val verts = new scala.collection.mutable.LinkedHashSet[String]
-        cut.edges.foreach { case (a, b) => verts += a; verts += b }
-        cut.edges.foreach { case (a, b) =>
-          if (!cut.bridges.contains((a, b))) {
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
-          }
-        }
-        return verts.toSeq.map(v => (v, find(v))).toDF("id", "component")
+        val comp = graft.Local.components(cut.edges.filterNot(cut.bridges.contains))
+        val verts = cut.edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+        return verts.toSeq.map(v => (v, comp.getOrElse(v, v))).toDF("id", "component")
       case None => ()
     }
     val br = Bridges.bridges(edges, maxDepth, ccSmallThreshold)

@@ -40,9 +40,7 @@ object Widest {
     // r6: size-gated driver-local replay — same unique (max, min)-semiring
     // fixed point, same synchronous rounds and maxRounds contract as the
     // join form (WidestSpec gate-forces both); beyond the gate unchanged.
-    val localMaxE = edges.sparkSession.conf
-      .get("spark.graft.widest.localMaxEdges", "8000000").toLong
-    if (e.count() <= localMaxE) {
+    if (graft.Local.fits(edges.sparkSession, "widest", e.count())) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(String, String, Long)].collect()

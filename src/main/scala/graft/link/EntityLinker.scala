@@ -116,11 +116,11 @@ object EntityLinker {
       useIce: Boolean,
       maxBucket: Int,
       smallThreshold: Long): DataFrame = {
-    if (smallThreshold > 0) {
-      // single action sizes AND collects (no separate count pass)
-      val head = ents.select("entity_key", "surface", "tokens", "ice")
-        .take(math.min(smallThreshold, Int.MaxValue - 1).toInt + 1)
-      if (head.length <= smallThreshold) {
+    // single action sizes AND collects (no separate count pass)
+    val small = if (smallThreshold <= 0) None else graft.Local.take(
+      ents.select("entity_key", "surface", "tokens", "ice"), "entity-link", smallThreshold)
+    small match {
+      case Some(head) =>
         val spark = ents.sparkSession
         import spark.implicits._
         val all = edgesLocal(head.map(LocalEnt.of), numHashes, jaccardMin,
@@ -132,11 +132,11 @@ object EntityLinker {
             .collect().map(_.getString(0)).toSet
           all.filter(e => tset(e._1) || tset(e._2))
         }
-        return spark.createDataset(kept).toDF("src", "dst")
-      }
+        spark.createDataset(kept).toDF("src", "dst")
+      case None =>
+        distributedEdges(ents, touched, numHashes, jaccardMin, editSimMin, useIce,
+          maxBucket)
     }
-    distributedEdges(ents, touched, numHashes, jaccardMin, editSimMin, useIce,
-      maxBucket)
   }
 
   /** The distributed LSH→verify chain, optionally restricted to pairs with
@@ -292,10 +292,6 @@ object EntityLinker {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, StringType}
 
-    // Spark's string order; Java's String order compares UTF-16 units
-    val keyOrder: Ordering[String] = (a, b) =>
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-
     // minhash signature per entity: sig_i = min over tokens of
     // xxhash64(token, i) — the expression folds args left-to-right from
     // seed 42: hash(token, 42) first, then i with that as seed (same chain
@@ -358,7 +354,7 @@ object EntityLinker {
         var j = i + 1
         while (j < m.length) {
           val (a, b) = (ents(m(i)), ents(m(j)))
-          val (src, dst) = if (keyOrder.lt(a.key, b.key)) (a, b) else (b, a)
+          val (src, dst) = if (graft.Local.lt(a.key, b.key)) (a, b) else (b, a)
           if (src.key != dst.key && !out.contains((src.key, dst.key))) {
             val iceConflict = src.ice != null && dst.ice != null && src.ice != dst.ice
             if (!iceConflict &&
@@ -376,7 +372,7 @@ object EntityLinker {
       // (LocalElParitySpec pins the edge sets equal)
       val byIce = ents.filter(_.ice != null).groupBy(_.ice)
       byIce.valuesIterator.foreach { es =>
-        val keys = es.map(_.key).distinct.sorted(keyOrder)
+        val keys = es.map(_.key).distinct.sorted(graft.Local.order)
         val hub = keys.head
         keys.iterator.drop(1).foreach(k => out += ((hub, k)))
       }

@@ -49,12 +49,13 @@ object StableMatch {
     // even on tied scores (asserted by StableMatchSpec's gate-forced
     // parity case). Beyond the gate the round-parallel loop below is
     // unchanged — that is the 10^9-preference shape.
-    val localMax = prefs.sparkSession.conf
-      .get("spark.graft.stablematch.localMaxRows", "1000000").toInt
-    val probe = p.take(localMax + 1)
-    if (probe.length <= localMax &&
-        !probe.exists(r => r.isNullAt(2) || r.isNullAt(3)))
-      return matchLocal(probe, prefs) // null scores keep the struct-max path
+    // A row weighs 8 budget entries: it is held as a Row and again as a
+    // boxed (ms, w, ws) tuple in its man's sorted list (this keeps the
+    // 1M-row switch point). Null scores keep the struct-max path.
+    val local = graft.Local.take(p, "stablematch",
+      graft.Local.maxEntries(prefs.sparkSession) / 8)
+      .filter(_.forall(r => !r.isNullAt(2) && !r.isNullAt(3)))
+    if (local.isDefined) return matchLocal(local.get, prefs)
 
     // rejected(m, w) grows; engaged(w, m) is the tentative matching
     var live = p // preference rows not yet rejected
@@ -96,8 +97,9 @@ object StableMatch {
   /** Sequential man-proposing Gale–Shapley over the collected distinct
     * preference rows, with the distributed path's exact tie orders:
     * a man proposes down his list sorted by (ms, w) DESC; a woman holds
-    * the max offer by (ws, m) — both lexicographic with the id STRING as
-    * the tiebreak, matching `max(struct(...))`. */
+    * the max offer by (ws, m) — both lexicographic with the id STRING (in
+    * Spark's order, [[graft.Local.order]]) as the tiebreak, matching
+    * `max(struct(...))`. */
   private def matchLocal(rows: Array[org.apache.spark.sql.Row],
       prefs: DataFrame): DataFrame = {
     val spark = prefs.sparkSession
@@ -106,7 +108,7 @@ object StableMatch {
     val byM = rows.groupBy(_.getString(0)).map { case (m, rs) =>
       m -> rs.map(r => (r.getLong(2), r.getString(1), r.getLong(3)))
         .sortBy { case (ms, w, _) => (-ms, w) }(
-          Ordering.Tuple2(Ordering.Long, Ordering.String.reverse))
+          Ordering.Tuple2(Ordering.Long, graft.Local.order.reverse))
     }
     val nextIdx = scala.collection.mutable.HashMap.empty[String, Int]
     val engagedW = scala.collection.mutable.HashMap.empty[String, (String, Long)] // w -> (m, ws)
@@ -124,8 +126,8 @@ object StableMatch {
           case None =>
             engagedW(w) = (m, ws); engagedNow = true
           case Some((m2, ws2)) =>
-            // woman keeps max by (ws, m-string)
-            if (ws > ws2 || (ws == ws2 && m > m2)) {
+            // woman keeps max by (ws, m) in Spark's string order
+            if (ws > ws2 || (ws == ws2 && graft.Local.lt(m2, m))) {
               engagedW(w) = (m, ws); free.enqueue(m2); engagedNow = true
             } // else: standing rejection, try next preference
         }

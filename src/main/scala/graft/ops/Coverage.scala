@@ -39,11 +39,11 @@ object Coverage {
     // r6 local gate FIRST: collect the raw (pre-distinct) rows — the
     // driver's hash sets dedupe them, so the local path also skips the
     // distinct exchange + checkpoint. The take() probe over-counts vs
-    // distinct rows, i.e. gates conservatively.
-    val localMax = spark.conf
-      .get("spark.graft.coverage.localMaxRows", "2000000").toInt
-    val probe = raw.take(localMax + 1)
-    if (probe.length <= localMax) return greedyLocal(probe, spark, k)
+    // distinct rows, i.e. gates conservatively. A row weighs 4 budget
+    // entries: it is held as a Row and again in both inverted indexes
+    // (this keeps the 2M-row switch point).
+    val probe = graft.Local.take(raw, "coverage", graft.Local.maxEntries(spark) / 4)
+    if (probe.isDefined) return greedyLocal(probe.get, spark, k)
     val items = graft.Materialize(raw.distinct())
     // r6: INCREMENTAL gain maintenance. gain_t(id) = |items(id) ∖
     // covered_t|, and covered only ever GROWS by the winner's not-yet-
@@ -117,12 +117,12 @@ object Coverage {
     var rank = 0
     var done = false
     while (!done && rank < k) {
-      // argmax by (gain DESC, id ASC)
+      // argmax by (gain DESC, id ASC in Spark's string order)
       var bestId: String = null
       var bestGain = 0L
       gains.forEach { (id, g) =>
         if (g > bestGain || (g == bestGain && g > 0 &&
-            (bestId == null || id < bestId))) { bestId = id; bestGain = g }
+            (bestId == null || graft.Local.lt(id, bestId)))) { bestId = id; bestGain = g }
       }
       if (bestId == null || bestGain == 0L) done = true
       else {

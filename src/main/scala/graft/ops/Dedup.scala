@@ -466,14 +466,12 @@ object Dedup {
     val rec = graft.Materialize(
       shT.groupBy("id").agg(collect_list("tid").as("tids"),
         count(lit(1)).as("sz")), eager = false)
-    val nRec = rec.count()
-    // records carry whole shingle arrays, so the broadcast gate is the
-    // byte-aware record one (SetSim's), not Hints' narrow-row default;
-    // beyond it both verify joins fall back to shuffled equi joins.
-    val verifyMax = df.sparkSession.conf
-      .get("spark.graft.containment.broadcastVerifyMaxRecords", "125000").toLong
-    def hs(d: DataFrame): DataFrame =
-      if (nRec <= verifyMax) broadcast(d) else d
+    // records carry whole shingle arrays, so the broadcast gate counts
+    // their tid entries (Σ sz, one action that also materializes `rec`),
+    // not rows; beyond it both verify joins fall back to shuffled equi
+    // joins.
+    val nTids = rec.agg(coalesce(sum(col("sz")), lit(0L))).head().getLong(0)
+    def hs(d: DataFrame): DataFrame = graft.Hints.bcastIf(d, nTids)
     val kept = shT.where(col("df") <= maxDf).select("id", "tid")
     val cand = kept.as("a").join(kept.as("b"),
         col("a.tid") === col("b.tid") && col("a.id") < col("b.id"))

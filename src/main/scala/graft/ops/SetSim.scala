@@ -78,7 +78,9 @@ object SetSim {
       .select(col("id"), monotonically_increasing_id().as("rid"),
         size(col("sorted")).as("sz"),
         expr("transform(sorted, s -> s.tid)").as("tids")), eager = false)
-    val nRec = rec.count()
+    // Σ sz: the tid entries the verify broadcast would carry (this action
+    // also materializes `rec`)
+    val nTids = rec.agg(coalesce(sum(col("sz")), lit(0L))).head().getLong(0)
     val hashed = graft.Materialize(rec
       .withColumn("plen",
         col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)).cast("int") + 1)
@@ -135,14 +137,11 @@ object SetSim {
     // r6: the verify join re-attaches the per-record tid arrays to every
     // candidate pair; with the record checkpoint opaque to the planner
     // this was two SortMergeJoins shuffling the (large) pair table
-    // twice. When the record count fits the byte-aware gate (records
-    // carry whole arrays, so the row gate is much lower than Hints'
-    // narrow-row default), broadcast the record table on both sides —
-    // the pair table then never shuffles (guide §3.1; strategy only).
-    val verifyMax = df.sparkSession.conf
-      .get("spark.graft.setsim.broadcastVerifyMaxRecords", "125000").toLong
-    def vb(d: DataFrame): DataFrame =
-      if (nRec <= verifyMax) broadcast(d) else d
+    // twice. When the records' tid entries fit Hints' gate (records
+    // carry whole arrays, so the gate counts entries, not rows),
+    // broadcast the record table on both sides — the pair table then
+    // never shuffles (guide §3.1; strategy only).
+    def vb(d: DataFrame): DataFrame = graft.Hints.bcastIf(d, nTids)
     cand
       .join(vb(rec.select(col("rid").as("rid_a"), col("id").as("__ia"),
         col("sz").as("__sa"), col("tids").as("__ta"))), Seq("rid_a"))

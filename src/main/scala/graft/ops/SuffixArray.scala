@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed suffix array over a concatenated corpus — prefix doubling
   * (Manber–Myers re-expressed as joins): the index structure behind
@@ -48,22 +49,22 @@ object SuffixArray {
     // −1 sentinel, dense 0-based re-ranks — so it provably agrees with
     // the join form (SuffixArraySpec gate-forces both). At gate scale the
     // distributed rounds are pure serial latency: ~log(longest repeat)
-    // rounds × (join + range re-rank + two driver actions) each.
-    val localMax = spark.conf
-      .get("spark.graft.suffixarray.localMaxChars", "2000000").toLong
+    // rounds × (join + range re-rank + two driver actions) each. A text
+    // position is one code point in both paths (what `length` counts).
     val tcRow = d.agg(sum(length(col("t")) + 1)).head()
     val totalChars = if (tcRow.isNullAt(0)) 0L else tcRow.getLong(0)
-    if (totalChars > 0 && totalChars <= localMax) {
+    // a char weighs 4 budget entries: its code point, its rank and a
+    // (rank, rank, pos) sort triple (this keeps the 2M-char switch point)
+    if (totalChars > 0 && graft.Local.fits(spark, "suffixarray", 4 * totalChars)) {
       val texts = d.orderBy(col("id")).select("t").collect().map(_.getString(0))
-      val s = texts.map(_ + sep).mkString
-      val n = s.length
-      // alpha: dense 0-based rank of each distinct code-unit string in
-      // UTF8 (byte) order — exactly Enumerate.rowNumber over distinct c
-      val units = s.toCharArray
-      val distinctUnits = units.distinct.map(_.toString)
-        .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
-      val alphaRank = distinctUnits.zipWithIndex.toMap
-      var rank = units.map(u => alphaRank(u.toString).toLong)
+      // alpha: dense 0-based rank of each distinct char in UTF8 (byte)
+      // order — exactly Enumerate.rowNumber over distinct c. A lone
+      // surrogate becomes `?` in UTF-8, as the distributed `c` does.
+      val units = texts.map(_ + sep).mkString.codePoints().toArray
+        .map(cp => UTF8String.fromString(new String(Character.toChars(cp))))
+      val n = units.length
+      val alphaRank = units.distinct.sorted.zipWithIndex.toMap
+      var rank = units.map(u => alphaRank(u).toLong)
       var span = 1
       var nd = rank.distinct.length
       var round0 = 0
@@ -96,8 +97,8 @@ object SuffixArray {
     val chars = d.join(based.select("id", "base"), Seq("id"))
       .select(col("t"), col("base")).as[(String, Long)]
       .flatMap { case (t, b) =>
-        (t + sep).iterator.zipWithIndex.map {
-          case (ch, i) => (b + i, ch.toString)
+        (t + sep).codePoints().toArray.iterator.zipWithIndex.map {
+          case (cp, i) => (b + i, new String(Character.toChars(cp)))
         }
       }.toDF("g", "c")
 

@@ -176,18 +176,17 @@ object Pipeline {
   private def localEntityStage(ents: DataFrame,
       cfg: Config): Option[(DataFrame, DataFrame, Long)] = {
     if (cfg.elSmallThreshold <= 0) return None
-    val limit = math.min(cfg.elSmallThreshold, Int.MaxValue - 1L).toInt
     val table = ents.select("entity_key", "surface", "n_mentions", "ice", "tokens")
-    val head = table.take(limit + 1)
-    if (head.length > limit) return None
-    val spark = ents.sparkSession
-    import spark.implicits._
-    val edges = EntityLinker.edgesLocal(head.map(EntityLinker.LocalEnt.of),
-      cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, maxBucket = 1000)
-    val map = ConnectedComponents.canonicalMapLocal(edges,
-      head.toSeq.map(r => (r.getString(0), r.getLong(2))))
-    val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), table.schema)
-    Some((localEnts, map.toDF("id", "canonical"), map.size.toLong))
+    graft.Local.take(table, "entity-stage", cfg.elSmallThreshold).map { head =>
+      val spark = ents.sparkSession
+      import spark.implicits._
+      val edges = EntityLinker.edgesLocal(head.map(EntityLinker.LocalEnt.of),
+        cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, maxBucket = 1000)
+      val map = ConnectedComponents.canonicalMapLocal(edges,
+        head.toSeq.map(r => (r.getString(0), r.getLong(2))))
+      val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), table.schema)
+      (localEnts, map.toDF("id", "canonical"), map.size.toLong)
+    }
   }
 
   /** The store-side state of a canonical map and its entity table: one

@@ -97,16 +97,18 @@ class BetweennessSpec extends SparkSuite {
       graft.graph.Betweenness.fromSources(df, srcs)
         .as[(String, Long, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.betweenness.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.betweenness.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
-    // pair-budget abort falls back, same result
-    val forced = try {
-      spark.conf.set("spark.graft.betweenness.localMaxPairs", "1")
-      go(e)
-    } finally spark.conf.unset("spark.graft.betweenness.localMaxPairs")
+    // pair-budget abort falls back, same result: at a budget of |E| the
+    // 12 edges fit but the 3 sources' 15 settled pairs (2 entries each)
+    // do not
+    val (forced, aborted) = withLocalBudget(e.count()) {
+      val df = Betweenness.fromSources(e, srcs)
+      (df.as[(String, Long, Long)].collect().toSet,
+        !df.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    }
+    assert(aborted)
     assert(forced == local)
   }
 }

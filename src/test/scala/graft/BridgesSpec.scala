@@ -105,10 +105,7 @@ class BridgesSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Bridges.bridges(df).as[(String, String)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.bridges.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.bridges.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

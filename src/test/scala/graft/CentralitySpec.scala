@@ -96,10 +96,7 @@ class CentralitySpec extends SparkSuite {
       graft.graph.Centrality.hits(df, iters = 5)
         .as[(String, Long, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.hits.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.hits.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

@@ -55,8 +55,8 @@ class ColoringSpec extends SparkSuite {
   test("local fast path == distributed wave loop, incl. wave numbers " +
     "(gate forced)") {
     // r6: jonesPlassmann takes a driver-local sequential replay below
-    // spark.graft.coloring.localMaxEdges; force the wave loop with
-    // gate=0 and assert identical (id, color, round) triples.
+    // the driver-local budget; force the wave loop with
+    // budget 0 and assert identical (id, color, round) triples.
     val edges = ((for {
       u <- 0 until 30; v <- 0 until 30
       if u < v && (u * 13 + v * 7) % 6 < 2
@@ -65,11 +65,7 @@ class ColoringSpec extends SparkSuite {
       Coloring.jonesPlassmann(e.toDF("src", "dst"))
         .as[(String, Int, Int)].collect().toSet
     val local = full(edges)
-    val dist =
-      try {
-        spark.conf.set("spark.graft.coloring.localMaxEdges", "0")
-        full(edges)
-      } finally spark.conf.unset("spark.graft.coloring.localMaxEdges")
+    val dist = withLocalBudget(0)(full(edges))
     assert(local == dist)
   }
 

@@ -87,10 +87,7 @@ class CommunitiesSpec extends SparkSuite {
       graft.graph.Communities.labelPropagation(df, iters = 4)
         .as[(Long, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.lpa.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.lpa.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

@@ -60,4 +60,17 @@ class ContainmentSpec extends SparkSuite {
     assert(want.nonEmpty)
     assert(got === want)
   }
+
+  test("verify broadcast gates on the records' tid entries, not their count") {
+    // 3 records of 28 distinct 3-shingles each (84 tid entries) against a
+    // broadcast gate of 10 rows: neither verify join may be hinted
+    val docs = (0 until 3).map(d =>
+      (d.toLong, (0 until 30).map(i => s"w${d * 10 + i}").mkString(" ")))
+    val plan = try {
+      spark.conf.set(Hints.MaxRowsKey, "10")
+      Dedup.containmentPairs(docs.toDF("doc_id", "text"), k = 3)
+        .queryExecution.analyzed.toString
+    } finally spark.conf.unset(Hints.MaxRowsKey)
+    assert(!plan.contains("ResolvedHint"), plan)
+  }
 }

@@ -50,23 +50,30 @@ class CoverageSpec extends SparkSuite {
 
   test("local fast path == distributed incremental rounds (gate forced)") {
     // r6: greedySelect runs driver-locally below
-    // spark.graft.coverage.localMaxRows; force the distributed rounds
-    // with gate=0 and assert identical (rank, id, gain) picks, on an
-    // instance with gain ties and overlapping sets.
+    // the driver-local budget; force the distributed rounds
+    // with budget 0 and assert identical (rank, id, gain) picks, on an
+    // instance with gain ties and overlapping sets, and on a gain tie
+    // between ids that Spark's UTF-8 order and Java's UTF-16 order sort
+    // apart.
     val rows = for {
       d <- 0 until 25; i <- 0 until 12
       if (d * 7 + i * 5) % 3 != 0
     } yield (f"d$d%02d", s"i${(d + i * i) % 40}")
-    def run() = Coverage.greedySelect(
-      rows.toDF("id", "item"), "id", "item", 6)
+    for ((rs, k) <- Seq((rows, 6), (Seq(("Ａ", "x"), ("😀", "y")), 2))) {
+      def run() = Coverage.greedySelect(
+        rs.toDF("id", "item"), "id", "item", k)
+        .as[(Int, String, Long)].collect().toSeq
+      val local = run()
+      val dist = withLocalBudget(0)(run())
+      assert(local == dist)
+    }
+  }
+
+  test("a Long.MaxValue budget is clamped: same picks as the default budget") {
+    val rows = Seq(("A", "x"), ("A", "y"), ("B", "y"), ("C", "z"))
+    def run() = Coverage.greedySelect(rows.toDF("id", "item"), "id", "item", 3)
       .as[(Int, String, Long)].collect().toSeq
-    val local = run()
-    val dist =
-      try {
-        spark.conf.set("spark.graft.coverage.localMaxRows", "0")
-        run()
-      } finally spark.conf.unset("spark.graft.coverage.localMaxRows")
-    assert(local == dist)
+    assert(withLocalBudget(Long.MaxValue)(run()) == run())
   }
 
   test("duplicate membership rows don't inflate gains; nulls are dropped") {

@@ -63,10 +63,7 @@ class DagSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Dag.longestPaths(df).as[(String, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.dag.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.dag.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
     val cyc = Seq(("a", "b", 1L), ("b", "a", 1L), ("s", "a", 1L)).toDF("src", "dst", "w")
     val eLocal = intercept[IllegalStateException] {

@@ -124,20 +124,21 @@ class DistancesSpec extends SparkSuite {
       ("e", "b"), ("x", "a"), ("z", "q"))
     val marks = lm("a", "x", "z")
     val local = triples(Distances.fromLandmarks(e, marks))
-    val dist = try {
-      spark.conf.set("spark.graft.distances.localMaxEdges", "0")
-      triples(Distances.fromLandmarks(e, marks))
-    } finally spark.conf.unset("spark.graft.distances.localMaxEdges")
+    val dist = withLocalBudget(0)(triples(Distances.fromLandmarks(e, marks)))
     assert(local == dist)
   }
 
   test("pair-budget abort falls back to the distributed loop, same result") {
     val e = edges(("a", "b"), ("b", "c"), ("c", "d"))
     val base = triples(Distances.fromLandmarks(e, lm("a", "b")))
-    val forced = try {
-      spark.conf.set("spark.graft.distances.localMaxPairs", "1")
-      triples(Distances.fromLandmarks(e, lm("a", "b")))
-    } finally spark.conf.unset("spark.graft.distances.localMaxPairs")
+    // at a budget of |E| the 3 edges fit but the 7 settled pairs (2
+    // entries each) do not
+    val (forced, aborted) = withLocalBudget(e.count()) {
+      val df = Distances.fromLandmarks(e, lm("a", "b"))
+      (triples(df), !df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    }
+    assert(aborted)
     assert(forced == base)
   }
 }

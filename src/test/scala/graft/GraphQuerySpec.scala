@@ -378,24 +378,22 @@ class GraphQuerySpec extends SparkSuite {
     def rs(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String)].collect().toSet
     val local = rs(graft.graph.GraphQuery.reachable(e))
-    val dist = try {
-      spark.conf.set("spark.graft.reachable.localMaxEdges", "0")
-      rs(graft.graph.GraphQuery.reachable(e))
-    } finally spark.conf.unset("spark.graft.reachable.localMaxEdges")
+    val dist = withLocalBudget(0)(rs(graft.graph.GraphQuery.reachable(e)))
     assert(local == dist)
     // cycle members reach themselves on both paths
     assert(local(("a", "a")) && local(("b", "b")) && local(("c", "c")))
     val localCapped = rs(graft.graph.GraphQuery.reachable(e, maxHops = 2))
-    val distCapped = try {
-      spark.conf.set("spark.graft.reachable.localMaxEdges", "0")
-      rs(graft.graph.GraphQuery.reachable(e, maxHops = 2))
-    } finally spark.conf.unset("spark.graft.reachable.localMaxEdges")
+    val distCapped = withLocalBudget(0)(rs(graft.graph.GraphQuery.reachable(e, maxHops = 2)))
     assert(localCapped == distCapped)
-    // pair-budget abort falls back to the distributed loop, same result
-    val forced = try {
-      spark.conf.set("spark.graft.reachable.localMaxPairs", "1")
-      rs(graft.graph.GraphQuery.reachable(e))
-    } finally spark.conf.unset("spark.graft.reachable.localMaxPairs")
+    // pair-budget abort falls back to the distributed loop, same result:
+    // at a budget of |E| the 7 edges fit but the closure pairs (2 entries
+    // each) do not
+    val (forced, aborted) = withLocalBudget(e.count()) {
+      val df = graft.graph.GraphQuery.reachable(e)
+      (rs(df), !df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    }
+    assert(aborted)
     assert(forced == local)
   }
 }

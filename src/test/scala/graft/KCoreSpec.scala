@@ -63,8 +63,8 @@ class KCoreSpec extends SparkSuite {
 
   test("local peel fast path == distributed h-index loop (gate forced)") {
     // r6: coreness takes a driver-local Batagelj–Žaveršnik peel below
-    // spark.graft.kcore.localMaxEdges; force the h-index rounds with
-    // gate=0 and assert identical coreness (also exercises the r6
+    // the driver-local budget; force the h-index rounds with
+    // budget 0 and assert identical coreness (also exercises the r6
     // broadcast-hinted round joins).
     val und = (for {
       i <- 0 until 60; j <- 0 until 60
@@ -72,11 +72,7 @@ class KCoreSpec extends SparkSuite {
     } yield (i.toLong, j.toLong))
     val e = edges(und: _*)
     val local = cores(KCore.coreness(e))
-    val dist =
-      try {
-        spark.conf.set("spark.graft.kcore.localMaxEdges", "0")
-        cores(KCore.coreness(e))
-      } finally spark.conf.unset("spark.graft.kcore.localMaxEdges")
+    val dist = withLocalBudget(0)(cores(KCore.coreness(e)))
     assert(local == dist)
   }
 

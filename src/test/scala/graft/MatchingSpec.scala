@@ -59,10 +59,7 @@ class MatchingSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Matching.maximal(df).as[(String, String, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.matching.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.matching.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

@@ -112,10 +112,7 @@ class MisSpec extends SparkSuite {
         graft.graph.Mis.maximalIndependentSet(df, prioOf = p)
           .as[(String, Int)].collect().toSet
       val local = go(e)
-      val dist = try {
-        spark.conf.set("spark.graft.mis.localMaxEdges", "0")
-        go(e)
-      } finally spark.conf.unset("spark.graft.mis.localMaxEdges")
+      val dist = withLocalBudget(0)(go(e))
       assert(local == dist, p(col("id")).toString)
     }
   }

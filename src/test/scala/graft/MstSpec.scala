@@ -96,10 +96,7 @@ class MstSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Mst.spanningForest(df).as[(String, String, Long, Int)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.mst.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.mst.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

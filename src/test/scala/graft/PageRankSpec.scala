@@ -77,10 +77,7 @@ class PageRankSpec extends SparkSuite {
       graft.graph.PageRank.run(df, iters = 5)
         .as[(Long, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.pagerank.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.pagerank.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

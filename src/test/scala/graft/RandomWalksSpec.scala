@@ -166,11 +166,23 @@ class RandomWalksSpec extends SparkSuite {
         p = 4.0, q = 0.25, seed = 7L)
         .as[(Long, Seq[Long])].collect().toMap
     val (lu, lbm) = (uni(e), bia(e))
-    val (du, dbm) = try {
-      spark.conf.set("spark.graft.walks.localMaxEdges", "0")
-      (uni(e), bia(e))
-    } finally spark.conf.unset("spark.graft.walks.localMaxEdges")
+    val (du, dbm) = withLocalBudget(0)((uni(e), bia(e)))
     assert(lu == du)
     assert(lbm == dbm)
+  }
+
+  test("the local gate counts the walks' path entries, not only the adjacency") {
+    import spark.implicits._
+    // 8 neighbour entries; 4 walks of length 6 hold 4·7 = 28 path entries
+    val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L),
+      (1L, 3L), (5L, 1L)).toDF("src", "dst")
+    val st = Seq(1L, 3L, 5L, 9L).toDF("id")
+    def local(budget: Long) = withLocalBudget(budget) {
+      RandomWalks.walks(e, st, length = 6, seed = 7L).queryExecution.optimizedPlan
+        .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        .isDefined
+    }
+    assert(local(36))
+    assert(!local(20))
   }
 }

@@ -76,4 +76,15 @@ class SetSimSpec extends SparkSuite {
     for (t <- Seq(0.4, 0.6, 0.8))
       assert(pairs(D(rows: _*).repartition(7), t) == naive(rows, t), s"t=$t")
   }
+
+  test("verify broadcast gates on the records' tid entries, not their count") {
+    // 3 records of 20 tokens (60 tid entries, 30 tokens, over 10 prefix
+    // buckets) against a broadcast gate of 10 rows: no join may be hinted
+    val rows = (0 until 3).map(r => (s"r$r", (0 until 20).map(i => s"t${r * 5 + i}")))
+    val plan = try {
+      spark.conf.set(Hints.MaxRowsKey, "10")
+      SetSim.jaccardJoin(D(rows: _*), "id", "toks", 0.5).queryExecution.analyzed.toString
+    } finally spark.conf.unset(Hints.MaxRowsKey)
+    assert(!plan.contains("ResolvedHint"), plan)
+  }
 }

@@ -92,8 +92,8 @@ class StableMatchSpec extends SparkSuite {
 
   test("local fast path == distributed round-parallel path (gate forced)") {
     // r6: matchPairs takes a driver-local sequential GS when the distinct
-    // preference table fits spark.graft.stablematch.localMaxRows. Force
-    // the distributed path with gate=0 and assert identical matchings —
+    // preference table fits the driver-local budget. Force
+    // the distributed path with budget 0 and assert identical matchings —
     // including an instance WITH TIED scores, where both paths must apply
     // the same (score, id-string) struct-max tie orders.
     val rnd = new scala.util.Random(47)
@@ -103,16 +103,22 @@ class StableMatchSpec extends SparkSuite {
           ((m * w * 5) % 251).toLong, ((m * w * 7) % 251).toLong),
       // tied scores: many (m, w) share m_score/w_score values
       for (m <- 1 to 7; w <- 1 to 7) yield
-        (f"m$m%02d", f"w$w%02d", ((m + w) % 3).toLong, ((m * w) % 4).toLong))
+        (f"m$m%02d", f"w$w%02d", ((m + w) % 3).toLong, ((m * w) % 4).toLong),
+      // a tie between men that Spark's UTF-8 order and Java's UTF-16
+      // order sort apart
+      Seq(("Ａ", "w0", 5L, 1L), ("😀", "w0", 5L, 1L), ("Ａ", "w1", 1L, 1L),
+        ("😀", "w1", 1L, 1L)))
     for ((prefs, i) <- instances.zipWithIndex) {
       val local = run(prefs, parts = 4)
-      val dist =
-        try {
-          spark.conf.set("spark.graft.stablematch.localMaxRows", "0")
-          run(prefs, parts = 4)
-        } finally spark.conf.unset("spark.graft.stablematch.localMaxRows")
+      val dist = withLocalBudget(0)(run(prefs, parts = 4))
       assert(local === dist, s"instance $i")
     }
+  }
+
+  test("a Long.MaxValue budget is clamped: same matching as the default budget") {
+    val prefs = for (m <- 1 to 4; w <- 1 to 4) yield
+      (s"m$m", s"w$w", ((m * w * 5) % 17).toLong, ((m * w * 7) % 17).toLong)
+    assert(withLocalBudget(Long.MaxValue)(run(prefs)) == run(prefs))
   }
 
   test("parity with sequential Gale-Shapley on random full instances") {

@@ -92,17 +92,21 @@ class SuffixArraySpec extends SparkSuite {
 
   test("gate-forced parity: local prefix doubling == distributed joins") {
     import spark.implicits._
-    val docs = Seq((1L, "banana band"), (2L, "ana"), (3L, ""),
-      (10L, "banana"), (4L, "zzz aaa zzz")).toDF("doc_id", "text")
     def sa(df: org.apache.spark.sql.DataFrame) =
       graft.ops.SuffixArray.build(df, org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("text"))
         .as[(Long, Long)].collect().toSet
-    val local = sa(docs)
-    val dist = try {
-      spark.conf.set("spark.graft.suffixarray.localMaxChars", "0")
-      sa(docs)
-    } finally spark.conf.unset("spark.graft.suffixarray.localMaxChars")
-    assert(local == dist)
+    // the second corpus mixes non-BMP chars (one position per code point,
+    // as `length` counts) with `?`
+    for (docs <- Seq(
+        Seq((1L, "banana band"), (2L, "ana"), (3L, ""), (10L, "banana"),
+          (4L, "zzz aaa zzz")),
+        Seq((1L, "a😀b"), (2L, "😁a"), (3L, "?")))) {
+      val local = sa(docs.toDF("doc_id", "text"))
+      val dist = withLocalBudget(0)(sa(docs.toDF("doc_id", "text")))
+      assert(local == dist)
+      val n = docs.map(d => d._2.codePointCount(0, d._2.length) + 1).sum
+      assert(dist.map(_._1) == (0L until n).toSet && dist.size == n)
+    }
   }
 }

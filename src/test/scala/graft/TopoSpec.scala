@@ -76,10 +76,7 @@ class TopoSpec extends SparkSuite {
       (f"n${k * 7 % 20}%02d", f"n${k * 7 % 20 + 1 + k % 4}%02d")
     }.distinct
     val local = lv(edges(es: _*))
-    val dist = try {
-      spark.conf.set("spark.graft.topo.localMaxEdges", "0")
-      lv(edges(es: _*))
-    } finally spark.conf.unset("spark.graft.topo.localMaxEdges")
+    val dist = withLocalBudget(0)(lv(edges(es: _*)))
     assert(local == dist)
   }
 }

@@ -128,17 +128,12 @@ class TrianglesSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Triangles.perNode(df).as[(String, Long)].collect().toSet
     val local = go(e)
-    val intersect = try {
-      spark.conf.set("spark.graft.triangles.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.triangles.localMaxEdges")
-    val wedge = try {
-      spark.conf.set("spark.graft.triangles.localMaxEdges", "0")
-      spark.conf.set(graft.Hints.MaxRowsKey, "0")
-      go(e)
-    } finally {
-      spark.conf.unset("spark.graft.triangles.localMaxEdges")
-      spark.conf.unset(graft.Hints.MaxRowsKey)
+    val intersect = withLocalBudget(0)(go(e))
+    val wedge = withLocalBudget(0) {
+      try {
+        spark.conf.set(graft.Hints.MaxRowsKey, "0")
+        go(e)
+      } finally spark.conf.unset(graft.Hints.MaxRowsKey)
     }
     assert(local == intersect && intersect == wedge)
     assert(local(("1", 2L)) && local(("3", 3L)) && !local.exists(_._1 == "6"))

@@ -72,10 +72,7 @@ class TwoEdgeCCSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.TwoEdgeCC.components(df).as[(String, String)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.bridges.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.bridges.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }

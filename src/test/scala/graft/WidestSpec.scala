@@ -65,10 +65,7 @@ class WidestSpec extends SparkSuite {
     def go(df: org.apache.spark.sql.DataFrame) =
       graft.graph.Widest.paths(df, seeds).as[(String, Long)].collect().toSet
     val local = go(e)
-    val dist = try {
-      spark.conf.set("spark.graft.widest.localMaxEdges", "0")
-      go(e)
-    } finally spark.conf.unset("spark.graft.widest.localMaxEdges")
+    val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
   }
 }
