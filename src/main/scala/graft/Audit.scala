@@ -33,7 +33,7 @@ object Audit {
   def capAccounting(sizes: org.apache.spark.sql.DataFrame, cap: Long,
       op: String)(mkWarn: (Long, Long) => String): Unit = {
     import org.apache.spark.sql.functions._
-    if (Materialize.accountingEnabled(sizes.sparkSession)) {
+    if (Materialize.materializing(sizes.sparkSession)) {
       val dropped = sizes.where(col("count") > cap)
         .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L))).head()
       if (dropped.getLong(0) > 0) warn(mkWarn(dropped.getLong(0), dropped.getLong(1)))

@@ -42,13 +42,17 @@ object Materialize {
       case _          => ds.localCheckpoint(eager)
     }
 
-  /** Whether in-operator cap ACCOUNTING should run: the accounting
-    * aggregate doubles as the materializing action of a lazily-checkpointed
-    * gate table, so under `local`/`reliable` it costs nothing extra — but
-    * under `none` the gate table is pure lineage and the accounting action
-    * would recompute the upstream aggregate a second time for the
-    * operator's own join. Operators skip it there (with a warn pointing at
-    * the deep-dive audit functions). */
-  def accountingEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
+  /** Whether [[apply]] materializes (`local`, `reliable`) rather than
+    * returning pure lineage (`none`). Two policies follow from it:
+    *  - in-operator cap ACCOUNTING runs only when true: the accounting
+    *    aggregate doubles as the materializing action of a lazily-
+    *    checkpointed gate table, so it costs nothing extra — but under
+    *    `none` the gate table is pure lineage and the accounting action
+    *    would recompute the upstream aggregate a second time for the
+    *    operator's own join. Operators skip it there (with a warn pointing
+    *    at the deep-dive audit functions);
+    *  - a doc-scale input read once by a materialized consumer is cached
+    *    only when false, where every downstream branch re-reads it. */
+  def materializing(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.conf.get(ModeKey, "local") != "none"
 }

@@ -51,8 +51,7 @@ object RandomWalks {
   private def localAdj(adj0: DataFrame, starts: DataFrame, startCol: String,
       length: Int): Option[(java.util.HashMap[Long, Array[Long]], Array[Long])] = {
     val sess = adj0.sparkSession
-    val ws = starts.select(col(startCol).cast("long").as("w"))
-      .where(col("w").isNotNull).distinct()
+    val ws = walkIds(starts, startCol)
     val sz = adj0.agg(coalesce(sum(size(col("nbrs"))), lit(0L)))
       .crossJoin(ws.agg(count(lit(1)))).head()
     if (!graft.Local.fits(sess, "walks", sz.getLong(0) + sz.getLong(1) * (length + 1L)))
@@ -64,6 +63,12 @@ object RandomWalks {
     import sess.implicits._
     Some((m, ws.as[Long].collect()))
   }
+
+  /** One walk per distinct non-null start id (`walk_id`); both the local
+    * replays and the per-step joins start from this. */
+  private def walkIds(starts: DataFrame, startCol: String): DataFrame =
+    starts.select(col(startCol).cast("long").as("walk_id"))
+      .where(col("walk_id").isNotNull).distinct()
 
   /** edges: directed (srcCol, dstCol) castable to long (undirected graphs
     * pass both directions). starts: one walk per row of `startCol`; the
@@ -111,8 +116,7 @@ object RandomWalks {
     // adjacency; gate-hint the adjacency (LeftOuter builds right) so a
     // step is one narrow map-side join (guide §3.1).
     val adj = graft.Hints.bcastIf(adj0, adj0.count())
-    var state = starts
-      .select(col(startCol).cast("long").as("walk_id")).distinct()
+    var state = walkIds(starts, startCol)
       .select(col("walk_id"), col("walk_id").as("cur"),
         array(col("walk_id")).as("path"))
     for (step <- 1 to length) {
@@ -234,8 +238,7 @@ object RandomWalks {
     // constraint barrier after lazy checkpoints (see GraphQuery.reachable)
     def barrier(df: DataFrame): DataFrame = df.where(col("walk_id").isNotNull)
     val m = 1L << 52
-    var state = starts
-      .select(col(startCol).cast("long").as("walk_id")).distinct()
+    var state = walkIds(starts, startCol)
       .select(col("walk_id"), col("walk_id").as("prev"),
         col("walk_id").as("cur"), array(col("walk_id")).as("path"))
     for (step <- 1 to length) {

@@ -171,7 +171,7 @@ object EntityLinker {
     // where it would double-compute the bucket aggregate.
     val bucketSizes = graft.Materialize(
       blocks.groupBy("band", "h").count(), eager = false)
-    if (graft.Materialize.accountingEnabled(ents.sparkSession)) {
+    if (graft.Materialize.materializing(ents.sparkSession)) {
       val droppedB = bucketSizes.where(col("count") > maxBucket)
         .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L))).head()
       if (droppedB.getLong(0) > 0)

@@ -242,7 +242,7 @@ object Dedup {
     // recompute the banding aggregate a second time, so it is skipped there
     // (warned, never silent).
     val sizes = graft.Materialize(banded.groupBy("band", "bh").count(), eager = false)
-    if (graft.Materialize.accountingEnabled(df.sparkSession)) {
+    if (graft.Materialize.materializing(df.sparkSession)) {
       val dropped = sizes.where(col("count") > maxBucket)
         .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L))).head()
       if (dropped.getLong(0) > 0)

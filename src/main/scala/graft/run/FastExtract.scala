@@ -2,11 +2,11 @@ package graft.run
 
 import graft.model._
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 
 import java.time.LocalDate
-import java.time.format.DateTimeFormatter
 import java.util.Locale
-import scala.util.matching.Regex
+import java.util.regex.Pattern
 
 /** Typed fast path of Extract: the SAME per-document semantics as the
   * declarative Column-HOF implementation (Extract.scala), executed as plain
@@ -54,21 +54,53 @@ object FastExtract {
     else if (relPos < 0.95) "total"
     else "footer"
 
+  /** Lower-case literals every match of the F2 pattern at the same index
+    * contains (either one, for the DH/MAD pattern). */
+  private val amountLiterals: Seq[Seq[String]] =
+    Seq(Seq("€"), Seq("eur"), Seq("€"), Seq("euro"), Seq("total"), Seq("montant"),
+      Seq("dh", "mad"))
+
   // F2 patterns — compiled once per JVM, identical strings to Taggers
-  private val amountRes: Seq[Regex] =
-    graft.tag.Taggers.amountPatterns.map(p => ("(?i)" + p).r)
+  private val amountRes: Array[(Array[String], Pattern)] = {
+    val ps = graft.tag.Taggers.amountPatterns
+    require(ps.size == amountLiterals.size, "one literal set per amount pattern")
+    amountLiterals.zip(ps).map { case (l, p) => (l.toArray, Pattern.compile("(?i)" + p)) }
+      .toArray
+  }
 
   /** First extracted amount value (group 1 of the first matching pattern,
     * reference pattern order), normalized to a 2-decimal string. */
-  def firstAmount(text: String): Option[String] = {
-    val it = amountRes.iterator.flatMap(_.findFirstMatchIn(text)).map(_.group(1))
-    if (it.hasNext) normalizeAmount(it.next()) else None
+  def firstAmount(text: String): Option[String] =
+    firstAmount(text, text.toLowerCase(Locale.ROOT))
+
+  /** [[firstAmount]] with `lower = text.toLowerCase(Locale.ROOT)` supplied.
+    * A pattern's `find` runs only where its literal occurs in `lower`, and
+    * none runs on text without an ASCII digit. Both skips are exact: every
+    * pattern needs `\d` (ASCII digits only) and its literal, and `(?i)`
+    * without UNICODE_CASE folds only ASCII letters, which lower-case to the
+    * literal's own letters. A `None` from [[normalizeAmount]] does not fall
+    * through to the next pattern. */
+  private def firstAmount(text: String, lower: String): Option[String] = {
+    if (!text.exists(c => c >= '0' && c <= '9')) return None
+    var i = 0
+    while (i < amountRes.length) {
+      val (lits, re) = amountRes(i)
+      if (lits.exists(l => lower.contains(l))) {
+        val m = re.matcher(text)
+        if (m.find()) return normalizeAmount(m.group(1))
+      }
+      i += 1
+    }
+    None
   }
+
+  private val whitespaceRe = Pattern.compile("\\s")
+  private val nonSlugRe = Pattern.compile("[^a-z0-9]+")
 
   /** F3 normalization: strip whitespace, comma→dot, DECIMAL(18,2) HALF_UP —
     * same as cast(DecimalType(18,2)) in the Column path. */
   def normalizeAmount(s: String): Option[String] =
-    try Some(BigDecimal(s.replaceAll("\\s", "").replace(',', '.'))
+    try Some(BigDecimal(whitespaceRe.matcher(s).replaceAll("").replace(',', '.'))
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString)
     catch { case _: NumberFormatException => None }
 
@@ -112,7 +144,7 @@ object FastExtract {
   }
 
   def entitySlug(name: String): String =
-    name.toLowerCase(Locale.ROOT).replaceAll("[^a-z0-9]+", "_")
+    nonSlugRe.matcher(name.toLowerCase(Locale.ROOT)).replaceAll("_")
       .stripPrefix("_").stripSuffix("_")
 
   /** One span widened with centers + zone. */
@@ -156,7 +188,9 @@ object FastExtract {
       .flatMap(w => numberRe.findFirstMatchIn(w.s.text).map(_.group(1)))
       .nextOption().foreach(tr(inv, "hasNumber", _))
 
-    val dates = mentions.filter(w => dateRe.matches(w.s.text)).map(_.s.text)
+    // a date match is 10 ASCII chars: the length test skips most spans
+    val dates = mentions.filter(w => w.s.text.length == 10 && dateRe.matches(w.s.text))
+      .map(_.s.text)
     dates.headOption.flatMap(isoDate).foreach(tr(inv, "hasDate", _))
     dates.lift(1).flatMap(isoDate).foreach(tr(inv, "hasDueDate", _))
 
@@ -177,9 +211,11 @@ object FastExtract {
     for (v <- vendorNode; i <- vendorIce) tr(v, "hasICE", i)
     for (c <- clientNode; i <- clientIce) tr(c, "hasICE", i)
 
+    // total-zone mentions lower-cased once for the three label lookups
+    val totals = mentions.filter(_.zone == "total")
+      .map(w => (w.s.text, w.s.text.toLowerCase(Locale.ROOT)))
     def totalZoneAmount(key: String): Option[String] =
-      firstIn("total")(w => w.s.text.toLowerCase(Locale.ROOT).contains(key))
-        .flatMap(w => firstAmount(w.s.text))
+      totals.find(_._2.contains(key)).flatMap { case (t, l) => firstAmount(t, l) }
     totalZoneAmount("sous-total").foreach(tr(inv, "hasSubtotalHT", _))
     totalZoneAmount("tva").foreach(tr(inv, "hasTVA", _))
     totalZoneAmount("total ttc").foreach(tr(inv, "hasTotalTTC", _))
@@ -219,32 +255,47 @@ object FastExtract {
     * semantics are shared with extractDoc via the same helpers; parity with
     * the full path is asserted in ExtractParitySpec. */
   def mentionsOnly(doc: OcrDoc): Seq[VendorMention] = {
-    val spans = doc.spans.map(s => if (s.text == null) s.copy(text = "") else s)
-    if (spans.isEmpty) return Nil
-    val totalH = spans.map(s => s.bbox.y + s.bbox.h).max.toDouble
+    val s = doc.spans
+    mentionsOf(doc.doc_id, s.map(_.text).toArray, s.map(_.conf).toArray,
+      s.map(_.bbox.y).toArray, s.map(_.bbox.h).toArray)
+  }
+
+  /** The mention logic over the four span fields it reads (text, conf and
+    * the bbox's y and h, one array element per span). */
+  private def mentionsOf(docId: String, text: Array[String], conf: Array[Double],
+      y: Array[Int], h: Array[Int]): Seq[VendorMention] = {
+    val n = if (text == null) 0 else text.length
+    if (n == 0) return Nil
+    var bottom = Int.MinValue
+    var i = 0
+    while (i < n) { bottom = math.max(bottom, y(i) + h(i)); i += 1 }
+    val totalH = bottom.toDouble
     var vendorSurface: String = null
     var clientSurface: String = null
     var vendorIce: String = null
     var clientIce: String = null
-    spans.foreach { s =>
-      if (s.conf > 0.5 && sparkTrimmedLength(s.text) > 1) {
-        val yc = s.bbox.y + s.bbox.h / 2.0
+    i = 0
+    while (i < n) {
+      val t = if (text(i) == null) "" else text(i)
+      if (conf(i) > 0.5 && sparkTrimmedLength(t) > 1) {
+        val yc = y(i) + h(i) / 2.0
         val zone = zoneOf(if (totalH > 0) yc / totalH else 0.0)
         if (zone == "company_info") {
-          if (vendorSurface == null) vendorSurface = s.text
-          if (vendorIce == null && iceRe.matches(s.text))
-            vendorIce = iceRe.findFirstMatchIn(s.text).get.group(1)
+          if (vendorSurface == null) vendorSurface = t
+          if (vendorIce == null && iceRe.matches(t))
+            vendorIce = iceRe.findFirstMatchIn(t).get.group(1)
         } else if (zone == "client_info") {
-          if (clientSurface == null && !s.text.endsWith(":")) clientSurface = s.text
-          if (clientIce == null && iceRe.matches(s.text))
-            clientIce = iceRe.findFirstMatchIn(s.text).get.group(1)
+          if (clientSurface == null && !t.endsWith(":")) clientSurface = t
+          if (clientIce == null && iceRe.matches(t))
+            clientIce = iceRe.findFirstMatchIn(t).get.group(1)
         }
       }
+      i += 1
     }
     val v = Option(vendorSurface).map(s =>
-      VendorMention(doc.doc_id, "vendor", s, Option(vendorIce).getOrElse(""), entitySlug(s)))
+      VendorMention(docId, "vendor", s, Option(vendorIce).getOrElse(""), entitySlug(s)))
     val c = Option(clientSurface).map(s =>
-      VendorMention(doc.doc_id, "client", s, Option(clientIce).getOrElse(""), entitySlug(s)))
+      VendorMention(docId, "client", s, Option(clientIce).getOrElse(""), entitySlug(s)))
     Seq(v, c).flatten
   }
 
@@ -254,9 +305,16 @@ object FastExtract {
     docs.mapPartitions(_.flatMap(d => extractDoc(d).triples))
   }
 
+  /** [[mentionsOnly]] over a Dataset, reading only `doc_id` and the span
+    * fields text, conf, bbox.y and bbox.h: no whole `OcrDoc` is decoded, and
+    * on a file scan Spark's nested schema pruning reads just those five leaf
+    * columns (ExtractParitySpec checks the scan's required schema). */
   def vendorMentions(docs: Dataset[OcrDoc]): Dataset[VendorMention] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.mapPartitions(_.flatMap(mentionsOnly))
+    docs.select(col("doc_id"), col("spans.text"), col("spans.conf"),
+        col("spans.bbox.y"), col("spans.bbox.h"))
+      .as[(String, Array[String], Array[Double], Array[Int], Array[Int])]
+      .mapPartitions(_.flatMap { case (id, t, c, y, h) => mentionsOf(id, t, c, y, h) })
   }
 }

@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Shuffle inventory (the whole point at 100 TB):
   *   0 shuffles to raw triples (all per-doc array HOFs);
+  *   the mention scan reads 5 leaf columns (doc_id and the spans' text,
+  *     conf, bbox.y, bbox.h) and is not cached in the materializing
+  *     `spark.graft.materialize` modes: the entity table's checkpoint
+  *     consumes it once;
   *   1 groupBy(entity_key) over the SMALL mention projection — it yields
   *     the entity table AND the per-entity mention counts (n_mentions)
   *     that weight canonical-representative selection;
@@ -115,8 +119,20 @@ object Pipeline {
     docs.selectExpr("doc_id", "page_w", "page_h", "spans").as[graft.model.OcrDoc]
   }
 
-  private def vendorMentions(docs: DataFrame): DataFrame =
-    FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
+  /** `f` over the doc-scale vendor-mention table of `docs`. It is
+    * persisted for the call only under `spark.graft.materialize=none`,
+    * where each branch that reads the entity table re-reads the mentions;
+    * in the materializing modes the entity table's checkpoint runs the
+    * groupBy's map stage once, so the mentions are scanned once and a
+    * cache would only cost its build. */
+  private def withMentions[A](docs: DataFrame)(f: DataFrame => A): A = {
+    val vm = FastExtract.vendorMentions(asOcrDocs(docs)).toDF()
+    if (graft.Materialize.materializing(docs.sparkSession)) f(vm)
+    else {
+      vm.persist()
+      try f(vm) finally vm.unpersist()
+    }
+  }
 
   private def rawTriples(docs: DataFrame): DataFrame =
     FastExtract.triples(asOcrDocs(docs)).toDF()
@@ -135,15 +151,13 @@ object Pipeline {
     * (or with the threshold at 0) the distributed chain runs.
     *
     * Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
-    * table is persist()ed — under `spark.graft.materialize=none` each
-    * linking branch re-reads `ents`, and so the mentions, from it — but
-    * only for the duration of this call: everything returned is
-    * ENTITY-scale and materialized via self-cleaning localCheckpoint (or a
-    * driver-local relation) before `finally` releases the cache. Nothing
-    * doc-scale outlives the call. */
-  private def entityStage(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, Long) = {
-    val vm = vendorMentions(docs).persist()
-    try {
+    * table is cached only under `spark.graft.materialize=none` (see
+    * [[withMentions]]) and only for the duration of this call: everything
+    * returned is ENTITY-scale and materialized via self-cleaning
+    * localCheckpoint (or a driver-local relation) before the call ends.
+    * Nothing doc-scale outlives the call. */
+  private def entityStage(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, Long) =
+    withMentions(docs) { vm =>
       val ents = EntityLinker.entities(vm) // entity-scale, materialized inside
       localEntityStage(ents, cfg).getOrElse {
         // the gate above already measured the table: the linker's own gate
@@ -155,15 +169,14 @@ object Pipeline {
         val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
         // LAZY materialize + count in ONE job (the count is the action that
         // computes and stores the map — no separate eager-checkpoint job);
-        // the count must run inside the try, while the mention cache that
+        // the count must run inside `withMentions`, while a mention cache
         // the map's lineage (and ents') reads is still live. It is returned
         // so callers don't re-count the map for the broadcast decision.
         val cm = graft.Materialize(
           ConnectedComponents.canonicalMap(comps, counts), eager = false)
         (ents, cm, cm.count())
       }
-    } finally vm.unpersist()
-  }
+    }
 
   /** The entity stage on the driver when the entity table has at most
     * `cfg.elSmallThreshold` rows (None otherwise, or when the threshold is
@@ -268,7 +281,9 @@ object Pipeline {
     *
     * Plan shape (the 100 TB view):
     *  - docs are scanned exactly TWICE, both narrow: once for the raw
-    *    triple stream, once for the tiny vendor-mention projection;
+    *    triple stream, once for the tiny vendor-mention projection, which
+    *    reads only 5 leaf columns and, in the materializing modes, has no
+    *    doc-scale cache (the entity table's checkpoint consumes it once);
     *  - the raw triple stream flows through ONE broadcast join (canonical
     *    map) and is never shuffled, persisted, or scanned twice — doc-scoped
     *    subjects embed the doc_id and are duplicate-free by construction;
@@ -495,8 +510,7 @@ object Pipeline {
         "(pre-registry format) — rebuild the canon snapshot with the " +
         "current runResumable first")
 
-    val vm = vendorMentions(newDocs).persist()
-    val (merged, newMap, mapRows, incEdges) = try {
+    val (merged, newMap, mapRows, incEdges) = withMentions(newDocs) { vm =>
       val newEnts = EntityLinker.entities(vm)
         .select("entity_key", "surface", "n_mentions", "ice")
       val mergedEnts = graft.Materialize(
@@ -533,7 +547,7 @@ object Pipeline {
       val nm = graft.Materialize(
         ConnectedComponents.canonicalMap(comps, counts), eager = false)
       (mergedEnts, nm, nm.count(), nEdges)
-    } finally vm.unpersist()
+    }
 
     // entity-scale delta: old canonical → its new canonical (where changed)
     val delta = priorMap.select(col("canonical").as("id")).distinct()

@@ -60,6 +60,21 @@ class PipelineSpec extends SparkSuite {
     }
   }
 
+  test("spark.graft.materialize=none rebuilds the default-mode graph (local and distributed EL)") {
+    // `none` is the one mode that keeps the doc-scale mention cache: its
+    // entity table is pure lineage, re-read by every linking branch
+    def graph(cfg: Pipeline.Config) =
+      Pipeline.run(docs, cfg).select("subj", "pred", "obj")
+        .as[(String, String, String)].collect().sorted.toSeq
+    for (threshold <- Seq(Pipeline.Config().elSmallThreshold, 0L)) {
+      val cfg = Pipeline.Config(elSmallThreshold = threshold)
+      val want = graph(cfg)
+      spark.conf.set(Materialize.ModeKey, "none")
+      val got = try graph(cfg) finally spark.conf.unset(Materialize.ModeKey)
+      assert(got == want, s"threshold=$threshold")
+    }
+  }
+
   test("LSH-only entity linking (useIce=false) still links noisy variants") {
     val pr = Evaluation.triplePR(
       Pipeline.run(docs, Pipeline.Config(useIce = false)), expected)

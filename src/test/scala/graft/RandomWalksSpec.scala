@@ -157,18 +157,20 @@ class RandomWalksSpec extends SparkSuite {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L),
       (1L, 3L), (5L, 1L), (6L, 6L)).toDF("src", "dst")
-    val st = Seq(1L, 3L, 5L, 9L).toDF("id")
+    // a null start has no walk on either path
+    val st = Seq(Some(1L), Some(3L), Some(5L), Some(9L), None).toDF("id")
     def uni(df: org.apache.spark.sql.DataFrame) =
       graft.graph.RandomWalks.walks(df, st, length = 6, seed = 7L)
-        .as[(Long, Seq[Long])].collect().toMap
+        .as[(Option[Long], Seq[Option[Long]])].collect().toMap
     def bia(df: org.apache.spark.sql.DataFrame) =
       graft.graph.RandomWalks.walksBiased(df, st, length = 6,
         p = 4.0, q = 0.25, seed = 7L)
-        .as[(Long, Seq[Long])].collect().toMap
+        .as[(Option[Long], Seq[Option[Long]])].collect().toMap
     val (lu, lbm) = (uni(e), bia(e))
     val (du, dbm) = withLocalBudget(0)((uni(e), bia(e)))
     assert(lu == du)
     assert(lbm == dbm)
+    assert(lu.keySet == Set(1L, 3L, 5L, 9L).map(Option(_)))
   }
 
   test("the local gate counts the walks' path entries, not only the adjacency") {
