@@ -2,7 +2,6 @@ package graft
 
 import graft.fixtures.InvoiceCorpus
 import graft.run.{FastExtract, Pipeline}
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds plus the KG
   * throughput headline (triples/sec on a freshly synthesized corpus —
@@ -30,18 +29,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val kgDocs = sys.env.getOrElse("SPARK_GRAFT_KG_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    val spark = graft.run.Sessions.local(cpus, cpus, "graft-bench", Seq(
       // parallelismFirst=false alone sizes post-shuffle partitions to the
       // 64 MB default advisory — at bench SF the ~60 MB edge shuffles of
       // the graph round loops (k-core, triangles, PageRank) coalesce to
@@ -51,9 +41,9 @@ object Bench {
       // BENCH-SCALE calibration of the pair — a real cluster keeps the
       // 64 MB default, where the same shuffles are TBs and already
       // thousands of partitions.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m",
+      // Spark's default: the r2–r6 records were taken under it
+      "spark.sql.autoBroadcastJoinThreshold" -> "10MB"))
     import spark.implicits._
 
     def time(f: => Unit): Double = {
@@ -69,16 +59,10 @@ object Bench {
     // this report only compare across rounds after dividing by the calib
     // ratio. Within-run numbers (scaling efficiency, per-query relatives)
     // are unaffected.
-    def mixLoop(iters: Long): Long = {
-      var h = 0x9E3779B97F4A7C15L; var i = 0L
-      while (i < iters) { h = java.lang.Long.rotateLeft(h * 0x100000001B3L, 13) ^ i; i += 1 }
-      h
-    }
     mixLoop(20000000L) // JIT warmup
     val calibSingle = time { if (mixLoop(400000000L) == 42L) println("") }
-    val nThreads = cpus.toInt
     val calibAll = time {
-      val ts = (1 to nThreads).map(_ => new Thread(() => {
+      val ts = (1 to cpus).map(_ => new Thread(() => {
         if (mixLoop(400000000L) == 42L) println("")
       }))
       ts.foreach(_.start()); ts.foreach(_.join())
@@ -163,5 +147,13 @@ object Bench {
       s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$extras,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Substrate calibration loop: fixed, allocation-free integer mixing
+    * (the caller times it; the result only defeats dead-code removal). */
+  def mixLoop(iters: Long): Long = {
+    var h = 0x9E3779B97F4A7C15L; var i = 0L
+    while (i < iters) { h = java.lang.Long.rotateLeft(h * 0x100000001B3L, 13) ^ i; i += 1 }
+    h
   }
 }

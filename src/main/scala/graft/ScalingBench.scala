@@ -47,15 +47,7 @@ object ScalingBench {
 
     def sessionAt(execs: Int): SparkSession = {
       val cores = execs * coresPerExec
-      val b = SparkSession.builder()
-        .appName(s"graft-scaling-$execs")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      graft.run.Sessions.local(cores, cores, s"graft-scaling-$execs", Seq(
         // bench-scale advisory calibration (same as graft.Bench, r4 A/B
         // discovery): with the 64 MB default, parallelismFirst=false
         // coalesces the fixture's tens-of-MB entity-scale shuffles (EL
@@ -63,15 +55,13 @@ object ScalingBench {
         // Amdahl term that the skew fixture (vendorPool mode) makes
         // dominant and that a real cluster never sees (the same shuffles
         // are TBs there and already thousands of partitions)
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "2m"))
-      val s = (if (mode == "cluster")
-        b.master(s"local-cluster[$execs,$coresPerExec,$execMb]")
-          .config("spark.jars", new java.io.File(Jar).getAbsolutePath)
-          .config("spark.executor.memory", s"${execMb}m")
-      else b.master(s"local[$cores]")).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m") ++
+        // cluster mode: real executor JVMs, which load the packaged jar
+        (if (mode == "cluster") Seq(
+          "spark.master" -> s"local-cluster[$execs,$coresPerExec,$execMb]",
+          "spark.jars" -> new java.io.File(Jar).getAbsolutePath,
+          "spark.executor.memory" -> s"${execMb}m")
+        else Nil))
     }
 
     // Substrate calibration: a fixed allocation-free integer-mixing loop on
@@ -82,16 +72,11 @@ object ScalingBench {
     // factor. Dividing each iteration by its adjacent calibration converts
     // wall seconds into substrate-relative units, making the two levels
     // comparable even when they ran in different speed windows.
-    def mixLoop(n: Long): Long = {
-      var h = 0x9E3779B97F4A7C15L; var i = 0L
-      while (i < n) { h = java.lang.Long.rotateLeft(h * 0x100000001B3L, 13) ^ i; i += 1 }
-      h
-    }
-    mixLoop(20000000L) // JIT
+    Bench.mixLoop(20000000L) // JIT
     def calibSec(threads: Int): Double = {
       val t0 = System.nanoTime()
       val ts = (1 to threads).map(_ => new Thread(() => {
-        if (mixLoop(200000000L) == 42L) println("")
+        if (Bench.mixLoop(200000000L) == 42L) println("")
       }))
       ts.foreach(_.start()); ts.foreach(_.join())
       (System.nanoTime() - t0) / 1e9
@@ -115,7 +100,7 @@ object ScalingBench {
     val quietWaitSec = sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT_SEC", "600").toInt
     def calibSingle(): Double = {
       val t0 = System.nanoTime()
-      if (mixLoop(400000000L) == 42L) println("")
+      if (Bench.mixLoop(400000000L) == 42L) println("")
       (System.nanoTime() - t0) / 1e9
     }
     def awaitQuietWindow(label: String): Boolean = quietMax match {

@@ -2,26 +2,31 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [substr…] — with substrings,
+  * only the queries whose name contains one of them (and their oracle
+  * entries) are dumped: the fast inner loop for authoring a query/oracle
+  * pair (`scripts/check_oracle.py <sfDir> <outDir>` compares just those). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // engine standard config (graft.run.Sessions): null-on-error casts,
-      // AQE + skew-join on
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [substr…]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.run.Sessions.local(cpus, cpus, "graft-verify")
+    val names = dump(spark, args(0), args(1), args.drop(2).toSeq)
+    println(s"[verify] dumped ${names.size} quer(ies)")
+    spark.stop()
+  }
+
+  /** Write every query whose name contains one of `only` (all when empty)
+    * to `outDir/<name>` and their oracle SQL to `outDir/oracle_sql.json`;
+    * returns the dumped names. A failing query is reported and skipped. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Seq[String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    def keep(name: String) = only.isEmpty || only.exists(name.contains)
+    val picked = SparkEntry.queries.filter { case (n, _) => keep(n) }
+    picked.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -41,8 +46,9 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    picked.keys.toSeq.sorted
   }
 }

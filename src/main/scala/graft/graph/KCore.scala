@@ -36,18 +36,19 @@ import org.apache.spark.sql.functions._
   * trade-off the walk family already makes. */
 object KCore {
 
+  /** Rounds fused into one job per change-count action. */
+  private val CheckEvery = 2
+
   /** edges: undirected edge list (either/both directions; duplicates and
     * self-loops dropped). Returns (id: long, coreness: int) for every
     * node incident to an edge. `maxIters` is a safety bound only — the
-    * loop exits at the fixpoint. `checkEvery` batches that many rounds
-    * into one job before the change-count action: past the fixpoint a
-    * round is the identity (h-index of stable neighbors is stable), so
-    * batching trades ≤ checkEvery-1 no-op rounds for checkEvery× fewer
-    * serial actions — the same serial-latency fusion as CC's round
-    * batching. */
-  def coreness(edges: DataFrame, maxIters: Int = 100, checkEvery: Int = 2,
+    * loop exits at the fixpoint. [[CheckEvery]] rounds run as one job
+    * before the change-count action: past the fixpoint a round is the
+    * identity (h-index of stable neighbors is stable), so batching trades
+    * ≤ CheckEvery-1 no-op rounds for CheckEvery× fewer serial actions —
+    * the same serial-latency fusion as CC's round batching. */
+  def coreness(edges: DataFrame, maxIters: Int = 100,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(checkEvery >= 1, "coreness: checkEvery must be >= 1")
     val a = col(srcCol).cast("long")
     val b = col(dstCol).cast("long")
     val und = graft.Materialize(edges
@@ -96,7 +97,7 @@ object KCore {
             max(when(col("self"), col("val"))).as("old"))
           .select(col("id"), hIndex.cast("int").as("val"), col("old"))
       }
-      val rounds = math.min(checkEvery, maxIters - iters)
+      val rounds = math.min(CheckEvery, maxIters - iters)
       var next = round(cur)
       for (_ <- 2 to rounds) next = round(next.select("id", "val"))
       val nextM = graft.Materialize(next, eager = false)

@@ -2,7 +2,6 @@ package graft.run
 
 import graft.fixtures.InvoiceCorpus
 import graft.graph.TripleStore
-import org.apache.spark.sql.SparkSession
 
 /** Production entry point (the `spark-submit` shape of the north_star):
   *
@@ -15,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   * last committed snapshot (TripleStore manifests). `--report` prints the
   * lineage counters and throughput at the end.
   *
-  * The session comes from `SparkSession.builder().getOrCreate()` WITHOUT a
-  * hard-coded master, so spark-submit controls the cluster (local[*] when
-  * launched standalone).
+  * The session comes from `Sessions.submitted`, which sets no master, so
+  * spark-submit controls the cluster.
   */
 object Main {
 
@@ -53,15 +51,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName("graft-kg-construct")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.submitted("graft-kg-construct")
 
     val docs = opts("docs") match {
       case s if s.startsWith("synthetic:") =>

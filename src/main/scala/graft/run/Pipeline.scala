@@ -107,11 +107,15 @@ object Pipeline {
       .select(vendorNode(col("canonical")).as("subj"),
         lit("hasICE").as("pred"), col("ice").as("obj"))
       .distinct()
-    val sameAs = canonMap.where(col("id") =!= col("canonical"))
+    iceTriples.unionByName(sameAsTriples(canonMap))
+  }
+
+  /** sameAs per linked surface form, from the unhinted map: a broadcast
+    * hint outside a join is dropped with a warning. */
+  private def sameAsTriples(canonMap: DataFrame): DataFrame =
+    canonMap.where(col("id") =!= col("canonical"))
       .select(vendorNode(col("id")).as("subj"), lit("sameAs").as("pred"),
         vendorNode(col("canonical")).as("obj"))
-    iceTriples.unionByName(sameAs)
-  }
 
   private def asOcrDocs(docs: DataFrame) = {
     val spark = docs.sparkSession
@@ -268,11 +272,7 @@ object Pipeline {
           .otherwise(col("subj")))
       .drop("surf_node", "canon_node")
 
-    val sameAs = m
-      .where(col("surf_node") =!= col("canon_node"))
-      .select(col("surf_node").as("subj"), lit("sameAs").as("pred"),
-        col("canon_node").as("obj"))
-      .withColumn("doc_id", lit(null).cast("string"))
+    val sameAs = sameAsTriples(canonMap).withColumn("doc_id", lit(null).cast("string"))
 
     rewritten.unionByName(sameAs.select(rewritten.columns.toIndexedSeq.map(col): _*))
   }

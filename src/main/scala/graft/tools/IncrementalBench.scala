@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.fixtures.InvoiceCorpus
 import graft.run.Pipeline
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Files
 
@@ -25,19 +24,7 @@ object IncrementalBench {
     val nDocs = if (args.nonEmpty) args(0).toLong else 1000000L
     val nIncr = math.max(nDocs / 10, 1L)
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-incremental-bench")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(cores, cores, "graft-incremental-bench")
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

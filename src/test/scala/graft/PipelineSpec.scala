@@ -4,6 +4,7 @@ import graft.fixtures.InvoiceCorpus
 import graft.link.EntityLinker
 import graft.metrics.Evaluation
 import graft.run.{Extract, FastExtract, Pipeline}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint, UnaryNode}
 import org.apache.spark.sql.functions._
 
 /** End-to-end gates (FIXTURES.md §5):
@@ -39,6 +40,29 @@ class PipelineSpec extends SparkSuite {
     val plan = Pipeline.run(docs, Pipeline.Config(broadcastEntityLimit = 0L))
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("ResolvedHint"), "no broadcast hint expected in fallback plan")
+  }
+
+  test("canonicalize: no broadcast hint outside a join; both rewrite joins keep it") {
+    val raw = Seq(("doc:1", "hasVendor", "vendor:acme_sa", "1"),
+      ("vendor:acme_sa", "hasICE", "001", "1")).toDF("subj", "pred", "obj", "doc_id")
+    val map = Seq(("acme_sa", "acme"), ("acme", "acme")).toDF("id", "canonical")
+    val g = Pipeline.canonicalize(raw, map, 2L, 1000L)
+    // EliminateResolvedHint's reach: a hint reaches a join only through a
+    // chain of unary nodes under one of its sides; any other is dropped
+    // with a HintErrorLogger warning
+    def stray(p: LogicalPlan, underJoin: Boolean): Int = p match {
+      case h: ResolvedHint => (if (underJoin) 0 else 1) + stray(h.child, underJoin)
+      case j: Join => j.children.map(stray(_, underJoin = true)).sum
+      case u: UnaryNode => stray(u.child, underJoin)
+      case o => o.children.map(stray(_, underJoin = false)).sum
+    }
+    assert(stray(g.queryExecution.analyzed, underJoin = false) == 0)
+    val joins = g.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 2 &&
+      joins.forall(_.hint.rightHint.exists(_.strategy.contains(BROADCAST))), joins)
+    assert(g.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet ==
+      Set(("doc:1", "hasVendor", "vendor:acme"), ("vendor:acme", "hasICE", "001"),
+        ("vendor:acme_sa", "sameAs", "vendor:acme")))
   }
 
   test("distributed entity linking (elSmallThreshold=0) == driver-local path") {
