@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   *   below `Config.elSmallThreshold` entities, the rest of the entity
   *     stage is that groupBy plus ONE collect of the entity table: linking,
   *     union-find and canonical choice then run on the driver with no
-  *     further job; above it, LSH block join + CC iterations + the
-  *     canonical-map window over the MUCH smaller entity set;
+  *     further job; above it, one grouped LSH/ICE verify pass + one
+  *     distinct, CC iterations and the canonical-map window over the MUCH
+  *     smaller entity set;
   *   1 broadcast-able join to rewrite vendor/client objects;
   *   1 final repartition at write.
   */

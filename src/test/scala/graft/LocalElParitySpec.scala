@@ -3,12 +3,22 @@ package graft
 import graft.fixtures.InvoiceCorpus
 import graft.link.EntityLinker
 import graft.run.FastExtract
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 /** Hybrid entity linking: the driver-local LSH→verify chain must produce
   * the EXACT edge set of the distributed one (same band hashes via
   * XxHash64Function, same levenshtein, same bucket caps, same ICE veto). */
 class LocalElParitySpec extends SparkSuite {
   import spark.implicits._
+
+  /** The cap warnings of one call, with its edge set. */
+  private def warnedEdges(f: => org.apache.spark.sql.DataFrame)
+      : (Set[(String, String)], Seq[String]) = {
+    val (es, warned) = Audit.capturing(f.as[(String, String)].collect().toSet)
+    (es, warned.filter(_.contains("over-cap LSH buckets")))
+  }
 
   private def edges(vm: org.apache.spark.sql.DataFrame, useIce: Boolean,
       threshold: Long): Set[(String, String)] =
@@ -95,13 +105,14 @@ class LocalElParitySpec extends SparkSuite {
     val vm = FastExtract.vendorMentions(InvoiceCorpus.docs(spark, 150, 7L, 0.9)).toDF().cache()
     try {
       val ents = EntityLinker.entities(vm)
-      for (threshold <- Seq(Long.MaxValue, 0L)) { // local, then distributed
-        val (_, warned) = Audit.capturing {
-          EntityLinker.candidateEdgesFromEntities(ents, maxBucket = 3,
-            smallThreshold = threshold).count()
-        }
-        assert(warned.exists(_.contains("over-cap LSH buckets")),
-          s"threshold=$threshold expected a cap warning, got $warned")
+      // local, then distributed: the same buckets and rows are dropped
+      val Seq(local, dist) = Seq(Long.MaxValue, 0L).map { threshold =>
+        warnedEdges(EntityLinker.candidateEdgesFromEntities(ents, maxBucket = 3,
+          smallThreshold = threshold))._2
+      }
+      assert(local.size == 1, s"expected one local cap warning, got $local")
+      assert(local == dist, s"local=$local distributed=$dist")
+      for (threshold <- Seq(Long.MaxValue, 0L)) {
         val (_, silent) = Audit.capturing {
           EntityLinker.candidateEdgesFromEntities(ents, maxBucket = 100000,
             smallThreshold = threshold).count()
@@ -109,5 +120,79 @@ class LocalElParitySpec extends SparkSuite {
         assert(silent.isEmpty, s"threshold=$threshold unexpected warnings: $silent")
       }
     } finally vm.unpersist()
+  }
+
+  test("a null surface fails the edit-similarity test on both paths; Jaccard still decides") {
+    val vm = Seq(("acme_sarl", "ACME SARL", "123"), ("acme_sar1", null, ""),
+        ("acme_sarl_x", "ACME SARL X", ""))
+      .toDF("entity_key", "surface", "ice")
+    val ents = EntityLinker.entities(vm)
+    for (useIce <- Seq(true, false); threshold <- Seq(Long.MaxValue, 0L)) {
+      val got = EntityLinker.candidateEdgesFromEntities(ents, useIce = useIce,
+          smallThreshold = threshold)
+        .as[(String, String)].collect().toSet
+      assert(got == Set(("acme_sarl", "acme_sarl_x")), s"useIce=$useIce threshold=$threshold")
+    }
+  }
+
+  test("the distributed pass is one grouped pass: no join in its optimized plan") {
+    val vm = FastExtract.vendorMentions(InvoiceCorpus.docs(spark, 60)).toDF()
+    // under materialize=none nothing is checkpointed, so the plan is the
+    // whole lineage from the entity table on
+    for (mode <- Seq("local", "none")) {
+      spark.conf.set(Materialize.ModeKey, mode)
+      try {
+        val plan = EntityLinker.candidateEdgesFromEntities(EntityLinker.entities(vm),
+          smallThreshold = 0L).queryExecution.optimizedPlan
+        assert(plan.collect { case j: Join => j }.isEmpty, s"mode=$mode\n$plan")
+      } finally spark.conf.unset(Materialize.ModeKey)
+    }
+  }
+
+  test("property: distributed == local, full and touched, on generated entity tables") {
+    // keys from few tokens over ASCII, U+E000–U+FFFF and non-BMP chars, so
+    // buckets overflow a cap of 3 and Spark's UTF-8 order differs from
+    // Java's; surfaces are the key, a variant or null; ICEs null or shared
+    // by 1–5 entities
+    val tok = Gen.oneOf("acme", "sarl", "x", "7", "\uE000", "\uFFFD", "\uFF21",
+      "\uD83D\uDE00", "\uD83D\uDE01")
+    val key = Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, tok).map(_.mkString("_")))
+    def surface(k: String) = Gen.frequency(
+      3 -> Gen.const(k.replace('_', ' ').toUpperCase),
+      1 -> Gen.const(k.replace('_', ' ') + " sa"),
+      1 -> Gen.const(null: String))
+    val gen = for {
+      keys <- Gen.listOfN(45, key).map(_.distinct)
+      surfaces <- Gen.sequence[List[String], String](keys.map(surface))
+      // runs of 1–5 entities sharing an ICE, then 0–3 without one
+      groups <- Gen.listOfN(keys.size, Gen.zip(Gen.choose(1, 5), Gen.choose(0, 3)))
+        .map(_.zipWithIndex.flatMap { case ((n, gap), g) =>
+          List.fill(n)(f"$g%09d") ++ List.fill(gap)("") })
+      touched <- Gen.listOfN(keys.size, Gen.oneOf(true, false))
+    } yield (keys.lazyZip(surfaces).lazyZip(groups).toList, keys.zip(touched))
+    Seq(5L, 23L, 41L).foreach { seed =>
+      val (rows, flags) = gen.apply(Gen.Parameters.default, Seed(seed)).get
+      val ents = EntityLinker.entities(rows.toDF("entity_key", "surface", "ice"))
+      val tset = flags.collect { case (k, true) => k }.toSet
+      val touched = tset.toSeq.toDF("entity_key")
+      for (useIce <- Seq(true, false)) {
+        val clue = s"seed=$seed useIce=$useIce"
+        val Seq((local, localWarn), (dist, distWarn)) = Seq(Long.MaxValue, 0L).map { th =>
+          warnedEdges(EntityLinker.candidateEdgesFromEntities(ents, useIce = useIce,
+            maxBucket = 3, smallThreshold = th))
+        }
+        assert(local.nonEmpty, clue)
+        assert(local == dist, s"$clue localOnly=${local -- dist} distOnly=${dist -- local}")
+        assert(distWarn.nonEmpty && localWarn == distWarn, s"$clue $localWarn $distWarn")
+        val expected = local.filter(e => tset(e._1) || tset(e._2))
+        for (th <- Seq(Long.MaxValue, 0L)) {
+          val got = EntityLinker.candidateEdgesTouched(ents, touched, useIce = useIce,
+              maxBucket = 3, smallThreshold = th)
+            .as[(String, String)].collect().toSet
+          assert(got == expected, s"$clue threshold=$th " +
+            s"gotOnly=${got -- expected} expOnly=${expected -- got}")
+        }
+      }
+    }
   }
 }
