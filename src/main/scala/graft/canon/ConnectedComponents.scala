@@ -136,12 +136,16 @@ object ConnectedComponents {
     * across components and can't collide with brand-new vertex ids) and
     * every member is present. Min-member-id labeling (this object's
     * output) is the canonical case; any representative labeling — e.g.
-    * the count-weighted canonicals `Pipeline.runIncremental` feeds in —
-    * is equally valid. `newEdges`: (src, dst). Returns the updated
-    * complete labeling; merged groups get the min over the LABELS
-    * involved. Under min-id labels, min-of-mins = min of the merged
-    * component, so the min-id invariant is preserved — which is what
-    * makes incremental == full rebuild (the spec law). */
+    * the count-weighted canonicals `Pipeline`'s entity stage feeds in for
+    * an increment above its driver gate (below it, the stage runs
+    * [[canonicalMapLocal]]'s union-find over the same labels plus the new
+    * edges: the same partition) — is equally valid. `newEdges`: (src,
+    * dst). Returns the updated complete labeling; merged groups get the
+    * min over the LABELS involved. Under min-id labels, min-of-mins = min
+    * of the merged component, so the min-id invariant is preserved —
+    * which is what makes the labeling equal CC over old ∪ new edges (the
+    * spec law; whether a whole increment equals a rebuild is
+    * `Pipeline.runIncremental`'s condition). */
   def incrementalUpdate(labels: DataFrame, newEdges: DataFrame,
       maxIter: Int = 20, smallThreshold: Long = 100000L): DataFrame = {
     val lab = labels.select(col("id").cast("string").as("id"),

@@ -61,10 +61,11 @@ object EntityLinker {
     * (LocalElParitySpec). The distributed path is one grouped pass plus
     * one distinct — still fixed latency when the entity table fits on the
     * driver, which a 10^12-doc corpus with 10^5–10^7 DISTINCT vendors often
-    * does. `smallThreshold = 0` forces the distributed path. `Pipeline`'s
-    * full builds gate the whole entity stage themselves (one collect feeding
-    * [[edgesLocal]] directly), so in `Pipeline` this gate serves only the
-    * incremental path ([[candidateEdgesTouched]]). */
+    * does. `smallThreshold = 0` forces the distributed path. Every
+    * `Pipeline` entry point gates its whole entity stage itself (one
+    * collect feeding [[edgesLocal]] directly) and calls this operator and
+    * [[candidateEdgesTouched]] only above that gate, with the threshold at
+    * 0, so `Pipeline` never reaches this gate. */
   def candidateEdgesFromEntities(
       ents: DataFrame,
       numHashes: Int = 8,

@@ -1,7 +1,6 @@
 package graft.link
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sorted-neighborhood blocking (Hernández & Stolfo, SIGMOD 1995) — the
@@ -13,14 +12,14 @@ import org.apache.spark.sql.functions._
   * once — the standard complement the linker's LSH path lacks, and the
   * strategy [[graft.metrics.BlockingEval]] exists to arbitrate against.
   *
-  * Distributed form: ranks come from ONE entity-scale global-ordered
-  * row_number (the documented row_number idiom — entity pools are
-  * 10⁶–10⁹ when the corpus is 10¹²; the sort run spills, never touches
-  * doc-scale data); the window pairing is TWO equi joins on rank-buckets
-  * of width w (each rank pairs only within its own and the next bucket —
-  * |Δrank| < w never crosses more), so the shuffle carries (bucket, rank,
-  * id) triples and the output is exactly the Θ(n·w) window pairs, with
-  * no quadratic anywhere. Ordering ties break by id inside the sort key —
+  * Distributed form: ranks come from ONE entity-scale row number in the
+  * (key, id) order ([[graft.ops.Enumerate.rowNumber]]: range-partitioned,
+  * never a single-partition global window — entity pools are 10⁶–10⁹
+  * when the corpus is 10¹²); the window pairing is TWO equi joins on
+  * rank-buckets of width w (each rank pairs only within its own and the
+  * next bucket — |Δrank| < w never crosses more), so the shuffle carries
+  * (bucket, rank, id) triples and the output is exactly the Θ(n·w) window
+  * pairs, with no quadratic anywhere. Ordering ties break by id inside the sort key —
   * a total order, so ranks and pairs are a pure function of the data. */
 object SortedNeighborhood {
 
@@ -34,9 +33,12 @@ object SortedNeighborhood {
       .select(col(idCol).cast("string").as("id"), col(keyCol).cast("string").as("key"))
       .where(col("id").isNotNull && col("key").isNotNull)
       .distinct()
-    val ranked = graft.Materialize(base
-      .withColumn("rank", row_number().over(Window.orderBy(col("key"), col("id"))))
-      .withColumn("bucket", expr(s"(rank - 1) div $w")),
+    // rows are distinct on (key, id): the distributed row number needs no
+    // single-partition global window
+    val ranked = graft.Materialize(
+      graft.ops.Enumerate.rowNumber(base, struct(col("key"), col("id")), "row_num")
+        .select(col("id"), (col("row_num") + 1).cast("int").as("rank"),
+          expr(s"row_num div $w").as("bucket")),
       eager = false)
     val l = ranked.select(col("id").as("id_a"), col("rank").as("rank_a"),
       col("bucket"))

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   *                                                [ConnectedComponents]
   *   triples ⋈ canonical map ──► canonical graph + sameAs edges
   *
+  * Every entry point (run, runResumable, runBootstrap, runIncremental) runs
+  * the one [[entityStage]] and writes the one graph: [[docTriples]] ∪
+  * [[vendorTriples]], plus [[stateTriples]] wherever a store needs them.
+  *
   * Shuffle inventory (the whole point at 100 TB):
   *   0 shuffles to raw triples (all per-doc array HOFs);
   *   the mention scan reads 5 leaf columns (doc_id and the spans' text,
@@ -50,10 +54,14 @@ object Pipeline {
       /** entity count up to which the whole entity stage — LSH→verify
         * linking, connected components and canonical choice — runs as one
         * driver pass over one collect of the entity table (identical
-        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec);
-        * `runIncremental` uses it to gate its linking chain alone. 0 forces
-        * the distributed chain — what ScalingBench measures, since the
-        * driver shortcut deliberately does NOT scale with executors. */
+        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec).
+        * `runIncremental` gates the same stage over the registry merged with
+        * the increment, and both sides give the same increment
+        * (IncrementalSpec) — which equals a full rebuild only while every
+        * prior link still verifies over the merged table (see
+        * runIncremental). 0 forces the distributed chain — what
+        * ScalingBench measures, since the driver shortcut deliberately does
+        * NOT scale with executors. */
       elSmallThreshold: Long = 50000L)
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.run.Pipeline")
@@ -102,13 +110,13 @@ object Pipeline {
 
   /** Vendor-scoped triples regenerated from the ENTITY table (not the doc
     * stream): hasICE per canonical vendor + sameAs per linked surface form. */
-  private def vendorTriples(ents: DataFrame, canonMap: DataFrame): DataFrame = {
-    val iceTriples = ents.where(col("ice").isNotNull)
-      .join(canonMap, ents("entity_key") === canonMap("id"))
+  private def vendorTriples(s: Stage): DataFrame = {
+    val iceTriples = s.ents.where(col("ice").isNotNull)
+      .join(s.map, s.ents("entity_key") === s.map("id"))
       .select(vendorNode(col("canonical")).as("subj"),
         lit("hasICE").as("pred"), col("ice").as("obj"))
       .distinct()
-    iceTriples.unionByName(sameAsTriples(canonMap))
+    iceTriples.unionByName(sameAsTriples(s.map))
   }
 
   /** sameAs per linked surface form, from the unhinted map: a broadcast
@@ -117,6 +125,12 @@ object Pipeline {
     canonMap.where(col("id") =!= col("canonical"))
       .select(vendorNode(col("id")).as("subj"), lit("sameAs").as("pred"),
         vendorNode(col("canonical")).as("obj"))
+
+  /** The graph of `docs` over an entity stage: [[docTriples]] through its
+    * map ∪ [[vendorTriples]]. */
+  private def graph(docs: DataFrame, s: Stage, cfg: Config): DataFrame =
+    docTriples(docs, mapNodes(s.map, s.mapRows, cfg.broadcastEntityLimit))
+      .unionByName(vendorTriples(s))
 
   private def asOcrDocs(docs: DataFrame) = {
     val spark = docs.sparkSession
@@ -142,14 +156,25 @@ object Pipeline {
   private def rawTriples(docs: DataFrame): DataFrame =
     FastExtract.triples(asOcrDocs(docs)).toDF()
 
-  /** The entity stage of every full build (run, runResumable,
-    * runBootstrap): vendor mentions → entities → candidate edges →
-    * connected components → canonical map. Returns the entity table (the
-    * registry `runIncremental` extends later without re-extracting the
-    * corpus), the canonical map (entity_key → canonical key) and the map's
-    * row count. The mention counts that weight canonical-representative
-    * selection are the entity table's `n_mentions` — the same groupBy, not
-    * a second pass over the mentions.
+  /** What [[entityStage]] returns: the entity table, the canonical map
+    * (id → canonical key), the map's row count, and the candidate-edge
+    * count (an increment's `inc_el_edges`; a full build above the gate
+    * does not count its edges and reports 0). */
+  private final case class Stage(ents: DataFrame, map: DataFrame, mapRows: Long, edges: Long)
+
+  /** The entity stage of every entry point: vendor mentions → entities →
+    * candidate edges → connected components → canonical map. The mention
+    * counts that weight canonical-representative selection are the entity
+    * table's `n_mentions` — the same groupBy, not a second pass over the
+    * mentions.
+    *
+    * With a `prior` ([[storedEntities]] of a store) the entity table is the
+    * increment's entities and the stored registry folded by ONE groupBy:
+    * the attributes re-aggregate decomposably (min / sum / min), so it is
+    * the table a full extract over old ∪ new gives, plus `t` (the key
+    * appears in the increment) and `prior` (its stored canonical). Linking
+    * then verifies only pairs with a `t` endpoint, and components grow the
+    * prior ones (a learned merge is never un-learned).
     *
     * Below `cfg.elSmallThreshold` entities the stage after that groupBy is
     * ONE driver pass over ONE collect (see [[localEntityStage]]); above it
@@ -161,16 +186,39 @@ object Pipeline {
     * returned is ENTITY-scale and materialized via self-cleaning
     * localCheckpoint (or a driver-local relation) before the call ends.
     * Nothing doc-scale outlives the call. */
-  private def entityStage(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, Long) =
+  private def entityStage(docs: DataFrame, cfg: Config,
+      prior: Option[DataFrame] = None): Stage =
     withMentions(docs) { vm =>
-      val ents = EntityLinker.entities(vm) // entity-scale, materialized inside
-      localEntityStage(ents, cfg).getOrElse {
+      // entity-scale, materialized inside (the increment's merge as well)
+      val ents = prior.fold(EntityLinker.entities(vm)) { p =>
+        graft.Materialize(EntityLinker.entities(vm)
+          .select(col("entity_key"), col("surface"), col("n_mentions"), col("ice"),
+            lit(true).as("t"), lit(null).cast("string").as("prior"))
+          .unionByName(p)
+          .groupBy("entity_key")
+          .agg(min("surface").as("surface"), sum("n_mentions").as("n_mentions"),
+            min("ice").as("ice"), max("t").as("t"), min("prior").as("prior"))
+          .withColumn("tokens", array_distinct(split(col("entity_key"), "_"))),
+          eager = false)
+      }
+      localEntityStage(ents, cfg, prior.isDefined).getOrElse {
         // the gate above already measured the table: the linker's own gate
         // (same threshold) could only fail again, so it is skipped
-        val edges = EntityLinker.candidateEdgesFromEntities(
-          ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
-          smallThreshold = 0L)
-        val comps = ConnectedComponents.run(edges)
+        val (comps, nEdges) = if (prior.isEmpty)
+          (ConnectedComponents.run(EntityLinker.candidateEdgesFromEntities(
+            ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
+            smallThreshold = 0L)), 0L)
+        else {
+          // the linker derives its own touched flag from the touched keys
+          val edges = graft.Materialize(EntityLinker.candidateEdgesTouched(
+            ents.drop("t"), ents.where(col("t")).select("entity_key"), cfg.numHashes,
+            cfg.jaccardMin, cfg.editSimMin, cfg.useIce, smallThreshold = 0L), eager = false)
+          // the count materializes the batch-bounded edge set: label
+          // contraction's CC input never grows with the corpus
+          val n = edges.count()
+          (ConnectedComponents.incrementalUpdate(
+            priorMap(ents).withColumnRenamed("canonical", "component"), edges), n)
+        }
         val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
         // LAZY materialize + count in ONE job (the count is the action that
         // computes and stores the map — no separate eager-checkpoint job);
@@ -179,7 +227,7 @@ object Pipeline {
         // so callers don't re-count the map for the broadcast decision.
         val cm = graft.Materialize(
           ConnectedComponents.canonicalMap(comps, counts), eager = false)
-        (ents, cm, cm.count())
+        Stage(ents, cm, cm.count(), nEdges)
       }
     }
 
@@ -188,44 +236,43 @@ object Pipeline {
     * 0): one `take` both sizes and collects the table, then linking
     * ([[EntityLinker.edgesLocal]]), union-find and representative choice
     * ([[ConnectedComponents.canonicalMapLocal]]) run with no further Spark
-    * job. Same results as the distributed chain (PipelineSpec,
-    * LocalElParitySpec, ConnectedComponentsSpec); both results come back as
-    * local relations, so the map's row count is free. */
-  private def localEntityStage(ents: DataFrame,
-      cfg: Config): Option[(DataFrame, DataFrame, Long)] = {
+    * job. In an increment, linking keeps the rows' `t` flags and the
+    * union-find runs over the stored (id, canonical) pairs plus the new
+    * edges — the partition of the distributed chain's label contraction.
+    * Same results as the distributed chain (PipelineSpec,
+    * LocalElParitySpec, ConnectedComponentsSpec, IncrementalSpec); both
+    * results come back as local relations, so the map's row count is
+    * free. */
+  private def localEntityStage(ents: DataFrame, cfg: Config,
+      incremental: Boolean): Option[Stage] = {
     if (cfg.elSmallThreshold <= 0) return None
-    val table = ents.select("entity_key", "surface", "n_mentions", "ice", "tokens")
-    graft.Local.take(table, "entity-stage", cfg.elSmallThreshold).map { head =>
+    graft.Local.take(ents, "entity-stage", cfg.elSmallThreshold).map { head =>
       val spark = ents.sparkSession
       import spark.implicits._
-      val edges = EntityLinker.edgesLocal(head.map(EntityLinker.LocalEnt.of),
+      val edges = EntityLinker.edgesLocal(head.map(r => EntityLinker.LocalEnt.of(r)
+          .copy(t = !incremental || r.getAs[Boolean]("t"))),
         cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, maxBucket = 1000)
-      val map = ConnectedComponents.canonicalMapLocal(edges,
-        head.toSeq.map(r => (r.getString(0), r.getLong(2))))
-      val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), table.schema)
-      (localEnts, map.toDF("id", "canonical"), map.size.toLong)
+      val priorPairs = if (!incremental) Nil else head.toSeq.map(r =>
+        (r.getAs[String]("entity_key"), r.getAs[String]("prior"))).filter(_._2 != null)
+      val map = ConnectedComponents.canonicalMapLocal(priorPairs ++ edges,
+        head.toSeq.map(r => (r.getAs[String]("entity_key"), r.getAs[Long]("n_mentions"))))
+      val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), ents.schema)
+      Stage(localEnts, map.toDF("id", "canonical"), map.size.toLong, edges.size.toLong)
     }
   }
 
-  /** The store-side state of a canonical map and its entity table: one
-    * canonicalOf triple per map row plus the registry triples. */
-  private def stateTriples(canonMap: DataFrame, ents: DataFrame): DataFrame =
-    canonMap.select(vendorNode(col("id")).as("subj"), lit("canonicalOf").as("pred"),
+  /** The store-side state of an entity stage: one canonicalOf triple per
+    * map row plus the registry triples. */
+  private def stateTriples(s: Stage): DataFrame =
+    s.map.select(vendorNode(col("id")).as("subj"), lit("canonicalOf").as("pred"),
         vendorNode(col("canonical")).as("obj"))
-      .unionByName(registryTriples(ents))
-
-  /** The canonical map (id, canonical) read back from a store. */
-  private def storedMap(store: DataFrame): DataFrame =
-    store.where(col("pred") === "canonicalOf")
-      .select(
-        regexp_replace(col("subj"), "^vendor:", "").as("id"),
-        regexp_replace(col("obj"), "^vendor:", "").as("canonical"))
+      .unionByName(registryTriples(s.ents))
 
   /** Encode the entity table (entity_key, surface, n_mentions, ice) as
     * registry triples so it rides the store's snapshot protocol. All three
     * attributes re-aggregate decomposably (min / sum / min), which is what
-    * makes `runIncremental` EXACT: merged registry == the entity table of
-    * a full extract over old ∪ new. */
+    * lets `runIncremental` extend it: merged registry == the entity table
+    * of a full extract over old ∪ new. */
   private def registryTriples(ents: DataFrame): DataFrame = {
     val base = ents.select(vendorNode(col("entity_key")).as("s"),
       col("surface"), col("n_mentions"), col("ice"))
@@ -237,23 +284,34 @@ object Pipeline {
         lit("_reg_ice").as("pred"), col("ice").as("obj")))
   }
 
-  /** Inverse of registryTriples (one row per (entity, attribute)). */
-  private def decodeRegistry(store: DataFrame): DataFrame =
-    store.where(col("pred").isin("_reg_surface", "_reg_n", "_reg_ice"))
-      .select(regexp_replace(col("subj"), "^vendor:", "").as("entity_key"),
-        col("pred"), col("obj"))
-      .groupBy("entity_key")
-      .agg(
-        min(when(col("pred") === "_reg_surface", col("obj"))).as("surface"),
-        min(when(col("pred") === "_reg_n", col("obj"))).cast("long").as("n_mentions"),
-        min(when(col("pred") === "_reg_ice", col("obj"))).as("ice"))
+  /** Inverse of [[stateTriples]] without a groupBy of its own: one row of
+    * the merged entity table per internal triple (the attribute it carries,
+    * `t` false, `prior` = the stored canonical), which [[entityStage]]'s
+    * merge groupBy folds into one row per entity. */
+  private def storedEntities(store: DataFrame): DataFrame = {
+    def key(c: Column) = regexp_replace(c, "^vendor:", "")
+    def attr(pred: String, v: Column) = when(col("pred") === pred, v)
+    store.where(col("pred").isin(InternalPreds: _*)).select(
+      key(col("subj")).as("entity_key"),
+      attr("_reg_surface", col("obj")).as("surface"),
+      attr("_reg_n", col("obj").cast("long")).as("n_mentions"),
+      attr("_reg_ice", col("obj")).as("ice"),
+      lit(false).as("t"),
+      attr("canonicalOf", key(col("obj"))).as("prior"))
+  }
 
-  /** Rewrite surface vendor nodes to canonical ones and add sameAs edges,
-    * with the map's row count supplied by the caller — when the map comes
+  /** The stored canonical map (id, canonical) of entity-table rows. */
+  private def priorMap(ents: DataFrame): DataFrame =
+    ents.where(col("prior").isNotNull)
+      .select(col("entity_key").as("id"), col("prior").as("canonical"))
+
+  /** Rewrite surface vendor nodes to canonical ones and add sameAs edges —
+    * for callers that rewrite a raw triple stream themselves (kgbench's
+    * traced layer pass); the entry points here write [[graph]] instead.
+    * The map's row count is supplied by the caller — when the map comes
     * from a store read, the count is already in the snapshot's lineage
     * counters (`canonicalOf`), so counting it again per call is an extra
-    * entity-scale job (r3 verdict #6: runResumable paid it once PER BATCH
-    * in its loop).
+    * entity-scale job.
     *
     * The canonical map is tiny relative to the triples (entities, not docs)
     * but its size estimate is opaque to Catalyst (it comes through a window
@@ -293,20 +351,23 @@ object Pipeline {
     *    deduplicated out of the full graph: dedup work is proportional to
     *    the number of entities, not the number of documents.
     */
-  def run(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val (ents, canonMap, mapRows) = entityStage(docs, cfg)
-    docTriples(docs, mapNodes(canonMap, mapRows, cfg.broadcastEntityLimit))
-      .unionByName(vendorTriples(ents, canonMap))
-  }
+  def run(docs: DataFrame, cfg: Config = Config()): DataFrame =
+    graph(docs, entityStage(docs, cfg), cfg)
 
   /** Resumable run: documents are split into `nBatches` deterministic
     * batches (hash of doc_id); each batch commits atomically to the triple
     * store with lineage counters; already-committed batches are skipped, so
     * a killed run resumes at the last committed snapshot.
     *
-    * The canonical entity map is computed once over the full corpus and
-    * checkpointed (batch id 1_000_000) before batch processing — entity
-    * resolution must be global, per north_star.
+    * The entity stage runs once over the full corpus — entity resolution
+    * must be global, per north_star — and its snapshot (batch id
+    * 1_000_000) holds the vendor-scoped triples with the canonical map and
+    * the registry; each data batch is its docs' [[docTriples]] through the
+    * stored map, so the store reads back as [[run]]'s graph with no
+    * doc-scale dedup. Stores whose data batches carry sameAs/hasICE rows
+    * (the earlier layout, vendor triples on every batch) are refused while
+    * batches remain: resuming one would leave the remaining batches'
+    * vendors without hasICE — rebuild it.
     *
     * @param failAfterBatches test hook: throw after committing k batches.
     */
@@ -316,22 +377,22 @@ object Pipeline {
       extraCounters: Map[String, Long] = Map.empty): Unit = {
     val committed = TripleStore.committedBatches(storeRoot)
 
-    // stage 1: global canonical entity map + entity registry (one snapshot;
-    // the registry is what lets runIncremental extend the map later without
-    // re-extracting this corpus)
+    // stage 1: global entity stage → vendor triples + canonical map +
+    // entity registry (one snapshot; the registry is what lets
+    // runIncremental extend the map later without re-extracting this corpus)
     if (!committed.contains(CanonBatch)) {
-      val (ents, cm, _) = entityStage(docs, cfg)
+      val s = entityStage(docs, cfg)
       // n_batches is part of the store's addressing scheme (batch b covers
       // pmod(xxhash64(doc_id), nBatches) == b), so it is recorded with the
       // canon snapshot and WINS on resume — see effBatches below
-      TripleStore.commitBatch(stateTriples(cm, ents), storeRoot, CanonBatch,
-        Map("n_batches" -> nBatches.toLong))
+      TripleStore.commitBatch(vendorTriples(s).unionByName(stateTriples(s)), storeRoot,
+        CanonBatch, Map("n_batches" -> nBatches.toLong))
     }
-    val canonMap = storedMap(TripleStore.read(spark, storeRoot))
+    val canonMap = priorMap(storedEntities(TripleStore.read(spark, storeRoot)))
     // map row count from the canon snapshot's lineage counters (driver-side
-    // manifest read) — NOT a per-batch count() job over the store-backed map
-    // (r3 verdict #6); the counter is written by every canon-stage commit,
-    // the count() fallback only covers hand-built stores
+    // manifest read) — NOT a count() job over the store-backed map; the
+    // counter is written by every canon-stage commit, the count() fallback
+    // only covers hand-built stores
     val canonRows = TripleStore.counterValue(storeRoot, CanonBatch, "canonicalOf")
       .getOrElse(canonMap.count())
 
@@ -346,16 +407,20 @@ object Pipeline {
         s"caller asked $nBatches — resuming with the STORED value (batch ids " +
         "address pmod(hash, nBatches) document partitions; changing it " +
         "mid-store would drop documents)")
+    require((0 until effBatches).forall(committed) || !committed.exists(b =>
+        b < effBatches && Seq("sameAs", "hasICE").exists(TripleStore.counterValue(storeRoot, b, _).isDefined)),
+      "runResumable: the store's data batches carry sameAs/hasICE rows (the earlier " +
+        "layout, which canonicalized the vendor triples into every batch) — resuming " +
+        "it would leave the remaining batches' vendors without hasICE; rebuild the store")
 
+    val m = mapNodes(canonMap, canonRows, cfg.broadcastEntityLimit)
     var done = 0
     (0 until effBatches).foreach { b =>
       if (!TripleStore.committedBatches(storeRoot).contains(b)) {
         if (done >= failAfterBatches) throw new RuntimeException(s"injected failure before batch $b")
         val batchDocs = docs.where(pmod(xxhash64(col("doc_id")), lit(effBatches)) === b)
-        val triples = canonicalize(rawTriples(batchDocs), canonMap, canonRows, cfg.broadcastEntityLimit)
-          .select("subj", "pred", "obj").distinct()
         val nDocs = batchDocs.count()
-        TripleStore.commitBatch(triples, storeRoot, b,
+        TripleStore.commitBatch(docTriples(batchDocs, m), storeRoot, b,
           Map("docs" -> nDocs) ++ extraCounters)
         done += 1
       }
@@ -363,9 +428,9 @@ object Pipeline {
   }
 
   /** Bootstrap an EMPTY store from one document batch as a SINGLE atomic
-    * snapshot carrying the canonical map, the entity registry AND the
-    * batch's canonical triples (plus caller counters, e.g. the streaming
-    * `stream_batch` marker).
+    * snapshot: [[run]]'s graph plus the canonical map and the entity
+    * registry (and caller counters, e.g. the streaming `stream_batch`
+    * marker).
     *
     * Why not runResumable(nBatches = 1): its two-snapshot stage structure
     * (canon snapshot, then data batch) has a crash WINDOW for streaming
@@ -381,21 +446,22 @@ object Pipeline {
       cfg: Config = Config(), extraCounters: Map[String, Long] = Map.empty): Int = {
     require(TripleStore.committedBatches(storeRoot).isEmpty,
       "runBootstrap: store already has snapshots — use runIncremental")
-    val (ents, cm, mapRows) = entityStage(docs, cfg)
-    val triples = canonicalize(rawTriples(docs), cm, mapRows, cfg.broadcastEntityLimit)
-      .select("subj", "pred", "obj").distinct()
+    val s = entityStage(docs, cfg)
     val nDocs = docs.count()
-    TripleStore.commitBatch(triples.unionByName(stateTriples(cm, ents)), storeRoot, 0,
+    TripleStore.commitBatch(graph(docs, s, cfg).unionByName(stateTriples(s)), storeRoot, 0,
       Map("docs" -> nDocs) ++ extraCounters)
     0
   }
 
-  /** Read back the materialized graph (sameAs rows appear once per batch →
-    * distinct). */
+  /** Read back the materialized graph. Pipeline's writers store each
+    * triple once; the distinct covers batches committed by other writers
+    * (e.g. raw `TripleStore.commitBatch` ingest). */
   def readGraph(spark: SparkSession, storeRoot: String): DataFrame =
-    TripleStore.read(spark, storeRoot)
-      .where(!col("pred").isin(InternalPreds: _*))
-      .distinct()
+    visible(TripleStore.read(spark, storeRoot))
+
+  /** A store read minus internal bookkeeping predicates, deduplicated. */
+  private def visible(triples: DataFrame): DataFrame =
+    triples.where(!col("pred").isin(InternalPreds: _*)).distinct()
 
   /** Point lookup in a materialized graph — the first operation every graph
     * consumer does: all visible triples of the given subjects (optionally
@@ -407,12 +473,10 @@ object Pipeline {
   def lookupSubjects(spark: SparkSession, storeRoot: String,
       subjects: Seq[String], preds: Seq[String] = Nil): DataFrame =
     // the caller's preds restriction passes through UNFILTERED: a request
-    // for an internal bookkeeping predicate must return the empty set (the
-    // where below), not fall back to "no restriction" (Nil) and leak every
+    // for an internal bookkeeping predicate must return the empty set
+    // (visible's filter), not fall back to "no restriction" (Nil) and leak every
     // public triple of the subject
-    TripleStore.readForSubjects(spark, storeRoot, subjects, preds)
-      .where(!col("pred").isin(InternalPreds: _*))
-      .distinct()
+    visible(TripleStore.readForSubjects(spark, storeRoot, subjects, preds))
 
   /** Reverse point lookup — `?s pred obj`, "who links TO this entity?":
     * all visible triples with the given objects (optionally restricted to
@@ -425,43 +489,46 @@ object Pipeline {
     * predicate must return the empty set, not leak. */
   def lookupObjects(spark: SparkSession, storeRoot: String,
       objects: Seq[String], preds: Seq[String] = Nil): DataFrame =
-    TripleStore.readForObjects(spark, storeRoot, objects, preds)
-      .where(!col("pred").isin(InternalPreds: _*))
-      .distinct()
+    visible(TripleStore.readForObjects(spark, storeRoot, objects, preds))
 
   /** The graph as of a snapshot id — e.g. the state before an incremental
     * update (whose snapshot `replaces` earlier batches only for readers at
     * or past it). Pre-compaction history needs the superseded partitions
     * still on disk (i.e. before `TripleStore.vacuum`). */
   def readGraphAsOf(spark: SparkSession, storeRoot: String, asOfBatch: Int): DataFrame =
-    TripleStore.readAsOf(spark, storeRoot, asOfBatch)
-      .where(!col("pred").isin(InternalPreds: _*))
-      .distinct()
+    visible(TripleStore.readAsOf(spark, storeRoot, asOfBatch))
 
   /** Incremental maintenance — extend an existing store with NEW documents
     * without re-extracting the old corpus (the 10^12-doc operational path:
     * a daily increment must not cost a full-corpus rebuild).
     *
-    * How: the stored entity REGISTRY (decomposable per-entity aggregates)
-    * re-aggregates with the new docs' mentions into exactly the entity
-    * table a full extract over old ∪ new would produce. Entity linking is
-    * INCREMENTAL ([[EntityLinker.candidateEdgesTouched]]): blocking hashes
-    * the merged table once (narrow), but the quadratic verify runs only on
-    * pairs incident to a touched entity, and canonicalization is label
-    * CONTRACTION ([[ConnectedComponents.incrementalUpdate]]) — the inner
-    * CC runs on the batch-bounded label graph, never the corpus edge set
-    * (the committed snapshot's `inc_el_edges` counter records that bound).
-    * Canonical-representative selection re-runs over the merged counts
-    * (one entity-scale window — the registry rewrite is entity-scale
-    * regardless). Old doc-scoped triples are re-pointed through the (old
-    * canonical → new canonical) delta — entity-scale, broadcast — and
-    * vendor-scoped triples (sameAs, hasICE) are regenerated from the
-    * merged table, so the result equals a full rebuild (IncrementalSpec)
-    * while touching old DOCUMENTS zero times.
+    * How: [[entityStage]] with the store as its prior. The stored entity
+    * REGISTRY (decomposable per-entity aggregates) re-aggregates with the
+    * new docs' mentions into exactly the entity table a full extract over
+    * old ∪ new would produce; linking verifies only pairs incident to an
+    * entity the increment touched, and canonicalization extends the stored
+    * components (on the driver below `elSmallThreshold`, else by label
+    * CONTRACTION, [[ConnectedComponents.incrementalUpdate]], whose inner CC
+    * runs on the batch-bounded label graph, never the corpus edge set — the
+    * committed snapshot's `inc_el_edges` counter records that bound).
+    * Canonical-representative selection re-runs over the merged counts.
+    * Old doc-scoped triples are re-pointed through the (old canonical →
+    * new canonical) delta — entity-scale, broadcast — and vendor-scoped
+    * triples (sameAs, hasICE) are regenerated from the merged table, while
+    * old DOCUMENTS are touched zero times.
     *
-    * Prior components enter through the contraction's labels, so a
-    * learned merge is never un-learned (monotone) even if new entities
-    * push an LSH bucket past its cap.
+    * Equals a full rebuild over old ∪ new exactly when every link of the
+    * prior canonical map still verifies over the merged entity table: the
+    * rebuild re-verifies every pair, the increment keeps every prior merge
+    * (monotone — a learned merge is never un-learned). A prior link stops
+    * verifying when the increment lowers an entity's registry ICE (the
+    * minimum over its mentions) to a value that disagrees with the ICE of
+    * an entity it was linked to by name (the rebuild's ICE veto then
+    * splits the pair; seen on a 600-doc, 2,000-vendor pool corpus, where
+    * the increment keeps one more sameAs and one hasVendor differs), when
+    * it lowers a surface below the name-similarity bar, or when new
+    * entities push an LSH bucket past its cap. Gazetteer corpora
+    * (IncrementalSpec) meet the condition.
     *
     * PRECONDITION: `newDocs` must be disjoint (by doc_id) from the
     * documents already in the store — a re-ingested doc would double its
@@ -496,87 +563,42 @@ object Pipeline {
     val visible = TripleStore.visibleBatchIds(storeRoot)
     require(visible.nonEmpty, "runIncremental: empty store — runResumable first")
     val store = TripleStore.read(spark, storeRoot)
-    val priorEnts = decodeRegistry(store)
-    val priorMap = storedMap(store)
-    val hasMap = priorMap.take(1).nonEmpty
-    require(hasMap ||
-      store.where(!col("pred").isin(InternalPreds: _*)).take(1).isEmpty,
+    def has(rows: Column): Boolean = store.where(rows).take(1).nonEmpty
+    val hasMap = has(col("pred") === "canonicalOf")
+    require(hasMap || !has(!col("pred").isin(InternalPreds: _*)),
       "runIncremental: store holds triples but NO canonical map (raw " +
         "ingest-style commits) — extending it incrementally would merge a " +
         "canonical increment into a never-canonicalized graph and drop the " +
         "old vendors' identifier data; rebuild via runResumable/runBootstrap " +
         "first")
-    require(!hasMap || priorEnts.take(1).nonEmpty,
+    require(!hasMap || has(col("pred") === "_reg_n"),
       "runIncremental: store has a canonical map but no entity registry " +
         "(pre-registry format) — rebuild the canon snapshot with the " +
         "current runResumable first")
 
-    val (merged, newMap, mapRows, incEdges) = withMentions(newDocs) { vm =>
-      val newEnts = EntityLinker.entities(vm)
-        .select("entity_key", "surface", "n_mentions", "ice")
-      val mergedEnts = graft.Materialize(
-        priorEnts.unionByName(newEnts)
-          .groupBy("entity_key")
-          .agg(min("surface").as("surface"),
-            sum("n_mentions").as("n_mentions"),
-            min("ice").as("ice"))
-          .withColumn("tokens", array_distinct(split(col("entity_key"), "_"))),
-        eager = false)
-      // INCREMENTAL entity resolution (r4 verdict #1): blocking hashes the
-      // merged entity table once (narrow, linear), but the quadratic
-      // verify runs only on pairs incident to a TOUCHED entity (new key,
-      // or an existing key whose registry attributes this batch changed —
-      // exactly the keys present in newEnts), and CC is label contraction
-      // over the prior map: the inner CC input is bounded by the batch's
-      // edge set, never the corpus's. Old–old edges are subsumed by the
-      // prior labeling (see candidateEdgesTouched's soundness note), which
-      // also preserves the documented monotonicity (a learned merge is
-      // never un-learned).
-      val touched = newEnts.select("entity_key")
-      val edges = graft.Materialize(
-        EntityLinker.candidateEdgesTouched(
-          mergedEnts, touched, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin,
-          cfg.useIce, smallThreshold = cfg.elSmallThreshold),
-        eager = false)
-      // batch-bounded count: materializes the edge set AND becomes the
-      // snapshot's inc_el_edges lineage counter (the auditable evidence
-      // that the increment's CC input stayed batch-scale)
-      val nEdges = edges.count()
-      val comps = ConnectedComponents.incrementalUpdate(
-        priorMap.select(col("id"), col("canonical").as("component")), edges)
-      val counts = mergedEnts.select(col("entity_key").as("id"), col("n_mentions").as("n"))
-      val nm = graft.Materialize(
-        ConnectedComponents.canonicalMap(comps, counts), eager = false)
-      (mergedEnts, nm, nm.count(), nEdges)
-    }
-
-    // entity-scale delta: old canonical → its new canonical (where changed)
-    val delta = priorMap.select(col("canonical").as("id")).distinct()
-      .join(newMap.withColumnRenamed("canonical", "new_c"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("new_c"), col("id")).as("canonical"))
+    val s = entityStage(newDocs, cfg, Some(storedEntities(store)))
+    // entity-scale delta: each old canonical (an entity whose stored
+    // canonical is itself) → its new canonical, where changed. Delta rows ≤
+    // merged-map rows, so mapRows bounds it — same broadcast gate as the
+    // new map (an unconditional broadcast would OOM at 10^8-entity stores)
+    val delta = s.map
+      .join(s.ents.where(col("prior") === col("entity_key")).select(col("entity_key").as("id")), "id")
       .where(col("id") =!= col("canonical"))
-    // delta rows ≤ distinct old canonicals ≤ merged-map rows, so the
-    // already-known mapRows bounds it — same broadcast gate as the new map
-    // below (an unconditional broadcast would OOM at 10^8-entity stores)
-    val d = mapNodes(delta, mapRows, cfg.broadcastEntityLimit)
+    val d = mapNodes(delta, s.mapRows, cfg.broadcastEntityLimit)
 
     // old doc-scoped triples re-pointed through the delta (sameAs/hasICE
-    // are regenerated from the merged table below — cheaper than rewriting)
+    // are regenerated from the merged table by graph() below)
     val oldDocTriples = rewriteObjects(
       store.where(!col("pred").isin(InternalPreds: _*) &&
         !col("pred").isin("sameAs", "hasICE")), d)
       .select("subj", "pred", "obj")
-
-    // new docs' doc-scoped triples through the NEW map (run()'s shape);
-    // vendor-scoped triples regenerated from the merged entity table
     val combined = oldDocTriples
-      .unionByName(docTriples(newDocs, mapNodes(newMap, mapRows, cfg.broadcastEntityLimit)))
-      .unionByName(vendorTriples(merged, newMap))
-      .unionByName(stateTriples(newMap, merged))
+      .unionByName(graph(newDocs, s, cfg))
+      .unionByName(stateTriples(s))
     val newId = TripleStore.committedBatches(storeRoot).max + 1
     val nDocs = newDocs.select("doc_id").distinct().count()
     TripleStore.commitBatch(combined, storeRoot, newId,
-      Map("docs_added" -> nDocs, "inc_el_edges" -> incEdges) ++ extraCounters,
+      Map("docs_added" -> nDocs, "inc_el_edges" -> s.edges) ++ extraCounters,
       replaces = visible)
     newId
   }

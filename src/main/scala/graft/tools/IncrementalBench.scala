@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.fixtures.InvoiceCorpus
 import graft.run.Pipeline
+import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
@@ -9,7 +10,8 @@ import java.nio.file.Files
   * store with a 10% increment of fresh documents (runIncremental — old
   * corpus never re-extracted; one store read+write pass) vs rebuilding
   * the whole corpus from scratch (runResumable over old ∪ new), and
-  * verify the two stores converge to the identical graph size.
+  * verify the two stores converge to the same graph (triple count and the
+  * sum of per-triple hashes).
   *
   *   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.IncrementalBench 1000000"
   *
@@ -56,10 +58,14 @@ object IncrementalBench {
     val tFull = time(Pipeline.runResumable(spark,
       InvoiceCorpus.docsRange(spark, 0, nDocs + nIncr).toDF(), fullRoot, nB))
 
-    val gIncr = Pipeline.readGraph(spark, baseRoot).count()
-    val gFull = Pipeline.readGraph(spark, fullRoot).count()
-    require(gIncr == gFull,
-      s"incrementally maintained graph ($gIncr) != full rebuild ($gFull)")
+    // (triple count, sum of per-triple xxhash64): equal sizes alone would
+    // miss a graph that differs in content
+    def fingerprint(root: String): Seq[Any] = Pipeline.readGraph(spark, root)
+      .agg(count(lit(1)), sum(xxhash64(col("subj"), col("pred"), col("obj")))).head().toSeq
+    val (fIncr, fFull) = (fingerprint(baseRoot), fingerprint(fullRoot))
+    require(fIncr == fFull, s"incrementally maintained graph (triples, hash sum) " +
+      s"${fIncr.mkString(", ")} != full rebuild ${fFull.mkString(", ")}")
+    val gIncr = fIncr.head
 
     println(f"""{"metric":"incremental_vs_rebuild","n_docs":$nDocs,""" +
       f""""n_incr":$nIncr,"base_build_sec":$tBase%.1f,""" +

@@ -4,6 +4,7 @@ import graft.fixtures.InvoiceCorpus
 import graft.graph.TripleStore
 import graft.metrics.Evaluation
 import graft.run.Pipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -11,13 +12,63 @@ import java.nio.file.Files
 /** Incremental KG maintenance: extending a store with new documents must
   * equal a full rebuild over old ∪ new — without re-extracting old docs —
   * and must land as ONE atomic snapshot (crash before the manifest move
-  * leaves the store byte-identical).
+  * leaves the store byte-identical). Every full build (run, runResumable,
+  * runBootstrap) writes the same graph, and an increment's driver-local
+  * and distributed entity stages agree.
   */
 class IncrementalSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
     Files.createTempDirectory("graft_incr_").toString
+
+  private def triples(df: DataFrame): Set[(String, String, String)] =
+    df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
+
+  private def graphOf(root: String) = triples(Pipeline.readGraph(spark, root))
+
+  /** The canonical map and entity registry rows of a store. */
+  private def stateOf(root: String) = triples(TripleStore.read(spark, root)
+    .where(col("pred") === "canonicalOf" || col("pred").startsWith("_reg_")))
+
+  // a gazetteer corpus, and a vendor-pool corpus whose entities carry
+  // several ICEs and OCR variants (there, hasICE taken per document instead
+  // of per entity differs from run()'s)
+  private val corpora = Seq(("gazetteer", 200L, 0), ("pool", 600L, 2000))
+
+  for ((name, n, pool) <- corpora)
+    test(s"run == runResumable == runBootstrap: one graph for every full build ($name)") {
+      val docs = InvoiceCorpus.docs(spark, n, vendorPool = pool).toDF().cache()
+      val ran = triples(Pipeline.run(docs))
+      val resumable = tmp()
+      Pipeline.runResumable(spark, docs, resumable, nBatches = 2)
+      val boot = tmp()
+      Pipeline.runBootstrap(spark, docs, boot)
+      for ((what, g) <- Seq("runResumable" -> graphOf(resumable), "runBootstrap" -> graphOf(boot)))
+        assert((g diff ran).isEmpty && (ran diff g).isEmpty,
+          s"$what: store-only ${(g diff ran).size} ${(g diff ran).take(3)}, " +
+            s"run-only ${(ran diff g).size} ${(ran diff g).take(3)}")
+    }
+
+  for ((name, n, pool) <- corpora)
+    test(s"increment: driver-local entity stage == distributed stage ($name)") {
+      val all = InvoiceCorpus.docs(spark, n, vendorPool = pool).toDF().cache()
+      val split = pmod(xxhash64(col("doc_id")), lit(4)) === 0
+      // base build and increment both at the given threshold
+      def build(threshold: Long) = {
+        val cfg = Pipeline.Config(elSmallThreshold = threshold)
+        val root = tmp()
+        Pipeline.runResumable(spark, all.where(!split), root, nBatches = 2, cfg = cfg)
+        val id = Pipeline.runIncremental(spark, all.where(split), root, cfg)
+        (graphOf(root), stateOf(root), TripleStore.counterValue(root, id, "inc_el_edges"))
+      }
+      val (localG, localS, localE) = build(Pipeline.Config().elSmallThreshold)
+      val (distG, distS, distE) = build(0L)
+      for ((what, l, d) <- Seq(("graph", localG, distG), ("state", localS, distS)))
+        assert((l diff d).isEmpty && (d diff l).isEmpty,
+          s"$what: local-only ${(l diff d).take(3)}, distributed-only ${(d diff l).take(3)}")
+      assert(localE.isDefined && localE == distE, s"inc_el_edges: $localE vs $distE")
+    }
 
   test("incremental update == full rebuild over old ∪ new; single atomic snapshot; vacuum-safe") {
     val all = InvoiceCorpus.docs(spark, 200).toDF().cache()
@@ -112,6 +163,23 @@ class IncrementalSpec extends SparkSuite {
       Pipeline.runIncremental(spark, inc, root)
     }
     assert(e.getMessage.contains("NO canonical map"), e.getMessage)
+  }
+
+  test("resume refuses a store whose data batches carry vendor triples (earlier layout)") {
+    // the earlier layout canonicalized sameAs/hasICE into every data batch
+    // and kept none in the canon snapshot: finishing such a store with
+    // doc-scoped batches would drop the remaining vendors' hasICE
+    val docs = InvoiceCorpus.docs(spark, 40).toDF()
+    val root = tmp()
+    intercept[RuntimeException] { // canon snapshot only
+      Pipeline.runResumable(spark, docs, root, nBatches = 2, failAfterBatches = 0)
+    }
+    TripleStore.commitBatch(Seq(("vendor:acme_sa", "sameAs", "vendor:acme"))
+      .toDF("subj", "pred", "obj"), root, 0)
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.runResumable(spark, docs, root, nBatches = 2)
+    }
+    assert(e.getMessage.contains("rebuild the store"), e.getMessage)
   }
 
   test("resume with a different nBatches uses the STORED value (no silent doc loss)") {

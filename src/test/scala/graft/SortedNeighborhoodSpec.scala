@@ -1,6 +1,7 @@
 package graft
 
 import graft.link.SortedNeighborhood
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class SortedNeighborhoodSpec extends SparkSuite {
   import spark.implicits._
@@ -41,6 +42,17 @@ class SortedNeighborhoodSpec extends SparkSuite {
     val b = SortedNeighborhood.pairs(df.repartition(9), "id", "key", 4)
       .as[(String, String, Int, Int)].collect().toSet
     assert(a == b && a.nonEmpty)
+  }
+
+  test("ranks without a single-partition global window") {
+    // a Window with no partition spec moves every row to one task
+    spark.conf.set(Materialize.ModeKey, "none") // keep the rank step in the plan
+    val plan = try SortedNeighborhood.pairs(
+        (0 until 20).map(i => (s"id$i", s"k${i % 7}")).toDF("id", "key"), "id", "key", 3)
+      .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 
   test("null keys drop; w=2 pairs only adjacent ranks; duplicates collapse") {
