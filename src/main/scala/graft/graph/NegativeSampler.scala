@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Filtered negative sampling for KG-embedding training (the corruption
@@ -19,9 +18,10 @@ import org.apache.spark.sql.functions._
   * of the triple and the pool, independent of partition layout, replayable
   * term-for-term in any engine with the same rolling hash.
   *
-  * Scale: the pool index is one entity-scale global-ordered row_number
-  * (entity pools are 10^6–10^9 rows when the corpus is 10^12 — a sorted
-  * window run at that scale spills but never touches doc-scale data); the
+  * Scale: the pool index is one entity-scale row number in the pool's
+  * order ([[graft.ops.Enumerate.rowNumber]]: range-partitioned, never a
+  * single-partition global window — entity pools are 10^6–10^9 rows when
+  * the corpus is 10^12, and never touch doc-scale data); the
   * candidate join is an equi join on the pool index (broadcastable for
   * real pools); the filtered-setting anti join is one triple-scale
   * shuffle on (s, p, o′) — the irreducible cost of filtering, keyed and
@@ -50,11 +50,10 @@ object NegativeSampler {
       .where(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
       .distinct(), eager = false)
     // entity pool, indexed 0..N-1 in lexicographic order (the replayable
-    // indexing: row_number over the pool's own total order)
-    val pool = graft.Materialize(
-      t.select(col("obj").as("cand")).distinct()
-        .withColumn("idx", row_number().over(Window.orderBy(col("cand"))) - 1),
-      eager = false)
+    // indexing: a row number over the pool's own total order; the pool is
+    // distinct, as the distributed row number needs)
+    val pool = graft.Materialize(graft.ops.Enumerate.rowNumber(
+      t.select(col("obj").as("cand")).distinct(), col("cand"), "idx"), eager = false)
     val n = pool.count()
     if (n <= 1L) return t.limit(0) // nothing to corrupt with
       .select(col("subj"), col("pred"), col("obj"),

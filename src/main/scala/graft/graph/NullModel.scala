@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   * directed edge set (distinct applied; parallel input edges would make
   * the per-node stub index ambiguous).
   *
-  * Scale: two row_number windows — per-node stub index (node-keyed) and
-  * the global pairing order. The global window is the documented
-  * entity-scale idiom (q129); at 10^12 edges, range-partition by key and
-  * pair within partitions after rebalancing boundaries — same contract,
-  * partition-local windows. */
+  * Scale: a node-keyed row_number window gives the per-node stub index;
+  * the global pairing order is one distributed row number over the
+  * distinct (key, node, i) stubs ([[graft.ops.Enumerate.rowNumber]]:
+  * range-partitioned, partition-local scans, never a single-partition
+  * global window). */
 object NullModel {
 
   /** Returns the rewired edge multiset, canonicalized (a ≤ b) with a
@@ -40,10 +40,9 @@ object NullModel {
     val keyed = stubs.withColumn("i", stubIdx)
       .withColumn("key",
         Sketch.kmvHash(concat(col("node"), lit("#"), col("i"))))
-    val gpos = row_number().over(
-      Window.orderBy(col("key"), col("node"), col("i")))
-    keyed.withColumn("g", gpos)
-      .withColumn("pair", call_function("div", col("g") - 1, lit(2L)))
+    // (node, i) is unique per stub, so the row number's keys are distinct
+    graft.ops.Enumerate.rowNumber(keyed, struct(col("key"), col("node"), col("i")), "g")
+      .withColumn("pair", call_function("div", col("g"), lit(2L)))
       .groupBy("pair")
       .agg(min("node").as("a"), max("node").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))

@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,9 +63,10 @@ object EntityLinker {
     * driver, which a 10^12-doc corpus with 10^5–10^7 DISTINCT vendors often
     * does. `smallThreshold = 0` forces the distributed path. Every
     * `Pipeline` entry point gates its whole entity stage itself (one
-    * collect feeding [[edgesLocal]] directly) and calls this operator and
-    * [[candidateEdgesTouched]] only above that gate, with the threshold at
-    * 0, so `Pipeline` never reaches this gate. */
+    * collect feeding [[edgesLocal]] directly); above that gate a full
+    * build collects the same grouped pass ([[verifiedHits]]) and an
+    * increment calls [[candidateEdgesTouched]] with the threshold at 0, so
+    * `Pipeline` never reaches this gate. */
   def candidateEdgesFromEntities(
       ents: DataFrame,
       numHashes: Int = 8,
@@ -111,9 +112,9 @@ object EntityLinker {
       maxBucket, smallThreshold)
 
   /** The size gate shared by both public entry points: the driver-local
-    * chain below `smallThreshold` entities, otherwise [[distributedEdges]];
-    * `touched` restricts either to touched-incident pairs (None = the full
-    * edge set). */
+    * chain below `smallThreshold` entities, otherwise [[verifiedHits]], its
+    * cap accounting and one distinct; `touched` restricts either to
+    * touched-incident pairs (None = the full edge set). */
   private def edges(
       ents: DataFrame,
       touched: Option[DataFrame],
@@ -140,8 +141,10 @@ object EntityLinker {
         spark.createDataset(edgesLocal(es, numHashes, jaccardMin, editSimMin,
           useIce, maxBucket)).toDF("src", "dst")
       case None =>
-        distributedEdges(ents, touched, numHashes, jaccardMin, editSimMin, useIce,
-          maxBucket)
+        val hits = verifiedHits(ents, touched, lit(0L), numHashes, jaccardMin, editSimMin,
+          useIce, maxBucket)
+        warnCaps(hits, maxBucket)
+        hits.where(col("src").isNotNull).select("src", "dst").distinct()
     }
   }
 
@@ -157,17 +160,25 @@ object EntityLinker {
       s"entity-band rows (maxBucket=$maxBucket); capped entities stay " +
       "recoverable via the ICE identifier key"
 
-  /** The distributed LSH→verify chain as one grouped pass, optionally
-    * restricted to pairs with a `touched` endpoint (None = the full edge
-    * set). */
-  private def distributedEdges(
+  /** The distributed LSH→verify chain as one grouped pass: [[verifyGroup]]
+    * over every (band, min-hash) bucket and (useIce) every ICE group of one
+    * member table, optionally restricted to pairs with a `touched`
+    * endpoint; `n` is the count each member carries into its edges. Every
+    * verified pair (duplicated across
+    * the groups that verify it) and one row per over-cap bucket; lazily
+    * materialized. With `n = n_mentions`, one collect of it ([[edgesOf]])
+    * is all `Pipeline`'s entity stage needs to pick canonicals for the
+    * linked entities: no accounting job, no second pass over the entity
+    * table. */
+  private[graft] def verifiedHits(
       ents: DataFrame,
       touched: Option[DataFrame],
+      n: Column,
       numHashes: Int,
       jaccardMin: Double,
       editSimMin: Double,
       useIce: Boolean,
-      maxBucket: Int): DataFrame = {
+      maxBucket: Int): Dataset[Hit] = {
     val spark = ents.sparkSession
     import spark.implicits._
 
@@ -187,37 +198,56 @@ object EntityLinker {
     } ++ (if (useIce) Seq(struct(lit(-1).as("band"), col("ice").as("block"))) else Nil)
     val members = flagged
       .select(col("entity_key").as("key"), col("surface"), col("tokens"),
-        col("ice"), col("t"), explode(array(groups: _*)).as("g"))
+        col("ice"), col("t"), n.cast("long").as("n"), explode(array(groups: _*)).as("g"))
       .where(col("key").isNotNull && col("g.block").isNotNull)
       .select(col("g.band").as("band"), col("g.block").as("block"), col("key"),
-        col("surface"), col("tokens"), col("ice"), col("t"))
+        col("surface"), col("tokens"), col("ice"), col("t"), col("n"))
 
-    // verified pairs plus one (null, null, size) row per over-cap bucket.
-    // Lazy checkpoint: the accounting aggregate below is its materializing
-    // action, deliberately run when the operator is built, so the cap is
-    // never silent; blockStats remains the deep-dive audit. Skipped (warned)
-    // under materialize=none, where it would run the grouped pass twice.
-    val out = graft.Materialize(
+    // lazy checkpoint: the caller reads it for the edges and the cap
+    // accounting (or collects both at once)
+    graft.Materialize(
       members.groupBy("band", "block").as[(Int, String), LocalEnt]
         .flatMapSortedGroups(col("key"))((g, it) =>
-          verifyGroup(g._1 < 0, it, jaccardMin, editSimMin, maxBucket))
-        .toDF("src", "dst", "n"),
+          verifyGroup(g._1 < 0, it, jaccardMin, editSimMin, maxBucket)),
       eager = false)
-    if (graft.Materialize.materializing(spark)) {
-      val droppedB = out.where(col("src").isNull)
-        .agg(count(lit(1)), coalesce(sum(col("n")), lit(0L))).head()
-      if (droppedB.getLong(0) > 0)
-        graft.Audit.warn(capWarning(droppedB.getLong(0), droppedB.getLong(1), maxBucket))
+  }
+
+  /** In-operator cap accounting of a grouped pass, so the cap is never
+    * silent; [[blockStats]] remains the deep-dive audit. Its aggregate is
+    * the lazily checkpointed pass's materializing action. Skipped (warned)
+    * under materialize=none, where it would run the grouped pass twice. */
+  private[graft] def warnCaps(hits: Dataset[Hit], maxBucket: Int): Unit =
+    if (graft.Materialize.materializing(hits.sparkSession)) {
+      val dropped = hits.where(col("src").isNull)
+        .agg(count(lit(1)), coalesce(sum(col("nSrc")), lit(0L))).head()
+      if (dropped.getLong(0) > 0)
+        graft.Audit.warn(capWarning(dropped.getLong(0), dropped.getLong(1), maxBucket))
     } else graft.Audit.warn("EntityLinker: materialize=none — in-operator " +
       "cap accounting skipped (it would double-compute the bucket " +
       "aggregate); audit caps via blockStats")
-    out.where(col("src").isNotNull).select("src", "dst").distinct()
+
+  /** The distinct edges among collected [[Hit]]s, after the cap warning for
+    * the over-cap buckets among them — the accounting both driver paths
+    * share (`Pipeline`'s collect of [[verifiedHits]] and [[edgesLocal]]). */
+  private[graft] def edgesOf(hits: Iterator[Hit], maxBucket: Int): Seq[Hit] = {
+    var (cappedB, cappedRows) = (0L, 0L)
+    val out = scala.collection.mutable.LinkedHashSet.empty[Hit]
+    hits.foreach { h =>
+      if (h.src == null) { cappedB += 1; cappedRows += h.nSrc } else out += h
+    }
+    if (cappedB > 0) graft.Audit.warn(capWarning(cappedB, cappedRows, maxBucket))
+    out.toSeq
   }
 
+  /** One output row of [[verifyGroup]]: an edge `src < dst` with its
+    * endpoints' counts, or (`src` null) an over-cap LSH bucket of `nSrc`
+    * members. */
+  private[graft] final case class Hit(src: String, dst: String, nSrc: Long, nDst: Long)
+
   /** One entity as the linker reads it; `t` is the touched flag (every
-    * entity for the full edge set). */
+    * entity for the full edge set) and `n` the count its edges carry. */
   private[graft] final case class LocalEnt(key: String, surface: String,
-      tokens: Seq[String], ice: String, t: Boolean = true)
+      tokens: Seq[String], ice: String, t: Boolean = true, n: Long = 0L)
 
   private[graft] object LocalEnt {
     /** From a row carrying [[entities]]' columns (by name, any order). */
@@ -233,7 +263,7 @@ object EntityLinker {
     *    group-size cost; streamed, no cap, so a degenerate shared ICE
     *    (OCR noise, placeholder '000000000' on 10^5 entities) stays linear.
     *  - an LSH bucket of more than `maxBucket` members emits no pair, only
-    *    one accounting row `(null, null, size)`; it buffers at most
+    *    one accounting [[Hit]] `(null, null, size, 0)`; it buffers at most
     *    `maxBucket + 1` of them.
     *  - otherwise each pair with a touched endpoint and no ICE conflict is
     *    kept when token Jaccard ≥ `jaccardMin` or edit similarity ≥
@@ -241,21 +271,21 @@ object EntityLinker {
     *    levenshtein over the longer codepoint length). SQL semantics: a null
     *    surface fails the edit test and null tokens the Jaccard test.
     *
-    * Emits `(src, dst, 0)` per edge. */
+    * Emits one [[Hit]] per edge, carrying the members' `n`. */
   private def verifyGroup(star: Boolean, members: Iterator[LocalEnt],
       jaccardMin: Double, editSimMin: Double,
-      maxBucket: Int): Iterator[(String, String, Long)] =
+      maxBucket: Int): Iterator[Hit] =
     if (star) {
       if (!members.hasNext) Iterator.empty
       else {
         val hub = members.next()
         members.collect { case m if m.key != hub.key && (hub.t || m.t) =>
-          (hub.key, m.key, 0L) }
+          Hit(hub.key, m.key, hub.n, m.n) }
       }
     } else {
       val buf = scala.collection.mutable.ArrayBuffer.empty[LocalEnt]
       while (members.hasNext && buf.length <= maxBucket) buf += members.next()
-      if (buf.length > maxBucket) Iterator.single((null, null, buf.length + members.size.toLong))
+      if (buf.length > maxBucket) Iterator.single(Hit(null, null, buf.length + members.size.toLong, 0L))
       else if (!buf.exists(_.t)) Iterator.empty
       else {
         val m = buf.toArray
@@ -284,7 +314,7 @@ object EntityLinker {
             (jaccardOk(i, j) || editOk(i, j))
         }
         for (i <- m.indices.iterator; j <- (i + 1 until m.length).iterator if ok(i, j))
-          yield (m(i).key, m(j).key, 0L)
+          yield Hit(m(i).key, m(j).key, m(i).n, m(j).n)
       }
     }
 
@@ -327,16 +357,9 @@ object EntityLinker {
       if (useIce && e.ice != null) add((-1, e.ice), e)
     }
 
-    var (cappedB, cappedRows) = (0L, 0L)
-    val out = scala.collection.mutable.HashSet.empty[(String, String)]
-    groups.foreach { case ((band, _), members) =>
-      verifyGroup(band < 0, members.iterator, jaccardMin, editSimMin, maxBucket).foreach {
-        case (null, _, n) => cappedB += 1; cappedRows += n
-        case (src, dst, _) => out += ((src, dst))
-      }
-    }
-    if (cappedB > 0) graft.Audit.warn(capWarning(cappedB, cappedRows, maxBucket))
-    out.toSeq
+    edgesOf(groups.iterator.flatMap { case ((band, _), members) =>
+      verifyGroup(band < 0, members.iterator, jaccardMin, editSimMin, maxBucket)
+    }, maxBucket).map(h => (h.src, h.dst))
   }
 
   /** Bucket-size audit for the LSH blocking — "no silent caps": rows with

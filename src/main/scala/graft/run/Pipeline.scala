@@ -31,9 +31,15 @@ import org.apache.spark.sql.functions._
   *   below `Config.elSmallThreshold` entities, the rest of the entity
   *     stage is that groupBy plus ONE collect of the entity table: linking,
   *     union-find and canonical choice then run on the driver with no
-  *     further job; above it, one grouped LSH/ICE verify pass + one
-  *     distinct, CC iterations and the canonical-map window over the MUCH
-  *     smaller entity set;
+  *     further job; above it, one grouped LSH/ICE verify pass over the
+  *     MUCH smaller entity set and ONE collect of its verified edges (with
+  *     their endpoints' counts and the cap-accounting rows): union-find and
+  *     canonical choice run on the driver over the LINKED entities only.
+  *     Only beyond `graft.Local`'s budget do a distinct, CC iterations and
+  *     the canonical-map window run, over the edges' endpoints;
+  *   the stage carries the LINKED part of the canonical map (id ≠
+  *     canonical); every other entity is its own canonical and needs no
+  *     map row: the rewrite, sameAs and hasICE coalesce it to itself;
   *   1 broadcast-able join to rewrite vendor/client objects;
   *   1 final repartition at write.
   */
@@ -54,12 +60,15 @@ object Pipeline {
       /** entity count up to which the whole entity stage — LSH→verify
         * linking, connected components and canonical choice — runs as one
         * driver pass over one collect of the entity table (identical
-        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec).
+        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec);
+        * above it linking runs distributed, and a full build's components
+        * and canonical choice still run on the driver over one collect of
+        * the verified edges while they fit `graft.Local`'s budget.
         * `runIncremental` gates the same stage over the registry merged with
         * the increment, and both sides give the same increment
         * (IncrementalSpec) — which equals a full rebuild only while every
         * prior link still verifies over the merged table (see
-        * runIncremental). 0 forces the distributed chain — what
+        * runIncremental). 0 forces distributed linking — what
         * ScalingBench measures, since the driver shortcut deliberately does
         * NOT scale with executors. */
       elSmallThreshold: Long = 50000L)
@@ -109,14 +118,16 @@ object Pipeline {
       .select("subj", "pred", "obj")
 
   /** Vendor-scoped triples regenerated from the ENTITY table (not the doc
-    * stream): hasICE per canonical vendor + sameAs per linked surface form. */
+    * stream): hasICE per canonical vendor (an unlinked entity is its own)
+    * + sameAs per linked surface form. */
   private def vendorTriples(s: Stage): DataFrame = {
-    val iceTriples = s.ents.where(col("ice").isNotNull)
-      .join(s.map, s.ents("entity_key") === s.map("id"))
-      .select(vendorNode(col("canonical")).as("subj"),
+    val iceTriples = s.ents.where(col("entity_key").isNotNull && col("ice").isNotNull)
+      .select(col("entity_key").as("id"), col("ice"))
+      .join(s.linked, Seq("id"), "left")
+      .select(vendorNode(coalesce(col("canonical"), col("id"))).as("subj"),
         lit("hasICE").as("pred"), col("ice").as("obj"))
       .distinct()
-    iceTriples.unionByName(sameAsTriples(s.map))
+    iceTriples.unionByName(sameAsTriples(s.linked))
   }
 
   /** sameAs per linked surface form, from the unhinted map: a broadcast
@@ -127,9 +138,9 @@ object Pipeline {
         vendorNode(col("canonical")).as("obj"))
 
   /** The graph of `docs` over an entity stage: [[docTriples]] through its
-    * map ∪ [[vendorTriples]]. */
+    * linked map (unlinked vendors keep their node) ∪ [[vendorTriples]]. */
   private def graph(docs: DataFrame, s: Stage, cfg: Config): DataFrame =
-    docTriples(docs, mapNodes(s.map, s.mapRows, cfg.broadcastEntityLimit))
+    docTriples(docs, mapNodes(s.linked, s.linkedRows, cfg.broadcastEntityLimit))
       .unionByName(vendorTriples(s))
 
   private def asOcrDocs(docs: DataFrame) = {
@@ -156,11 +167,23 @@ object Pipeline {
   private def rawTriples(docs: DataFrame): DataFrame =
     FastExtract.triples(asOcrDocs(docs)).toDF()
 
-  /** What [[entityStage]] returns: the entity table, the canonical map
-    * (id → canonical key), the map's row count, and the candidate-edge
-    * count (an increment's `inc_el_edges`; a full build above the gate
-    * does not count its edges and reports 0). */
-  private final case class Stage(ents: DataFrame, map: DataFrame, mapRows: Long, edges: Long)
+  /** What [[entityStage]] returns: the entity table; the LINKED part of
+    * its canonical map, (id, canonical) for every entity whose canonical is
+    * another entity (an entity absent from it is its own canonical); that
+    * part's row count; and the candidate-edge count (an increment's
+    * `inc_el_edges`; 0 where a full build runs the distributed components,
+    * which do not count their edges). Only stores need [[map]], the full
+    * map. */
+  private[graft] final case class Stage(ents: DataFrame, linked: DataFrame, linkedRows: Long,
+      edges: Long) {
+    /** The full canonical map, one row per entity: ents ⟕ linked, lazily. */
+    def map: DataFrame = ents.select(col("entity_key").as("id")).where(col("id").isNotNull)
+      .join(linked, Seq("id"), "left")
+      .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"))
+  }
+
+  /** Bucket cap of every linking call of the entity stage. */
+  private val MaxBucket = 1000
 
   /** The entity stage of every entry point: vendor mentions → entities →
     * candidate edges → connected components → canonical map. The mention
@@ -178,7 +201,8 @@ object Pipeline {
     *
     * Below `cfg.elSmallThreshold` entities the stage after that groupBy is
     * ONE driver pass over ONE collect (see [[localEntityStage]]); above it
-    * (or with the threshold at 0) the distributed chain runs.
+    * (or with the threshold at 0) linking is distributed: a full build
+    * ends in [[linkedStage]], an increment in label contraction.
     *
     * Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
     * table is cached only under `spark.graft.materialize=none` (see
@@ -186,7 +210,7 @@ object Pipeline {
     * returned is ENTITY-scale and materialized via self-cleaning
     * localCheckpoint (or a driver-local relation) before the call ends.
     * Nothing doc-scale outlives the call. */
-  private def entityStage(docs: DataFrame, cfg: Config,
+  private[graft] def entityStage(docs: DataFrame, cfg: Config,
       prior: Option[DataFrame] = None): Stage =
     withMentions(docs) { vm =>
       // entity-scale, materialized inside (the increment's merge as well)
@@ -204,32 +228,68 @@ object Pipeline {
       localEntityStage(ents, cfg, prior.isDefined).getOrElse {
         // the gate above already measured the table: the linker's own gate
         // (same threshold) could only fail again, so it is skipped
-        val (comps, nEdges) = if (prior.isEmpty)
-          (ConnectedComponents.run(EntityLinker.candidateEdgesFromEntities(
-            ents, cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce,
-            smallThreshold = 0L)), 0L)
+        if (prior.isEmpty) linkedStage(ents, cfg)
         else {
           // the linker derives its own touched flag from the touched keys
           val edges = graft.Materialize(EntityLinker.candidateEdgesTouched(
             ents.drop("t"), ents.where(col("t")).select("entity_key"), cfg.numHashes,
-            cfg.jaccardMin, cfg.editSimMin, cfg.useIce, smallThreshold = 0L), eager = false)
+            cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket, smallThreshold = 0L),
+            eager = false)
           // the count materializes the batch-bounded edge set: label
           // contraction's CC input never grows with the corpus
           val n = edges.count()
-          (ConnectedComponents.incrementalUpdate(
-            priorMap(ents).withColumnRenamed("canonical", "component"), edges), n)
+          linkedOf(ents, ConnectedComponents.incrementalUpdate(
+              priorMap(ents).withColumnRenamed("canonical", "component"), edges),
+            ents.select(col("entity_key").as("id"), col("n_mentions").as("n")), n)
         }
-        val counts = ents.select(col("entity_key").as("id"), col("n_mentions").as("n"))
-        // LAZY materialize + count in ONE job (the count is the action that
-        // computes and stores the map — no separate eager-checkpoint job);
-        // the count must run inside `withMentions`, while a mention cache
-        // the map's lineage (and ents') reads is still live. It is returned
-        // so callers don't re-count the map for the broadcast decision.
-        val cm = graft.Materialize(
-          ConnectedComponents.canonicalMap(comps, counts), eager = false)
-        Stage(ents, cm, cm.count(), nEdges)
       }
     }
+
+  /** A full build's distributed stage: ONE grouped verify pass
+    * ([[EntityLinker.verifiedHits]]) whose edges carry both endpoints'
+    * `n_mentions` and whose over-cap bucket rows ride along. While those
+    * rows fit `graft.Local`'s budget, ONE collect of them ends the stage:
+    * the cap warning, union-find and representative choice
+    * ([[ConnectedComponents.canonicalMapLocal]]) run on the driver over the
+    * linked entities only — an entity on no edge is its own canonical, so
+    * it needs no row, no count and no job. Above the budget the
+    * distributed components and [[ConnectedComponents.canonicalMap]] run
+    * over the edges' endpoints only. Must run inside `withMentions`, as
+    * the hits' lineage reads the entity table. */
+  private def linkedStage(ents: DataFrame, cfg: Config): Stage = {
+    val spark = ents.sparkSession
+    import spark.implicits._
+    val hits = EntityLinker.verifiedHits(ents, None, col("n_mentions"), cfg.numHashes,
+      cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)
+    // a row adds up to two ids to the union-find and two counts
+    graft.Local.take(hits, "entity-edges", graft.Local.maxEntries(spark) / 2) match {
+      case Some(rows) =>
+        val es = EntityLinker.edgesOf(rows.iterator, MaxBucket)
+        val linked = ConnectedComponents.canonicalMapLocal(es.map(h => (h.src, h.dst)),
+            es.flatMap(h => Seq(h.src -> h.nSrc, h.dst -> h.nDst)).distinct)
+          .filter { case (id, c) => id != c }
+        Stage(ents, linked.toDF("id", "canonical"), linked.size.toLong, es.size.toLong)
+      case None =>
+        EntityLinker.warnCaps(hits, MaxBucket)
+        val e = hits.where(col("src").isNotNull)
+        // the budget above measured the edges: no second probe in run
+        val comps = ConnectedComponents.run(e.select("src", "dst"), smallThreshold = -1L)
+        val counts = e.select(col("src").as("id"), col("nSrc").as("n"))
+          .union(e.select(col("dst"), col("nDst"))).distinct()
+        linkedOf(ents, comps, counts, 0L)
+    }
+  }
+
+  /** The stage whose linked map is [[ConnectedComponents.canonicalMap]]'s
+    * rows with `id ≠ canonical`; a LAZY materialize + count in ONE job (the
+    * count is the action that computes and stores the map), run inside
+    * `withMentions` while a mention cache the lineage reads is still live. */
+  private def linkedOf(ents: DataFrame, comps: DataFrame, counts: DataFrame,
+      edges: Long): Stage = {
+    val linked = graft.Materialize(ConnectedComponents.canonicalMap(comps, counts)
+      .where(col("id") =!= col("canonical")), eager = false)
+    Stage(ents, linked, linked.count(), edges)
+  }
 
   /** The entity stage on the driver when the entity table has at most
     * `cfg.elSmallThreshold` rows (None otherwise, or when the threshold is
@@ -241,7 +301,7 @@ object Pipeline {
     * edges — the partition of the distributed chain's label contraction.
     * Same results as the distributed chain (PipelineSpec,
     * LocalElParitySpec, ConnectedComponentsSpec, IncrementalSpec); both
-    * results come back as local relations, so the map's row count is
+    * results come back as local relations, so the linked row count is
     * free. */
   private def localEntityStage(ents: DataFrame, cfg: Config,
       incremental: Boolean): Option[Stage] = {
@@ -251,18 +311,19 @@ object Pipeline {
       import spark.implicits._
       val edges = EntityLinker.edgesLocal(head.map(r => EntityLinker.LocalEnt.of(r)
           .copy(t = !incremental || r.getAs[Boolean]("t"))),
-        cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, maxBucket = 1000)
+        cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)
       val priorPairs = if (!incremental) Nil else head.toSeq.map(r =>
         (r.getAs[String]("entity_key"), r.getAs[String]("prior"))).filter(_._2 != null)
-      val map = ConnectedComponents.canonicalMapLocal(priorPairs ++ edges,
-        head.toSeq.map(r => (r.getAs[String]("entity_key"), r.getAs[Long]("n_mentions"))))
+      val linked = ConnectedComponents.canonicalMapLocal(priorPairs ++ edges,
+          head.toSeq.map(r => (r.getAs[String]("entity_key"), r.getAs[Long]("n_mentions"))))
+        .filter { case (id, c) => id != c }
       val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), ents.schema)
-      Stage(localEnts, map.toDF("id", "canonical"), map.size.toLong, edges.size.toLong)
+      Stage(localEnts, linked.toDF("id", "canonical"), linked.size.toLong, edges.size.toLong)
     }
   }
 
   /** The store-side state of an entity stage: one canonicalOf triple per
-    * map row plus the registry triples. */
+    * entity (its full map) plus the registry triples. */
   private def stateTriples(s: Stage): DataFrame =
     s.map.select(vendorNode(col("id")).as("subj"), lit("canonicalOf").as("pred"),
         vendorNode(col("canonical")).as("obj"))
@@ -347,9 +408,13 @@ object Pipeline {
     *    map) and is never shuffled, persisted, or scanned twice — doc-scoped
     *    subjects embed the doc_id and are duplicate-free by construction;
     *  - vendor-scoped triples (hasICE, sameAs) are REGENERATED from the
-    *    entity table (entities × canonical map — thousands of rows), not
+    *    entity table (entities ⟕ linked map — thousands of rows), not
     *    deduplicated out of the full graph: dedup work is proportional to
-    *    the number of entities, not the number of documents.
+    *    the number of entities, not the number of documents;
+    *  - the canonical map the rewrite broadcasts holds LINKED entities
+    *    only; above `elSmallThreshold` it comes from one collect of the
+    *    verified edges while they fit `graft.Local`'s budget, so the
+    *    distributed stage plans no window and no second edge distinct.
     */
   def run(docs: DataFrame, cfg: Config = Config()): DataFrame =
     graph(docs, entityStage(docs, cfg), cfg)
@@ -578,13 +643,13 @@ object Pipeline {
 
     val s = entityStage(newDocs, cfg, Some(storedEntities(store)))
     // entity-scale delta: each old canonical (an entity whose stored
-    // canonical is itself) → its new canonical, where changed. Delta rows ≤
-    // merged-map rows, so mapRows bounds it — same broadcast gate as the
-    // new map (an unconditional broadcast would OOM at 10^8-entity stores)
-    val delta = s.map
+    // canonical is itself) → its new canonical, where changed — the linked
+    // rows of old canonicals. Delta rows ≤ linked rows, so linkedRows
+    // bounds it — same broadcast gate as the new map (an unconditional
+    // broadcast would OOM at 10^8-entity stores)
+    val delta = s.linked
       .join(s.ents.where(col("prior") === col("entity_key")).select(col("entity_key").as("id")), "id")
-      .where(col("id") =!= col("canonical"))
-    val d = mapNodes(delta, s.mapRows, cfg.broadcastEntityLimit)
+    val d = mapNodes(delta, s.linkedRows, cfg.broadcastEntityLimit)
 
     // old doc-scoped triples re-pointed through the delta (sameAs/hasICE
     // are regenerated from the merged table by graph() below)

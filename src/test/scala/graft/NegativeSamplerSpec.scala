@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.NegativeSampler
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class NegativeSamplerSpec extends SparkSuite {
   import spark.implicits._
@@ -62,5 +63,15 @@ class NegativeSamplerSpec extends SparkSuite {
     assert(NegativeSampler.corruptTail(single, k = 5).isEmpty)
     val empty = Seq.empty[(String, String, String)].toDF("subj", "pred", "obj")
     assert(NegativeSampler.corruptTail(empty, k = 5).isEmpty)
+  }
+
+  test("indexes the pool without a single-partition global window") {
+    // a Window with no partition spec moves the whole pool to one task
+    spark.conf.set(Materialize.ModeKey, "none") // keep the pool index in the plan
+    val plan = try NegativeSampler.corruptTail(triples.toDF("subj", "pred", "obj"), k = 3)
+      .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.NullModel
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
 class NullModelSpec extends SparkSuite {
@@ -47,5 +48,15 @@ class NullModelSpec extends SparkSuite {
     val nullr = graft.graph.GraphStats.assortativity(rewired)
       .select("assortativity").as[Double].collect().head
     assert(nullr > real) // stub pairing mixes hub-hub/leaf-leaf back in
+  }
+
+  test("pairs stubs without a single-partition global window") {
+    // a Window with no partition spec moves every stub to one task
+    spark.conf.set(Materialize.ModeKey, "none") // keep the row number in the plan
+    val plan = try NullModel.rewire((2 to 30).map(i => s"n$i" -> s"n${i / 3}").toDF("src", "dst"))
+      .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 }

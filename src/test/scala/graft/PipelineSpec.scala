@@ -4,8 +4,12 @@ import graft.fixtures.InvoiceCorpus
 import graft.link.EntityLinker
 import graft.metrics.Evaluation
 import graft.run.{Extract, FastExtract, Pipeline}
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint, UnaryNode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint,
+  UnaryNode, Window}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end gates (FIXTURES.md §5):
   *  - triple P/R ≥ 0.95 vs generator ground truth
@@ -75,8 +79,9 @@ class PipelineSpec extends SparkSuite {
     val localGraph = Pipeline.run(docs).select("subj", "pred", "obj")
     for (threshold <- Seq(0L, n, n - 1)) {
       val graph = Pipeline.run(docs, Pipeline.Config(elSmallThreshold = threshold))
-      // the driver-local stage returns local relations; the chain does not
-      assert(graph.queryExecution.optimizedPlan.toString.contains("LocalRelation") ==
+      // the driver-local stage returns local relations; the distributed
+      // one checkpoints its entity table
+      assert(!graph.queryExecution.optimizedPlan.toString.contains("LogicalRDD") ==
         (threshold == n), s"threshold=$threshold of n=$n took the wrong path")
       val g = graph.select("subj", "pred", "obj")
       assert(localGraph.exceptAll(g).count() == 0, s"threshold=$threshold")
@@ -150,5 +155,102 @@ class PipelineSpec extends SparkSuite {
       predicted.where($"pred" === "sameAs"),
       expected.where($"pred" === "sameAs"))
     assert(pr.f1 == 1.0, pr)
+  }
+
+  private def triples(g: DataFrame): Seq[(String, String, String)] =
+    g.select("subj", "pred", "obj").as[(String, String, String)].collect().sorted.toSeq
+
+  /** `docs`' graph under the driver-local entity stage, and the same graph
+    * from the distributed linking stage (elSmallThreshold = 0) on both
+    * sides of the driver budget: below it one collect of the verified
+    * edges, at budget 0 the distributed components and canonical map. */
+  private def assertStageParity(docs: DataFrame, useIce: Boolean): Seq[(String, String, String)] = {
+    val want = triples(Pipeline.run(docs, Pipeline.Config(useIce = useIce)))
+    val dist = Pipeline.Config(useIce = useIce, elSmallThreshold = 0L)
+    for (budget <- Seq(None, Some(0L))) {
+      def run() = {
+        val linked = Pipeline.entityStage(docs, dist).linked
+        (linked.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }.isEmpty,
+          triples(Pipeline.run(docs, dist)))
+      }
+      val (localMap, got) = budget.fold(run())(withLocalBudget(_)(run()))
+      // the collected edges end in a driver-local linked map; at budget 0
+      // the map is a checkpoint unless there is no edge to collect
+      assert(localMap == (budget.isEmpty || !want.exists(_._2 == "sameAs")),
+        s"useIce=$useIce budget=$budget took the wrong path")
+      assert(got == want, s"useIce=$useIce budget=$budget " +
+        s"gotOnly=${got.diff(want).take(5)} wantOnly=${want.diff(got).take(5)}")
+    }
+    want
+  }
+
+  for ((n, pool) <- Seq((600L, 2000), (2000L, 100000)))
+    test(s"linked-only distributed entity stage == driver-local stage (pool $n/$pool)") {
+      val pdocs = InvoiceCorpus.docs(spark, n, vendorPool = pool).toDF().cache()
+      try for (useIce <- Seq(true, false))
+        assert(assertStageParity(pdocs, useIce).exists(_._2 == "sameAs"), s"useIce=$useIce")
+      finally pdocs.unpersist()
+    }
+
+  test("linked-only entity stage: a corpus without candidate edges links nothing") {
+    val clean = InvoiceCorpus.docs(spark, 40, noiseP = 0.0).toDF().cache()
+    try {
+      for (useIce <- Seq(true, false))
+        assert(!assertStageParity(clean, useIce).exists(_._2 == "sameAs"), s"useIce=$useIce")
+      val s = Pipeline.entityStage(clean, Pipeline.Config(elSmallThreshold = 0L))
+      assert(s.linkedRows == 0L && s.linked.isEmpty)
+      assert(s.map.where($"id" =!= $"canonical").isEmpty && s.map.count() == s.ents.count())
+    } finally clean.unpersist()
+  }
+
+  test("linked-only entity stage: one ICE hub links 50+ entities into one component") {
+    val hub = InvoiceCorpus.docs(spark, 200, vendorPool = 2000)
+      .map(d => d.copy(spans = d.spans.map(sp =>
+        if (sp.text.startsWith("ICE: ")) sp.copy(text = "ICE: 001000000001") else sp)))
+      .toDF().cache()
+    try {
+      val want = assertStageParity(hub, useIce = true)
+      val sameAs = want.filter(_._2 == "sameAs")
+      assert(sameAs.size >= 49 && sameAs.map(_._3).distinct.size == 1, sameAs.take(5))
+      val s = Pipeline.entityStage(hub, Pipeline.Config(elSmallThreshold = 0L))
+      assert(s.linkedRows == sameAs.size && s.map.count() == s.ents.count())
+    } finally hub.unpersist()
+  }
+
+  test("linked-only entity stage: a pool-shaped distributed run plans no Window; " +
+    "its map holds linked rows only") {
+    val pdocs = InvoiceCorpus.docs(spark, 600, vendorPool = 2000).toDF().cache()
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.optimizedPlan }
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      pdocs.count()
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val cfg = Pipeline.Config(elSmallThreshold = 0L)
+      val s = Pipeline.entityStage(pdocs, cfg)
+      val linked = s.linked.as[(String, String)].collect()
+      assert(linked.nonEmpty && linked.forall { case (id, c) => id != c } &&
+        linked.length == s.linkedRows)
+      // every action of the stage and the graph, checkpoints included
+      def windows(f: => Unit): List[Window] = {
+        plans.synchronized(plans.clear())
+        f
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        val ps = plans.synchronized(plans.toList)
+        assert(ps.nonEmpty)
+        ps.flatMap(_.collect { case w: Window => w })
+      }
+      val none = windows(Pipeline.run(pdocs, cfg).count())
+      assert(none.isEmpty, none)
+      // beyond the budget the canonical-map window does run, and is seen
+      assert(windows(withLocalBudget(0)(Pipeline.run(pdocs, cfg).count())).nonEmpty)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      pdocs.unpersist()
+    }
   }
 }
