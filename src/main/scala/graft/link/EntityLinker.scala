@@ -164,9 +164,8 @@ object EntityLinker {
     * over every (band, min-hash) bucket and (useIce) every ICE group of one
     * member table, optionally restricted to pairs with a `touched`
     * endpoint; `n` is the count each member carries into its edges. Every
-    * verified pair (duplicated across
-    * the groups that verify it) and one row per over-cap bucket; lazily
-    * materialized. With `n = n_mentions`, one collect of it ([[edgesOf]])
+    * verified pair (duplicated across the groups that verify it) and one
+    * row per over-cap bucket; lazily materialized. With `n = n_mentions`, one collect of it ([[edgesOf]])
     * is all `Pipeline`'s entity stage needs to pick canonicals for the
     * linked entities: no accounting job, no second pass over the entity
     * table. */
