@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Paired benchmark runs of a parent revision against HEAD.
 #
-#   scripts/bench_pairs.sh [-d DIR] [-t SECONDS] <parent-rev> <workload> <seed>...
+#   scripts/bench_pairs.sh [-d DIR] [-t SECONDS] [-c METRIC] <parent-rev> <workload> <seed>...
 #
 # Exports <parent-rev> and HEAD with `git archive` into DIR/parent and
 # DIR/change (DIR defaults to a fresh temporary directory; pass -d to reuse
@@ -10,21 +10,30 @@
 # (parent first for the 1st, 3rd, ... seed), because the first run of a
 # back-to-back pair reads lower whichever commit it is. Prints one line per
 # seed with both sides' end-to-end metrics (BENCHMARK.json `end_to_end`),
-# then each side's median and how many pairs the change won per metric.
+# then each side's median and how many pairs the change won per metric,
+# and ends with one verdict line per end-to-end metric:
+#   - the metric named by -c (the claimed gain): "claim met" when the change
+#     wins at least 9 in 10 of the pairs and its median beats the parent's
+#     by more than the parent's interquartile range, else "claim not met";
+#   - every other metric: "within bound" or "worse than bound", comparing
+#     the change's median with the parent's against the metric's relative
+#     `bound` in BENCHMARK.json.
 # Only committed files are measured: commit before running.
 set -euo pipefail
 
 usage() {
-  echo "usage: $0 [-d DIR] [-t SECONDS] <parent-rev> <workload> <seed>..." >&2
+  echo "usage: $0 [-d DIR] [-t SECONDS] [-c METRIC] <parent-rev> <workload> <seed>..." >&2
   exit 2
 }
 
 dir=""
 seconds=22
-while getopts "d:t:" opt; do
+claim=""
+while getopts "d:t:c:" opt; do
   case "$opt" in
     d) dir="$OPTARG" ;;
     t) seconds="$OPTARG" ;;
+    c) claim="$OPTARG" ;;
     *) usage ;;
   esac
 done
@@ -71,11 +80,14 @@ for seed in "${seeds[@]}"; do
   i=$((i + 1))
 done
 
-python3 - "$dir/results.jsonl" "$dir/change/BENCHMARK.json" <<'EOF'
-import json, statistics, sys
+python3 - "$dir/results.jsonl" "$dir/change/BENCHMARK.json" "$claim" <<'EOF'
+import json, math, statistics, sys
 
 rows = [json.loads(l) for l in open(sys.argv[1])]
 spec = json.load(open(sys.argv[2]))["end_to_end"]
+claim = sys.argv[3]
+if claim and claim not in [m["name"] for m in spec]:
+    sys.exit(f"-c {claim}: not an end_to_end metric of BENCHMARK.json")
 by = {}
 for r in rows:
     by.setdefault(r["seed"], {})[r["side"]] = r["result"]
@@ -91,6 +103,7 @@ for i, s in enumerate(seeds):
     cells = [f"{val(by[s]['parent'], m['name'])}/{val(by[s]['change'], m['name'])}" for m in spec]
     fails = f"{by[s]['parent'].get('failed')}/{by[s]['change'].get('failed')}"
     print(f"{s} {first} " + " ".join(cells) + " " + fails)
+verdicts = []
 for m in spec:
     p = [val(by[s]["parent"], m["name"]) for s in seeds]
     c = [val(by[s]["change"], m["name"]) for s in seeds]
@@ -105,4 +118,16 @@ for m in spec:
     print(f"median {m['name']}: parent {pm:.6g} change {cm:.6g} "
           f"({(cm / pm - 1) * 100 if pm else float('nan'):+.1f}%), change better in "
           f"{wins}/{len(pairs)}; parent quartiles {pq[0]:.6g}-{pq[2]:.6g}")
+    gain = cm - pm if m["better"] == "higher" else pm - cm
+    if m["name"] == claim:
+        iqr = pq[2] - pq[0]
+        met = wins >= math.ceil(0.9 * len(pairs)) and gain > iqr
+        verdicts.append(f"verdict {m['name']}: {'claim met' if met else 'claim not met'} "
+                        f"({wins}/{len(pairs)} wins, median gain {gain:.6g} vs parent IQR {iqr:.6g})")
+    else:
+        worse = -gain > m["bound"] * abs(pm)
+        verdicts.append(f"verdict {m['name']}: {'worse than bound' if worse else 'within bound'} "
+                        f"(median change {(cm / pm - 1) * 100 if pm else float('nan'):+.1f}%, "
+                        f"bound {m['bound'] * 100:g}%)")
+print("\n".join(verdicts))
 EOF

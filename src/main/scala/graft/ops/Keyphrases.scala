@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * engines compute it identically); phrases group by (doc, fragment,
   * island). Scale: one (doc,fragment)-keyed window for islands + two
   * token-scale aggregates (word stats, phrase scores) — token-scale
-  * shuffles, no joins wider than the vocabulary. */
+  * shuffles, no joins wider than the vocabulary — and a distributed top-k
+  * whose k rows [[Enumerate.rowNumber]] numbers: no global window. */
 object Keyphrases {
 
   /** The committed stopword set — data, not logic (callers may pass their
@@ -66,14 +67,18 @@ object Keyphrases {
           .as("wscore_fp"))
     // scores over DISTINCT phrases (occurrence counts reported separately)
     val occ = phrases.groupBy("phrase").agg(count(lit(1)).as("n_occ"))
-    occ.select(col("phrase"), col("n_occ"),
+    val scored = occ.select(col("phrase"), col("n_occ"),
         explode(split(col("phrase"), " ")).as("w"))
       .join(wordStats, Seq("w"))
       .groupBy("phrase", "n_occ")
       .agg(count(lit(1)).as("n_words"), sum("wscore_fp").as("score_fp"))
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("score_fp").desc, col("phrase").asc)))
-      .where(col("rk") <= k)
-      .select("phrase", "n_words", "n_occ", "score_fp", "rk")
+    // top-k per partition, then ranks over those k rows only: no window
+    // moves every phrase to one partition (score_fp ≥ 0, so negating it
+    // gives the ascending key)
+    val top = scored.orderBy(col("score_fp").desc, col("phrase").asc).limit(k)
+    Enumerate.rowNumber(top, struct(-col("score_fp"), col("phrase")), "rn")
+      .select(col("phrase"), col("n_words"), col("n_occ"), col("score_fp"),
+        (col("rn") + 1).cast("int").as("rk"))
+      .orderBy("rk")
   }
 }

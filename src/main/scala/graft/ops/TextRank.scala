@@ -18,11 +18,13 @@ import org.apache.spark.sql.functions._
   * deduped. Ranking = the engine's EXACT INTEGER PageRank (graph/Ppr with
   * the seed set = the whole vocabulary — uniform restart ≡ standard
   * PageRank, ppb mass, truncating div, bit-stable). Top-k by
-  * (rank DESC, word ASC) — a total order, so the cut is deterministic.
+  * (rank DESC, word ASC) — a total order, so the cut is deterministic;
+  * the k survivors are numbered by [[Enumerate.rowNumber]].
   *
   * Scale shape: tokenize+filter is narrow; ONE doc-keyed window
   * re-sequences; the pair join is a per-doc shift (window lead), not a
-  * self-join; then vocabulary-scale PageRank rounds (vocab ≪ corpus). */
+  * self-join; then vocabulary-scale PageRank rounds (vocab ≪ corpus) and
+  * a distributed top-k: no global window. */
 object TextRank {
 
   /** Returns (rank, word, ppr_fp): the topK keywords. */
@@ -50,10 +52,12 @@ object TextRank {
     val nodes = edges.select(col("src").as("id")).distinct()
     val ranked = graft.graph.Ppr.personalized(edges, nodes, rounds,
       alphaTenths = 2)
-    ranked
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("ppr_fp").desc, col("id").asc)))
-      .where(col("rank") <= topK)
-      .select(col("rank"), col("id").as("word"), col("ppr_fp"))
+    // top-k per partition, then ranks over those k rows only: no window
+    // moves the vocabulary to one partition (ppr_fp > 0, so negating it
+    // gives the ascending key)
+    val top = ranked.orderBy(col("ppr_fp").desc, col("id").asc).limit(topK)
+    Enumerate.rowNumber(top, struct(-col("ppr_fp"), col("id")), "rn")
+      .select((col("rn") + 1).cast("int").as("rank"), col("id").as("word"), col("ppr_fp"))
+      .orderBy("rank")
   }
 }

@@ -20,9 +20,18 @@ import java.util.regex.Pattern
   * shuffles, arbitrary parallelism), so it scales identically and runs
   * ~an order of magnitude faster per core.
   *
-  * PARITY CONTRACT: `ExtractParitySpec` asserts triple-set equality between
-  * Extract.triples and FastExtract.triples on the fixture corpus (noise on).
-  * Any semantic change must be made in BOTH files.
+  * NARROW READ: neither pass decodes an `OcrDoc`. Each selects `doc_id` and
+  * the span fields it reads as parallel arrays (one element per span), so
+  * a parquet scan reads 9 leaf columns for the triples and 5 for the vendor
+  * mentions, never `page_w`, `page_h` or `media_ref`. One per-document
+  * kernel ([[layout]]) derives centres, zones and the P2 mention flags
+  * from those arrays, and the vendor/client/ICE rule ([[parties]]) is
+  * written once for both passes.
+  *
+  * PARITY CONTRACT: `ExtractParitySpec` asserts triple-set and mention-set
+  * equality between Extract and FastExtract on the fixture corpus (noise
+  * on), on adversarial documents and on generated ones. Any semantic
+  * change must be made in BOTH files.
   */
 object FastExtract {
 
@@ -98,15 +107,30 @@ object FastExtract {
   private val nonSlugRe = Pattern.compile("[^a-z0-9]+")
 
   /** F3 normalization: strip whitespace, comma→dot, DECIMAL(18,2) HALF_UP —
-    * same as cast(DecimalType(18,2)) in the Column path. */
+    * same as cast(DecimalType(18,2)) in the Column path, which is null
+    * (not ANSI) for a value that needs more than 16 integer digits. */
   def normalizeAmount(s: String): Option[String] =
     try Some(BigDecimal(whitespaceRe.matcher(s).replaceAll("").replace(',', '.'))
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString)
+      .setScale(2, BigDecimal.RoundingMode.HALF_UP)).filter(_.precision <= 18).map(_.toString)
     catch { case _: NumberFormatException => None }
 
-  private val dateRe = "^\\d{2}/\\d{2}/\\d{4}$".r
-  private val numberRe = "(FACT-\\d+-\\d+)".r
-  private val iceRe = "^ICE:\\s*(\\d+)$".r
+  // Extract's `rlike`/`regexp_extract` patterns, applied the same way: by
+  // `find`, where `$` also matches before a final line terminator
+  private val dateRe = Pattern.compile("^\\d{2}/\\d{2}/\\d{4}$")
+  private val numberRe = Pattern.compile("(FACT-\\d+-\\d+)")
+  private val iceRe = Pattern.compile("^ICE:\\s*(\\d+)$")
+
+  /** `text rlike dateRe`: a match is 10 ASCII chars plus at most a final
+    * line terminator (two chars for CR LF), so the length test skips most
+    * spans. */
+  private def isDateText(t: String): Boolean =
+    t.length >= 10 && t.length <= 12 && dateRe.matcher(t).find()
+
+  /** Group 1 of the first `re` match in `t`, or null. */
+  private def group1(re: Pattern, t: String): String = {
+    val m = re.matcher(t)
+    if (m.find()) m.group(1) else null
+  }
 
   /** Spark's OWN date parser (the class `to_date(c, "dd/MM/yyyy")` compiles
     * to under the CORRECTED time-parser policy) — not a hand-rolled
@@ -147,168 +171,191 @@ object FastExtract {
     nonSlugRe.matcher(name.toLowerCase(Locale.ROOT)).replaceAll("_")
       .stripPrefix("_").stripSuffix("_")
 
-  /** One span widened with centers + zone. */
-  private final case class W(s: OcrSpan, yc: Double, xc: Double, zone: String)
-
   final case class VendorMention(doc_id: String, role: String, surface: String,
       ice: String, entity_key: String)
 
-  final case class DocResult(triples: Seq[Triple], mentions: Seq[VendorMention])
+  /** What both passes derive from one document's spans, once: each span's
+    * text, vertical centre, A3 zone and P2 mention flag (one element per
+    * span, offset order). */
+  private final class Layout(val text: Array[String], val yc: Array[Double],
+      val zone: Array[String], val mention: Array[Boolean]) {
+    def n: Int = text.length
+  }
 
-  /** Per-document extraction — the exact mirror of Extract.triples +
-    * Extract.vendorMentions in one pass. */
-  def extractDoc(doc: OcrDoc): DocResult = {
-    // null text (legal in the interleaved schema — media spans often carry
-    // text=null) normalizes to "" so every predicate below behaves exactly
-    // like the declarative path's null-propagation (null length/endsWith/
-    // regex all filter the span there; "" does the same here)
-    val spans = doc.spans.map(s => if (s.text == null) s.copy(text = "") else s)
-    // empty doc still yields its rdf:type triple (mirror of Extract, where
-    // the literal-obj triple survives the null filter)
-    if (spans.isEmpty)
-      return DocResult(Seq(Triple(s"invoice:${doc.doc_id}", "rdf:type", "facturai:Invoice")), Nil)
-    val totalH = spans.map(s => s.bbox.y + s.bbox.h).max.toDouble
-    val widened = spans.map { s =>
-      val yc = s.bbox.y + s.bbox.h / 2.0
-      val xc = s.bbox.x + s.bbox.w / 2.0
-      W(s, yc, xc, zoneOf(if (totalH > 0) yc / totalH else 0.0))
+  /** The [[Layout]] of the text, conf, bbox.y and bbox.h arrays. A null
+    * text reads as "", which every predicate on it rejects, as Extract's
+    * null propagation does. */
+  private def layout(rawText: Array[String], conf: Array[Double], y: Array[Int],
+      h: Array[Int]): Layout = {
+    val n = rawText.length
+    val text = rawText.map(t => if (t == null) "" else t)
+    // the page height is the lowest bottom edge, aggregated from 0 as in
+    // Extract.tag
+    var bottom = 0
+    var i = 0
+    while (i < n) { bottom = math.max(bottom, y(i) + h(i)); i += 1 }
+    val totalH = bottom.toDouble
+    val yc = new Array[Double](n)
+    val zone = new Array[String](n)
+    val mention = new Array[Boolean](n)
+    i = 0
+    while (i < n) {
+      yc(i) = y(i) + h(i) / 2.0
+      zone(i) = zoneOf(if (totalH > 0) yc(i) / totalH else 0.0)
+      // P2; trim is Spark's space-only trim, NOT Java trim
+      mention(i) = conf(i) > 0.5 && sparkTrimmedLength(text(i)) > 1
+      i += 1
     }
-    // P2 mention filter (order preserved = offset order); trim is Spark's
-    // space-only trim, NOT Java trim (parity with Extract.scala's trim())
-    val mentions = widened.filter(w => w.s.conf > 0.5 && sparkTrimmedLength(w.s.text) > 1)
+    new Layout(text, yc, zone, mention)
+  }
 
-    val inv = s"invoice:${doc.doc_id}"
+  /** A document's vendor and client surfaces and their ICEs, null where
+    * absent. */
+  private final case class Parties(vendor: String, vendorIce: String, client: String,
+      clientIce: String)
+
+  /** The vendor/client/ICE rule of both passes (Extract's vendorSurface,
+    * clientSurface and iceOf): the vendor is the first company_info
+    * mention, the client the first client_info mention not ending in ':',
+    * and each side's ICE comes from the first mention of its zone that
+    * `rlike`s the ICE pattern (anchored at 0, so it starts with "ICE:"). */
+  private def parties(l: Layout): Parties = {
+    var vendor, vendorIce, client, clientIce: String = null
+    var i = 0
+    while (i < l.n) {
+      if (l.mention(i)) {
+        val t = l.text(i)
+        val ice = if (t.startsWith("ICE:")) group1(iceRe, t) else null
+        if (l.zone(i) == "company_info") {
+          if (vendor == null) vendor = t
+          if (vendorIce == null) vendorIce = ice
+        } else if (l.zone(i) == "client_info") {
+          if (client == null && !t.endsWith(":")) client = t
+          if (clientIce == null) clientIce = ice
+        }
+      }
+      i += 1
+    }
+    Parties(vendor, vendorIce, client, clientIce)
+  }
+
+  /** The triple kernel: Extract.triples of one document, over its span
+    * arrays. */
+  private def triplesOf(id: String, kind: Array[String], rawText: Array[String],
+      offset: Array[Int], conf: Array[Double], x: Array[Int], y: Array[Int], w: Array[Int],
+      h: Array[Int]): Seq[Triple] = {
+    // Extract explodes a null span array to no row, not even rdf:type
+    if (rawText == null) return Nil
+    val l = layout(rawText, conf, y, h)
+    val text = l.text
+    // a null doc_id nulls every doc-scoped subject; vendor nodes keep theirs
+    val inv = if (id == null) null else s"invoice:$id"
     val bld = Seq.newBuilder[Triple]
     def tr(subj: String, pred: String, obj: String): Unit =
       if (subj != null && obj != null && obj.nonEmpty) bld += Triple(subj, pred, obj)
 
     tr(inv, "rdf:type", "facturai:Invoice")
 
-    mentions.iterator
-      .flatMap(w => numberRe.findFirstMatchIn(w.s.text).map(_.group(1)))
-      .nextOption().foreach(tr(inv, "hasNumber", _))
+    // the first invoice number and the first two dates among the mentions
+    var number, date, due: String = null
+    var i = 0
+    while (i < l.n) {
+      if (l.mention(i)) {
+        val t = text(i)
+        if (number == null && t.contains("FACT-")) number = group1(numberRe, t)
+        if (due == null && isDateText(t)) { if (date == null) date = t else due = t }
+      }
+      i += 1
+    }
+    tr(inv, "hasNumber", number)
+    Option(date).flatMap(isoDate).foreach(tr(inv, "hasDate", _))
+    Option(due).flatMap(isoDate).foreach(tr(inv, "hasDueDate", _))
 
-    // a date match is 10 ASCII chars: the length test skips most spans
-    val dates = mentions.filter(w => w.s.text.length == 10 && dateRe.matches(w.s.text))
-      .map(_.s.text)
-    dates.headOption.flatMap(isoDate).foreach(tr(inv, "hasDate", _))
-    dates.lift(1).flatMap(isoDate).foreach(tr(inv, "hasDueDate", _))
-
-    def firstIn(zone: String)(p: W => Boolean): Option[W] =
-      mentions.find(w => w.zone == zone && p(w))
-    def iceOf(zone: String): Option[String] =
-      firstIn(zone)(w => iceRe.matches(w.s.text))
-        .flatMap(w => iceRe.findFirstMatchIn(w.s.text).map(_.group(1)))
-
-    val vendorSurface = firstIn("company_info")(_ => true).map(_.s.text)
-    val clientSurface = firstIn("client_info")(w => !w.s.text.endsWith(":")).map(_.s.text)
-    val vendorIce = iceOf("company_info")
-    val clientIce = iceOf("client_info")
-    val vendorNode = vendorSurface.map(s => "vendor:" + entitySlug(s))
-    val clientNode = clientSurface.map(s => "vendor:" + entitySlug(s))
-    vendorNode.foreach(tr(inv, "hasVendor", _))
-    clientNode.foreach(tr(inv, "hasClient", _))
-    for (v <- vendorNode; i <- vendorIce) tr(v, "hasICE", i)
-    for (c <- clientNode; i <- clientIce) tr(c, "hasICE", i)
+    val p = parties(l)
+    val vendorNode = if (p.vendor == null) null else "vendor:" + entitySlug(p.vendor)
+    val clientNode = if (p.client == null) null else "vendor:" + entitySlug(p.client)
+    tr(inv, "hasVendor", vendorNode)
+    tr(inv, "hasClient", clientNode)
+    tr(vendorNode, "hasICE", p.vendorIce)
+    tr(clientNode, "hasICE", p.clientIce)
 
     // total-zone mentions lower-cased once for the three label lookups
-    val totals = mentions.filter(_.zone == "total")
-      .map(w => (w.s.text, w.s.text.toLowerCase(Locale.ROOT)))
+    val totals = (0 until l.n).filter(i => l.mention(i) && l.zone(i) == "total")
+      .map(i => (text(i), text(i).toLowerCase(Locale.ROOT)))
     def totalZoneAmount(key: String): Option[String] =
-      totals.find(_._2.contains(key)).flatMap { case (t, l) => firstAmount(t, l) }
+      totals.find(_._2.contains(key)).flatMap { case (t, lo) => firstAmount(t, lo) }
     totalZoneAmount("sous-total").foreach(tr(inv, "hasSubtotalHT", _))
     totalZoneAmount("tva").foreach(tr(inv, "hasTVA", _))
     totalZoneAmount("total ttc").foreach(tr(inv, "hasTotalTTC", _))
 
     // line items: ALL text spans in items zone (no P2 filter — mirror of
     // Extract); leader/row grouping with tolerance 15, cells by x
-    val items = widened.filter(w =>
-      w.zone == "items" && w.s.kind == "text" && w.s.text.nonEmpty)
-    val leaders = items.filter(s => !items.exists(o =>
-      math.abs(o.yc - s.yc) <= RowTol &&
-        (o.xc < s.xc || (o.xc == s.xc && o.s.offset < s.s.offset))))
-      .sortBy(_.yc)
-      .filter(_.s.text != "Description")
-    leaders.zipWithIndex.foreach { case (leader, n) =>
-      val cells = items.filter(o => math.abs(o.yc - leader.yc) <= RowTol).sortBy(_.xc)
-      val li = s"lineItem:${doc.doc_id}/$n"
-      tr(inv, "hasLineItem", li)
-      cells.headOption.foreach(c => tr(li, "hasDescription", c.s.text))
-      cells.lift(1).flatMap(c => sparkToInt(c.s.text))
-        .foreach(q => tr(li, "hasQuantity", q.toString))
-      cells.lift(4).flatMap(c => normalizeAmount(c.s.text))
-        .foreach(tr(li, "hasAmount", _))
+    val items = (0 until l.n).filter(i =>
+      l.zone(i) == "items" && kind(i) == "text" && text(i).nonEmpty)
+    if (items.nonEmpty) {
+      val xc = new Array[Double](l.n)
+      items.foreach(i => xc(i) = x(i) + w(i) / 2.0)
+      def sameRow(a: Int, b: Int): Boolean = math.abs(l.yc(a) - l.yc(b)) <= RowTol
+      val leaders = items.filter(s => !items.exists(o => sameRow(o, s) &&
+          (xc(o) < xc(s) || (xc(o) == xc(s) && offset(o) < offset(s)))))
+        .sortBy(l.yc(_))
+        .filter(text(_) != "Description")
+      leaders.zipWithIndex.foreach { case (leader, n) =>
+        val cells = items.filter(sameRow(_, leader)).sortBy(xc(_))
+        val li = if (id == null) null else s"lineItem:$id/$n"
+        tr(inv, "hasLineItem", li)
+        cells.headOption.foreach(c => tr(li, "hasDescription", text(c)))
+        cells.lift(1).flatMap(c => sparkToInt(text(c)))
+          .foreach(q => tr(li, "hasQuantity", q.toString))
+        cells.lift(4).flatMap(c => normalizeAmount(text(c)))
+          .foreach(tr(li, "hasAmount", _))
+      }
     }
-
-    val vm = Seq(
-      vendorSurface.map(s =>
-        VendorMention(doc.doc_id, "vendor", s, vendorIce.getOrElse(""), entitySlug(s))),
-      clientSurface.map(s =>
-        VendorMention(doc.doc_id, "client", s, clientIce.getOrElse(""), entitySlug(s)))).flatten
-
-    DocResult(bld.result(), vm)
+    bld.result()
   }
 
-  /** Mentions-only extraction: the vendor/client/ICE lookups WITHOUT the
-    * triple assembly (notably without the quadratic line-item row search) —
-    * the EL stage needs 2 rows/doc, not the whole extraction. Field
-    * semantics are shared with extractDoc via the same helpers; parity with
-    * the full path is asserted in ExtractParitySpec. */
+  /** The mention kernel: Extract.vendorMentions of one document (a missing
+    * ICE as ""), over the four span fields it reads. */
+  private def mentionsOf(docId: String, text: Array[String], conf: Array[Double],
+      y: Array[Int], h: Array[Int]): Seq[VendorMention] =
+    if (text == null) Nil
+    else {
+      val p = parties(layout(text, conf, y, h))
+      def row(role: String, surface: String, ice: String) =
+        VendorMention(docId, role, surface, if (ice == null) "" else ice, entitySlug(surface))
+      Seq(Option(p.vendor).map(row("vendor", _, p.vendorIce)),
+        Option(p.client).map(row("client", _, p.clientIce))).flatten
+    }
+
+  /** [[vendorMentions]] of one document: the per-doc adapter tests use. */
   def mentionsOnly(doc: OcrDoc): Seq[VendorMention] = {
-    val s = doc.spans
+    val s = if (doc.spans == null) Nil else doc.spans
     mentionsOf(doc.doc_id, s.map(_.text).toArray, s.map(_.conf).toArray,
       s.map(_.bbox.y).toArray, s.map(_.bbox.h).toArray)
   }
 
-  /** The mention logic over the four span fields it reads (text, conf and
-    * the bbox's y and h, one array element per span). */
-  private def mentionsOf(docId: String, text: Array[String], conf: Array[Double],
-      y: Array[Int], h: Array[Int]): Seq[VendorMention] = {
-    val n = if (text == null) 0 else text.length
-    if (n == 0) return Nil
-    var bottom = Int.MinValue
-    var i = 0
-    while (i < n) { bottom = math.max(bottom, y(i) + h(i)); i += 1 }
-    val totalH = bottom.toDouble
-    var vendorSurface: String = null
-    var clientSurface: String = null
-    var vendorIce: String = null
-    var clientIce: String = null
-    i = 0
-    while (i < n) {
-      val t = if (text(i) == null) "" else text(i)
-      if (conf(i) > 0.5 && sparkTrimmedLength(t) > 1) {
-        val yc = y(i) + h(i) / 2.0
-        val zone = zoneOf(if (totalH > 0) yc / totalH else 0.0)
-        if (zone == "company_info") {
-          if (vendorSurface == null) vendorSurface = t
-          if (vendorIce == null && iceRe.matches(t))
-            vendorIce = iceRe.findFirstMatchIn(t).get.group(1)
-        } else if (zone == "client_info") {
-          if (clientSurface == null && !t.endsWith(":")) clientSurface = t
-          if (clientIce == null && iceRe.matches(t))
-            clientIce = iceRe.findFirstMatchIn(t).get.group(1)
-        }
-      }
-      i += 1
-    }
-    val v = Option(vendorSurface).map(s =>
-      VendorMention(docId, "vendor", s, Option(vendorIce).getOrElse(""), entitySlug(s)))
-    val c = Option(clientSurface).map(s =>
-      VendorMention(docId, "client", s, Option(clientIce).getOrElse(""), entitySlug(s)))
-    Seq(v, c).flatten
-  }
-
+  /** Extract.triples, reading only `doc_id` and the span fields kind,
+    * text, offset, conf and bbox: no whole `OcrDoc` is decoded, and on a
+    * file scan Spark's nested schema pruning reads just those 9 leaf
+    * columns (ExtractParitySpec checks the scan's required schema). */
   def triples(docs: Dataset[OcrDoc]): Dataset[Triple] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.mapPartitions(_.flatMap(d => extractDoc(d).triples))
+    docs.select(col("doc_id"), col("spans.kind"), col("spans.text"), col("spans.offset"),
+        col("spans.conf"), col("spans.bbox.x"), col("spans.bbox.y"), col("spans.bbox.w"),
+        col("spans.bbox.h"))
+      .as[(String, Array[String], Array[String], Array[Int], Array[Double], Array[Int],
+        Array[Int], Array[Int], Array[Int])]
+      .mapPartitions(_.flatMap { case (id, k, t, o, c, x, y, w, h) =>
+        triplesOf(id, k, t, o, c, x, y, w, h)
+      })
   }
 
-  /** [[mentionsOnly]] over a Dataset, reading only `doc_id` and the span
-    * fields text, conf, bbox.y and bbox.h: no whole `OcrDoc` is decoded, and
-    * on a file scan Spark's nested schema pruning reads just those five leaf
-    * columns (ExtractParitySpec checks the scan's required schema). */
+  /** Extract.vendorMentions (a missing ICE as ""), reading only `doc_id`
+    * and the span fields text, conf, bbox.y and bbox.h: no whole `OcrDoc`
+    * is decoded, and on a file scan Spark's nested schema pruning reads
+    * just those five leaf columns (ExtractParitySpec checks the scan's
+    * required schema). */
   def vendorMentions(docs: Dataset[OcrDoc]): Dataset[VendorMention] = {
     val spark = docs.sparkSession
     import spark.implicits._

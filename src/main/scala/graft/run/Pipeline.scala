@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   * [[vendorTriples]], plus [[stateTriples]] wherever a store needs them.
   *
   * Shuffle inventory (the whole point at 100 TB):
-  *   0 shuffles to raw triples (all per-doc array HOFs);
+  *   0 shuffles to raw triples (one per-doc kernel over span arrays);
+  *   the triple scan reads 9 leaf columns (doc_id and the spans' kind,
+  *     text, offset, conf and bbox) and decodes no `OcrDoc`;
   *   the mention scan reads 5 leaf columns (doc_id and the spans' text,
   *     conf, bbox.y, bbox.h) and is not cached in the materializing
   *     `spark.graft.materialize` modes: the entity table's checkpoint
@@ -400,10 +402,12 @@ object Pipeline {
   /** Full run: docs → canonical triple graph (deduplicated).
     *
     * Plan shape (the 100 TB view):
-    *  - docs are scanned exactly TWICE, both narrow: once for the raw
-    *    triple stream, once for the tiny vendor-mention projection, which
-    *    reads only 5 leaf columns and, in the materializing modes, has no
-    *    doc-scale cache (the entity table's checkpoint consumes it once);
+    *  - docs are scanned exactly TWICE, both narrow and neither decoding an
+    *    `OcrDoc`: once for the raw triple stream, which reads 9 leaf
+    *    columns (never page_w, page_h or media_ref), once for the tiny
+    *    vendor-mention projection, which reads only 5 and, in the
+    *    materializing modes, has no doc-scale cache (the entity table's
+    *    checkpoint consumes it once);
     *  - the raw triple stream flows through ONE broadcast join (canonical
     *    map) and is never shuffled, persisted, or scanned twice — doc-scoped
     *    subjects embed the doc_id and are duplicate-free by construction;

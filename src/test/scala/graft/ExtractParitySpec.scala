@@ -137,6 +137,9 @@ class ExtractParitySpec extends SparkSuite {
     texts.foreach { t =>
       assert(FastExtract.firstAmount(t) == referenceFirstAmount(t), s"text: '$t'")
     }
+    // DECIMAL(18,2) holds 16 integer digits: the cast is null beyond them
+    assert(FastExtract.normalizeAmount("9999999999999999,994").contains("9999999999999999.99"))
+    assert(FastExtract.normalizeAmount("9999999999999999,995").isEmpty)
     // not vacuous: many generated texts do carry an amount
     assert(texts.count(t => referenceFirstAmount(t).isDefined) > texts.size / 4)
   }
@@ -154,7 +157,9 @@ class ExtractParitySpec extends SparkSuite {
         sp(null, 3, 700), // null-text TEXT span in the items zone
         sp("Widget", 4, 720, x = 10),
         sp("2", 5, 720, x = 100))),
-      OcrDoc("nul2", 800, 1000, Seq(sp(null, 0, 10)))) // only a null span
+      OcrDoc("nul2", 800, 1000, Seq(sp(null, 0, 10))), // only a null span
+      OcrDoc("nul3", 800, 1000, null), // no span array: no triple, not even rdf:type
+      OcrDoc("nul4", 800, 1000, Nil)) // empty span array: rdf:type only
     val df = spark.createDataset(docs).toDF()
     // the declarative path null-propagates; the typed fast path must not
     // NPE and must emit the identical triple set
@@ -163,9 +168,11 @@ class ExtractParitySpec extends SparkSuite {
     assert(slow.exceptAll(fast).count() == 0 && fast.exceptAll(slow).count() == 0,
       s"null-text divergence: slow-only ${slow.exceptAll(fast).collect().mkString(";")} " +
         s"fast-only ${fast.exceptAll(slow).collect().mkString(";")}")
+    assert(fast.where($"subj" === "invoice:nul3").count() == 0)
+    assert(fast.where($"subj" === "invoice:nul4").count() == 1)
     // mentionsOnly must not NPE either
     assert(FastExtract.mentionsOnly(docs.head).nonEmpty)
-    assert(FastExtract.mentionsOnly(docs(1)).isEmpty)
+    assert(docs.tail.forall(FastExtract.mentionsOnly(_).isEmpty))
     // and the Dataset path (its own narrow column read) matches both the
     // declarative mentions and the per-doc function
     def cols(d: org.apache.spark.sql.DataFrame) =
@@ -177,6 +184,137 @@ class ExtractParitySpec extends SparkSuite {
       assert(vmFast.exceptAll(other).count() == 0 && other.exceptAll(vmFast).count() == 0,
         s"null-text mentions differ from $name: ${vmFast.collect().mkString(";")} vs " +
           other.collect().mkString(";"))
+  }
+
+  /** Both passes against Extract on `docs`: the triple multisets, and the
+    * mention multisets of the Dataset pass and of [[FastExtract.mentionsOnly]]. */
+  private def assertParity(docs: Seq[graft.model.OcrDoc], what: String): Unit = {
+    val df = spark.createDataset(docs).toDF().cache()
+    try {
+      def diff[A](slow: Seq[A], fast: Seq[A], kind: String): Unit = {
+        val (s, f) = (slow.groupBy(identity).view.mapValues(_.size).toMap,
+          fast.groupBy(identity).view.mapValues(_.size).toMap)
+        if (s != f) fail(s"$what: $kind differ; Extract-only " +
+          s.toSet.diff(f.toSet).take(5).mkString("; ") + " | FastExtract-only " +
+          f.toSet.diff(s.toSet).take(5).mkString("; "))
+      }
+      diff(Extract.triples(df).select("subj", "pred", "obj").as[(String, String, String)]
+          .collect().toSeq,
+        FastExtract.triples(df.as[graft.model.OcrDoc]).toDF()
+          .as[(String, String, String)].collect().toSeq, "triples")
+      val vmSlow = Extract.vendorMentions(df).na.fill("", Seq("ice"))
+        .select("doc_id", "role", "surface", "ice", "entity_key")
+        .as[FastExtract.VendorMention].collect().toSeq
+      diff(vmSlow, FastExtract.vendorMentions(df.as[graft.model.OcrDoc]).collect().toSeq,
+        "mentions")
+      diff(vmSlow, docs.flatMap(FastExtract.mentionsOnly), "mentionsOnly rows")
+    } finally df.unpersist()
+  }
+
+  test("dates and ICE values in text ending with a line terminator follow Extract's rlike") {
+    // `$` in Extract's rlike/regexp_extract also matches before a final
+    // line terminator: "12/03/2024\n" takes the first date slot (and parses
+    // to null), "ICE: 123\n" yields ICE 123
+    import graft.model._
+    def sp(text: String, offset: Int, y: Int) =
+      OcrSpan("text", text, null, offset, 0.9, BBox(10, y, 60, 10))
+    val eols = Seq("\n", "\r\n", "\u2028")
+    val docs = eols.zipWithIndex.map { case (eol, k) =>
+      OcrDoc(s"eol$k", 800, 1000, Seq( // rows 250-310 of 1000: company_info
+        sp("Vendor Co", 0, 250),
+        sp(s"12/03/2024$eol", 1, 270),
+        sp("15/03/2024", 2, 290),
+        sp(s"ICE: 123$eol", 3, 310),
+        sp("Footer", 4, 990)))
+    }
+    assertParity(docs, "line terminators")
+    val fast = FastExtract.triples(spark.createDataset(docs)).collect().toSet
+    eols.indices.foreach { k =>
+      val dates = fast.filter(t => t.subj == s"invoice:eol$k" && t.pred.endsWith("Date"))
+      assert(dates == Set(graft.model.Triple(s"invoice:eol$k", "hasDueDate", "2024-03-15")),
+        s"eol$k: $dates")
+    }
+    assert(fast.contains(graft.model.Triple("vendor:vendor_co", "hasICE", "123")), fast)
+    assert(docs.flatMap(FastExtract.mentionsOnly).map(_.ice) == Seq("123", "123", "123"))
+  }
+
+  test("property: Extract == FastExtract on generated documents (3 seeds)") {
+    import graft.model._
+    val eol = Gen.frequency(6 -> Gen.const(""),
+      1 -> Gen.oneOf("\n", "\r\n", "\u2028", "\r", "\u0085"))
+    val word = Gen.oneOf("FACT-12-345", "FACT-7-", "12/03/2024", "31/02/2024", "15/03/2024",
+      "29/02/2024", "ICE: 123", "ICE:0042", "ICE: 12a", "Vendor Co", "Acme SARL", "Client:",
+      "Client: X", "Sous-total HT: 1 234,50 €", "TVA: 123456789012345678 €", "TVA 20%: 24,5 dh", "Total TTC: 99,99 MAD",
+      "total ttc", "TOTAL TTC 12 EUR", "Description", "Widget", "2", " 3 ", "10,5", "2.5",
+      "1 000,00", "x", "A", " ", "\t", "İstanbul", "\u212Aelvin", "\uD83D\uDE00",
+      "\uD835\uDC00 Ltd", "\uD840\uDC0B", "日本")
+    val text = Gen.frequency(1 -> Gen.const(null: String), 1 -> Gen.const(""),
+      8 -> Gen.zip(Gen.choose(1, 2).flatMap(Gen.listOfN(_, word)), eol)
+        .map { case (ws, e) => ws.mkString(" ") + e })
+    val kind = Gen.frequency(8 -> Gen.const("text"), 1 -> Gen.const("media"),
+      1 -> Gen.const(null: String))
+    // page rows 0-1000: every zone's band, three items rows (700/705/712
+    // share one), and any row at all
+    val y = Gen.frequency(6 -> Gen.oneOf(10, 250, 300, 450, 500, 700, 705, 712, 740, 760,
+      850, 880, 990), 1 -> Gen.choose(0, 1000))
+    def span(i: Int) = for {
+      k <- kind; t <- text; off <- Gen.frequency(4 -> Gen.const(i), 1 -> Gen.const(0))
+      c <- Gen.oneOf(0.2, 0.49, 0.5, 0.5000001, 0.51, 0.9)
+      yy <- y; x <- Gen.oneOf(10, 100, 200, 300, 400) // same x and w: tied xc
+      w <- Gen.frequency(4 -> Gen.const(60), 1 -> Gen.const(40))
+    } yield OcrSpan(k, t, null, off, c, BBox(x, yy, w, 10))
+    // a five-cell table row: description, quantity, unit, price, amount
+    val cell = Gen.oneOf("2", " 3 ", "2.5", "+3", "u", "10,5", "1 000,00", "12.345", "n/a",
+      "12345678901234567,5", "9999999999999999,995", "9999999999999999,994", "1e3",
+      "\u00a012")
+    def row(off: Int) = for {
+      yy <- Gen.oneOf(700, 705, 740, 760)
+      ts <- Gen.sequence[List[String], String](Seq(word, cell, cell, cell, cell))
+    } yield ts.zipWithIndex.map { case (t, j) =>
+      OcrSpan("text", t, null, off + j, 0.9, BBox(10 + 100 * j, yy, 60, 10))
+    }
+    val spans = Gen.frequency(1 -> Gen.const(null: Seq[OcrSpan]), 1 -> Gen.const(Nil),
+      12 -> (for {
+        n <- Gen.choose(1, 25)
+        ss <- Gen.sequence[List[OcrSpan], OcrSpan]((0 until n).map(span))
+        rows <- Gen.choose(0, 2).flatMap(k => Gen.sequence[List[List[OcrSpan]], List[OcrSpan]](
+          (0 until k).map(r => row(n + 5 * r))))
+        bottom <- Gen.oneOf(true, true, false) // a footer span fixes the page height
+      } yield ss ++ rows.flatten ++
+        (if (bottom) Seq(OcrSpan("text", "Footer", null, n + 10, 0.9, BBox(10, 990, 60, 10)))
+         else Nil)))
+    def docs(seed: Long): Seq[OcrDoc] =
+      Gen.listOfN(120, Gen.zip(Gen.frequency(30 -> true, 1 -> false), spans))
+        .apply(Gen.Parameters.default, Seed(seed)).get
+        .zipWithIndex.map { case ((named, ss), i) =>
+          OcrDoc(if (named) s"g$seed-$i" else null, 800, 1000, ss)
+        }
+    val preds = Seq(11L, 12L, 13L).flatMap { seed =>
+      val ds = docs(seed)
+      assertParity(ds, s"seed $seed")
+      FastExtract.triples(spark.createDataset(ds)).map(_.pred).distinct().collect()
+    }.toSet
+    // not vacuous: the generated docs reach every field of both passes
+    assert(Set("hasNumber", "hasDate", "hasDueDate", "hasVendor", "hasClient", "hasICE",
+      "hasSubtotalHT", "hasTVA", "hasTotalTTC", "hasLineItem", "hasQuantity", "hasAmount")
+      .subsetOf(preds), preds)
+  }
+
+  test("triple pass scans only doc_id and the spans' kind, text, offset, conf, bbox") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-triple-scan").toString
+    try {
+      InvoiceCorpus.docs(spark, 40).write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir).as[graft.model.OcrDoc]
+      val tr = FastExtract.triples(docs)
+      val scans = tr.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, tr.queryExecution.executedPlan.toString)
+      assert(scans.head.requiredSchema.catalogString ==
+        "struct<doc_id:string,spans:array<struct<kind:string,text:string,offset:int," +
+          "conf:double,bbox:struct<x:int,y:int,w:int,h:int>>>>")
+      val slow = Extract.triples(docs.toDF()).select("subj", "pred", "obj")
+      val fast = tr.toDF()
+      assert(slow.exceptAll(fast).count() == 0 && fast.exceptAll(slow).count() == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("mention pass scans only doc_id and the spans' text, conf, bbox.y, bbox.h") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Keyphrases
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class KeyphrasesSpec extends SparkSuite {
   import spark.implicits._
@@ -43,5 +44,16 @@ class KeyphrasesSpec extends SparkSuite {
   test("k cuts after the deterministic (score desc, phrase asc) order") {
     val out = rake(Seq((1L, "alpha beta. gamma delta. epsilon zeta.")), 2)
     assert(out.length == 2 && out.map(_._5).toSeq == Seq(1, 2))
+  }
+
+  test("ranks the top k without a single-partition global window") {
+    // a Window with no partition spec moves every row to one task
+    spark.conf.set(Materialize.ModeKey, "none") // keep the rank step in the plan
+    val plan = try Keyphrases.rake(Seq((1L, "alpha beta. gamma delta"), (2L, "beta gamma"))
+        .toDF("doc_id", "text"), "doc_id", "text", 3)
+      .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 }

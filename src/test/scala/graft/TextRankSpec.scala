@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.TextRank
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class TextRankSpec extends SparkSuite {
   import spark.implicits._
@@ -43,5 +44,16 @@ class TextRankSpec extends SparkSuite {
     val b = TextRank.keywords(docs.toDF("id", "text").repartition(9),
       "id", "text").as[(Int, String, Long)].collect().toSeq
     assert(a == b)
+  }
+
+  test("ranks the top k without a single-partition global window") {
+    // a Window with no partition spec moves every row to one task
+    spark.conf.set(Materialize.ModeKey, "none") // keep the rank step in the plan
+    val plan = try TextRank.keywords(Seq(("a", "apple banana cherry apple"), ("b", "xen yak xen"))
+        .toDF("id", "text"), "id", "text", topK = 3)
+      .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 }
