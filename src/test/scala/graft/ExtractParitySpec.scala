@@ -231,10 +231,10 @@ class ExtractParitySpec extends SparkSuite {
     val fast = FastExtract.triples(spark.createDataset(docs)).collect().toSet
     eols.indices.foreach { k =>
       val dates = fast.filter(t => t.subj == s"invoice:eol$k" && t.pred.endsWith("Date"))
-      assert(dates == Set(graft.model.Triple(s"invoice:eol$k", "hasDueDate", "2024-03-15")),
+      assert(dates == Set(Triple(s"invoice:eol$k", "hasDueDate", "2024-03-15")),
         s"eol$k: $dates")
     }
-    assert(fast.contains(graft.model.Triple("vendor:vendor_co", "hasICE", "123")), fast)
+    assert(fast.contains(Triple("vendor:vendor_co", "hasICE", "123")), fast)
     assert(docs.flatMap(FastExtract.mentionsOnly).map(_.ice) == Seq("123", "123", "123"))
   }
 
@@ -244,10 +244,10 @@ class ExtractParitySpec extends SparkSuite {
       1 -> Gen.oneOf("\n", "\r\n", "\u2028", "\r", "\u0085"))
     val word = Gen.oneOf("FACT-12-345", "FACT-7-", "12/03/2024", "31/02/2024", "15/03/2024",
       "29/02/2024", "ICE: 123", "ICE:0042", "ICE: 12a", "Vendor Co", "Acme SARL", "Client:",
-      "Client: X", "Sous-total HT: 1 234,50 €", "TVA: 123456789012345678 €", "TVA 20%: 24,5 dh", "Total TTC: 99,99 MAD",
-      "total ttc", "TOTAL TTC 12 EUR", "Description", "Widget", "2", " 3 ", "10,5", "2.5",
-      "1 000,00", "x", "A", " ", "\t", "İstanbul", "\u212Aelvin", "\uD83D\uDE00",
-      "\uD835\uDC00 Ltd", "\uD840\uDC0B", "日本")
+      "Client: X", "Sous-total HT: 1 234,50 €", "TVA: 123456789012345678 €",
+      "TVA 20%: 24,5 dh", "Total TTC: 99,99 MAD", "total ttc", "TOTAL TTC 12 EUR",
+      "Description", "Widget", "2", " 3 ", "10,5", "2.5", "1 000,00", "x", "A", " ", "\t",
+      "İstanbul", "\u212Aelvin", "\uD83D\uDE00", "\uD835\uDC00 Ltd", "\uD840\uDC0B", "日本")
     val text = Gen.frequency(1 -> Gen.const(null: String), 1 -> Gen.const(""),
       8 -> Gen.zip(Gen.choose(1, 2).flatMap(Gen.listOfN(_, word)), eol)
         .map { case (ws, e) => ws.mkString(" ") + e })
