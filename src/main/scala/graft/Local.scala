@@ -16,16 +16,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - One budget: `spark.graft.local.maxEntries` (default 8,000,000)
   *    bounds the entries a twin holds on the driver. Each call site
   *    measures what it collects and, where one row costs more than one
-  *    entry, weights the measure (and says why). `0` forces every
-  *    distributed path.
+  *    entry, weights the measure (and says why). `0` forces every twin
+  *    gated on it to its distributed path. It does not reach a method's
+  *    own threshold parameter: `ConnectedComponents.run(smallThreshold)`
+  *    keeps its default unless the caller passes one (`Pipeline` passes
+  *    −1).
   *  - [[fits]] decides from a measure the caller already has; [[take]]
   *    sizes and collects in one action. Both log the operator, the
   *    measure, the limit and the path taken.
   *  - [[order]]: Spark's string order, the one the distributed twins'
   *    `min`, `<` and `orderBy` apply.
   *  - [[components]]: the driver union-find (min root under [[order]]).
-  *  - [[dense]] / [[denseOf]] and [[undirected]]: dense ids and an
-  *    int-array CSR adjacency over them. */
+  *  - [[dense]] / [[denseOf]], then [[undirected]] or [[directed]]: dense
+  *    ids and an int-array CSR adjacency over them.
+  *  - [[Bfs]]: one level-synchronous BFS over a CSR, one source at a
+  *    time with a depth bound, on int arrays (the distance, closure and
+  *    path-count replays). */
 object Local {
   val MaxEntriesKey = "spark.graft.local.maxEntries"
 
@@ -86,8 +92,10 @@ object Local {
   }
 
   /** An edge list over dense ids: `ids(i)` is the original id of dense id
-    * `i`; edge `j` runs `src(j)` → `dst(j)`. */
-  final class Dense[K](val ids: Array[K], val src: Array[Int], val dst: Array[Int]) {
+    * `i`; edge `j` runs `src(j)` → `dst(j)`; `id(k)` is the dense id of
+    * `k`, or −1 when `k` is no endpoint. */
+  final class Dense[K](val ids: Array[K], val src: Array[Int], val dst: Array[Int],
+      val id: K => Int) {
     def n: Int = ids.length
   }
 
@@ -105,7 +113,7 @@ object Local {
     }
     val ids = java.util.Arrays.copyOf(all, n)
     def ix(a: Array[Long]): Array[Int] = a.map(java.util.Arrays.binarySearch(ids, _))
-    new Dense(ids, ix(src), ix(dst))
+    new Dense(ids, ix(src), ix(dst), k => math.max(java.util.Arrays.binarySearch(ids, k), -1))
   }
 
   /** Any other id type: dense ids in first-seen order. */
@@ -118,32 +126,73 @@ object Local {
       else { ix.put(x, ids.length); ids += x; ids.length - 1 }
     }
     val (s, d) = (src.map(id), dst.map(id))
-    new Dense(ids.toArray, s, d)
+    new Dense(ids.toArray, s, d, k => { val got = ix.get(k); if (got == null) -1 else got.intValue })
   }
 
-  /** Undirected CSR: slots `off(v) until off(v + 1)` hold v's neighbours
-    * in `nbr` and the index of the edge that put them there in `edge`;
-    * every edge fills one slot at each endpoint. */
+  /** CSR adjacency: slots `off(v) until off(v + 1)` hold v's neighbours
+    * in `nbr` and the index of the edge that put them there in `edge`. */
   final class Csr(val off: Array[Int], val nbr: Array[Int], val edge: Array[Int]) {
     def deg(v: Int): Int = off(v + 1) - off(v)
   }
 
-  def undirected(g: Dense[_]): Csr = {
+  /** Every edge fills one slot at each endpoint. */
+  def undirected(g: Dense[_]): Csr = csr(g, both = true)
+
+  /** Edge `src → dst` fills one slot at `src`: out-neighbours only. */
+  def directed(g: Dense[_]): Csr = csr(g, both = false)
+
+  /** The counting sort behind both: slots at `src`, and at `dst` too when
+    * `both`. */
+  private def csr(g: Dense[_], both: Boolean): Csr = {
     val (n, m) = (g.n, g.src.length)
     val off = new Array[Int](n + 1)
     var i = 0
-    while (i < m) { off(g.src(i) + 1) += 1; off(g.dst(i) + 1) += 1; i += 1 }
+    while (i < m) { off(g.src(i) + 1) += 1; if (both) off(g.dst(i) + 1) += 1; i += 1 }
     i = 0
     while (i < n) { off(i + 1) += off(i); i += 1 }
-    val nbr = new Array[Int](2 * m); val edge = new Array[Int](2 * m)
+    val nbr = new Array[Int](off(n)); val edge = new Array[Int](off(n))
     val fill = java.util.Arrays.copyOf(off, n)
     i = 0
     while (i < m) {
-      val (s, d) = (g.src(i), g.dst(i))
+      val s = g.src(i); val d = g.dst(i)
       nbr(fill(s)) = d; edge(fill(s)) = i; fill(s) += 1
-      nbr(fill(d)) = s; edge(fill(d)) = i; fill(d) += 1
+      if (both) { nbr(fill(d)) = s; edge(fill(d)) = i; fill(d) += 1 }
       i += 1
     }
     new Csr(off, nbr, edge)
+  }
+
+  /** Level-synchronous BFS over `g`, one source per [[run]]; the arrays
+    * are reused across sources. After `run(s, maxDepth)`,
+    * `order(0 until size)` holds the nodes within `maxDepth` hops of `s`
+    * level by level (`s` first), `dist(v)` is v's hop count (−1 for every
+    * node not reached) and `returned` says whether a node fewer than
+    * `maxDepth` hops from `s` has an edge back to `s`: whether `s` lies
+    * on a cycle of at most `maxDepth` edges. */
+  final class Bfs(g: Csr) {
+    val dist: Array[Int] = Array.fill(g.off.length - 1)(-1)
+    val order = new Array[Int](g.off.length - 1)
+    var size = 0
+    var returned = false
+
+    def run(s: Int, maxDepth: Int): Unit = {
+      var i = 0
+      while (i < size) { dist(order(i)) = -1; i += 1 }
+      dist(s) = 0; order(0) = s; size = 1; returned = false
+      var head = 0
+      while (head < size) {
+        val u = order(head); val du = dist(u)
+        if (du < maxDepth) {
+          var k = g.off(u)
+          while (k < g.off(u + 1)) {
+            val v = g.nbr(k)
+            if (dist(v) < 0) { dist(v) = du + 1; order(size) = v; size += 1 }
+            else if (v == s) returned = true
+            k += 1
+          }
+        }
+        head += 1
+      }
+    }
   }
 }

@@ -37,8 +37,7 @@ import graft.canon.ConnectedComponents
   * articulation vertex — `(v)`, deterministic in the data. */
 object Articulation {
 
-  def articulationPoints(edges: DataFrame, maxDepth: Int = 64,
-      ccSmallThreshold: Long = 100000L): DataFrame = {
+  def articulationPoints(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
     val und = Bridges.normalize(edges)
     // r6: size-gated local Tarjan DFS (see Bridges.localCut) — the
     // articulation set is a unique property of the graph (a vertex of
@@ -51,16 +50,14 @@ object Articulation {
         return cut.articulation.toSeq.toDF("v")
       case None => ()
     }
-    val (treeEdges, nonTree, cover) =
-      Bridges.cycleCover(und, maxDepth, ccSmallThreshold)
+    val (treeEdges, nonTree, cover) = Bridges.cycleCover(und, maxDepth)
     def key(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       concat(least(a, b), lit("|"), greatest(a, b))
 
     // CC over edge-nodes: non-tree edge <-> each tree edge on its cycle
     val links = cover.select(key(col("na"), col("nb")).as("src"),
       key(col("c"), col("p")).as("dst"))
-    val blocks = ConnectedComponents.run(links,
-      smallThreshold = ccSmallThreshold)
+    val blocks = ConnectedComponents.run(links)
 
     // every edge of the graph with its block label (uncovered tree edges
     // and any cycle-free component's edges keep their own key = singleton)

@@ -61,69 +61,64 @@ object Betweenness {
     if (graft.Local.fits(sess, "betweenness", e.count())) {
       import sess.implicits._
       val es = e.as[(String, String)].collect()
-      val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
-      es.foreach { case (u, v) =>
-        adj.getOrElseUpdate(u, new scala.collection.mutable.ArrayBuffer[String]) += v
-      }
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val adj = graft.Local.directed(g)
+      val bfs = new graft.Local.Bfs(adj)
+      val (order, dist) = (bfs.order, bfs.dist)
       val srcs = sources.select(col(sourceCol).cast("string").as("s"))
         .where(col("s").isNotNull).distinct().as[String].collect()
-      val bcFp = new scala.collection.mutable.LinkedHashMap[String, Long]
-      val bcN = new scala.collection.mutable.HashMap[String, Long]
+      val sigma = new Array[Long](g.n)
+      val delta = new Array[Long](g.n)
+      val bcFp = new Array[Long](g.n)
+      val bcN = new Array[Long](g.n)
       var totalPairs = 0L
-      var over = false
       var si = 0
-      while (si < srcs.length && !over) {
-        val s = srcs(si)
-        val dist = new scala.collection.mutable.HashMap[String, Int]
-        val sigma = new scala.collection.mutable.HashMap[String, Long]
-        dist(s) = 0; sigma(s) = 1L
-        val byLevel = new scala.collection.mutable.ArrayBuffer[Array[String]]
-        byLevel += Array(s)
-        var frontier = Array(s)
-        var d = 0
-        while (frontier.nonEmpty && d < maxDepth) {
-          d += 1
-          val acc = new scala.collection.mutable.LinkedHashMap[String, Long]
-          frontier.foreach { u =>
-            adj.get(u).foreach(_.foreach { v =>
-              if (!dist.contains(v)) acc(v) = acc.getOrElse(v, 0L) + sigma(u)
-            })
-          }
-          frontier = acc.keys.toArray
-          frontier.foreach { v => dist(v) = d; sigma(v) = acc(v) }
-          if (frontier.nonEmpty) byLevel += frontier
-        }
-        totalPairs += dist.size
-        if (2L * totalPairs > budget) over = true
+      while (si < srcs.length && 2L * totalPairs <= budget) {
+        val s = g.id(srcs(si))
+        if (s < 0) totalPairs += 1 // a source on no edge settles only itself
         else {
-          // backward: strictly descending levels, δ_v final before its
-          // predecessors; only δ > 0 rows exist (the distributed filter)
-          val delta = new scala.collection.mutable.HashMap[String, Long]
-          var lvl = byLevel.length - 2
-          while (lvl >= 0) {
-            byLevel(lvl).foreach { u =>
-              var sum = 0L
-              val du = dist(u)
-              adj.get(u).foreach(_.foreach { v =>
-                if (dist.getOrElse(v, -1) == du + 1)
-                  sum += (sigma(u) * (scale + delta.getOrElse(v, 0L))) / sigma(v)
-              })
-              if (sum > 0L) delta(u) = sum
+          bfs.run(s, maxDepth)
+          totalPairs += bfs.size
+          if (2L * totalPairs <= budget) {
+            // forward: visit order is level order, so σ_u is final before
+            // u passes it on to its next-level successors
+            var i = 0
+            while (i < bfs.size) { sigma(order(i)) = 0L; i += 1 }
+            sigma(s) = 1L
+            i = 0
+            while (i < bfs.size) {
+              val u = order(i)
+              var k = adj.off(u)
+              while (k < adj.off(u + 1)) {
+                val v = adj.nbr(k)
+                if (dist(v) == dist(u) + 1) sigma(v) += sigma(u)
+                k += 1
+              }
+              i += 1
             }
-            lvl -= 1
-          }
-          delta.foreach { case (u, del) =>
-            if (u != s) {
-              bcFp(u) = bcFp.getOrElse(u, 0L) + del
-              bcN(u) = bcN.getOrElse(u, 0L) + 1L
+            // backward: reverse visit order, δ_v final before its
+            // predecessors; only δ > 0 counts (the distributed filter)
+            i = bfs.size - 1
+            while (i >= 0) {
+              val u = order(i)
+              var sum = 0L
+              var k = adj.off(u)
+              while (k < adj.off(u + 1)) {
+                val v = adj.nbr(k)
+                if (dist(v) == dist(u) + 1) sum += (sigma(u) * (scale + delta(v))) / sigma(v)
+                k += 1
+              }
+              delta(u) = sum
+              if (sum > 0L && u != s) { bcFp(u) += sum; bcN(u) += 1L }
+              i -= 1
             }
           }
         }
         si += 1
       }
       if (graft.Local.fits(sess, "betweenness.pairs", 2L * totalPairs)) {
-        return bcFp.toSeq.map { case (id, fp) => (id, fp, bcN(id)) }
-          .toDF("id", "bc_fp", "n_sources")
+        return (0 until g.n).filter(bcN(_) > 0L)
+          .map(u => (g.ids(u), bcFp(u), bcN(u))).toDF("id", "bc_fp", "n_sources")
       } // else fall through to the distributed loop
     }
     // ---- forward: (s, id, dist, sigma) ----

@@ -58,8 +58,7 @@ object Bridges {
       .distinct())
   }
 
-  def bridges(edges: DataFrame, maxDepth: Int = 64,
-      ccSmallThreshold: Long = 100000L): DataFrame = {
+  def bridges(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
     val und = normalize(edges)
     // r6: size-gated driver-local cut structure (the k-core local-peel
     // pattern): the bridge set is a unique property of the graph, so the
@@ -73,7 +72,7 @@ object Bridges {
         return cut.bridges.toSeq.toDF("a", "b")
       case None => ()
     }
-    val (treeEdges, _, cover) = cycleCover(und, maxDepth, ccSmallThreshold)
+    val (treeEdges, _, cover) = cycleCover(und, maxDepth)
     val covered = cover.select("c", "p").distinct()
     treeEdges.join(covered, Seq("c", "p"), "left_anti")
       .select(least(col("c"), col("p")).as("a"),
@@ -143,16 +142,15 @@ object Bridges {
     * cycle): `(na, nb, c, p)`. Bridges = tree edges absent from `cover`;
     * biconnected blocks = connected components over edges linked by
     * `cover` rows (Articulation). */
-  private[graph] def cycleCover(und: DataFrame, maxDepth: Int,
-      ccSmallThreshold: Long): (DataFrame, DataFrame, DataFrame) = {
+  private[graph] def cycleCover(und: DataFrame,
+      maxDepth: Int): (DataFrame, DataFrame, DataFrame) = {
     require(maxDepth >= 1, "bridges: maxDepth must be >= 1")
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
 
     // roots = component minima (the CC label convention)
     val comp = ConnectedComponents.run(
-      und.select(col("a").as("src"), col("b").as("dst")),
-      smallThreshold = ccSmallThreshold)
+      und.select(col("a").as("src"), col("b").as("dst")))
     var visited = graft.Materialize(
       comp.where(col("id") === col("component"))
         .select(col("id"), lit(null).cast("string").as("parent"),

@@ -68,38 +68,31 @@ object Distances {
     val sess = edges.sparkSession
     val budget = graft.Local.maxEntries(sess)
     if (graft.Local.fits(sess, "distances", nE)) {
-      val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
-      e.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getString(0), new scala.collection.mutable.ArrayBuffer[String]) += r.getString(1)
-      }
-      val lms = settled.select("landmark").collect().map(_.getString(0))
+      import sess.implicits._
+      val es = e.as[(String, String)].collect()
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val bfs = new graft.Local.Bfs(graft.Local.directed(g))
+      val lms = settled.select("landmark").as[String].collect()
       val out = new scala.collection.mutable.ArrayBuffer[(String, String, Int)]
-      var over = false
       var li = 0
-      while (li < lms.length && !over) {
+      while (li < lms.length && 2L * out.length <= budget) {
         val lm = lms(li)
-        val dist = new scala.collection.mutable.HashMap[String, Int]
-        dist(lm) = 0
-        var frontier = List(lm)
-        var d = 0
-        while (frontier.nonEmpty && d < maxDepth && !over) {
-          d += 1
-          val next = new scala.collection.mutable.ArrayBuffer[String]
-          frontier.foreach { u =>
-            adj.get(u).foreach(_.foreach { v =>
-              if (!dist.contains(v)) { dist(v) = d; next += v }
-            })
+        val s = g.id(lm)
+        if (s < 0) out += ((lm, lm, 0)) // a landmark on no edge reaches itself
+        else {
+          bfs.run(s, maxDepth)
+          var i = 0
+          while (i < bfs.size) {
+            val v = bfs.order(i)
+            out += ((g.ids(v), lm, bfs.dist(v)))
+            i += 1
           }
-          frontier = next.toList
         }
-        dist.foreach { case (id, dd) => out += ((id, lm, dd)) }
-        if (2L * out.length > budget) over = true
         li += 1
       }
-      if (graft.Local.fits(sess, "distances.pairs", 2L * out.length)) {
-        import sess.implicits._
-        return sess.createDataset(out.toSeq).toDF("id", "landmark", "dist")
-      } // else: fall through to the distributed loop (budget exceeded)
+      if (graft.Local.fits(sess, "distances.pairs", 2L * out.length))
+        return out.toSeq.toDF("id", "landmark", "dist")
+      // else fall through to the distributed loop (budget exceeded)
     }
     var nFrontier = settled.count()
     var nSettled = nFrontier

@@ -365,40 +365,25 @@ object GraphQuery {
     val sess = edges.sparkSession
     val budget = graft.Local.maxEntries(sess)
     if (graft.Local.fits(sess, "reachable", nE)) {
-      val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
-      e.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getString(0), new scala.collection.mutable.ArrayBuffer[String]) += r.getString(1)
-      }
+      import sess.implicits._
+      val es = e.as[(String, String)].collect()
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val bfs = new graft.Local.Bfs(graft.Local.directed(g))
       val out = new scala.collection.mutable.ArrayBuffer[(String, String)]
-      var over = false
-      val it = adj.keysIterator
-      while (it.hasNext && !over) {
-        val s0 = it.next()
-        // first-visit BFS; (s0, s0) IS emitted when a cycle returns (the
-        // semi-naive closure contains it), but s0 never re-expands
-        val reached = new scala.collection.mutable.HashSet[String]
-        val expanded = scala.collection.mutable.HashSet(s0)
-        var frontier = List(s0)
-        var d = 0
-        while (frontier.nonEmpty && d < maxHops && !over) {
-          d += 1
-          val next = new scala.collection.mutable.ArrayBuffer[String]
-          frontier.foreach { u =>
-            adj.get(u).foreach(_.foreach { v =>
-              if (reached.add(v)) out += ((s0, v))
-              if (expanded.add(v)) next += v
-            })
-          }
-          if (2L * out.length > budget) over = true
-          frontier = next.toList
-        }
-        // hops in the distributed loop count JOIN rounds (paths of length
-        // maxHops are included); BFS depth matches exactly
+      var s = 0
+      while (s < g.n && 2L * out.length <= budget) {
+        // (s, s) IS emitted when a cycle returns (the semi-naive closure
+        // contains it); hops in the distributed loop count JOIN rounds
+        // (paths of length maxHops are included), BFS depth matches
+        bfs.run(s, maxHops)
+        var i = 1
+        while (i < bfs.size) { out += ((g.ids(s), g.ids(bfs.order(i)))); i += 1 }
+        if (bfs.returned) out += ((g.ids(s), g.ids(s)))
+        s += 1
       }
-      if (graft.Local.fits(sess, "reachable.pairs", 2L * out.length)) {
-        import sess.implicits._
-        return sess.createDataset(out.toSeq).toDF("src", "dst")
-      } // else fall through to the distributed loop
+      if (graft.Local.fits(sess, "reachable.pairs", 2L * out.length))
+        return out.toSeq.toDF("src", "dst")
+      // else fall through to the distributed loop
     }
     var nClosure = nE
     var closure = e

@@ -42,10 +42,10 @@ import org.apache.spark.sql.functions._
   * Each step is ONE lazily-materialized job (the signature/count action
   * stores the checkpoint — the CC discipline). Real KGs are DAG-ish with
   * small cores: TRIM deletes the DAG part in O(longest tail) cheap rounds
-  * and coloring only ever runs on the cyclic residue. Below
-  * `smallThreshold` edges the problem solves driver-side with iterative
-  * Tarjan (identical contract, none of the per-round stage latency) — the
-  * same hybrid as ConnectedComponents.run.
+  * and coloring only ever runs on the cyclic residue. When the edges fit
+  * the driver budget (`graft.Local`) the problem solves driver-side with
+  * iterative Tarjan (identical contract, none of the per-round stage
+  * latency) — the same hybrid as ConnectedComponents.run.
   */
 object Scc {
 
@@ -54,8 +54,7 @@ object Scc {
     * @return (id, scc) for every node appearing in `edges`; scc = min
     *         member id of the node's strongly connected component. */
   def components(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", maxRounds: Int = 30, maxPropRounds: Int = 100,
-      smallThreshold: Long = 100000L): DataFrame = {
+      dstCol: String = "dst", maxRounds: Int = 30, maxPropRounds: Int = 100): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -73,8 +72,8 @@ object Scc {
       .distinct()
 
     // hybrid gate: one take() both sizes and collects (the CC discipline)
-    val labeled = graft.Local.take(cleaned, "scc", smallThreshold) match {
-      case Some(head) => tarjanLocal(spark, head.map(r => (r.getString(0), r.getString(1))))
+    val labeled = graft.Local.take(cleaned, "scc", graft.Local.maxEntries(spark)) match {
+      case Some(head) => tarjanLocal(spark, head.map(_.getString(0)), head.map(_.getString(1)))
       case None => distributed(cleaned, maxRounds, maxPropRounds)
     }
 
@@ -204,70 +203,49 @@ object Scc {
     } else acc
   }
 
-  /** Driver-side ITERATIVE Tarjan (explicit stacks — no recursion, so a
-    * 100k-edge chain cannot blow the JVM stack). Same contract as the
-    * distributed path; SccSpec locks the parity. */
+  /** Driver-side ITERATIVE Tarjan over the directed CSR (explicit
+    * stacks — no recursion, so a long chain cannot blow the JVM stack).
+    * Labels each node with its component's DFS root, which the caller
+    * relabels to the min member as it does the distributed path's max;
+    * SccSpec locks the parity. */
   private def tarjanLocal(spark: org.apache.spark.sql.SparkSession,
-      es: Array[(String, String)]): DataFrame = {
+      src: Array[String], dst: Array[String]): DataFrame = {
     import spark.implicits._
-    import scala.collection.mutable
-    val adj = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
-    val nodes = mutable.LinkedHashSet.empty[String]
-    es.foreach { case (a, b) =>
-      nodes += a; nodes += b
-      if (a != b) adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
+    val g = graft.Local.denseOf(src, dst)
+    val adj = graft.Local.directed(g)
+    val n = g.n
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val next = new Array[Int](n) // each node's next CSR slot to explore
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n) // Tarjan's component stack
+    val work = new Array[Int](n) // the DFS path
+    val label = new Array[Int](n)
+    var (sp, wp, counter) = (0, 0, 0)
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      next(v) = adj.off(v); work(wp) = v; wp += 1
     }
-    val index = mutable.HashMap.empty[String, Int]
-    val low = mutable.HashMap.empty[String, Int]
-    val onStack = mutable.HashSet.empty[String]
-    val stack = mutable.ArrayBuffer.empty[String]
-    var counter = 0
-    val out = mutable.ArrayBuffer.empty[(String, String)]
-
-    for (start <- nodes if !index.contains(start)) {
-      // work stack of (node, next-child cursor)
-      val work = mutable.ArrayBuffer[(String, Int)]((start, 0))
-      while (work.nonEmpty) {
-        val (v, ci) = work.last
-        if (ci == 0) {
-          index(v) = counter; low(v) = counter; counter += 1
-          stack += v; onStack += v
-        }
-        val kids = adj.getOrElse(v, mutable.ArrayBuffer.empty)
-        var advanced = false
-        var i = ci
-        while (i < kids.length && !advanced) {
-          val w = kids(i)
-          if (!index.contains(w)) {
-            work(work.length - 1) = (v, i + 1)
-            work += ((w, 0))
-            advanced = true
-          } else {
-            if (onStack(w)) low(v) = math.min(low(v), index(w))
-            i += 1
-          }
-        }
-        if (!advanced) {
+    for (start <- 0 until n if index(start) < 0) {
+      visit(start)
+      while (wp > 0) {
+        val v = work(wp - 1)
+        if (next(v) < adj.off(v + 1)) {
+          val w = adj.nbr(next(v))
+          next(v) += 1
+          if (index(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          wp -= 1
           if (low(v) == index(v)) {
-            var done = false
-            val comp = mutable.ArrayBuffer.empty[String]
-            while (!done) {
-              val w = stack.remove(stack.length - 1); onStack -= w
-              comp += w
-              if (w == v) done = true
-            }
-            val label = comp.max // caller relabels to min; max matches
-            comp.foreach(m => out += ((m, label)))
+            var w = -1
+            while (w != v) { sp -= 1; w = stack(sp); onStack(w) = false; label(w) = v }
           }
-          work.remove(work.length - 1)
-          if (work.nonEmpty) {
-            val (p, pc) = work.last
-            low(p) = math.min(low(p), low(v))
-            work(work.length - 1) = (p, pc)
-          }
+          if (wp > 0) { val p = work(wp - 1); low(p) = math.min(low(p), low(v)) }
         }
       }
     }
-    spark.createDataset(out.toSeq).toDF("id", "scc")
+    (0 until n).map(v => (g.ids(v), g.ids(label(v)))).toDF("id", "scc")
   }
 }

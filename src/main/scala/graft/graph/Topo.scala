@@ -65,41 +65,43 @@ object Topo {
     // Beyond the gate the anti-join rounds are unchanged.
     val sess = dagEdges.sparkSession
     if (graft.Local.fits(sess, "topo", remEdges.count())) {
-      val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]
-      val indeg = new scala.collection.mutable.HashMap[String, Int]
-      remEdges.collect().foreach { r =>
-        val s = r.getString(0); val d = r.getString(1)
-        adj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[String]) += d
-        indeg(d) = indeg.getOrElse(d, 0) + 1
-        if (!indeg.contains(s)) indeg(s) = indeg.getOrElse(s, 0)
-      }
-      var left = indeg.size
-      var frontier = indeg.collect { case (v, 0) => v }.toList
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Int)]
-      var lvl = 0
-      while (left > 0) {
+      import sess.implicits._
+      val es = remEdges.as[(String, String)].collect()
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val adj = graft.Local.directed(g)
+      val indeg = new Array[Int](g.n)
+      g.dst.foreach(d => indeg(d) += 1)
+      // peel order: order(lo until hi) is the current level, the nodes it
+      // frees append at `size`
+      val order = new Array[Int](g.n)
+      var size = 0
+      for (v <- 0 until g.n if indeg(v) == 0) { order(size) = v; size += 1 }
+      val out = new Array[(String, Int)](g.n)
+      var (lo, hi, lvl) = (0, size, 0)
+      while (lo < g.n) {
         if (lvl > maxDepth)
           throw new IllegalStateException(
             s"Topo.levels: depth exceeded $maxDepth — raise maxDepth")
-        if (frontier.isEmpty)
+        if (lo == hi)
           throw new IllegalStateException(
-            s"Topo.levels: no sources with $left nodes left — the input " +
+            s"Topo.levels: no sources with ${g.n - lo} nodes left — the input " +
               "has a cycle; condense() with a true SCC map first")
-        val next = new scala.collection.mutable.ArrayBuffer[String]
-        frontier.foreach { v =>
-          out += ((v, lvl))
-          adj.get(v).foreach(_.foreach { w =>
-            val d = indeg(w) - 1
-            indeg(w) = d
-            if (d == 0) next += w
-          })
+        while (lo < hi) {
+          val v = order(lo)
+          out(lo) = (g.ids(v), lvl)
+          var k = adj.off(v)
+          while (k < adj.off(v + 1)) {
+            val w = adj.nbr(k)
+            indeg(w) -= 1
+            if (indeg(w) == 0) { order(size) = w; size += 1 }
+            k += 1
+          }
+          lo += 1
         }
-        left -= frontier.length
-        frontier = next.toList
+        hi = size
         lvl += 1
       }
-      import sess.implicits._
-      return sess.createDataset(out.toSeq).toDF("id", "level")
+      return out.toSeq.toDF("id", "level")
     }
     var acc: DataFrame = null
     var level = 0

@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
   * duplicates, and orientation are cleaned by [[Bridges.normalize]]. */
 object TwoEdgeCC {
 
-  def components(edges: DataFrame, maxDepth: Int = 64,
-      ccSmallThreshold: Long = 100000L): DataFrame = {
+  def components(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
     val und = Bridges.normalize(edges)
     // r6: size-gated local path (see Bridges.localCut): components =
     // the driver union-find over the non-bridge edges (min-member labels
@@ -44,11 +43,10 @@ object TwoEdgeCC {
         return verts.toSeq.map(v => (v, comp.getOrElse(v, v))).toDF("id", "component")
       case None => ()
     }
-    val br = Bridges.bridges(edges, maxDepth, ccSmallThreshold)
+    val br = Bridges.bridges(edges, maxDepth)
     val rest = und.join(br, Seq("a", "b"), "left_anti")
     val cc = graft.canon.ConnectedComponents.run(
-      rest.select(col("a").as("src"), col("b").as("dst")),
-      smallThreshold = ccSmallThreshold)
+      rest.select(col("a").as("src"), col("b").as("dst")))
     val verts = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
     val singletons = verts.join(cc, Seq("id"), "left_anti")

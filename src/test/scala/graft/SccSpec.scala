@@ -7,9 +7,12 @@ class SccSpec extends SparkSuite {
   import spark.implicits._
 
   private def edges(rows: (String, String)*) = rows.toDF("src", "dst")
-  private def run(e: DataFrame, small: Long = 100000L): Set[(String, String)] =
-    Scc.components(e, smallThreshold = small)
-      .as[(String, String)].collect().toSet
+  /** `distributed` runs at a driver budget of 0, which forces the
+    * distributed twin for any non-empty edge set. */
+  private def run(e: DataFrame, distributed: Boolean = false): Set[(String, String)] = {
+    def go = Scc.components(e).as[(String, String)].collect().toSet
+    if (distributed) withLocalBudget(0)(go) else go
+  }
 
   test("cycle with a tail: the cycle is one SCC, the tail a singleton") {
     val out = run(edges(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")))
@@ -57,7 +60,7 @@ class SccSpec extends SparkSuite {
       ("n20", "n21"), ("n21", "n22"), ("n22", "n20"))).distinct
     val expected = naiveScc(es)
     assert(run(edges(es: _*)) == expected, "driver Tarjan path")
-    assert(run(edges(es: _*), small = -1L) == expected, "distributed path")
+    assert(run(edges(es: _*), distributed = true) == expected, "distributed path")
   }
 
   test("integral ids label by NUMERIC min without caller zero-padding") {
@@ -74,8 +77,7 @@ class SccSpec extends SparkSuite {
     assert(out == Set((-10L, -10L), (-2L, -10L), (5L, -10L),
       (Long.MinValue, Long.MinValue)))
     // distributed path agrees
-    val dist = Scc.components(e, smallThreshold = -1L)
-      .as[(Long, Long)].collect().toSet
+    val dist = withLocalBudget(0)(Scc.components(e).as[(Long, Long)].collect().toSet)
     assert(dist == out)
   }
 
@@ -85,11 +87,11 @@ class SccSpec extends SparkSuite {
     // round 1 harvests only {e,f}, round 2 {c,d}, round 3 {a,b}
     val chain = edges(("e", "f"), ("f", "e"), ("c", "d"), ("d", "c"),
       ("a", "b"), ("b", "a"), ("f", "c"), ("d", "a"))
-    val out = run(chain, small = -1L)
+    val out = run(chain, distributed = true)
     assert(out == Set(("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"),
       ("e", "e"), ("f", "e")))
     intercept[IllegalStateException] {
-      Scc.components(chain, smallThreshold = -1L, maxRounds = 2).collect()
+      withLocalBudget(0)(Scc.components(chain, maxRounds = 2).collect())
     }
   }
 
@@ -97,14 +99,17 @@ class SccSpec extends SparkSuite {
     val es = (1 to 60).map { i =>
       (f"n${i * 17 % 31}%02d", f"n${(i * 17 % 31 + i % 5 + 1) % 31}%02d")
     }.distinct
-    val base = run(edges(es: _*), small = -1L)
+    val base = run(edges(es: _*), distributed = true)
     val shuffled = edges(es: _*).repartition(7)
-    assert(run(shuffled, small = -1L) == base)
-    assert(run(shuffled, small = 100000L) == base)
+    assert(run(shuffled, distributed = true) == base)
+    assert(run(shuffled) == base)
   }
 
   test("empty edge set yields an empty result on both paths") {
     val e = Seq.empty[(String, String)].toDF("src", "dst")
-    assert(run(e).isEmpty && run(e, small = -1L).isEmpty)
+    // an empty edge set fits a budget of 0; a negative budget skips the
+    // probe, so the distributed twin runs
+    val dist = withLocalBudget(-1)(Scc.components(e).collect())
+    assert(run(e).isEmpty && dist.isEmpty)
   }
 }

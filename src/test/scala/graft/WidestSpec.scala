@@ -67,5 +67,12 @@ class WidestSpec extends SparkSuite {
     val local = go(e)
     val dist = withLocalBudget(0)(go(e))
     assert(local == dist)
+    // a null seed is dropped on both sides (the final anti join on `id`
+    // would keep a null seed row)
+    val chain = Seq(("a", "b", 5L), ("b", "c", 3L)).toDF("src", "dst", "w")
+    val nullSeed = Seq("a", null).toDF("id")
+    def goN = graft.graph.Widest.paths(chain, nullSeed).as[(String, Long)].collect().toSet
+    assert(goN == Set(("b", 5L), ("c", 3L)))
+    assert(withLocalBudget(0)(goN) == goN)
   }
 }
