@@ -26,9 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    measure, the limit and the path taken.
   *  - [[order]]: Spark's string order, the one the distributed twins'
   *    `min`, `<` and `orderBy` apply.
-  *  - [[components]]: the driver union-find (min root under [[order]]).
   *  - [[dense]] / [[denseOf]], then [[undirected]] or [[directed]]: dense
   *    ids and an int-array CSR adjacency over them.
+  *  - [[UnionFind]]: the driver union-find, over dense ids;
+  *    [[components]] labels String ids with it (min member under
+  *    [[order]]).
   *  - [[Bfs]]: one level-synchronous BFS over a CSR, one source at a
   *    time with a depth bound, on int arrays (the distance, closure and
   *    path-count replays). */
@@ -72,25 +74,6 @@ object Local {
 
   def lt(a: String, b: String): Boolean = order.lt(a, b)
 
-  /** Union-find with path compression: node → min id of its component
-    * under [[order]], for every node of `es`. */
-  def components(es: Iterable[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    parent.keys.iterator.map(k => k -> find(k)).toMap
-  }
-
   /** An edge list over dense ids: `ids(i)` is the original id of dense id
     * `i`; edge `j` runs `src(j)` → `dst(j)`; `id(k)` is the dense id of
     * `k`, or −1 when `k` is no endpoint. */
@@ -127,6 +110,39 @@ object Local {
     }
     val (s, d) = (src.map(id), dst.map(id))
     new Dense(ids.toArray, s, d, k => { val got = ix.get(k); if (got == null) -1 else got.intValue })
+  }
+
+  /** Union-find over the ints `0 until n`, with path halving; a union
+    * keeps the smaller root. */
+  final class UnionFind(n: Int) {
+    private val parent = Array.tabulate(n)(identity)
+
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+
+    def union(a: Int, b: Int): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+  }
+
+  /** Node → min id of its component under [[order]], for every node of
+    * `es`. */
+  def components(es: Iterable[(String, String)]): Map[String, String] = {
+    val pairs = es.toArray
+    val g = denseOf(pairs.map(_._1), pairs.map(_._2))
+    val uf = new UnionFind(g.n)
+    var i = 0
+    while (i < g.src.length) { uf.union(g.src(i), g.dst(i)); i += 1 }
+    val least = Array.fill(g.n)(-1) // per root: its min member
+    g.ids.indices.foreach { v =>
+      val r = uf.find(v)
+      if (least(r) < 0 || lt(g.ids(v), g.ids(least(r)))) least(r) = v
+    }
+    g.ids.indices.iterator.map(v => g.ids(v) -> g.ids(least(uf.find(v)))).toMap
   }
 
   /** CSR adjacency: slots `off(v) until off(v + 1)` hold v's neighbours

@@ -61,16 +61,14 @@ object Coloring {
     // (gate-forced parity asserted in ColoringSpec; beyond the gate the
     // wave loop below is unchanged).
     if (graft.Local.fits(session, "coloring", adj.count()))
-      return jonesPlassmannLocal(adj, un)
+      return jonesPlassmannLocal(adj, un, maxRounds)
     var colored = Seq.empty[(String, Int, Int)].toDF("id", "color", "round")
     var round = 0
     var remaining = un.count()
     val nTotal = remaining
     while (remaining > 0) {
       round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"coloring: $remaining node(s) uncolored after $maxRounds rounds")
+      if (round > maxRounds) throw uncolored(remaining, maxRounds)
       // r6: the uncolored state (`remaining` rows, counted by the loop)
       // and the colored table (nTotal − remaining rows) are node-scale
       // with known counts — gate-hint them into the edge-scale joins
@@ -108,50 +106,46 @@ object Coloring {
     colored
   }
 
+  private def uncolored(n: Long, maxRounds: Int) = new IllegalStateException(
+    s"coloring: $n node(s) uncolored after $maxRounds rounds")
+
   /** Driver-local exact replay of the Jones–Plassmann result: sequential
     * greedy in decreasing (priority, id) order, wave(v) = 1 + max wave of
     * v's higher-(p, id) neighbors (0-max → wave 1), color(v) = mex over
     * those same neighbors' colors. Identical output to the wave loop —
     * the equivalence the class docstring proves and the committed
-    * sequential-greedy oracle fixture already checks. */
-  private def jonesPlassmannLocal(adj: DataFrame, un: DataFrame): DataFrame = {
+    * sequential-greedy oracle fixture already checks — including its
+    * error when some wave exceeds `maxRounds`. */
+  private def jonesPlassmannLocal(adj: DataFrame, un: DataFrame, maxRounds: Int): DataFrame = {
     val spark = un.sparkSession
     import spark.implicits._
-    val prios = un.as[(String, Long)].collect()
-    // decreasing (p, id): -p ascending, id DESCENDING on ties (Spark's
-    // string order, as the wave loop's `nb > id` compares)
-    val order = prios.sortBy { case (id, p) => (-p, id) }(
-      Ordering.Tuple2(Ordering.Long, graft.Local.order.reverse))
-    val edgesArr = adj.as[(String, String)].collect()
-    val nbrs = new java.util.HashMap[String, java.util.ArrayList[String]]()
-    edgesArr.foreach { case (id, nb) =>
-      nbrs.computeIfAbsent(id, _ => new java.util.ArrayList[String]()).add(nb)
-    }
-    val color = new java.util.HashMap[String, Int]()
-    val wave = new java.util.HashMap[String, Int]()
-    val out = new scala.collection.mutable.ArrayBuffer[(String, Int, Int)](order.length)
-    order.foreach { case (id, _) =>
-      var maxWave = 0
-      val used = new java.util.HashSet[Integer]()
-      val ns = nbrs.get(id)
-      if (ns != null) {
-        val it = ns.iterator()
-        while (it.hasNext) {
-          val u = it.next()
-          val cu = color.get(u)
-          if (color.containsKey(u)) { // already colored ⇔ higher (p, id)
-            used.add(cu)
-            val wu = wave.get(u)
-            if (wu > maxWave) maxWave = wu
-          }
+    val es = adj.as[(String, String)].collect()
+    val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+    val nbrs = graft.Local.directed(g) // adj holds both orientations
+    // decreasing (p, id), ids in Spark's string order (the wave loop's
+    // `nbp > p || (nbp === p && nb > id)`)
+    val order = un.as[(String, Long)].collect().sortBy { case (id, p) => (p, id) }(
+      Ordering.Tuple2(Ordering.Long, graft.Local.order).reverse).map(x => g.id(x._1))
+    val color = Array.fill(g.n)(-1)
+    val wave = new Array[Int](g.n)
+    val taken = Array.fill(g.n + 1)(-1) // taken(c) == v: a neighbor of v has color c
+    order.foreach { v =>
+      var k = nbrs.off(v)
+      while (k < nbrs.off(v + 1)) {
+        val u = nbrs.nbr(k)
+        if (color(u) >= 0) { // already colored ⇔ higher (p, id)
+          taken(color(u)) = v
+          wave(v) = math.max(wave(v), wave(u))
         }
+        k += 1
       }
       var c = 0
-      while (used.contains(c)) c += 1
-      color.put(id, c)
-      wave.put(id, maxWave + 1)
-      out += ((id, c, maxWave + 1))
+      while (taken(c) == v) c += 1
+      color(v) = c
+      wave(v) += 1
     }
-    out.toSeq.toDF("id", "color", "round")
+    val late = wave.count(_ > maxRounds)
+    if (late > 0) throw uncolored(late, maxRounds)
+    order.map(v => (g.ids(v), color(v), wave(v))).toSeq.toDF("id", "color", "round")
   }
 }

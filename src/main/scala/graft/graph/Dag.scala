@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   *   dist_{r+1}(v) = max(dist_r(v), max_{u→v} dist_r(u) + w(u,v))
   * Distances only grow, so (count, exact Σdist) is a convergence
   * certificate: one tiny aggregate per round, no row-diff ([[relax]],
-  * shared with `Widest.paths`). A graph that fails to
-  * converge within `maxRounds` is rejected (cycle or depth > bound) —
-  * longest-path is only well-defined on DAGs, and silently looping would
-  * fabricate distances.
+  * shared with `Widest.paths`). Longest paths are defined on DAGs; on
+  * other graphs the rounds give what the fixed point gives. A cycle no
+  * source reaches is never seeded, so its nodes get no rows; a cycle a
+  * source reaches converges when its total weight is 0. Only a
+  * positive-weight cycle a source reaches grows without bound: it is
+  * rejected with "no fixed point" after `maxRounds`, as is a DAG deeper
+  * than `maxRounds`.
   *
   * Scale shape per round: one src-keyed equi join (frontier × edges), one
   * dst-keyed MAX — the PageRank/BFS floor; rounds = DAG depth. Weights
@@ -29,7 +32,9 @@ object Dag {
 
   /** edges: (src, dst, w) with w a non-negative integer column.
     * Returns (id, dist) for every node reachable from the source set
-    * (in-degree-0 nodes; sources themselves at dist 0). */
+    * (in-degree-0 nodes; sources themselves at dist 0). Throws "no fixed
+    * point" only for a positive-weight cycle a source reaches, or a
+    * depth beyond `maxRounds`. */
   def longestPaths(edges: DataFrame, maxRounds: Int = 64): DataFrame =
     relax(edges, None, _ + _, _ + _, "dag", maxRounds,
       " — cycle in the edge list, or depth exceeds the bound").toDF("id", "dist")

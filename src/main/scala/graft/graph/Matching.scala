@@ -42,40 +42,30 @@ object Matching {
     // to the aggregate rounds (MatchingSpec gate-forces both paths).
     val liveM = graft.Materialize(live, eager = false)
     if (graft.Local.fits(spark, "matching", liveM.count())) {
-      // min(struct(p, a, b)): p, then a and b in Spark's string order
-      val order = Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order)
-      var es = liveM.as[(String, String, Long)].collect()
-        .map { case (a, b, p) => (p, a, b) }
-      val out = new scala.collection.mutable.ArrayBuffer[(String, String, Long)]
-      var done0 = false
+      // edge j is j-th in min(struct(p, a, b))'s order: p, then a and b
+      // in Spark's string order
+      val es = liveM.as[(String, String, Long)].collect().sortBy(e => (e._3, e._1, e._2))(
+        Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order))
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val nodeMin = new Array[Int](g.n)
+      val matched = new Array[Boolean](g.n)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      var alive = es.indices.toArray
+      var done = false
       var it = 0
-      while (!done0 && it < maxIter) {
-        val nodeMin = new java.util.HashMap[String, (Long, String, String)]
-        es.foreach { e =>
-          val cur1 = nodeMin.get(e._2)
-          if (cur1 == null || order.lt(e, cur1)) nodeMin.put(e._2, e)
-          val cur2 = nodeMin.get(e._3)
-          if (cur2 == null || order.lt(e, cur2)) nodeMin.put(e._3, e)
-        }
-        // (p, a, b) is unique per edge, so value equality identifies the
-        // winner at each endpoint exactly
-        val winners = es.filter(e =>
-          nodeMin.get(e._2) == e && nodeMin.get(e._3) == e)
-        if (winners.isEmpty) done0 = true
+      while (!done && it < maxIter) {
+        // descending: each endpoint ends on its least live edge
+        alive.reverseIterator.foreach { j => nodeMin(g.src(j)) = j; nodeMin(g.dst(j)) = j }
+        val winners = alive.filter(j => nodeMin(g.src(j)) == j && nodeMin(g.dst(j)) == j)
+        if (winners.isEmpty) done = true
         else {
-          val gone = new java.util.HashSet[String]
-          winners.foreach { case (p, a, b) =>
-            out += ((a, b, p)); gone.add(a); gone.add(b); ()
-          }
-          es = es.filter(e => !gone.contains(e._2) && !gone.contains(e._3))
+          winners.foreach { j => out += es(j); matched(g.src(j)) = true; matched(g.dst(j)) = true }
+          alive = alive.filter(j => !matched(g.src(j)) && !matched(g.dst(j)))
         }
         it += 1
       }
-      if (!done0 && it >= maxIter)
-        throw new IllegalStateException(
-          s"maximal matching did not converge in $maxIter rounds")
-      return out.toSeq.map { case (a, b, p) => (a, b, p) }
-        .toDF("a", "b", "priority")
+      if (!done) throw noConvergence(maxIter)
+      return out.toSeq.toDF("a", "b", "priority")
     }
     live = liveM
     var matched = Seq.empty[(String, String, Long)].toDF("a", "b", "p")
@@ -106,9 +96,10 @@ object Matching {
     }
     // maximality: a live edge both of whose endpoints are unmatched would
     // contradict the fixpoint — verify instead of hoping (q122 discipline)
-    if (!done && i >= maxIter)
-      throw new IllegalStateException(
-        s"maximal matching did not converge in $maxIter rounds")
+    if (!done) throw noConvergence(maxIter)
     matched.select(col("a"), col("b"), col("p").as("priority"))
   }
+
+  private def noConvergence(maxIter: Int) =
+    new IllegalStateException(s"maximal matching did not converge in $maxIter rounds")
 }

@@ -30,18 +30,21 @@ object Mis {
     * appears in NO or exactly one row; adding any absent node would break
     * independence (maximality).
     *
-    * `prioOf` builds the total-order priority struct from an id column —
-    * the default is the engine-standard (xxhash64, id). [[graft.canon
-    * .CorrCluster]] swaps in the PORTABLE fingerprint so its sequential
-    * oracle can replay the identical order in another engine; the
-    * selected set is the lexicographically-first MIS w.r.t. whatever
-    * order is passed (local-min rounds == the sequential greedy scan —
-    * Blelloch, Fineman & Shun, SPAA 2012). */
+    * `prioOf` builds the priority from an id column — the default is the
+    * engine-standard (xxhash64, id). Nodes are ordered by
+    * `struct(prioOf(id), id)`, so ids break the ties of any priority.
+    * [[graft.canon.CorrCluster]] swaps in the PORTABLE fingerprint so its
+    * sequential oracle can replay the identical order in another engine;
+    * the selected set is the lexicographically-first MIS w.r.t. that
+    * order (local-min rounds == the sequential greedy scan — Blelloch,
+    * Fineman & Shun, SPAA 2012). */
   def maximalIndependentSet(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxRounds: Int = 200,
       prioOf: Column => Column =
         c => struct(xxhash64(c).as("h"), c.as("i"))): DataFrame = {
     require(maxRounds >= 1, "maximalIndependentSet: maxRounds must be >= 1")
+    // the id ends the key, so the order is total even where prioOf ties
+    val key = (c: Column) => struct(prioOf(c).as("p"), c.as("i"))
     val und = edges
       .select(col(srcCol).cast("string").as("a"), col(dstCol).cast("string").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
@@ -50,94 +53,12 @@ object Mis {
       und.union(und.select(col("b").as("a"), col("a").as("b"))).distinct())
     val spark = edges.sparkSession
     import spark.implicits._
-    // r6: size-gated driver-local replay (the k-core local-peel pattern):
-    // selection is a pure function of the graph and the priority order
-    // (the lexicographically-first MIS), and the local loop replays the
-    // SAME waves — priorities are evaluated by the caller's own Column
-    // expression in one projection, then compared field-by-field with
-    // the engine's orderings (graft.Local.order for strings). MisSpec
-    // gate-forces parity incl. round numbers and the isolated backfill.
-    val local = if (!graft.Local.fits(spark, "mis", live.count())) None else {
-      val liveEdges0 = live.as[(String, String)].collect()
-      val allIds = liveEdges0.map(_._1).distinct
-      val prioRows = spark.createDataset(allIds.toSeq).toDF("id")
-        .select(col("id"), prioOf(col("id")).as("p")).collect()
-      // cmpVal below orders exactly these field types; a null field or any
-      // other type (Float, Decimal, Boolean, Timestamp, nested struct…)
-      // takes the distributed rounds, whose struct ordering covers them all
-      def comparable(v: Any): Boolean = v match {
-        case _: Long | _: Int | _: String | _: Double | _: Short | _: Byte => true
-        case _ => false
-      }
-      if (prioRows.forall(_.getStruct(1).toSeq.forall(comparable)))
-        Some((liveEdges0, allIds, prioRows))
-      else None
-    }
-    if (local.isDefined) {
-      val (liveEdges0, allIds, prioRows) = local.get
-      import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-      def cmpVal(x: Any, y: Any): Int = (x, y) match {
-        case (a: Long, b: Long) => java.lang.Long.compare(a, b)
-        case (a: Int, b: Int) => Integer.compare(a, b)
-        case (a: String, b: String) => graft.Local.order.compare(a, b)
-        // Spark's double order: -0.0 == 0.0, NaN == NaN and above all
-        case (a: Double, b: Double) => SQLOrderingUtil.compareDoubles(a, b)
-        case (a: Short, b: Short) => java.lang.Short.compare(a, b)
-        case (a: Byte, b: Byte) => java.lang.Byte.compare(a, b)
-        case _ => throw new IllegalArgumentException(
-          s"mis local: unsupported priority field type ${x.getClass}")
-      }
-      def cmpRow(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row): Int = {
-        var i = 0
-        while (i < a.length) {
-          val c = cmpVal(a.get(i), b.get(i))
-          if (c != 0) return c
-          i += 1
-        }
-        0
-      }
-      val prioM = new java.util.HashMap[String, org.apache.spark.sql.Row]
-      prioRows.foreach(r => prioM.put(r.getString(0), r.getStruct(1)))
-      var liveE = liveEdges0
-      val sel = new scala.collection.mutable.LinkedHashMap[String, Int]
-      var round0 = 0
-      var done0 = false
-      while (!done0 && round0 < maxRounds) {
-        round0 += 1
-        val minNbr = new java.util.HashMap[String, org.apache.spark.sql.Row]
-        liveE.foreach { case (a, b) =>
-          val pb = prioM.get(b)
-          val cur = minNbr.get(a)
-          if (cur == null || cmpRow(pb, cur) < 0) minNbr.put(a, pb)
-        }
-        val winners = new scala.collection.mutable.ArrayBuffer[String]
-        minNbr.forEach((a, mn) => {
-          if (cmpRow(prioM.get(a), mn) < 0) winners += a
-          ()
-        })
-        if (winners.isEmpty) done0 = true
-        else {
-          winners.foreach(w => sel.put(w, round0))
-          val dead = new java.util.HashSet[String]
-          winners.foreach(w => { dead.add(w); () })
-          liveE.foreach { case (a, b) => if (sel.contains(a) && sel(a) == round0) dead.add(b) }
-          liveE = liveE.filter { case (a, b) => !dead.contains(a) && !dead.contains(b) }
-        }
-      }
-      if (!done0)
-        throw new IllegalStateException(
-          s"maximalIndependentSet did not converge in $maxRounds rounds " +
-            "(edges halve per round in expectation — raise maxRounds)")
-      // maximality backfill: nodes with no selected ORIGINAL neighbor
-      val nbrOfSel = new java.util.HashSet[String]
-      liveEdges0.foreach { case (a, b) => if (sel.contains(a)) nbrOfSel.add(b) }
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Int)]
-      sel.foreach { case (id, r) => out += ((id, r)) }
-      allIds.foreach { id =>
-        if (!sel.contains(id) && !nbrOfSel.contains(id)) out += ((id, 0))
-      }
-      return out.toSeq.toDF("id", "round")
-    }
+    // r6: size-gated driver-local replay of the SAME waves (selection is a
+    // pure function of the graph and the key order: the
+    // lexicographically-first MIS). MisSpec gate-forces parity incl.
+    // round numbers and the isolated backfill.
+    if (graft.Local.fits(spark, "mis", live.count()))
+      return local(live, key, maxRounds)
     var selected = graft.Materialize(
       Seq.empty[(String, Int)].toDF("id", "round"))
     var round = 0
@@ -146,8 +67,8 @@ object Mis {
       round += 1
       // a node wins iff its (hash, id) priority is strictly below every
       // surviving neighbor's — computed as one neighbor-min aggregate
-      val prio = prioOf(col("a"))
-      val nbrPrio = prioOf(col("b"))
+      val prio = key(col("a"))
+      val nbrPrio = key(col("b"))
       val winners = graft.Materialize(
         live.groupBy(col("a").as("id"))
           .agg(min(nbrPrio).as("minNbr"), first(prio).as("own"))
@@ -175,10 +96,7 @@ object Mis {
           eager = false)
       }
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"maximalIndependentSet did not converge in $maxRounds rounds " +
-          "(edges halve per round in expectation — raise maxRounds)")
+    if (!done) throw noConvergence(maxRounds)
     // maximality: nodes whose every conflict died without selecting them
     // are now isolated — select them all (they conflict with nothing left)
     val all = und.select(col("a").as("id")).union(und.select(col("b").as("id"))).distinct()
@@ -193,5 +111,57 @@ object Mis {
       .join(nbrsOfSelected, Seq("id"), "left_anti")
       .select(col("id"), lit(0).as("round"))
     selected.union(isolated)
+  }
+
+  private def noConvergence(maxRounds: Int) = new IllegalStateException(
+    s"maximalIndependentSet did not converge in $maxRounds rounds " +
+      "(edges halve per round in expectation — raise maxRounds)")
+
+  /** The distributed rounds replayed on the driver over `live` (both
+    * orientations of every edge): v's rank is its place in Spark's own
+    * order of `key`, sorted in the collect. */
+  private def local(live: DataFrame, key: Column => Column, maxRounds: Int): DataFrame = {
+    val spark = live.sparkSession
+    import spark.implicits._
+    val es = live.as[(String, String)].collect()
+    val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+    val nbrs = graft.Local.directed(g)
+    val rank = new Array[Int](g.n)
+    g.ids.toSeq.toDF("id").coalesce(1).sortWithinPartitions(key(col("id")))
+      .as[String].collect().zipWithIndex.foreach { case (v, i) => rank(g.id(v)) = i }
+    // v wins while it has a live neighbor and ranks below all of them
+    val dead = new Array[Boolean](g.n)
+    def wins(v: Int): Boolean = {
+      var k = nbrs.off(v)
+      var any = false
+      while (k < nbrs.off(v + 1)) {
+        val u = nbrs.nbr(k)
+        if (!dead(u)) { if (rank(u) < rank(v)) return false; any = true }
+        k += 1
+      }
+      any
+    }
+    val round = new Array[Int](g.n) // the wave that selected v, or 0
+    var alive = Array.range(0, g.n)
+    var r = 0
+    var done = false
+    while (!done && r < maxRounds) {
+      r += 1
+      val winners = alive.filter(wins)
+      if (winners.isEmpty) done = true
+      else {
+        winners.foreach { v =>
+          round(v) = r
+          dead(v) = true
+          (nbrs.off(v) until nbrs.off(v + 1)).foreach(k => dead(nbrs.nbr(k)) = true)
+        }
+        alive = alive.filter(v => !dead(v))
+      }
+    }
+    if (!done) throw noConvergence(maxRounds)
+    // maximality backfill: nodes with no selected neighbor join at round 0
+    Array.range(0, g.n).filter(v => round(v) > 0 ||
+      (nbrs.off(v) until nbrs.off(v + 1)).forall(k => round(nbrs.nbr(k)) == 0))
+      .map(v => (g.ids(v), round(v))).toSeq.toDF("id", "round")
   }
 }

@@ -49,57 +49,40 @@ object Mst {
         col(weightCol).cast("long").as("w"))
       .groupBy("ua", "va").agg(min("w").as("w")))
     val spark = edges.sparkSession
-    // r6: size-gated driver-local Borůvka replay (the k-core local-peel
-    // pattern): the forest is unique under the (w, ua, va) total order
-    // AND the round column is reproduced by replaying the same per-round
-    // component-min selection (string comparisons in Spark's order,
-    // graft.Local.order; MstSpec gate-forces both paths). Beyond the
-    // gate the join rounds are unchanged.
+    // r6: size-gated driver-local Borůvka replay: the forest is unique
+    // under the (w, ua, va) total order AND the round column is
+    // reproduced by replaying the same per-round component-min selection
+    // (MstSpec gate-forces both paths). Beyond the gate the join rounds
+    // are unchanged.
     if (graft.Local.fits(spark, "mst", e.count())) {
-      import graft.Local.lt
       import spark.implicits._
-      val es = e.as[(String, String, Long)].collect()
-      val compM = new java.util.HashMap[String, String]
-      es.foreach { case (u, v, _) =>
-        compM.put(u, u); compM.put(v, v)
-      }
-      val forestRows = new scala.collection.mutable.ArrayBuffer[(String, String, Long, Int)]
-      var round0 = 0
-      var done0 = false
-      while (!done0 && round0 < maxRounds) {
-        round0 += 1
-        // per-component min cross edge by (w, ua, va) — label-independent
-        val best = new java.util.HashMap[String, (Long, String, String, String, String)]
-        def consider(c: String, cand: (Long, String, String, String, String)): Unit = {
-          val cur = best.get(c)
-          if (cur == null || cand._1 < cur._1 ||
-            (cand._1 == cur._1 && (lt(cand._2, cur._2) ||
-              (cand._2 == cur._2 && lt(cand._3, cur._3)))))
-            best.put(c, cand)
+      // edge j is j-th in (w, ua, va), strings in Spark's order
+      val es = e.as[(String, String, Long)].collect().sortBy(x => (x._3, x._1, x._2))(
+        Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order))
+      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val comp = new graft.Local.UnionFind(g.n)
+      val best = new Array[Int](g.n) // per component root: its min cross edge
+      val forest = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Int)]
+      var round = 0
+      var done = false
+      while (!done && round < maxRounds) {
+        round += 1
+        java.util.Arrays.fill(best, -1)
+        var j = es.length - 1
+        while (j >= 0) { // descending: each root ends on its least edge
+          val (cu, cv) = (comp.find(g.src(j)), comp.find(g.dst(j)))
+          if (cu != cv) { best(cu) = j; best(cv) = j }
+          j -= 1
         }
-        es.foreach { case (u, v, w) =>
-          val cu = compM.get(u); val cv = compM.get(v)
-          if (cu != cv) {
-            val cand = (w, u, v, cu, cv)
-            consider(cu, cand); consider(cv, cand)
-          }
-        }
-        if (best.isEmpty) done0 = true
-        else {
-          import scala.jdk.CollectionConverters._
-          val selected = best.values().asScala.toSet
-          selected.foreach { case (w, u, v, _, _) => forestRows += ((u, v, w, round0)) }
-          // contract: union-find over the selected (cu, cv) links; every
-          // touched label maps to the MIN member of its merged group
-          val relabel = graft.Local.components(selected.map(c => (c._4, c._5)))
-          compM.replaceAll((_, c) => relabel.getOrElse(c, c))
+        val picked = best.filter(_ >= 0).distinct
+        if (picked.isEmpty) done = true
+        else picked.foreach { j =>
+          forest += ((es(j)._1, es(j)._2, es(j)._3, round))
+          comp.union(g.src(j), g.dst(j))
         }
       }
-      if (!done0)
-        throw new IllegalStateException(
-          s"spanningForest did not converge in $maxRounds rounds (components " +
-            "halve per round — raise maxRounds only for graphs beyond 2^64 nodes)")
-      return forestRows.toSeq.toDF("src", "dst", "w", "round")
+      if (!done) throw noConvergence(maxRounds)
+      return forest.toSeq.toDF("src", "dst", "w", "round")
     }
     // component map starts as the identity over the node set
     var comp = graft.Materialize(
@@ -146,13 +129,14 @@ object Mst {
           eager = false)
       }
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"spanningForest did not converge in $maxRounds rounds (components " +
-          "halve per round — raise maxRounds only for graphs beyond 2^64 nodes)")
+    if (!done) throw noConvergence(maxRounds)
     forest.getOrElse {
       import spark.implicits._
       Seq.empty[(String, String, Long, Int)].toDF("src", "dst", "w", "round")
     }
   }
+
+  private def noConvergence(maxRounds: Int) = new IllegalStateException(
+    s"spanningForest did not converge in $maxRounds rounds (components " +
+      "halve per round — raise maxRounds only for graphs beyond 2^64 nodes)")
 }

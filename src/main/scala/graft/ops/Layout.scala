@@ -24,16 +24,6 @@ object Layout {
   def zorderKey(cols: Column*): Column =
     ZOrderKey.keyCol(cols.map(_.cast("long")): _*)
 
-  /** Rank-normalize a column to a dense [0, 2^bits) integer domain —
-    * the standard pre-step when a clustered column is skewed, negative,
-    * or non-numeric (Delta does the same with range-partition ids).
-    * One window pass; use on dimensions, not unbounded facts. */
-  def rankBits(c: Column, bits: Int): Column = {
-    import org.apache.spark.sql.expressions.Window
-    val r = percent_rank().over(Window.orderBy(c))
-    least(floor(r * (1L << bits)).cast("long"), lit((1L << bits) - 1))
-  }
-
   /** Cluster `df` into `numFiles` write tasks by the Z-order of `cols`:
     * range-shuffle on the interleaved key, sort within partitions, key
     * dropped. Write the result with `.write.parquet(...)` — each output

@@ -3,7 +3,7 @@ package graft
 import graft.graph.Coloring
 import org.apache.spark.sql.functions._
 
-class ColoringSpec extends SparkSuite {
+class ColoringSpec extends ReplayTwins {
   import spark.implicits._
 
   /** Independent sequential greedy in decreasing (priority, id) order —
@@ -54,21 +54,14 @@ class ColoringSpec extends SparkSuite {
 
   test("local fast path == distributed wave loop, incl. wave numbers " +
     "(gate forced)") {
-    // r6: jonesPlassmann takes a driver-local sequential replay below
-    // the driver-local budget; force the wave loop with
-    // budget 0 and assert identical (id, color, round) triples.
-    val edges = ((for {
+    val es = ((for {
       u <- 0 until 30; v <- 0 until 30
       if u < v && (u * 13 + v * 7) % 6 < 2
     } yield (s"v$u", s"v$v")) ++ Seq(("v0", "v29"), ("v1", "v28"))).distinct
-    def full(e: Seq[(String, String)]) =
-      Coloring.jonesPlassmann(e.toDF("src", "dst"))
-        .as[(String, Int, Int)].collect().toSet
-    val local = full(edges)
-    val dist = withLocalBudget(0)(full(edges))
-    assert(local == dist)
+      .map { case (s, d) => (s, d, Option(1L)) }
+    val out = wavesAgree(es, waveOps(es).filter(_._1.startsWith("Coloring")), "30 nodes")
+    assert(out("Coloring").isRight && out("Coloring.2").isLeft, out)
   }
-
   test("a clique needs exactly n colors; a path stays within Δ+1 = 3; " +
     "repartitioned input colors identically") {
     val k5 = for { u <- 0 until 5; v <- 0 until 5 if u < v }

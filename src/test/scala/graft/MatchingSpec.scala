@@ -2,7 +2,7 @@ package graft
 
 import graft.graph.Matching
 
-class MatchingSpec extends SparkSuite {
+class MatchingSpec extends ReplayTwins {
   import spark.implicits._
 
   private def run(edges: Seq[(String, String)]) =
@@ -53,13 +53,8 @@ class MatchingSpec extends SparkSuite {
   }
 
   test("gate-forced parity: local wave replay == aggregate rounds") {
-    import spark.implicits._
-    val e = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
-      ("e", "f"), ("g", "h"), ("h", "e")).toDF("src", "dst")
-    def go(df: org.apache.spark.sql.DataFrame) =
-      graft.graph.Matching.maximal(df).as[(String, String, Long)].collect().toSet
-    val local = go(e)
-    val dist = withLocalBudget(0)(go(e))
-    assert(local == dist)
+    val es = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
+      ("e", "f"), ("g", "h"), ("h", "e")).map { case (s, d) => (s, d, Option(1L)) }
+    wavesAgree(es, waveOps(es).filter(_._1 == "Matching"), es.toString)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.graph.Mis
 import org.apache.spark.sql.functions._
 
-class MisSpec extends SparkSuite {
+class MisSpec extends ReplayTwins {
   import spark.implicits._
 
   private def mis(es: Seq[(String, String)]) =
@@ -97,23 +97,8 @@ class MisSpec extends SparkSuite {
   }
 
   test("gate-forced parity: local wave replay == distributed rounds") {
-    import spark.implicits._
-    val e = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
-      ("e", "f"), ("g", "h"), ("h", "i")).toDF("src", "dst")
-    // the default priority, one with a null field, one with a Float field,
-    // and a Double field where -0.0 and 0.0 tie (Spark's double order)
-    val prios: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = Seq(
-      c => struct(xxhash64(c).as("h"), c.as("i")),
-      c => struct(lit(null).cast("long").as("z"), xxhash64(c).as("h"), c.as("i")),
-      c => struct(xxhash64(c).cast("float").as("f"), c.as("i")),
-      c => struct(when(c === "d", lit(-0.0)).otherwise(lit(0.0)).as("d"), c.as("i")))
-    prios.foreach { p =>
-      def go(df: org.apache.spark.sql.DataFrame) =
-        graft.graph.Mis.maximalIndependentSet(df, prioOf = p)
-          .as[(String, Int)].collect().toSet
-      val local = go(e)
-      val dist = withLocalBudget(0)(go(e))
-      assert(local == dist, p(col("id")).toString)
-    }
+    val es = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
+      ("e", "f"), ("g", "h"), ("h", "i")).map { case (s, d) => (s, d, Option(1L)) }
+    wavesAgree(es, waveOps(es).filter(_._1.startsWith("Mis")), es.toString)
   }
 }

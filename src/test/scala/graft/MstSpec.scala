@@ -2,7 +2,7 @@ package graft
 
 import graft.graph.Mst
 
-class MstSpec extends SparkSuite {
+class MstSpec extends ReplayTwins {
   import spark.implicits._
 
   private def forest(rows: (String, String, Long)*) =
@@ -90,13 +90,9 @@ class MstSpec extends SparkSuite {
   }
 
   test("gate-forced parity: local Boruvka replay == join rounds (incl. round col)") {
-    import spark.implicits._
-    val e = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L), ("c", "d", 5L),
-      ("d", "e", 1L), ("e", "c", 4L), ("x", "y", 2L), ("b", "a", 3L)).toDF("src", "dst", "w")
-    def go(df: org.apache.spark.sql.DataFrame) =
-      graft.graph.Mst.spanningForest(df).as[(String, String, Long, Int)].collect().toSet
-    val local = go(e)
-    val dist = withLocalBudget(0)(go(e))
-    assert(local == dist)
+    val es = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L), ("c", "d", 5L),
+      ("d", "e", 1L), ("e", "c", 4L), ("x", "y", 2L), ("b", "a", 3L))
+      .map { case (s, d, w) => (s, d, Option(w)) }
+    wavesAgree(es, waveOps(es).filter(_._1 == "Mst"), es.toString)
   }
 }

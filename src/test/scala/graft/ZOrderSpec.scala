@@ -72,12 +72,4 @@ class ZOrderSpec extends SparkSuite {
     // every x-sorted file spans the FULL y domain — no y-pruning possible
     assert(xExt.forall { case (_, _, _, _, ymin, ymax) => ymax - ymin == 31 })
   }
-
-  test("rankBits maps a skewed domain onto dense non-negative bits") {
-    val skewed = (1 to 1000).map(i => math.pow(i.toDouble, 3).toLong - 500)
-    val df = skewed.toDF("v")
-    val r = df.select(Layout.rankBits(col("v"), 8).as("b")).as[Long].collect()
-    assert(r.min >= 0 && r.max <= 255)
-    assert(r.distinct.length > 200) // near-uniform occupancy
-  }
 }
