@@ -28,6 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `min`, `<` and `orderBy` apply.
   *  - [[dense]] / [[denseOf]], then [[undirected]] or [[directed]]: dense
   *    ids and an int-array CSR adjacency over them.
+  *  - [[ordered]]: String dense ids renumbered in [[order]], so the
+  *    replays compare ints where the distributed twins compare strings.
   *  - [[UnionFind]]: the driver union-find, over dense ids;
   *    [[components]] labels String ids with it (min member under
   *    [[order]]).
@@ -130,19 +132,25 @@ object Local {
   }
 
   /** Node → min id of its component under [[order]], for every node of
-    * `es`. */
+    * `es`: over [[ordered]] ids the smaller root is that min. */
   def components(es: Iterable[(String, String)]): Map[String, String] = {
     val pairs = es.toArray
-    val g = denseOf(pairs.map(_._1), pairs.map(_._2))
+    val g = ordered(denseOf(pairs.map(_._1), pairs.map(_._2)))
     val uf = new UnionFind(g.n)
     var i = 0
     while (i < g.src.length) { uf.union(g.src(i), g.dst(i)); i += 1 }
-    val least = Array.fill(g.n)(-1) // per root: its min member
-    g.ids.indices.foreach { v =>
-      val r = uf.find(v)
-      if (least(r) < 0 || lt(g.ids(v), g.ids(least(r)))) least(r) = v
-    }
-    g.ids.indices.iterator.map(v => g.ids(v) -> g.ids(least(uf.find(v)))).toMap
+    g.ids.indices.iterator.map(v => g.ids(v) -> g.ids(uf.find(v))).toMap
+  }
+
+  /** `g` with its dense ids renumbered to ascend in [[order]], so that
+    * comparing two ids compares their strings as Spark does. */
+  def ordered(g: Dense[String]): Dense[String] = {
+    val utf = g.ids.map(UTF8String.fromString)
+    val byOrder = Array.range(0, g.n).sortWith((a, b) => utf(a).compareTo(utf(b)) < 0)
+    val rank = new Array[Int](g.n)
+    byOrder.indices.foreach(i => rank(byOrder(i)) = i)
+    new Dense(byOrder.map(g.ids), g.src.map(rank), g.dst.map(rank),
+      k => { val v = g.id(k); if (v < 0) -1 else rank(v) })
   }
 
   /** CSR adjacency: slots `off(v) until off(v + 1)` hold v's neighbours

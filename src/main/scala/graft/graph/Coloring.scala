@@ -120,12 +120,12 @@ object Coloring {
     val spark = un.sparkSession
     import spark.implicits._
     val es = adj.as[(String, String)].collect()
-    val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+    val g = graft.Local.ordered(graft.Local.denseOf(es.map(_._1), es.map(_._2)))
     val nbrs = graft.Local.directed(g) // adj holds both orientations
-    // decreasing (p, id), ids in Spark's string order (the wave loop's
-    // `nbp > p || (nbp === p && nb > id)`)
-    val order = un.as[(String, Long)].collect().sortBy { case (id, p) => (p, id) }(
-      Ordering.Tuple2(Ordering.Long, graft.Local.order).reverse).map(x => g.id(x._1))
+    val p = new Array[Long](g.n)
+    un.as[(String, Long)].collect().foreach { case (id, pr) => p(g.id(id)) = pr }
+    // decreasing (p, id): the wave loop's `nbp > p || (nbp === p && nb > id)`
+    val order = Array.range(0, g.n).sortBy(v => (p(v), v))(Ordering[(Long, Int)].reverse)
     val color = Array.fill(g.n)(-1)
     val wave = new Array[Int](g.n)
     val taken = Array.fill(g.n + 1)(-1) // taken(c) == v: a neighbor of v has color c

@@ -42,15 +42,13 @@ object Matching {
     // to the aggregate rounds (MatchingSpec gate-forces both paths).
     val liveM = graft.Materialize(live, eager = false)
     if (graft.Local.fits(spark, "matching", liveM.count())) {
-      // edge j is j-th in min(struct(p, a, b))'s order: p, then a and b
-      // in Spark's string order
-      val es = liveM.as[(String, String, Long)].collect().sortBy(e => (e._3, e._1, e._2))(
-        Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order))
-      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val es = liveM.as[(String, String, Long)].collect()
+      val g = graft.Local.ordered(graft.Local.denseOf(es.map(_._1), es.map(_._2)))
       val nodeMin = new Array[Int](g.n)
       val matched = new Array[Boolean](g.n)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-      var alive = es.indices.toArray
+      // the live edges in min(struct(p, a, b))'s order
+      var alive = es.indices.sortBy(j => (es(j)._3, g.src(j), g.dst(j))).toArray
       var done = false
       var it = 0
       while (!done && it < maxIter) {

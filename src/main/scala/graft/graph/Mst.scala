@@ -56,10 +56,10 @@ object Mst {
     // are unchanged.
     if (graft.Local.fits(spark, "mst", e.count())) {
       import spark.implicits._
-      // edge j is j-th in (w, ua, va), strings in Spark's order
-      val es = e.as[(String, String, Long)].collect().sortBy(x => (x._3, x._1, x._2))(
-        Ordering.Tuple3(Ordering.Long, graft.Local.order, graft.Local.order))
-      val g = graft.Local.denseOf(es.map(_._1), es.map(_._2))
+      val raw = e.as[(String, String, Long)].collect()
+      val g = graft.Local.ordered(graft.Local.denseOf(raw.map(_._1), raw.map(_._2)))
+      // the edges in the total order (w, ua, va)
+      val ranked = raw.indices.sortBy(j => (raw(j)._3, g.src(j), g.dst(j))).toArray
       val comp = new graft.Local.UnionFind(g.n)
       val best = new Array[Int](g.n) // per component root: its min cross edge
       val forest = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Int)]
@@ -68,16 +68,14 @@ object Mst {
       while (!done && round < maxRounds) {
         round += 1
         java.util.Arrays.fill(best, -1)
-        var j = es.length - 1
-        while (j >= 0) { // descending: each root ends on its least edge
+        ranked.reverseIterator.foreach { j => // each root ends on its least edge
           val (cu, cv) = (comp.find(g.src(j)), comp.find(g.dst(j)))
           if (cu != cv) { best(cu) = j; best(cv) = j }
-          j -= 1
         }
         val picked = best.filter(_ >= 0).distinct
         if (picked.isEmpty) done = true
         else picked.foreach { j =>
-          forest += ((es(j)._1, es(j)._2, es(j)._3, round))
+          forest += ((raw(j)._1, raw(j)._2, raw(j)._3, round))
           comp.union(g.src(j), g.dst(j))
         }
       }

@@ -59,7 +59,7 @@ class ColoringSpec extends ReplayTwins {
       if u < v && (u * 13 + v * 7) % 6 < 2
     } yield (s"v$u", s"v$v")) ++ Seq(("v0", "v29"), ("v1", "v28"))).distinct
       .map { case (s, d) => (s, d, Option(1L)) }
-    val out = wavesAgree(es, waveOps(es).filter(_._1.startsWith("Coloring")), "30 nodes")
+    val out = wavesAgree(es, "30 nodes", _.startsWith("Coloring"))
     assert(out("Coloring").isRight && out("Coloring.2").isLeft, out)
   }
   test("a clique needs exactly n colors; a path stays within Δ+1 = 3; " +

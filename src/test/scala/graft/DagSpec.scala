@@ -70,18 +70,14 @@ class DagSpec extends SparkSuite {
       graft.graph.Dag.longestPaths(cyc).collect()
     }
     assert(eLocal.getMessage.contains("no fixed point"))
-  }
-  test("cycles that do not grow are not rejected: one no source reaches " +
-    "gives no rows, a zero-weight one a source reaches converges (both twins)") {
-    def both(es: (String, String, Long)*) = {
-      def go() = Dag.longestPaths(es.toDF("src", "dst", "w"), maxRounds = 8)
-        .as[(String, Long)].collect().toMap
-      val local = go()
-      assert(withLocalBudget(0)(go()) == local)
-      local
+    // cycles that do not grow converge on both twins: one no source
+    // reaches gives no rows, a zero-weight one a source reaches its fixed
+    // point
+    Seq(Seq(("a", "b", 1L), ("b", "a", 1L)) -> Set.empty[(String, Long)],
+      Seq(("s", "a", 1L), ("a", "b", 0L), ("b", "a", 0L)) ->
+        Set(("s", 0L), ("a", 1L), ("b", 1L))).foreach { case (es, want) =>
+      val df = es.toDF("src", "dst", "w")
+      assert(go(df) == want && withLocalBudget(0)(go(df)) == want, es)
     }
-    assert(both(("a", "b", 1L), ("b", "a", 1L)).isEmpty)
-    assert(both(("s", "a", 1L), ("a", "b", 0L), ("b", "a", 0L)) ==
-      Map("s" -> 0L, "a" -> 1L, "b" -> 1L))
   }
 }

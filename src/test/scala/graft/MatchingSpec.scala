@@ -55,6 +55,6 @@ class MatchingSpec extends ReplayTwins {
   test("gate-forced parity: local wave replay == aggregate rounds") {
     val es = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
       ("e", "f"), ("g", "h"), ("h", "e")).map { case (s, d) => (s, d, Option(1L)) }
-    wavesAgree(es, waveOps(es).filter(_._1 == "Matching"), es.toString)
+    wavesAgree(es, es.toString, _ == "Matching")
   }
 }

@@ -99,6 +99,6 @@ class MisSpec extends ReplayTwins {
   test("gate-forced parity: local wave replay == distributed rounds") {
     val es = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c"),
       ("e", "f"), ("g", "h"), ("h", "i")).map { case (s, d) => (s, d, Option(1L)) }
-    wavesAgree(es, waveOps(es).filter(_._1.startsWith("Mis")), es.toString)
+    wavesAgree(es, es.toString, _.startsWith("Mis"))
   }
 }

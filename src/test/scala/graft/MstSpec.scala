@@ -93,6 +93,6 @@ class MstSpec extends ReplayTwins {
     val es = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L), ("c", "d", 5L),
       ("d", "e", 1L), ("e", "c", 4L), ("x", "y", 2L), ("b", "a", 3L))
       .map { case (s, d, w) => (s, d, Option(w)) }
-    wavesAgree(es, waveOps(es).filter(_._1 == "Mst"), es.toString)
+    wavesAgree(es, es.toString, _ == "Mst")
   }
 }
