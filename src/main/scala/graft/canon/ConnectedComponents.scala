@@ -137,8 +137,9 @@ object ConnectedComponents {
     * every member is present. Min-member-id labeling (this object's
     * output) is the canonical case; any representative labeling — e.g.
     * the count-weighted canonicals `Pipeline`'s entity stage feeds in for
-    * an increment above its driver gate (below it, the stage runs
-    * [[canonicalMapLocal]]'s union-find over the same labels plus the new
+    * an increment whose verified edges or stored linked pairs outgrow
+    * `graft.Local`'s budget (within it, the stage runs
+    * [[canonicalMapLocal]]'s union-find over those pairs plus the new
     * edges: the same partition) — is equally valid. `newEdges`: (src,
     * dst). Returns the updated complete labeling; merged groups get the
     * min over the LABELS involved. Under min-id labels, min-of-mins = min

@@ -205,12 +205,13 @@ private[graft] object Pack3 {
       // (price-desc and date-asc) — exact integer 10⁹ div (60+rank)
       // terms; oracle = DuckDB row_number + the same truncating division
       val o = t(s, d, "orders")
-      def top100(order: Column*) = o
-        .orderBy(order: _*).limit(100)
-        .select(col("o_orderkey").as("id"),
-          row_number().over(Window.orderBy(order: _*)).as("rank"))
-      val byPrice = top100(col("o_totalprice").desc, col("o_orderkey").asc)
-      val byDate = top100(col("o_orderdate").asc, col("o_orderkey").asc)
+      // rank 1..100 in ascending `key` order (keys end in the unique o_orderkey)
+      def top100(key: Column) = graft.ops.Enumerate.rowNumber(
+          o.select(col("o_orderkey").as("id"), key.as("k")).orderBy("k").limit(100),
+          col("k"), "r")
+        .select(col("id"), (col("r") + 1).cast("int").as("rank"))
+      val byPrice = top100(struct(-col("o_totalprice"), col("o_orderkey")))
+      val byDate = top100(struct(col("o_orderdate"), col("o_orderkey")))
       graft.ops.Retrieval.rrfFuse(Seq(byPrice, byDate), k = 60, topK = 20)
     }),
     "q133_calibration" -> ((s, d) =>

@@ -49,20 +49,17 @@ object Matching {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
       // the live edges in min(struct(p, a, b))'s order
       var alive = es.indices.sortBy(j => (es(j)._3, g.src(j), g.dst(j))).toArray
-      var done = false
       var it = 0
-      while (!done && it < maxIter) {
+      // the least live edge always wins, so every round matches one
+      while (alive.nonEmpty) {
+        if (it == maxIter) throw noConvergence(maxIter)
         // descending: each endpoint ends on its least live edge
         alive.reverseIterator.foreach { j => nodeMin(g.src(j)) = j; nodeMin(g.dst(j)) = j }
-        val winners = alive.filter(j => nodeMin(g.src(j)) == j && nodeMin(g.dst(j)) == j)
-        if (winners.isEmpty) done = true
-        else {
-          winners.foreach { j => out += es(j); matched(g.src(j)) = true; matched(g.dst(j)) = true }
-          alive = alive.filter(j => !matched(g.src(j)) && !matched(g.dst(j)))
-        }
+        alive.filter(j => nodeMin(g.src(j)) == j && nodeMin(g.dst(j)) == j).foreach { j =>
+          out += es(j); matched(g.src(j)) = true; matched(g.dst(j)) = true }
+        alive = alive.filter(j => !matched(g.src(j)) && !matched(g.dst(j)))
         it += 1
       }
-      if (!done) throw noConvergence(maxIter)
       return out.toSeq.toDF("a", "b", "priority")
     }
     live = liveM
@@ -93,8 +90,9 @@ object Matching {
       i += 1
     }
     // maximality: a live edge both of whose endpoints are unmatched would
-    // contradict the fixpoint — verify instead of hoping (q122 discipline)
-    if (!done) throw noConvergence(maxIter)
+    // contradict the fixpoint — verify instead of hoping (q122 discipline);
+    // at the limit, one probe tells a settled graph from an unsettled one
+    if (!done && !live.isEmpty) throw noConvergence(maxIter)
     matched.select(col("a"), col("b"), col("p").as("priority"))
   }
 

@@ -96,7 +96,8 @@ object Mis {
           eager = false)
       }
     }
-    if (!done) throw noConvergence(maxRounds)
+    // at the limit, one probe tells a settled graph from an unsettled one
+    if (!done && !live.isEmpty) throw noConvergence(maxRounds)
     // maximality: nodes whose every conflict died without selecting them
     // are now isolated — select them all (they conflict with nothing left)
     val all = und.select(col("a").as("id")).union(und.select(col("b").as("id"))).distinct()
@@ -143,22 +144,20 @@ object Mis {
     }
     val round = new Array[Int](g.n) // the wave that selected v, or 0
     var alive = Array.range(0, g.n)
+    // some node wins while any live edge remains (the order is total)
+    var winners = alive.filter(wins)
     var r = 0
-    var done = false
-    while (!done && r < maxRounds) {
+    while (winners.nonEmpty) {
+      if (r == maxRounds) throw noConvergence(maxRounds)
       r += 1
-      val winners = alive.filter(wins)
-      if (winners.isEmpty) done = true
-      else {
-        winners.foreach { v =>
-          round(v) = r
-          dead(v) = true
-          (nbrs.off(v) until nbrs.off(v + 1)).foreach(k => dead(nbrs.nbr(k)) = true)
-        }
-        alive = alive.filter(v => !dead(v))
+      winners.foreach { v =>
+        round(v) = r
+        dead(v) = true
+        (nbrs.off(v) until nbrs.off(v + 1)).foreach(k => dead(nbrs.nbr(k)) = true)
       }
+      alive = alive.filter(v => !dead(v))
+      winners = alive.filter(wins)
     }
-    if (!done) throw noConvergence(maxRounds)
     // maximality backfill: nodes with no selected neighbor join at round 0
     Array.range(0, g.n).filter(v => round(v) > 0 ||
       (nbrs.off(v) until nbrs.off(v + 1)).forall(k => round(nbrs.nbr(k)) == 0))

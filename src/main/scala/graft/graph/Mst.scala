@@ -63,23 +63,25 @@ object Mst {
       val comp = new graft.Local.UnionFind(g.n)
       val best = new Array[Int](g.n) // per component root: its min cross edge
       val forest = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Int)]
-      var round = 0
-      var done = false
-      while (!done && round < maxRounds) {
-        round += 1
+      def picks(): Array[Int] = {
         java.util.Arrays.fill(best, -1)
         ranked.reverseIterator.foreach { j => // each root ends on its least edge
           val (cu, cv) = (comp.find(g.src(j)), comp.find(g.dst(j)))
           if (cu != cv) { best(cu) = j; best(cv) = j }
         }
-        val picked = best.filter(_ >= 0).distinct
-        if (picked.isEmpty) done = true
-        else picked.foreach { j =>
+        best.filter(_ >= 0).distinct
+      }
+      var picked = picks()
+      var round = 0
+      while (picked.nonEmpty) {
+        if (round == maxRounds) throw noConvergence(maxRounds)
+        round += 1
+        picked.foreach { j =>
           forest += ((raw(j)._1, raw(j)._2, raw(j)._3, round))
           comp.union(g.src(j), g.dst(j))
         }
+        picked = picks()
       }
-      if (!done) throw noConvergence(maxRounds)
       return forest.toSeq.toDF("src", "dst", "w", "round")
     }
     // component map starts as the identity over the node set
@@ -90,16 +92,17 @@ object Mst {
     // gate-hint it into the per-round edge annotation joins (§3.1).
     val nNodes = comp.count()
     def st(df: DataFrame): DataFrame = graft.Hints.bcastIf(df, nNodes)
+    // annotate each edge with both endpoint components; cross edges only
+    def crossOf(comp: DataFrame): DataFrame = e
+      .join(st(comp.select(col("id").as("ua"), col("comp").as("cu"))), "ua")
+      .join(st(comp.select(col("id").as("va"), col("comp").as("cv"))), "va")
+      .where(col("cu") =!= col("cv"))
     var forest: Option[DataFrame] = None
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
       round += 1
-      // annotate each edge with both endpoint components; cross edges only
-      val cu = st(comp.select(col("id").as("ua"), col("comp").as("cu")))
-      val cv = st(comp.select(col("id").as("va"), col("comp").as("cv")))
-      val cross = e.join(cu, "ua").join(cv, "va")
-        .where(col("cu") =!= col("cv"))
+      val cross = crossOf(comp)
       // each component picks its min outgoing edge under the TOTAL order
       // (w, ua, va); the same physical edge chosen from both sides
       // collapses in the distinct()
@@ -127,7 +130,8 @@ object Mst {
           eager = false)
       }
     }
-    if (!done) throw noConvergence(maxRounds)
+    // at the limit, one probe tells a spanned graph from an unspanned one
+    if (!done && !crossOf(comp).isEmpty) throw noConvergence(maxRounds)
     forest.getOrElse {
       import spark.implicits._
       Seq.empty[(String, String, Long, Int)].toDF("src", "dst", "w", "round")

@@ -28,6 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * of the LSH candidates (still recoverable via the identifier key),
   * bounding the quadratic blow-up; an ICE group streams a star, so it
   * needs no cap.
+  *
+  * Linking only yields edges ([[Hit]]s); `Pipeline`'s entity stage
+  * clusters the collected hits of [[edgesLocal]] or [[verifiedHits]].
   */
 object EntityLinker {
 
@@ -54,19 +57,17 @@ object EntityLinker {
     *
     * HYBRID (same pattern as ConnectedComponents.run): below
     * `smallThreshold` entities the LSH→verify chain runs driver-side
-    * ([[edgesLocal]]) over one collect. Both paths verify every group with
+    * ([[edgesLocal]]) over one collect, otherwise [[verifiedHits]], its
+    * cap accounting and one distinct. Both paths verify every group with
     * the same [[verifyGroup]], and the driver twin's band hashes
     * (XxHash64Function) and group order (Spark's string order) are what the
     * Column expressions compute, so the edge sets agree by construction
     * (LocalElParitySpec). The distributed path is one grouped pass plus
     * one distinct — still fixed latency when the entity table fits on the
     * driver, which a 10^12-doc corpus with 10^5–10^7 DISTINCT vendors often
-    * does. `smallThreshold = 0` forces the distributed path. Every
-    * `Pipeline` entry point gates its whole entity stage itself (one
-    * collect feeding [[edgesLocal]] directly); above that gate a full
-    * build collects the same grouped pass ([[verifiedHits]]) and an
-    * increment calls [[candidateEdgesTouched]] with the threshold at 0, so
-    * `Pipeline` never reaches this gate. */
+    * does. `smallThreshold = 0` forces the distributed path. `Pipeline`
+    * does not call this: its entity stage collects [[edgesLocal]]'s or
+    * [[verifiedHits]]' rows itself and ends in one driver union-find. */
   def candidateEdgesFromEntities(
       ents: DataFrame,
       numHashes: Int = 8,
@@ -74,56 +75,7 @@ object EntityLinker {
       editSimMin: Double = 0.85,
       useIce: Boolean = true,
       maxBucket: Int = 1000,
-      smallThreshold: Long = 50000L): DataFrame =
-    edges(ents, None, numHashes, jaccardMin, editSimMin, useIce, maxBucket,
-      smallThreshold)
-
-  /** Incremental-maintenance variant: the subset of
-    * `candidateEdgesFromEntities(ents)` edges with at least one endpoint in
-    * `touched` (a column `entity_key` — brand-new entities plus existing
-    * entities whose registry attributes the increment changed). Blocking
-    * still hashes EVERY entity (one narrow linear pass — touched entities
-    * must find their old co-bucketed neighbours), and every group still
-    * reaches the kernel (it needs the whole group for the cap and the ICE
-    * hub), but a group without a touched member emits nothing and only
-    * touched-incident pairs are verified — so verify work scales with the
-    * INCREMENT, not the entity corpus.
-    *
-    * Soundness (why dropping old–old pairs is exact, given the store was
-    * built by this pipeline with the same config): an untouched entity's
-    * attributes (surface/tokens/ice) are bit-identical to the prior run,
-    * its band hashes are per-entity deterministic, and buckets only GROW,
-    * so any old–old pair surviving today's cap survived the prior run's
-    * and verified identically — its edge is already inside the prior
-    * labeling that [[graft.canon.ConnectedComponents.incrementalUpdate]]
-    * contracts over. ICE star edges are restricted the same way: star
-    * groups without a touched member are fully within one prior component.
-    */
-  def candidateEdgesTouched(
-      ents: DataFrame,
-      touched: DataFrame,
-      numHashes: Int = 8,
-      jaccardMin: Double = 0.6,
-      editSimMin: Double = 0.85,
-      useIce: Boolean = true,
-      maxBucket: Int = 1000,
-      smallThreshold: Long = 50000L): DataFrame =
-    edges(ents, Some(touched), numHashes, jaccardMin, editSimMin, useIce,
-      maxBucket, smallThreshold)
-
-  /** The size gate shared by both public entry points: the driver-local
-    * chain below `smallThreshold` entities, otherwise [[verifiedHits]], its
-    * cap accounting and one distinct; `touched` restricts either to
-    * touched-incident pairs (None = the full edge set). */
-  private def edges(
-      ents: DataFrame,
-      touched: Option[DataFrame],
-      numHashes: Int,
-      jaccardMin: Double,
-      editSimMin: Double,
-      useIce: Boolean,
-      maxBucket: Int,
-      smallThreshold: Long): DataFrame = {
+      smallThreshold: Long = 50000L): DataFrame = {
     // single action sizes AND collects (no separate count pass)
     val small = if (smallThreshold <= 0) None else graft.Local.take(
       ents.select("entity_key", "surface", "tokens", "ice"), "entity-link", smallThreshold)
@@ -131,17 +83,10 @@ object EntityLinker {
       case Some(head) =>
         val spark = ents.sparkSession
         import spark.implicits._
-        // the touched flag rides each entity, as on the distributed path
-        val tset = touched.map(_.select(col("entity_key").cast("string"))
-          .collect().map(_.getString(0)).toSet)
-        val es = head.map { r =>
-          val e = LocalEnt.of(r)
-          e.copy(t = tset.forall(_(e.key)))
-        }
-        spark.createDataset(edgesLocal(es, numHashes, jaccardMin, editSimMin,
-          useIce, maxBucket)).toDF("src", "dst")
+        spark.createDataset(edgesLocal(head.map(LocalEnt.of), numHashes, jaccardMin,
+          editSimMin, useIce, maxBucket).map(h => (h.src, h.dst))).toDF("src", "dst")
       case None =>
-        val hits = verifiedHits(ents, touched, lit(0L), numHashes, jaccardMin, editSimMin,
+        val hits = verifiedHits(ents, lit(true), lit(0L), numHashes, jaccardMin, editSimMin,
           useIce, maxBucket)
         warnCaps(hits, maxBucket)
         hits.where(col("src").isNotNull).select("src", "dst").distinct()
@@ -162,16 +107,30 @@ object EntityLinker {
 
   /** The distributed LSH→verify chain as one grouped pass: [[verifyGroup]]
     * over every (band, min-hash) bucket and (useIce) every ICE group of one
-    * member table, optionally restricted to pairs with a `touched`
-    * endpoint; `n` is the count each member carries into its edges. Every
-    * verified pair (duplicated across the groups that verify it) and one
-    * row per over-cap bucket; lazily materialized. With `n = n_mentions`, one collect of it ([[edgesOf]])
+    * member table. `t` is each entity's touched flag (`lit(true)` for the
+    * full edge set; an increment passes its merged table's `t`): a pair is
+    * verified only when an endpoint is touched. `n` is the count each
+    * member carries into its edges. Every verified pair (duplicated across
+    * the groups that verify it) and one row per over-cap bucket; lazily
+    * materialized. With `n = n_mentions`, one collect of it ([[edgesOf]])
     * is all `Pipeline`'s entity stage needs to pick canonicals for the
     * linked entities: no accounting job, no second pass over the entity
-    * table. */
+    * table.
+    *
+    * Why verifying touched-incident pairs only is exact for an increment
+    * (given the store was built by this pipeline with the same config): an
+    * untouched entity's attributes (surface/tokens/ice) are bit-identical
+    * to the prior run, its band hashes are per-entity deterministic, and
+    * buckets only GROW, so any old–old pair surviving today's cap survived
+    * the prior run's and verified identically — its edge is already inside
+    * the stored components. ICE star edges are restricted the same way:
+    * star groups without a touched member lie within one prior component.
+    * Every group still reaches the kernel (it needs the whole group for
+    * the cap and the ICE hub), but a group without a touched member emits
+    * nothing, so verify work scales with the increment. */
   private[graft] def verifiedHits(
       ents: DataFrame,
-      touched: Option[DataFrame],
+      t: Column,
       n: Column,
       numHashes: Int,
       jaccardMin: Double,
@@ -181,23 +140,14 @@ object EntityLinker {
     val spark = ents.sparkSession
     import spark.implicits._
 
-    // touched flag `t`: a literal true for the full edge set, else one left
-    // join with the distinct touched keys
-    val flagged = touched match {
-      case Some(tk) =>
-        ents.join(tk.select(col("entity_key").cast("string").as("entity_key"))
-            .distinct().withColumn("t", lit(true)), Seq("entity_key"), "left")
-          .withColumn("t", coalesce(col("t"), lit(false)))
-      case None => ents.withColumn("t", lit(true))
-    }
     // one member row per (entity, group): band b's min-hash bucket, and
     // (band -1) the entity's ICE group; null keys and blocks never group
     val groups = bandSigs(numHashes).zipWithIndex.map { case (h, b) =>
       struct(lit(b).as("band"), h.cast("string").as("block"))
     } ++ (if (useIce) Seq(struct(lit(-1).as("band"), col("ice").as("block"))) else Nil)
-    val members = flagged
+    val members = ents
       .select(col("entity_key").as("key"), col("surface"), col("tokens"),
-        col("ice"), col("t"), n.cast("long").as("n"), explode(array(groups: _*)).as("g"))
+        col("ice"), t.as("t"), n.cast("long").as("n"), explode(array(groups: _*)).as("g"))
       .where(col("key").isNotNull && col("g.block").isNotNull)
       .select(col("g.band").as("band"), col("g.block").as("block"), col("key"),
         col("surface"), col("tokens"), col("ice"), col("t"), col("n"))
@@ -318,47 +268,28 @@ object EntityLinker {
     }
 
   /** Driver-side twin of the distributed pass: the same groups (band hashes
-    * via XxHash64Function, what `xxhash64(t, lit(i))` compiles to; members
-    * in Spark's string order), verified by the same [[verifyGroup]], with
-    * the same cap warning. */
+    * by [[graft.ops.Dedup.minhashSignatureScala]], what
+    * `xxhash64(t, lit(i))` compiles to; members in Spark's string order),
+    * verified by the same [[verifyGroup]], with the same cap warning. The
+    * distinct edges, each carrying its endpoints' `n`. */
   private[graft] def edgesLocal(ents: Array[LocalEnt], numHashes: Int,
       jaccardMin: Double, editSimMin: Double, useIce: Boolean,
-      maxBucket: Int): Seq[(String, String)] = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-
-    // minhash signature per entity: sig_i = min over tokens of
-    // xxhash64(token, i) — the expression folds args left-to-right from
-    // seed 42: hash(token, 42) first, then i with that as seed (same chain
-    // Dedup.minhashSignatureScala locks); no token, no signature (SQL null)
-    def sig(tokens: Seq[String]): Array[Long] =
-      if (tokens == null || tokens.isEmpty) Array.empty
-      else {
-        val s = Array.fill(numHashes)(Long.MaxValue)
-        tokens.foreach { t =>
-          val h1 = XxHash64Function.hash(UTF8String.fromString(t), StringType, 42L)
-          var i = 0
-          while (i < numHashes) {
-            val h = XxHash64Function.hash(i, IntegerType, h1)
-            if (h < s(i)) s(i) = h
-            i += 1
-          }
-        }
-        s
-      }
-
+      maxBucket: Int): Seq[Hit] = {
     val groups = scala.collection.mutable.HashMap.empty[(Int, String),
       scala.collection.mutable.ArrayBuffer[LocalEnt]]
     def add(g: (Int, String), e: LocalEnt): Unit =
       groups.getOrElseUpdate(g, scala.collection.mutable.ArrayBuffer.empty) += e
     ents.filter(_.key != null).sortBy(_.key)(graft.Local.order).foreach { e =>
-      sig(e.tokens).iterator.zipWithIndex.foreach { case (h, b) => add((b, h.toString), e) }
+      // no token, no signature (SQL null)
+      if (e.tokens != null && e.tokens.nonEmpty)
+        graft.ops.Dedup.minhashSignatureScala(e.tokens, numHashes).iterator.zipWithIndex
+          .foreach { case (h, b) => add((b, h.toString), e) }
       if (useIce && e.ice != null) add((-1, e.ice), e)
     }
 
     edgesOf(groups.iterator.flatMap { case ((band, _), members) =>
       verifyGroup(band < 0, members.iterator, jaccardMin, editSimMin, maxBucket)
-    }, maxBucket).map(h => (h.src, h.dst))
+    }, maxBucket)
   }
 
   /** Bucket-size audit for the LSH blocking — "no silent caps": rows with

@@ -251,41 +251,23 @@ object Curation {
     * cluster size — which is what makes re-sharding a checkpointed packing
     * run reproducible.
     *
-    * The global prefix sum is the textbook distributed scan, kept inside
-    * ONE declarative query so both passes share the same range exchange:
-    * (1) range-partition the slim (id, tokens) projection on id with an
-    * EXPLICIT bucket count (explicit numPartitions ⇒ AQE never re-coalesces
-    * it, so `spark_partition_id()` is consistent across the plan's two
-    * consumers of the exchange); (2) within-bucket running sum via a
-    * window; (3) per-bucket totals — one row per bucket — cumulated by a
-    * single-partition window over only `numBuckets` rows (bounded by the
-    * bucket count, NOT the corpus; the one deliberate serial step every
-    * scan algorithm has) and broadcast-joined back. Never a corpus-scale
-    * single-partition window, never a driver collect. */
+    * The global offsets are [[Enumerate.prefixSums]] in id order (ids are
+    * distinct — the input is a mapping), its textbook two-pass scan over
+    * `numBuckets` range partitions: per-bucket totals, one row per bucket,
+    * become broadcast offsets beside a within-bucket running sum. Never a
+    * single-partition window; the driver sees one row per bucket. */
   def packSequences(df: DataFrame, id: Column, tokens: Column, budget: Long,
       numBuckets: Int = 0): DataFrame = {
     require(budget > 0, s"packSequences: budget must be positive, got $budget")
-    import org.apache.spark.sql.expressions.Window
     val nb = if (numBuckets > 0) numBuckets
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val base = df.select(id.as("id"), tokens.cast("long").as("n_tokens"))
-    val parts = base.repartitionByRange(nb, col("id"))
-      .withColumn("pid", spark_partition_id())
-    val wIn = Window.partitionBy("pid").orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = parts.withColumn("run_end", sum("n_tokens").over(wIn))
-    // one row per range bucket; the unpartitioned window below runs on
-    // `nb` rows total — bounded serial work, same class as a driver fold
-    val wOff = Window.orderBy("pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parts.groupBy("pid").agg(sum("n_tokens").as("ptotal"))
-      .withColumn("poff", coalesce(sum("ptotal").over(wOff), lit(0L)))
-      .select("pid", "poff")
     // floor(long / long) routes through double: exact while offsets stay
     // below 2^53 tokens (~9 petatokens — ×300 headroom over a 100 TB corpus)
     val b = lit(budget)
-    within.join(broadcast(offsets), "pid")
-      .withColumn("start_off", col("poff") + col("run_end") - col("n_tokens"))
+    Enumerate.prefixSums(base, col("id"), col("n_tokens"), "start_off", nb)
+      // a null token count has no offset
+      .withColumn("start_off", when(col("n_tokens").isNotNull, col("start_off")))
       .withColumn("seq_id", floor(col("start_off") / b))
       .withColumn("seq_off", col("start_off") % b)
       .withColumn("n_seqs",

@@ -102,23 +102,25 @@ object Trend {
     * the oracle replays the window arithmetic exactly.
     *
     * Scale shape: like mannKendall, the series is an AGGREGATE of the raw
-    * log (bucket-scale, ≤ days/hours rows); the single global-ordered
-    * window runs on one task by design — the right place for a
-    * sequential scan is the thousand-row counter table, never the log.
+    * log (bucket-scale, ≤ days/hours rows, one per distinct `t`); the
+    * positions and running sums are [[Enumerate]]'s range-partitioned
+    * scans, so no step moves the series through one partition.
     *
     * Output (1 row): (n, total, cp_t, cp_index, s_scaled, shift) with
     * shift ∈ down/up/none (none ⇔ S' ≡ 0, a perfectly flat series);
     * n < 2 ⇒ null cp columns. */
   def cusumChangepoint(series: DataFrame, tCol: String,
       vCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("t"))
     val rows = series.where(col(tCol).isNotNull && col(vCol).isNotNull)
       .select(col(tCol).as("t"), col(vCol).cast("long").as("v"))
     val totals = rows.agg(count(lit(1)).as("n"),
       coalesce(sum("v"), lit(0L)).as("total"))
-    val s = rows
-      .withColumn("i", row_number().over(w))
-      .withColumn("p", sum("v").over(w))
+    // i = 1-based position and p = running sum through this bucket, from
+    // the two exclusive scans in t order
+    val s = Enumerate.rowNumber(Enumerate.prefixSums(rows, col("t"), col("v"), "p0"),
+        col("t"), "i0")
+      .withColumn("i", (col("i0") + 1).cast("int"))
+      .withColumn("p", col("p0") + col("v"))
       .crossJoin(broadcast(totals))
       .where(col("i") < col("n")) // S'_n ≡ 0 carries no signal
       .select(col("t"), col("i"), col("n"), col("total"),

@@ -3,7 +3,7 @@ package graft.run
 import graft.canon.ConnectedComponents
 import graft.graph.TripleStore
 import graft.link.EntityLinker
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline:
@@ -30,15 +30,16 @@ import org.apache.spark.sql.functions._
   *   1 groupBy(entity_key) over the SMALL mention projection — it yields
   *     the entity table AND the per-entity mention counts (n_mentions)
   *     that weight canonical-representative selection;
-  *   below `Config.elSmallThreshold` entities, the rest of the entity
-  *     stage is that groupBy plus ONE collect of the entity table: linking,
-  *     union-find and canonical choice then run on the driver with no
-  *     further job; above it, one grouped LSH/ICE verify pass over the
-  *     MUCH smaller entity set and ONE collect of its verified edges (with
-  *     their endpoints' counts and the cap-accounting rows): union-find and
-  *     canonical choice run on the driver over the LINKED entities only.
-  *     Only beyond `graft.Local`'s budget do a distinct, CC iterations and
-  *     the canonical-map window run, over the edges' endpoints;
+  *   the entity stage then has ONE edge source and ONE ending: below
+  *     `Config.elSmallThreshold` entities a collect of the entity table
+  *     (linking on the driver), above it one grouped LSH/ICE verify pass
+  *     over the MUCH smaller entity set and a collect of its verified
+  *     edges (with their endpoints' counts and the cap-accounting rows);
+  *     union-find and canonical choice then run on the driver over the
+  *     LINKED entities only, for an increment together with the stored
+  *     linked pairs. Only beyond `graft.Local`'s budget do a distinct, CC
+  *     iterations (or an increment's label contraction) and the
+  *     canonical-map window run;
   *   the stage carries the LINKED part of the canonical map (id ≠
   *     canonical); every other entity is its own canonical and needs no
   *     map row: the rewrite, sameAs and hasICE coalesce it to itself;
@@ -59,20 +60,18 @@ object Pipeline {
         * executor memory budget; the fallback trades 2 triple-stream
         * shuffles for that safety. */
       broadcastEntityLimit: Long = 10000000L,
-      /** entity count up to which the whole entity stage — LSH→verify
-        * linking, connected components and canonical choice — runs as one
-        * driver pass over one collect of the entity table (identical
-        * results: PipelineSpec, LocalElParitySpec, ConnectedComponentsSpec);
-        * above it linking runs distributed, and a full build's components
-        * and canonical choice still run on the driver over one collect of
-        * the verified edges while they fit `graft.Local`'s budget.
-        * `runIncremental` gates the same stage over the registry merged with
-        * the increment, and both sides give the same increment
-        * (IncrementalSpec) — which equals a full rebuild only while every
-        * prior link still verifies over the merged table (see
-        * runIncremental). 0 forces distributed linking — what
-        * ScalingBench measures, since the driver shortcut deliberately does
-        * NOT scale with executors. */
+      /** entity count up to which the entity stage links on the driver,
+        * over one collect of the entity table; above it linking is one
+        * distributed verify pass whose edges are collected instead. Either
+        * way components and canonical choice run on the driver while the
+        * edges (and an increment's stored linked pairs) fit `graft.Local`'s
+        * budget — identical results on every side (PipelineSpec,
+        * LocalElParitySpec, ConnectedComponentsSpec, IncrementalSpec). An
+        * increment gates the registry merged with it; its result equals a
+        * full rebuild only while every prior link still verifies over the
+        * merged table (see runIncremental). 0 forces distributed linking —
+        * what ScalingBench measures, since the driver shortcut deliberately
+        * does NOT scale with executors. */
       elSmallThreshold: Long = 50000L)
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.run.Pipeline")
@@ -188,10 +187,9 @@ object Pipeline {
   private val MaxBucket = 1000
 
   /** The entity stage of every entry point: vendor mentions → entities →
-    * candidate edges → connected components → canonical map. The mention
-    * counts that weight canonical-representative selection are the entity
-    * table's `n_mentions` — the same groupBy, not a second pass over the
-    * mentions.
+    * one edge source → one driver ending. The mention counts that weight
+    * canonical-representative selection are the entity table's
+    * `n_mentions` — the same groupBy, not a second pass over the mentions.
     *
     * With a `prior` ([[storedEntities]] of a store) the entity table is the
     * increment's entities and the stored registry folded by ONE groupBy:
@@ -201,10 +199,13 @@ object Pipeline {
     * then verifies only pairs with a `t` endpoint, and components grow the
     * prior ones (a learned merge is never un-learned).
     *
-    * Below `cfg.elSmallThreshold` entities the stage after that groupBy is
-    * ONE driver pass over ONE collect (see [[localEntityStage]]); above it
-    * (or with the threshold at 0) linking is distributed: a full build
-    * ends in [[linkedStage]], an increment in label contraction.
+    * The edge source is ONE collect: of the entity table while it has at
+    * most `cfg.elSmallThreshold` rows (linking on the driver), else of the
+    * verify pass's [[EntityLinker.Hit]]s. Both carry their endpoints'
+    * `n_mentions` into [[linkedLocal]], an increment's after ONE collect
+    * of its stored linked pairs ([[priorHits]]) under the same
+    * `graft.Local` budget. Beyond that budget the stage ends in
+    * [[linkedDistributed]].
     *
     * Cache discipline (r1 leak post-mortem, ADVICE): the DOC-SCALE mention
     * table is cached only under `spark.graft.materialize=none` (see
@@ -227,101 +228,87 @@ object Pipeline {
           .withColumn("tokens", array_distinct(split(col("entity_key"), "_"))),
           eager = false)
       }
-      localEntityStage(ents, cfg, prior.isDefined).getOrElse {
-        // the gate above already measured the table: the linker's own gate
-        // (same threshold) could only fail again, so it is skipped
-        if (prior.isEmpty) linkedStage(ents, cfg)
-        else {
-          // the linker derives its own touched flag from the touched keys
-          val edges = graft.Materialize(EntityLinker.candidateEdgesTouched(
-            ents.drop("t"), ents.where(col("t")).select("entity_key"), cfg.numHashes,
-            cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket, smallThreshold = 0L),
-            eager = false)
-          // the count materializes the batch-bounded edge set: label
-          // contraction's CC input never grows with the corpus
-          val n = edges.count()
-          linkedOf(ents, ConnectedComponents.incrementalUpdate(
-              priorMap(ents).withColumnRenamed("canonical", "component"), edges),
-            ents.select(col("entity_key").as("id"), col("n_mentions").as("n")), n)
-        }
-      }
+      val incremental = prior.isDefined
+      val spark = ents.sparkSession
+      // a hit adds up to two ids to the union-find and two counts
+      val budget = graft.Local.maxEntries(spark) / 2
+      val stored = if (!incremental) Some(Array.empty[EntityLinker.Hit])
+        else graft.Local.take(priorHits(ents), "entity-prior", budget)
+      lazy val hits = EntityLinker.verifiedHits(ents, if (incremental) col("t") else lit(true),
+        col("n_mentions"), cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)
+      stored.flatMap { st =>
+        // the edge source: the entity table while it is small (linking on
+        // the driver), else the verify pass
+        val small = if (cfg.elSmallThreshold <= 0) None
+          else graft.Local.take(ents, "entity-stage", cfg.elSmallThreshold)
+        small.map(head => (spark.createDataFrame(java.util.Arrays.asList(head: _*), ents.schema),
+            EntityLinker.edgesLocal(head.map(r => EntityLinker.LocalEnt.of(r).copy(
+                t = !incremental || r.getAs[Boolean]("t"), n = r.getAs[Long]("n_mentions"))),
+              cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)))
+          .orElse(graft.Local.take(hits, "entity-edges", budget - st.length)
+            .map(rows => (ents, EntityLinker.edgesOf(rows.iterator, MaxBucket))))
+          .map { case (e, hs) => linkedLocal(e, hs, st) }
+      }.getOrElse(linkedDistributed(ents, hits, incremental))
     }
 
-  /** A full build's distributed stage: ONE grouped verify pass
-    * ([[EntityLinker.verifiedHits]]) whose edges carry both endpoints'
-    * `n_mentions` and whose over-cap bucket rows ride along. While those
-    * rows fit `graft.Local`'s budget, ONE collect of them ends the stage:
-    * the cap warning, union-find and representative choice
-    * ([[ConnectedComponents.canonicalMapLocal]]) run on the driver over the
-    * linked entities only — an entity on no edge is its own canonical, so
-    * it needs no row, no count and no job. Above the budget the
-    * distributed components and [[ConnectedComponents.canonicalMap]] run
-    * over the edges' endpoints only. Must run inside `withMentions`, as
-    * the hits' lineage reads the entity table. */
-  private def linkedStage(ents: DataFrame, cfg: Config): Stage = {
+  /** The driver ending of every entity stage: union-find and
+    * representative choice ([[ConnectedComponents.canonicalMapLocal]]) over
+    * the linking `hits` and an increment's `stored` pairs, weighted by the
+    * counts they carry. An entity on neither is its own canonical and needs
+    * no row; the linked map is a local relation, so its row count is free. */
+  private def linkedLocal(ents: DataFrame, hits: Seq[EntityLinker.Hit],
+      stored: Seq[EntityLinker.Hit]): Stage = {
     val spark = ents.sparkSession
     import spark.implicits._
-    val hits = EntityLinker.verifiedHits(ents, None, col("n_mentions"), cfg.numHashes,
-      cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)
-    // a row adds up to two ids to the union-find and two counts
-    graft.Local.take(hits, "entity-edges", graft.Local.maxEntries(spark) / 2) match {
-      case Some(rows) =>
-        val es = EntityLinker.edgesOf(rows.iterator, MaxBucket)
-        val linked = ConnectedComponents.canonicalMapLocal(es.map(h => (h.src, h.dst)),
-            es.flatMap(h => Seq(h.src -> h.nSrc, h.dst -> h.nDst)).distinct)
-          .filter { case (id, c) => id != c }
-        Stage(ents, linked.toDF("id", "canonical"), linked.size.toLong, es.size.toLong)
-      case None =>
-        EntityLinker.warnCaps(hits, MaxBucket)
-        val e = hits.where(col("src").isNotNull)
-        // the budget above measured the edges: no second probe in run
-        val comps = ConnectedComponents.run(e.select("src", "dst"), smallThreshold = -1L)
-        val counts = e.select(col("src").as("id"), col("nSrc").as("n"))
-          .union(e.select(col("dst"), col("nDst"))).distinct()
-        linkedOf(ents, comps, counts, 0L)
-    }
+    val es = hits ++ stored
+    val linked = ConnectedComponents.canonicalMapLocal(es.map(h => (h.src, h.dst)),
+        es.flatMap(h => Seq(h.src -> h.nSrc, h.dst -> h.nDst)).distinct)
+      .filter { case (id, c) => id != c }
+    Stage(ents, linked.toDF("id", "canonical"), linked.size.toLong, hits.size.toLong)
   }
 
-  /** The stage whose linked map is [[ConnectedComponents.canonicalMap]]'s
-    * rows with `id ≠ canonical`; a LAZY materialize + count in ONE job (the
-    * count is the action that computes and stores the map), run inside
-    * `withMentions` while a mention cache the lineage reads is still live. */
-  private def linkedOf(ents: DataFrame, comps: DataFrame, counts: DataFrame,
-      edges: Long): Stage = {
+  /** An increment's stored linked pairs as hits: (id, stored canonical)
+    * for each entity whose canonical is another entity, with both sides'
+    * merged `n_mentions`. */
+  private def priorHits(ents: DataFrame): Dataset[EntityLinker.Hit] = {
+    val spark = ents.sparkSession
+    import spark.implicits._
+    ents.where(col("prior") =!= col("entity_key"))
+      .select(col("entity_key").as("src"), col("prior").as("dst"), col("n_mentions").as("nSrc"))
+      .join(ents.select(col("entity_key").as("dst"), col("n_mentions").as("nDst")), "dst")
+      .select("src", "dst", "nSrc", "nDst").as[EntityLinker.Hit]
+  }
+
+  /** The entity stage when the verified `hits` outgrow `graft.Local`'s
+    * budget: a full build runs the distributed components over the edges'
+    * endpoints only; an increment contracts its distinct edges into the
+    * stored labels ([[ConnectedComponents.incrementalUpdate]], whose inner
+    * CC runs on the batch-bounded label graph) and weighs every entity.
+    * Either ends in [[ConnectedComponents.canonicalMap]]'s rows with
+    * `id ≠ canonical`, a LAZY materialize + count in ONE job. Must run
+    * inside `withMentions`, as the hits' lineage reads the entity table. */
+  private def linkedDistributed(ents: DataFrame, hits: Dataset[EntityLinker.Hit],
+      incremental: Boolean): Stage = {
+    EntityLinker.warnCaps(hits, MaxBucket)
+    val e = hits.where(col("src").isNotNull)
+    val (comps, counts, n) =
+      if (!incremental)
+        // the budget above measured the edges: no second probe in run
+        (ConnectedComponents.run(e.select("src", "dst"), smallThreshold = -1L),
+          e.select(col("src").as("id"), col("nSrc").as("n"))
+            .union(e.select(col("dst"), col("nDst"))).distinct(), 0L)
+      else {
+        val edges = graft.Materialize(e.select("src", "dst").distinct(), eager = false)
+        // the count materializes the batch-bounded edge set: label
+        // contraction's CC input never grows with the corpus
+        val n = edges.count()
+        (ConnectedComponents.incrementalUpdate(
+            priorMap(ents).withColumnRenamed("canonical", "component"), edges),
+          ents.select(col("entity_key").as("id"), col("n_mentions").as("n")), n)
+      }
     val linked = graft.Materialize(ConnectedComponents.canonicalMap(comps, counts)
       .where(col("id") =!= col("canonical")), eager = false)
-    Stage(ents, linked, linked.count(), edges)
-  }
-
-  /** The entity stage on the driver when the entity table has at most
-    * `cfg.elSmallThreshold` rows (None otherwise, or when the threshold is
-    * 0): one `take` both sizes and collects the table, then linking
-    * ([[EntityLinker.edgesLocal]]), union-find and representative choice
-    * ([[ConnectedComponents.canonicalMapLocal]]) run with no further Spark
-    * job. In an increment, linking keeps the rows' `t` flags and the
-    * union-find runs over the stored (id, canonical) pairs plus the new
-    * edges — the partition of the distributed chain's label contraction.
-    * Same results as the distributed chain (PipelineSpec,
-    * LocalElParitySpec, ConnectedComponentsSpec, IncrementalSpec); both
-    * results come back as local relations, so the linked row count is
-    * free. */
-  private def localEntityStage(ents: DataFrame, cfg: Config,
-      incremental: Boolean): Option[Stage] = {
-    if (cfg.elSmallThreshold <= 0) return None
-    graft.Local.take(ents, "entity-stage", cfg.elSmallThreshold).map { head =>
-      val spark = ents.sparkSession
-      import spark.implicits._
-      val edges = EntityLinker.edgesLocal(head.map(r => EntityLinker.LocalEnt.of(r)
-          .copy(t = !incremental || r.getAs[Boolean]("t"))),
-        cfg.numHashes, cfg.jaccardMin, cfg.editSimMin, cfg.useIce, MaxBucket)
-      val priorPairs = if (!incremental) Nil else head.toSeq.map(r =>
-        (r.getAs[String]("entity_key"), r.getAs[String]("prior"))).filter(_._2 != null)
-      val linked = ConnectedComponents.canonicalMapLocal(priorPairs ++ edges,
-          head.toSeq.map(r => (r.getAs[String]("entity_key"), r.getAs[Long]("n_mentions"))))
-        .filter { case (id, c) => id != c }
-      val localEnts = spark.createDataFrame(java.util.Arrays.asList(head: _*), ents.schema)
-      Stage(localEnts, linked.toDF("id", "canonical"), linked.size.toLong, edges.size.toLong)
-    }
+    Stage(ents, linked, linked.count(), n)
   }
 
   /** The store-side state of an entity stage: one canonicalOf triple per
@@ -576,10 +563,11 @@ object Pipeline {
     * new docs' mentions into exactly the entity table a full extract over
     * old ∪ new would produce; linking verifies only pairs incident to an
     * entity the increment touched, and canonicalization extends the stored
-    * components (on the driver below `elSmallThreshold`, else by label
-    * CONTRACTION, [[ConnectedComponents.incrementalUpdate]], whose inner CC
-    * runs on the batch-bounded label graph, never the corpus edge set — the
-    * committed snapshot's `inc_el_edges` counter records that bound).
+    * components: one driver union-find over the new edges plus the stored
+    * linked pairs while both fit `graft.Local`'s budget, else label
+    * CONTRACTION ([[ConnectedComponents.incrementalUpdate]]), whose inner
+    * CC runs on the batch-bounded label graph, never the corpus edge set —
+    * the committed snapshot's `inc_el_edges` counter records that bound.
     * Canonical-representative selection re-runs over the merged counts.
     * Old doc-scoped triples are re-pointed through the (old canonical →
     * new canonical) delta — entity-scale, broadcast — and vendor-scoped

@@ -2,6 +2,7 @@ package graft
 
 import graft.metrics.Agreement
 import graft.ops.Trend
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class AgreementSpec extends SparkSuite {
   import spark.implicits._
@@ -73,6 +74,15 @@ class AgreementSpec extends SparkSuite {
     assert(n == 5L && total == 130L)
     assert(cpT.contains("3") && cpI.contains(3))
     assert(s.contains(-240L) && shift.contains("up"))
+  }
+
+  test("cusum: positions and running sums without a single-partition global window") {
+    spark.conf.set(Materialize.ModeKey, "none") // keep the scans in the plan
+    val plan = try Trend.cusumChangepoint(Seq((1, 10L), (2, 50L), (3, 50L)).toDF("t", "v"),
+        "t", "v").queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 
   test("cusum: down-shift sign, tie -> earliest bucket, flat -> none") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Curation
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
 class CurationSpec extends SparkSuite {
@@ -156,6 +157,15 @@ class CurationSpec extends SparkSuite {
         docs.toDF("doc_id", "n"), col("doc_id"), col("n"), budget = 512L, numBuckets = 8)
       .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got == packFold(docs, 512L))
+  }
+
+  test("packSequences offsets without a single-partition global window") {
+    spark.conf.set(Materialize.ModeKey, "none") // keep the scan in the plan
+    val plan = try Curation.packSequences((0L until 20L).map(i => (i, i)).toDF("doc_id", "n"),
+        col("doc_id"), col("n"), budget = 16L, numBuckets = 4).queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty, global)
   }
 
   test("packSequences is independent of input layout and bucket count") {

@@ -31,7 +31,8 @@ trait ReplayTwins extends SparkSuite {
 
   /** Mis under five priority shapes (the default, a null field, a Float
     * field, a -0.0/0.0 Double field, a constant), Coloring at the default
-    * and at `maxRounds = 2`, Matching, and Mst over the weights `w`. */
+    * and at `maxRounds = 2`, Matching, and Mst over the weights `w`; Mis,
+    * Matching and Mst also at a round limit of 1 (`.1`). */
   private def waveOps(es: Seq[(String, String, Option[Long])]): Seq[(String, () => DataFrame)] = {
     val e = es.toDF("src", "dst", "w")
     val prios: Seq[(String, Column => Column)] = Seq(
@@ -45,7 +46,10 @@ trait ReplayTwins extends SparkSuite {
         "Coloring" -> (() => Coloring.jonesPlassmann(e)),
         "Coloring.2" -> (() => Coloring.jonesPlassmann(e, maxRounds = 2)),
         "Matching" -> (() => Matching.maximal(e)),
-        "Mst" -> (() => Mst.spanningForest(e)))
+        "Mst" -> (() => Mst.spanningForest(e)),
+        "Mis.1" -> (() => Mis.maximalIndependentSet(e, maxRounds = 1)),
+        "Matching.1" -> (() => Matching.maximal(e, maxIter = 1)),
+        "Mst.1" -> (() => Mst.spanningForest(e, maxRounds = 1)))
   }
 
   /** [[twinsAgree]] over the [[waveOps]] whose name `keep` accepts, and
@@ -141,9 +145,21 @@ class GraphReplayParitySpec extends ReplayTwins {
     val cases = Seq(1L, 2L, 3L).map(seed => s"seed $seed" ->
       graph(acyclic = false).apply(Gen.Parameters.default, Seed(seed)).get) :+ ("path" -> path)
     cases.foreach { case (what, es) =>
-      wavesAgree(es, s"$what: $es").foreach { case (name, r) => if (r.isLeft) thrown(name) += 1 }
+      wavesAgree(es, s"$what: $es", !_.endsWith(".1"))
+        .foreach { case (name, r) => if (r.isLeft) thrown(name) += 1 }
     }
     // only the small maxRounds gives up, and not on every graph
     assert(thrown.keySet == Set("Coloring.2") && thrown("Coloring.2") < cases.size, thrown)
+  }
+
+  test("a round limit of 1 settles a single edge; a path of two waves exceeds it") {
+    // one round selects, matches and spans a–b: no second round is needed
+    val edge = Seq(("a", "b", Some(1L)))
+    val settled = wavesAgree(edge, "a–b", _.endsWith(".1"))
+    assert(settled.size == 3 && settled.values.forall(_.isRight), settled)
+    // Borůvka needs two rounds on a–b–c–d whose middle edge is heaviest
+    val path = Seq(("a", "b", Some(1L)), ("b", "c", Some(3L)), ("c", "d", Some(1L)))
+    val out = wavesAgree(path, "a–b–c–d", _.endsWith(".1"))
+    assert(out("Mst.1").isLeft, out)
   }
 }

@@ -5,6 +5,9 @@ import graft.graph.TripleStore
 import graft.metrics.Evaluation
 import graft.run.Pipeline
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -63,12 +66,47 @@ class IncrementalSpec extends SparkSuite {
         (graphOf(root), stateOf(root), TripleStore.counterValue(root, id, "inc_el_edges"))
       }
       val (localG, localS, localE) = build(Pipeline.Config().elSmallThreshold)
-      val (distG, distS, distE) = build(0L)
-      for ((what, l, d) <- Seq(("graph", localG, distG), ("state", localS, distS)))
-        assert((l diff d).isEmpty && (d diff l).isEmpty,
-          s"$what: local-only ${(l diff d).take(3)}, distributed-only ${(d diff l).take(3)}")
-      assert(localE.isDefined && localE == distE, s"inc_el_edges: $localE vs $distE")
+      // distributed linking: its hits collected, then beyond the budget,
+      // where label contraction runs
+      for ((side, (distG, distS, distE)) <- Seq(
+          "collected" -> build(0L), "beyond budget" -> withLocalBudget(0)(build(0L)))) {
+        for ((what, l, d) <- Seq(("graph", localG, distG), ("state", localS, distS)))
+          assert((l diff d).isEmpty && (d diff l).isEmpty, s"$side $what: local-only " +
+            s"${(l diff d).take(3)}, distributed-only ${(d diff l).take(3)}")
+        assert(localE.isDefined && localE == distE, s"$side inc_el_edges: $localE vs $distE")
+      }
     }
+
+  test("a pool-shaped increment with distributed linking plans no Window " +
+    "within the driver budget") {
+    val all = InvoiceCorpus.docs(spark, 600, vendorPool = 2000).toDF().cache()
+    val split = pmod(xxhash64(col("doc_id")), lit(4)) === 0
+    val cfg = Pipeline.Config(elSmallThreshold = 0L)
+    val root = tmp()
+    Pipeline.runResumable(spark, all.where(!split), root, nBatches = 2, cfg = cfg)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.optimizedPlan }
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      all.count()
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      // every action of the increment, checkpoints and the commit included
+      Pipeline.runIncremental(spark, all.where(split), root, cfg)
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      val ps = plans.synchronized(plans.toList)
+      assert(ps.nonEmpty)
+      val windows = ps.flatMap(_.collect { case w: Window => w })
+      assert(windows.isEmpty, windows)
+      assert(stateOf(root).exists(t => t._2 == "canonicalOf" && t._1 != t._3))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      all.unpersist()
+    }
+  }
 
   test("incremental update == full rebuild over old ∪ new; single atomic snapshot; vacuum-safe") {
     val all = InvoiceCorpus.docs(spark, 200).toDF().cache()

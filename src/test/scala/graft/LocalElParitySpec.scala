@@ -26,6 +26,21 @@ class LocalElParitySpec extends SparkSuite {
         useIce = useIce, smallThreshold = threshold)
       .as[(String, String)].collect().toSet
 
+  /** The touched-incident edges of `ents`, whose `t` column flags the
+    * touched entities: on the driver ([[EntityLinker.edgesLocal]] over the
+    * collected rows' flags) or from the grouped pass
+    * ([[EntityLinker.verifiedHits]] over the column). */
+  private def touchedEdges(ents: org.apache.spark.sql.DataFrame, local: Boolean,
+      useIce: Boolean, maxBucket: Int = 1000): Set[(String, String)] =
+    if (local)
+      EntityLinker.edgesLocal(ents.collect().map(r =>
+          EntityLinker.LocalEnt.of(r).copy(t = r.getAs[Boolean]("t"))),
+        8, 0.6, 0.85, useIce, maxBucket).map(h => (h.src, h.dst)).toSet
+    else
+      EntityLinker.verifiedHits(ents, ents("t"), org.apache.spark.sql.functions.lit(0L),
+          8, 0.6, 0.85, useIce, maxBucket)
+        .where($"src".isNotNull).select("src", "dst").as[(String, String)].collect().toSet
+
   test("local path == distributed path on the noisy fixture corpus (both ICE modes)") {
     val vm = FastExtract.vendorMentions(InvoiceCorpus.docs(spark, 250)).toDF().cache()
     try {
@@ -73,28 +88,23 @@ class LocalElParitySpec extends SparkSuite {
     } finally vm.unpersist()
   }
 
-  test("candidateEdgesTouched == full edges filtered to touched-incident (both paths, both ICE modes)") {
+  test("touched flags restrict edgesLocal and verifiedHits to touched-incident " +
+    "edges (both paths, both ICE modes)") {
     val vm = FastExtract.vendorMentions(InvoiceCorpus.docs(spark, 250)).toDF().cache()
     try {
-      val ents = EntityLinker.entities(vm)
+      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
       // a deterministic "touched" subset: every 3rd entity key
-      val touched = ents.select("entity_key")
-        .where(org.apache.spark.sql.functions
-          .pmod(org.apache.spark.sql.functions.xxhash64(
-            org.apache.spark.sql.functions.col("entity_key")),
-            org.apache.spark.sql.functions.lit(3)) === 0)
-        .cache()
-      val tset = touched.as[String].collect().toSet
+      val ents = EntityLinker.entities(vm)
+        .withColumn("t", pmod(xxhash64(col("entity_key")), lit(3)) === 0).cache()
+      val tset = ents.where($"t").select("entity_key").as[String].collect().toSet
       assert(tset.nonEmpty && tset.size < ents.count())
-      for (useIce <- Seq(true, false); threshold <- Seq(Long.MaxValue, 0L)) {
-        val full = EntityLinker.candidateEdgesFromEntities(ents,
-            useIce = useIce, smallThreshold = threshold)
+      for (useIce <- Seq(true, false); local <- Seq(true, false)) {
+        val full = EntityLinker.candidateEdgesFromEntities(ents.drop("t"),
+            useIce = useIce, smallThreshold = if (local) Long.MaxValue else 0L)
           .as[(String, String)].collect().toSet
         val expected = full.filter(e => tset(e._1) || tset(e._2))
-        val got = EntityLinker.candidateEdgesTouched(ents, touched,
-            useIce = useIce, smallThreshold = threshold)
-          .as[(String, String)].collect().toSet
-        assert(got == expected, s"useIce=$useIce threshold=$threshold " +
+        val got = touchedEdges(ents, local, useIce)
+        assert(got == expected, s"useIce=$useIce local=$local " +
           s"gotOnly=${got -- expected} expOnly=${expected -- got}")
         assert(got.size < full.size, "restriction should be proper here")
       }
@@ -174,7 +184,7 @@ class LocalElParitySpec extends SparkSuite {
       val (rows, flags) = gen.apply(Gen.Parameters.default, Seed(seed)).get
       val ents = EntityLinker.entities(rows.toDF("entity_key", "surface", "ice"))
       val tset = flags.collect { case (k, true) => k }.toSet
-      val touched = tset.toSeq.toDF("entity_key")
+      val flagged = ents.join(flags.toDF("entity_key", "t"), "entity_key")
       for (useIce <- Seq(true, false)) {
         val clue = s"seed=$seed useIce=$useIce"
         val Seq((local, localWarn), (dist, distWarn)) = Seq(Long.MaxValue, 0L).map { th =>
@@ -185,11 +195,9 @@ class LocalElParitySpec extends SparkSuite {
         assert(local == dist, s"$clue localOnly=${local -- dist} distOnly=${dist -- local}")
         assert(distWarn.nonEmpty && localWarn == distWarn, s"$clue $localWarn $distWarn")
         val expected = local.filter(e => tset(e._1) || tset(e._2))
-        for (th <- Seq(Long.MaxValue, 0L)) {
-          val got = EntityLinker.candidateEdgesTouched(ents, touched, useIce = useIce,
-              maxBucket = 3, smallThreshold = th)
-            .as[(String, String)].collect().toSet
-          assert(got == expected, s"$clue threshold=$th " +
+        for (local <- Seq(true, false)) {
+          val got = touchedEdges(flagged, local, useIce, maxBucket = 3)
+          assert(got == expected, s"$clue local=$local " +
             s"gotOnly=${got -- expected} expOnly=${expected -- got}")
         }
       }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Retrieval
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 class RrfSpec extends SparkSuite {
   import spark.implicits._
@@ -44,5 +45,16 @@ class RrfSpec extends SparkSuite {
     val out = Retrieval.rrfFuse(Seq(dirty), topK = 10)
       .as[(String, Long, Long, Int)].collect().toSeq
     assert(out.map(_._1) == Seq("a"))
+  }
+
+  test("q132 ranks its top-100 inputs without a single-partition global window") {
+    spark.conf.set(Materialize.ModeKey, "none") // keep the rank scans in the plan
+    val plan = try SparkEntry.queries("q132_rrf_fusion")(spark, "/root/testdata/sf0.001")
+        .queryExecution.optimizedPlan
+      finally spark.conf.unset(Materialize.ModeKey)
+    val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
+    // what is left is rrfFuse's own ranking of its topK fused rows
+    assert(global.forall(_.orderSpec.exists(_.child.references.exists(_.name == "rrf_fp"))),
+      global)
   }
 }
