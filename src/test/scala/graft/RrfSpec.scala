@@ -48,9 +48,12 @@ class RrfSpec extends SparkSuite {
   }
 
   test("q132 ranks its top-100 inputs without a single-partition global window") {
+    // a small orders table in a scratch dataset directory
+    val dir = java.nio.file.Files.createTempDirectory("graft_q132_").toString
+    (1 to 150).map(i => (i.toLong, (i * 37 % 101).toDouble, java.sql.Date.valueOf("2024-01-01")))
+      .toDF("o_orderkey", "o_totalprice", "o_orderdate").write.parquet(s"$dir/orders.parquet")
     spark.conf.set(Materialize.ModeKey, "none") // keep the rank scans in the plan
-    val plan = try SparkEntry.queries("q132_rrf_fusion")(spark, "/root/testdata/sf0.001")
-        .queryExecution.optimizedPlan
+    val plan = try SparkEntry.queries("q132_rrf_fusion")(spark, dir).queryExecution.optimizedPlan
       finally spark.conf.unset(Materialize.ModeKey)
     val global = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
     // what is left is rrfFuse's own ranking of its topK fused rows
